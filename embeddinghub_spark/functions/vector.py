@@ -23,7 +23,7 @@ reproducible across engines.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type hints resolve here
+import importlib.util
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -268,12 +268,15 @@ def _arrow_ok(cents: list, vec_col, dim: int | None) -> bool:
     # Same structural requirements as the inline path (known dim,
     # plain column, complete centroids) WITHOUT the K·dim literal cap —
     # this is the large-K regime where folding centroids into the plan
-    # stops paying.
+    # stops paying. Without pyarrow or pandas a pandas UDF cannot run,
+    # so those environments take the broadcast path instead.
     return (
         0 < len(cents)
         and dim is not None
         and isinstance(vec_col, str)
         and all(c[1] is not None and len(c[1]) == dim for c in cents)
+        and importlib.util.find_spec("pyarrow") is not None
+        and importlib.util.find_spec("pandas") is not None
     )
 
 
@@ -298,22 +301,32 @@ def _assign_cells_arrow_expr(cents: list, dim: int) -> "F.Column":
     Constraint: vectors must be non-null with exactly ``dim`` non-null
     elements (null elements arrive as NaN in Arrow and NaN ranks
     HIGHEST, where the JVM struct-max ranks a null score LOWEST).
-    Index-corpus vectors are complete by construction; ragged input
-    fails loudly in ``np.stack``.
+    A null or ragged vector raises a named ``ValueError`` before
+    ``np.stack``.
+
+    pandas is imported here, not at module level, and the UDF's type
+    hints are attached as objects so they resolve without it. The UDF
+    references only NumPy, pandas and values it closes over — never
+    this package — so Python workers run it without importing
+    ``embeddinghub_spark``.
     """
     import numpy as np
+    import pandas as pd
 
     ordered = sorted((int(c), [float(x) for x in v]) for c, v in cents)
     cmat = np.array([v for _, v in ordered], dtype=np.float64)  # (K, dim)
     cids = np.array([c for c, _ in ordered], dtype=np.int64)
 
-    @F.pandas_udf("long")
-    def _best_cell(batch: pd.Series) -> pd.Series:
-        x = np.stack(batch.to_numpy()).astype(np.float64, copy=False)
-        if x.shape[1] != dim:
-            raise ValueError(
-                f"assign_ivf_cells: vector length {x.shape[1]} != dim {dim}"
-            )
+    def _best_cell(batch):
+        vecs = batch.to_numpy()
+        for i, v in enumerate(vecs):
+            if v is None or len(v) != dim:
+                got = "null vector" if v is None else f"length {len(v)}"
+                raise ValueError(
+                    f"assign_ivf_cells: {got}, expected dim {dim} "
+                    f"(batch position {i})"
+                )
+        x = np.stack(vecs).astype(np.float64, copy=False)
         acc = np.zeros((x.shape[0], cmat.shape[0]), dtype=np.float64)
         for d in range(dim):
             # one IEEE add of the d-th product onto every (row, cell)
@@ -321,7 +334,8 @@ def _assign_cells_arrow_expr(cents: list, dim: int) -> "F.Column":
             acc += x[:, d : d + 1] * cmat[None, :, d]
         return pd.Series(cids[np.argmax(acc, axis=1)])
 
-    return _best_cell
+    _best_cell.__annotations__ = {"batch": pd.Series, "return": pd.Series}
+    return F.pandas_udf(_best_cell, "long")
 
 
 def assign_ivf_cells(
@@ -367,6 +381,12 @@ def assign_ivf_cells(
 
     NaN scores rank highest in all paths (Spark double ordering);
     cells must have numeric ids (row_number/kmeans construction).
+
+    Input requirement: every vector is non-null with exactly ``dim``
+    non-null elements. The Arrow path raises a ``ValueError`` on a
+    null or ragged vector; the literal-fold and broadcast paths score
+    such a vector null against every centroid, so it silently lands
+    in the smallest cell id.
     """
     cell_dt = centroids.schema[centroid_id_col].dataType
     cents = (

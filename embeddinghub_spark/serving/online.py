@@ -11,6 +11,15 @@ In-process equivalent: a materialization snapshot is pushed into an
 ``foreachPartition`` via sources.sinks.push_online). On-demand
 features are plain callables evaluated per request
 (client/src/featureform/serving.py:236-241).
+
+``nearest`` on a registered on-disk IVF index (``register_vector_index``)
+is served on the driver with NumPy and pyarrow: it fires no Spark job
+and reads only the probed cell directories, and an ``ivf_index_append``
+is visible to the next query. The index dir is listed and read through
+pyarrow's filesystem layer, so it must be a local path or a URI
+``pyarrow.fs`` resolves (``file://``, or a remote scheme pyarrow was
+built with). ``nearest`` on a registered vector table stays a
+brute-force Spark scan.
 """
 
 from __future__ import annotations
@@ -199,31 +208,34 @@ class OnlineStore:
     ) -> None:
         """Serve ``nearest`` from a persisted on-disk IVF index
         (functions/ann_index.py) instead of a brute-force corpus
-        scan: each query opens only its ``nprobe`` probed cell
-        partitions (PartitionFilters file-skipping), which is the
-        point of paying the build once — the embeddinghub HNSW
-        sidecar's batch-Spark analogue (embeddingstore/index.cc).
+        scan: each query is answered on the driver and opens only its
+        ``nprobe`` probed cell directories — the embeddinghub HNSW
+        sidecar's in-process analogue (embeddingstore/index.cc).
+        ``index_dir`` must be a local path or a URI ``pyarrow.fs``
+        resolves; one without a readable ``centroids/`` or ``cells/``
+        table raises a ``ValueError`` here, not on the first query.
         Replaces any table registered under the same key."""
+        from embeddinghub_spark.functions.ann_index import check_index_dir
+
+        check_index_dir(index_dir)
         self._vectors.pop((name, variant), None)
         self._vector_indexes[(name, variant)] = (index_dir, nprobe)
 
     def nearest(self, name: str, variant: str, vector: list[float], k: int) -> list[Any]:
         """k-NN against a registered vector table (batch brute-force;
         serving/serving.go:744-800) or, when an index is registered,
-        partition-pruned probes of the on-disk IVF index."""
+        an IVF probe of the on-disk index served on the driver: zero
+        Spark jobs, the same neighbors as ``ivf_index_probe``, and an
+        append is visible to the next query."""
         key = (name, variant)
         if key in self._vector_indexes:
-            from embeddinghub_spark.functions.ann_index import ivf_index_probe
+            from embeddinghub_spark.functions.ann_index import ivf_index_probe_local
 
             index_dir, nprobe = self._vector_indexes[key]
-            spark = self.catalog.spark
-            q = spark.createDataFrame([(0, vector)], ["query_id", "query_vec"])
-            hits = (
-                ivf_index_probe(spark, index_dir, q, k, nprobe=nprobe)
-                .orderBy("rank")
-                .collect()
+            ansi = self.catalog.spark.conf.get("spark.sql.ansi.enabled")
+            return ivf_index_probe_local(
+                index_dir, vector, k, nprobe=nprobe, ansi=ansi.lower() == "true"
             )
-            return [r["neighbor_id"] for r in hits]
         df = self._vectors[key]
         spark = df.sparkSession
         q = spark.createDataFrame([(0, vector)], ["query_id", "query_vec"])

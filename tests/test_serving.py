@@ -373,3 +373,187 @@ def test_features_serve_with_freshness_budget(spark, tmp_path):
         [("f", "v1")], {"entity": 999},
         max_staleness_seconds=60, now=now,
     ) == [None]
+
+
+def _spark_probe_lists(spark, idx, queries, k, nprobe):
+    """query position -> ivf_index_probe(...).orderBy("rank") neighbors."""
+    from embeddinghub_spark.functions.ann_index import ivf_index_probe
+
+    qdf = spark.createDataFrame(
+        [(i, [float(x) for x in q]) for i, q in enumerate(queries)],
+        ["query_id", "query_vec"],
+    )
+    out = {i: [] for i in range(len(queries))}
+    hits = ivf_index_probe(spark, idx, qdf, k, nprobe=nprobe)
+    for r in hits.orderBy("query_id", "rank").collect():
+        out[r["query_id"]].append(r["neighbor_id"])
+    return out
+
+
+def test_index_served_nearest_equals_spark_probe_without_jobs(spark, tmp_path):
+    """Index-served nearest answers on the driver and returns exactly
+    the Spark probe's neighbor list: 220 seeded queries at nprobe below
+    and equal to n_cells, exact-duplicate vectors (ties break on
+    neighbor_id), after an append, for a zero-norm query under both
+    ANSI settings, and after an unprobed cell directory is deleted —
+    while firing no Spark job."""
+    import os
+    import shutil
+
+    import numpy as np
+    import pyarrow.parquet as pq
+    from pyspark.errors import ArithmeticException
+
+    from embeddinghub_spark.functions.ann_index import (
+        ivf_index_append,
+        ivf_index_build,
+    )
+
+    rng = np.random.default_rng(11)
+    dim, n_cells, k = 16, 8, 10
+    base = rng.normal(size=(300, dim)).astype(np.float32)
+    base[250:] = base[:50]  # ids 250..299 duplicate ids 0..49
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(base)],
+        "vec_id long, embedding array<float>",
+    )
+    idx = str(tmp_path / "ivf")
+    ivf_index_build(df, idx, n_cells=n_cells, dim=dim)
+    # 200 random queries + 20 equal to indexed vectors that have a twin
+    queries = np.vstack([rng.normal(size=(200, dim)), base[:20]])
+
+    store = OnlineStore(Catalog(spark))
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():  # the tracker keeps only the newest jobs' ids
+        return max(tracker.getJobIdsForGroup(), default=-1)
+
+    def served(nprobe, qs=queries):
+        store.register_vector_index("emb", "v1", idx, nprobe=nprobe)
+        before = last_job()
+        got = {
+            i: store.nearest("emb", "v1", [float(x) for x in q], k)
+            for i, q in enumerate(qs)
+        }
+        assert last_job() == before  # zero Spark jobs
+        return got
+
+    for nprobe in (3, n_cells):
+        before = last_job()
+        want = _spark_probe_lists(spark, idx, queries, k, nprobe)
+        assert last_job() > before  # the tracker sees the Spark probe's jobs
+        got = served(nprobe)
+        assert got == want
+        assert all(got[200 + i][:2] == [i, 250 + i] for i in range(20))  # ties
+
+    extra = np.vstack([base[60:70], rng.normal(size=(30, dim))]).astype(np.float32)
+    ivf_index_append(
+        spark.createDataFrame(
+            [(1000 + i, [float(x) for x in v]) for i, v in enumerate(extra)],
+            "vec_id long, embedding array<float>",
+        ),
+        idx,
+        dim=dim,
+    )
+    appended = served(3)
+    assert appended == _spark_probe_lists(spark, idx, queries, k, 3)
+    assert any(n >= 1000 for ns in appended.values() for n in ns)
+
+    zero = [0.0] * dim
+    store.register_vector_index("emb", "v1", idx, nprobe=3)
+    with pytest.raises(ArithmeticException):
+        store.nearest("emb", "v1", zero, k)
+    with pytest.raises(ArithmeticException):
+        _spark_probe_lists(spark, idx, [zero], k, 3)
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:  # null scores rank last: the k smallest ids of the probed cells
+        assert served(3, [zero]) == _spark_probe_lists(spark, idx, [zero], k, 3)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+    q = [float(x) for x in queries[0]]
+    before = store.nearest("emb", "v1", q, k)
+    cents = pq.read_table(os.path.join(idx, "centroids")).to_pydict()
+    scores = np.array(cents["centroid"]) @ np.array(q)
+    farthest = cents["cell"][int(np.argmin(scores))]  # never among 3 probed
+    shutil.rmtree(os.path.join(idx, "cells", f"cell={farthest}"))
+    assert store.nearest("emb", "v1", q, k) == before
+
+
+def test_index_served_nearest_rejects_null_and_ragged_queries(spark, tmp_path):
+    import numpy as np
+
+    from embeddinghub_spark.functions.ann_index import ivf_index_build
+
+    rng = np.random.default_rng(2)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=4)]) for i in range(40)],
+        ["vec_id", "embedding"],
+    )
+    idx = str(tmp_path / "ivf")
+    ivf_index_build(df, idx, n_cells=4, dim=4)
+    store = OnlineStore(Catalog(spark))
+    store.register_vector_index("emb", "v1", idx, nprobe=2)
+    with pytest.raises(ValueError, match="length 3, expected dim 4"):
+        store.nearest("emb", "v1", [1.0, 2.0, 3.0], 5)
+    with pytest.raises(ValueError, match="null"):
+        store.nearest("emb", "v1", None, 5)
+    with pytest.raises(ValueError, match="null"):
+        store.nearest("emb", "v1", [1.0, None, 0.0, 1.0], 5)
+
+
+def test_register_vector_index_rejects_unreadable_dir(spark, tmp_path):
+    """A missing or half-written index fails at registration, naming
+    the table path, instead of on the first query."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = OnlineStore(Catalog(spark))
+    with pytest.raises(ValueError, match="nowhere.*centroids"):
+        store.register_vector_index("emb", "v1", str(tmp_path / "nowhere"))
+
+    half = tmp_path / "half"
+    (half / "centroids").mkdir(parents=True)
+    pq.write_table(
+        pa.table({"cell": [1], "centroid": [[1.0, 0.0]]}),
+        str(half / "centroids" / "part-0.parquet"),
+    )
+    with pytest.raises(ValueError, match="half.*cells"):
+        store.register_vector_index("emb", "v1", str(half))
+    (half / "cells" / "cell=1").mkdir(parents=True)
+    (half / "cells" / "cell=1" / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(ValueError, match="half.*cells.*not readable"):
+        store.register_vector_index("emb", "v1", str(half))
+    assert not store._vector_indexes
+
+
+def test_index_served_nearest_reads_a_file_uri_index(spark, tmp_path):
+    """A file:// index dir is listed and read through one pyarrow
+    filesystem, like a plain path: the driver probe returns the Spark
+    probe's neighbors, not an empty list, and registration checks the
+    URI's tables."""
+    import numpy as np
+
+    from embeddinghub_spark.functions.ann_index import ivf_index_build
+
+    rng = np.random.default_rng(3)
+    dim, k, nprobe = 8, 5, 2
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(rng.normal(size=(120, dim)))],
+        "vec_id long, embedding array<double>",
+    )
+    idx = (tmp_path / "ivf").as_uri()
+    assert idx.startswith("file:///")
+    ivf_index_build(df, idx, n_cells=4, dim=dim)
+    store = OnlineStore(Catalog(spark))
+    store.register_vector_index("emb", "v1", idx, nprobe=nprobe)
+    queries = rng.normal(size=(20, dim))
+    got = {
+        i: store.nearest("emb", "v1", [float(x) for x in q], k)
+        for i, q in enumerate(queries)
+    }
+    assert got == _spark_probe_lists(spark, idx, queries, k, nprobe)
+    assert all(len(ns) == k for ns in got.values())
+    with pytest.raises(ValueError, match="nowhere.*centroids"):
+        store.register_vector_index("emb", "v1", (tmp_path / "nowhere").as_uri())

@@ -824,3 +824,140 @@ def test_sparse_features_shared_cache_is_keyed_and_reused(spark):
     assert c is not a
     assert len(m._SPARSE_FEATS_CACHE) == 1  # old corpus evicted
     m._SPARSE_FEATS_CACHE.clear()
+
+
+def _assign_cells_forced(df, cents, dim, force, monkeypatch):
+    """assign_ivf_cells with exactly one strategy forced, as
+    {vec_id: cell}, plus the executed plan text."""
+    from embeddinghub_spark.functions import vector as V
+
+    cent_df = df.sparkSession.createDataFrame(
+        cents, "cell int, centroid array<double>"
+    )
+    with monkeypatch.context() as m:
+        if force == "inline":  # lift the literal cap to K·dim
+            m.setattr(V, "_MAX_INLINE_CELL_TERMS", len(cents) * dim)
+            m.setattr(V, "_arrow_ok", lambda *a: False)
+        elif force == "broadcast":
+            m.setattr(V, "_inline_ok", lambda *a: False)
+            m.setattr(V, "_arrow_ok", lambda *a: False)
+        out = V.assign_ivf_cells(df, cent_df, dim=dim, cells=cents)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return {r[0]: r[1] for r in out.select("vec_id", "cell").collect()}, plan
+
+
+def _float_frame(spark, mat):
+    return spark.createDataFrame(
+        [(i, None if v is None else [float(x) for x in v]) for i, v in enumerate(mat)],
+        "vec_id long, embedding array<float>",
+    )
+
+
+def test_assign_ivf_cells_arrow_inline_broadcast_identical_past_cap(
+    spark, monkeypatch
+):
+    """The three assignment strategies give identical cells row by row
+    at K·dim just over the inline cap (129·64 = 8256 > 8192), where the
+    Arrow path is the default. Cell 129 duplicates cell 5, so every
+    vector nearest to them must take the smaller id."""
+    import numpy as np
+
+    from embeddinghub_spark.functions.vector import _MAX_INLINE_CELL_TERMS
+
+    rng = np.random.default_rng(17)
+    dim, n_cells = 64, 129
+    assert n_cells * dim > _MAX_INLINE_CELL_TERMS >= (n_cells - 1) * dim
+    mat = rng.normal(size=(2000, dim)).astype(np.float32)
+    cents = [(c + 1, [float(x) for x in mat[c]]) for c in range(n_cells - 1)]
+    cents.append((n_cells, cents[4][1]))
+    df = _float_frame(spark, mat)
+
+    arrow, plan = _assign_cells_forced(df, cents, dim, None, monkeypatch)
+    assert "ArrowEvalPython" in plan  # the default strategy past the cap
+    inline, _ = _assign_cells_forced(df, cents, dim, "inline", monkeypatch)
+    broadcast, _ = _assign_cells_forced(df, cents, dim, "broadcast", monkeypatch)
+    assert len(arrow) == 2000
+    assert arrow == inline == broadcast
+    assert arrow[4] == 5 and n_cells not in arrow.values()
+
+
+def test_arrow_ok_falls_back_without_pyarrow_or_pandas(spark, monkeypatch):
+    """Where find_spec finds no pyarrow or no pandas, the large-K
+    assignment takes the broadcast path instead of a pandas UDF."""
+    import importlib.util
+
+    import numpy as np
+
+    from embeddinghub_spark.functions import vector as V
+
+    rng = np.random.default_rng(5)
+    dim, n_cells = 64, 129
+    mat = rng.normal(size=(50, dim))
+    cents = [(c + 1, [float(x) for x in rng.normal(size=dim)]) for c in range(n_cells)]
+    df = _float_frame(spark, mat)
+    cent_df = spark.createDataFrame(cents, "cell int, centroid array<double>")
+    assert V._arrow_ok(cents, "embedding", dim)
+    real = importlib.util.find_spec
+    for missing in ("pyarrow", "pandas"):
+        with monkeypatch.context() as m:
+            m.setattr(
+                importlib.util,
+                "find_spec",
+                lambda name, *a, _gone=missing: None if name == _gone else real(name, *a),
+            )
+            assert not V._arrow_ok(cents, "embedding", dim)
+            out = V.assign_ivf_cells(df, cent_df, dim=dim, cells=cents)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "Broadcast" in plan
+
+
+def test_assign_ivf_cells_arrow_rejects_null_and_ragged(spark):
+    """The Arrow path names a null or ragged vector instead of failing
+    in np.stack."""
+    import numpy as np
+
+    from embeddinghub_spark.functions.vector import assign_ivf_cells
+
+    rng = np.random.default_rng(9)
+    dim, n_cells = 64, 129
+    cents = [(c + 1, [float(x) for x in rng.normal(size=dim)]) for c in range(n_cells)]
+    cent_df = spark.createDataFrame(cents, "cell int, centroid array<double>")
+    rows = list(rng.normal(size=(20, dim)))
+    for bad, msg in ((None, "null vector"), (rows[0][:-1], "length 63, expected dim 64")):
+        df = _float_frame(spark, rows[:5] + [bad] + rows[5:])
+        with pytest.raises(Exception, match=f"ValueError: assign_ivf_cells: .*{msg}"):
+            assign_ivf_cells(df, cent_df, dim=dim, cells=cents).collect()
+
+
+def test_assign_ivf_cells_arrow_udf_runs_without_the_package(spark, tmp_path):
+    """The Arrow assignment UDF must not need ``embeddinghub_spark`` on
+    the Python workers: its pickled form, loaded by an isolated
+    interpreter that cannot import the package, still assigns cells
+    and still names a ragged vector."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from embeddinghub_spark.functions.vector import _assign_cells_arrow_expr
+
+    udf = _assign_cells_arrow_expr([(2, [0.0, 1.0]), (1, [1.0, 0.0])], 2)
+    (tmp_path / "udf.pkl").write_bytes(cloudpickle.dumps(udf.func))
+    script = (
+        "import pickle, pandas as pd\n"
+        "f = pickle.load(open('udf.pkl', 'rb'))\n"
+        "print(f(pd.Series([[0.1, 0.9], [2.0, 0.5]])).tolist())\n"
+        "try:\n"
+        "    f(pd.Series([[1.0, 0.0], [1.0]]))\n"
+        "except ValueError as e:\n"
+        "    print(e)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-I", "-c", script],  # -I: no cwd, no PYTHONPATH
+        cwd=tmp_path, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.splitlines() == [
+        "[2, 1]",
+        "assign_ivf_cells: length 1, expected dim 2 (batch position 1)",
+    ]
