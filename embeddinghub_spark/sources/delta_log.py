@@ -21,16 +21,17 @@ Scope (honestly bounded, checked at read time):
 - Reads, version time travel, version-incremental reads over
   append-only ranges (``read_delta_increment``), append/overwrite
   WRITES (``write_delta`` — put-if-absent commit claim, single-
-  filesystem semantics), and MERGE upsert as one atomic transaction
-  (``merge_delta`` — FILE-PRUNED copy-on-write since r15: per-file
-  stats + an exact key probe select the touched files; the commit's
-  ``replace_paths`` removes/adds exactly those, carrying every other
-  live file forward), plus checkpoint WRITING
-  (``write_delta_checkpoint``; ``write_delta`` auto-checkpoints every
-  ``checkpoint_interval`` commits, the connector's default cadence,
-  so log replay stays bounded). Sub-file row-level rewrites (DV
-  writes) and CDF still need the connector (or this repo's own
-  S10/S12 table fallbacks).
+  filesystem semantics), plus checkpoint WRITING
+  (``write_delta_checkpoint``; every commit — ``write_delta``'s and
+  the MoR DELETE's alike, through the shared ``_commit`` step —
+  auto-checkpoints every ``checkpoint_interval`` versions, the
+  connector's default cadence, so log replay stays bounded).
+- Row-level DML (``merge_delta`` / ``delete_delta`` / ``update_delta``,
+  each ``cow`` or ``mor``) is planned by the format-neutral
+  ``sources/row_dml.py`` (stats prune → exact probe → collect hits →
+  commit); this module supplies the Delta facts (``_dml_table``): JSON
+  stats bounds, a DV-applying scan, file-grain ``replace_paths``
+  rewrites (cow) and deletion-vector row deltas (mor).
 - DELETION VECTORS read natively: the DV descriptor (inline / UUID /
   path storage, z85 payloads) decodes through the pure-Python Roaring
   codec (`sources/roaring.py` — cross-validated against
@@ -106,6 +107,21 @@ def _stat_json_value(v, side: int):
     if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
         return v.isoformat()
     return v
+
+
+def _stats_bounds(f: dict) -> dict:
+    """An add action's recorded {column: (min, max)} — the data-skipping
+    input; {} when the file carries no (parseable) stats."""
+    raw = f.get("stats")
+    if not raw:
+        return {}
+    try:
+        stats = json.loads(raw)
+    except (TypeError, ValueError):
+        return {}
+    mins = stats.get("minValues") or {}
+    maxs = stats.get("maxValues") or {}
+    return {c: (mins.get(c), maxs.get(c)) for c in set(mins) | set(maxs)}
 
 
 def _log_dir(path: str) -> str:
@@ -798,25 +814,9 @@ def read_delta(
         )
 
         validate_range_filter(range_filter, snap["schema"].fieldNames())
-
-        def _bounds(f: dict) -> dict:
-            raw = f.get("stats")
-            if not raw:
-                return {}
-            try:
-                stats = json.loads(raw)
-            except (TypeError, ValueError):
-                return {}
-            mins = stats.get("minValues") or {}
-            maxs = stats.get("maxValues") or {}
-            return {
-                c: (mins.get(c), maxs.get(c))
-                for c in set(mins) | set(maxs)
-            }
-
         files = [
             f for f in files
-            if not range_excluded(_bounds(f), range_filter)
+            if not range_excluded(_stats_bounds(f), range_filter)
         ]
         row_filter = range_row_filter(range_filter)
     out = _scan_file_groups(
@@ -1157,19 +1157,9 @@ def write_delta(
 
     shutil.rmtree(stage, ignore_errors=True)
 
-    for _attempt in range(max_commit_retries):
-        exists = is_delta_table(path)
-        snap = delta_snapshot(path) if exists else None
+    def _actions(snap: dict | None) -> list[dict]:
         if snap is not None:
             _validate_against(snap)
-            if (
-                expected_version is not None
-                and snap["version"] != expected_version
-            ):
-                raise ConcurrentWriteError(
-                    f"table advanced to version {snap['version']} "
-                    f"(expected {expected_version}): {path}"
-                )
         actions: list[dict] = []
         if snap is None:
             actions.append(
@@ -1187,9 +1177,7 @@ def write_delta(
                     }
                 }
             )
-            version = 0
         else:
-            version = snap["version"] + 1
             if mode == "append" and merge_schema:
                 new_cols = [
                     f for f in df.schema.fields
@@ -1284,31 +1272,11 @@ def write_delta(
                     }
                 )
         if dv_readds:
-            live_now = {f["path"] for f in snap["files"]} if snap else set()
-            gone_dv = sorted(
-                {d["path"] for d in dv_readds} - live_now
-            )
-            if gone_dv:
-                raise ConcurrentWriteError(
-                    f"dv_readds paths not live at version "
-                    f"{snap['version']}: {gone_dv[:3]}"
-                )
-            upgrade = _dv_protocol_upgrade(
-                (snap or {}).get("protocol") or {}
-            )
-            if upgrade is not None:
-                # protocol action leads the commit
-                actions.insert(0, upgrade)
-            for d in dv_readds:
-                actions.append({
-                    "remove": {
-                        "path": d["path"],
-                        "deletionTimestamp": 0,
-                        "dataChange": True,
-                    }
-                })
-            for d in dv_readds:
-                actions.append({"add": dict(d, dataChange=True)})
+            readd = _dv_readd_actions(snap, dv_readds)
+            # a protocol upgrade leads the commit
+            lead = 1 if "protocol" in readd[0] else 0
+            actions[:0] = readd[:lead]
+            actions.extend(readd[lead:])
         actions.extend(adds)
         if dv_readds:
             op = "UPDATE"
@@ -1350,6 +1318,46 @@ def write_delta(
                 },
             }
         })
+        return actions
+
+    return _commit(
+        path, _actions, expected_version=expected_version,
+        max_commit_retries=max_commit_retries,
+        checkpoint_interval=checkpoint_interval,
+    )
+
+
+def _commit(
+    path: str,
+    build,
+    *,
+    expected_version: int | None = None,
+    max_commit_retries: int = 10,
+    checkpoint_interval: int | None = 10,
+) -> int:
+    """The commit step every native Delta write shares: snapshot the
+    log, ``build(snapshot or None)`` the commit's actions, claim the
+    next version put-if-absent, retrying on a lost race (re-snapshot,
+    rebuild) unless ``expected_version`` pins a read-modify-write —
+    then any other current version raises ``ConcurrentWriteError``.
+    A claimed version divisible by ``checkpoint_interval`` writes a
+    checkpoint (the connector's cadence, so log replay stays bounded;
+    best-effort — a reader needing it can call
+    ``write_delta_checkpoint`` directly). Returns the version."""
+    log_dir = _log_dir(path)
+    for _attempt in range(max_commit_retries):
+        snap = delta_snapshot(path) if is_delta_table(path) else None
+        if (
+            snap is not None
+            and expected_version is not None
+            and snap["version"] != expected_version
+        ):
+            raise ConcurrentWriteError(
+                f"table advanced to version {snap['version']} "
+                f"(expected {expected_version}): {path}"
+            )
+        actions = build(snap)
+        version = 0 if snap is None else snap["version"] + 1
         payload = "\n".join(json.dumps(a) for a in actions) + "\n"
         if _atomic_claim_commit(log_dir, version, payload):
             if (
@@ -1357,9 +1365,6 @@ def write_delta(
                 and version > 0
                 and version % int(checkpoint_interval) == 0
             ):
-                # the connector's cadence: checkpoint every N commits
-                # so replay cost stays bounded; best-effort (a reader
-                # needing it can call write_delta_checkpoint directly)
                 try:
                     write_delta_checkpoint(path, version)
                 except Exception:
@@ -1618,26 +1623,22 @@ def merge_delta(
     MATCHED → UPDATE all source columns, WHEN NOT MATCHED → INSERT;
     `tables.merge_upsert_df` is the shared DataFrame expression)
     committed as ONE put-if-absent transaction, so readers see the old
-    snapshot or the new one, never a gap.
+    snapshot or the new one, never a gap. Planned by
+    ``sources/row_dml.py`` (stats prune → exact probe → commit).
 
-    FILE-PRUNED copy-on-write (VERDICT r14 #3): only the files that
-    can contain a source key are rewritten; every other live file
-    carries forward untouched (free in Delta's delta-based log), so a
-    0.1% upsert writes ~0.1% of the table, not all of it. Two-stage
-    pruning:
+    ``strategy="cow"`` (default) — FILE-PRUNED copy-on-write
+    (VERDICT r14 #3): only the files that actually hold a source key
+    are rewritten; every other live file carries forward untouched
+    (free in Delta's delta-based log), so a 0.1% upsert writes ~0.1%
+    of the table, not all of it — output-identical to the full
+    rebuild (pinned).
 
-    1. STATS: a file whose recorded per-column min/max provably miss
-       the source's key range is never read (`range_excluded` — the
-       same machinery as data skipping; files without stats are
-       always candidates, so pruning only ever under-prunes).
-    2. EXACT PROBE: the candidates are scanned once and semi-joined
-       with the distinct source keys via `_metadata.file_path`; only
-       files that ACTUALLY contain a source key are rewritten.
-
-    Soundness of the file-local merge: the probe guarantees untouched
-    files contain NO source key, so `merge_upsert_df(touched_rows,
-    source)` updates every match and inserts every unmatched source
-    row exactly once — identical output to the full rebuild (pinned).
+    ``strategy="mor"`` — the matched TARGET rows' positions get
+    deletion vectors and EVERY source row (updated image or insert)
+    stages as new data files, in one atomic commit — MERGE's "source
+    wins" semantics make the new rows exactly ``source`` projected to
+    the table columns, so bytes written ∝ |source| + |matched rows|.
+    ``max_mor_rows`` caps the matched rows the commit collects.
 
     Returns the committed version. Time travel keeps working: the
     pre-merge state is the previous version. Read-modify-write safety:
@@ -1646,317 +1647,139 @@ def merge_delta(
     `ConcurrentWriteError` (re-invoke to retry) instead of silently
     dropping the winner's rows or removing a file it rewrote.
     """
-    from embeddinghub_spark.sources.scan_prune import range_excluded
-    from embeddinghub_spark.sources.tables import merge_upsert_df
+    from embeddinghub_spark.sources import row_dml
 
-    if strategy not in ("cow", "mor"):
-        raise ValueError(f"strategy must be cow|mor, got {strategy!r}")
-    # the source subtree is consumed by four sequential jobs (key-range
-    # agg, exact probe, and twice inside merge_upsert_df); compute it
-    # once — bytes cached ∝ |source| (the upsert batch), never the table.
-    # checkpoint_source=False is the streaming-sink handle: the sink
-    # already checkpointed the batch for its own pre-merge actions, and
-    # a second lazy checkpoint would cache the same bytes twice.
+    row_dml.check_strategy(strategy)
+    # the source subtree is consumed by several sequential jobs (key-
+    # range agg, exact probe, and twice inside merge_upsert_df); compute
+    # it once — bytes cached ∝ |source| (the upsert batch), never the
+    # table. checkpoint_source=False is the streaming-sink handle: the
+    # sink already checkpointed the batch for its own pre-merge actions,
+    # and a second lazy checkpoint would cache the same bytes twice.
     if checkpoint_source:
         source = source.localCheckpoint(eager=False)
-    snap = delta_snapshot(path)
-    files = snap["files"]
+    table = _dml_table(spark, path, delta_snapshot(path), txn)
+    return row_dml.merge(table, source, key_cols, strategy, max_mor_rows)
+
+
+def _dml_table(spark: SparkSession, path: str, snap: dict, txn=None):
+    """The Delta facts of one ``row_dml`` call, pinned to ``snap``:
+    JSON-stats bounds, a DV-applying scan, file-grain ``replace_paths``
+    rewrites and deletion-vector row deltas."""
+    from embeddinghub_spark.sources.row_dml import DmlTable
+
+    path = os.path.realpath(os.path.abspath(path))
     pcols = snap["partition_columns"]
-
-    def _bounds(f: dict) -> dict:
-        raw = f.get("stats")
-        if not raw:
-            return {}
-        try:
-            stats = json.loads(raw)
-        except (TypeError, ValueError):
-            return {}
-        mins = stats.get("minValues") or {}
-        maxs = stats.get("maxValues") or {}
-        return {
-            c: (mins.get(c), maxs.get(c)) for c in set(mins) | set(maxs)
-        }
-
-    # stage 1: source key ranges (one tiny agg job) prune by stats
-    rng_row = source.agg(
-        *[F.min(c).alias(f"_lo_{c}") for c in key_cols],
-        *[F.max(c).alias(f"_hi_{c}") for c in key_cols],
-    ).collect()[0]
-    key_ranges = {
-        c: (rng_row[f"_lo_{c}"], rng_row[f"_hi_{c}"]) for c in key_cols
-    }
-    usable = _usable_delta_ranges(key_ranges)
-    candidates = (
-        [f for f in files if not range_excluded(_bounds(f), usable)]
-        if usable else list(files)
-    )
-    if strategy == "mor":
-        # MoR needs the matched ROW POSITIONS anyway, and any file with
-        # >= 1 matched position is by definition a touched file — so the
-        # exact probe and the position probe are ONE candidate scan
-        # (r17; the split form scanned the candidates twice per merge)
-        return _merge_delta_mor(
-            spark, path, snap, candidates, source, key_cols,
-            max_mor_rows, txn,
-        )
-    # stage 2: exact probe — which candidates really hold a source key
-    touched: list[dict] = []
-    if candidates:
-        probe = _scan_file_groups(
-            spark, path, snap["schema"], pcols, candidates,
-            snap.get("physical_names"), keep_file_path=True,
-        )
-        hit_fps = {
-            r["_fp"]
-            for r in probe.select("_fp", *key_cols)
-            .join(source.select(*key_cols).distinct(), key_cols,
-                  "left_semi")
-            .select("_fp").distinct().collect()
-        }
-        root_real = os.path.realpath(os.path.abspath(path))
-        touched = [
-            f for f in candidates
-            if os.path.join(root_real, _decode_path(f["path"])) in hit_fps
-        ]
-    target = _scan_file_groups(
-        spark, path, snap["schema"], pcols, touched,
-        snap.get("physical_names"),
-    )
-    merged = merge_upsert_df(target, source, key_cols)
-    return write_delta(
-        merged,
-        path,
-        mode="append",
-        partition_by=pcols,
+    pinned = dict(
+        mode="append", partition_by=pcols,
         expected_version=snap["version"],
-        replace_paths=[f["path"] for f in touched],
-        txn=txn,
+    )
+
+    def scan(files: list[dict], keep_meta: bool) -> DataFrame:
+        return _scan_file_groups(
+            spark, path, snap["schema"], pcols, files,
+            snap.get("physical_names"),
+            keep_file_path=keep_meta, keep_row_index=keep_meta,
+        )
+
+    def rewrite(rows: DataFrame, touched: list[dict]) -> int:
+        return write_delta(
+            rows, path, replace_paths=[f["path"] for f in touched],
+            txn=txn, **pinned,
+        )
+
+    def row_delta(rows, hits: dict, op: str, assigned=()) -> int:
+        if not hits:
+            # insert-only merge: no candidate file holds a source key
+            return write_delta(rows, path, txn=txn, **pinned)
+        readds = _dv_readds(path, snap, hits)
+        if rows is not None:
+            return write_delta(
+                rows, path, dv_readds=readds, txn=txn, **pinned
+            )
+        info = {"commitInfo": {
+            "operation": op,
+            "operationMetrics": {
+                "numDeletedRows": str(sum(len(v) for v in hits.values())),
+                "numDeletionVectorsAdded": str(len(readds)),
+                "numRemovedFiles": "0",
+            },
+        }}
+        return _commit(
+            path, lambda s: _dv_readd_actions(s, readds) + [info],
+            expected_version=snap["version"],
+        )
+
+    return DmlTable(
+        name="delta",
+        schema=snap["schema"],
+        partition_by=pcols,
+        files=snap["files"],
+        bounds=_stats_bounds,
+        fp=lambda f: os.path.join(path, _decode_path(f["path"])),
+        scan=scan,
+        date_as="iso",
+        rewrite=rewrite,
+        row_delta=row_delta,
     )
 
 
-def _collect_probe_hits(probe: DataFrame, max_mor_rows: int, op: str):
-    """Collect a ``(_fp, _pos)`` probe frame via Arrow (`toPandas`) and
-    group the positions by file — the driver-side half of every MoR
-    commit. Returns {file path: int64 position ndarray}; raises when
-    the matched row count exceeds ``max_mor_rows``. (r17: the row-
-    based ``collect()`` decoded churn-sized hit lists one py4j Row at
-    a time — ~10 s per merge at sf1.)"""
+def _dv_readds(path: str, snap: dict, hits: dict) -> list[dict]:
+    """The MoR commit's add bodies: each hit file re-added at its SAME
+    path (stats/partitionValues/size verbatim — numRecords stays the
+    PHYSICAL row count per the spec) with a deletion vector of its new
+    positions merged with any existing DV (the descriptor REPLACES, so
+    it must carry the file's complete deleted set). The log then sees
+    remove+add of the same path, which the CDF reader pairs by
+    (path, DV)."""
     import numpy as np
 
-    pdf = probe.limit(max_mor_rows + 1).toPandas()
-    if len(pdf) > max_mor_rows:
-        raise ValueError(
-            f"MoR {op} matches more than max_mor_rows="
-            f"{max_mor_rows} rows — use strategy='cow'"
-        )
-    out: dict[str, Any] = {}
-    if not len(pdf):
-        return out
-    fps = pdf["_fp"].to_numpy(dtype=object)
-    pos = pdf["_pos"].to_numpy(dtype=np.int64)
-    order = np.argsort(fps, kind="stable")
-    fps, pos = fps[order], pos[order]
-    uniq, first = np.unique(fps, return_index=True)
-    for fp, seg in zip(uniq.tolist(), np.split(pos, first[1:])):
-        out[fp] = seg
-    return out
-
-
-def _merged_dv_rows(path: str, by_file: dict, rel_by_abs: dict) -> dict:
-    """Union each hit file's new positions with its existing DV (the
-    descriptor REPLACES, so it must carry the complete deleted set)."""
-    import numpy as np
-
+    by_fp = {os.path.join(path, _decode_path(f["path"])): f
+             for f in snap["files"]}
     dv_rows: dict[str, Any] = {}
-    for abs_fp, rows in by_file.items():
-        f = rel_by_abs[abs_fp]
+    for fp, rows in hits.items():
+        f = by_fp[fp]
         if f.get("deletionVector"):
             rows = np.union1d(
                 rows, read_deletion_vector_np(path, f["deletionVector"])
             )
-        dv_rows[abs_fp] = rows
-    return dv_rows
-
-
-def _merge_delta_mor(
-    spark: SparkSession,
-    path: str,
-    snap: dict,
-    candidates: list[dict],
-    source: DataFrame,
-    key_cols: list[str],
-    max_mor_rows: int,
-    txn: tuple[str, int] | None = None,
-) -> int:
-    """Row-delta MERGE commit (``merge_delta(strategy="mor")``): the
-    matched TARGET rows' positions get deletion vectors and EVERY
-    source row (updated image or insert) stages as new data files, in
-    one atomic ``write_delta(dv_readds=…)`` commit — MERGE's "source
-    wins" semantics make the new rows exactly ``source`` projected to
-    the table columns, so bytes written ∝ |source| + |matched rows|,
-    never the touched files. An insert-only merge (no matched rows in
-    any candidate file) degenerates to a plain pinned append.
-
-    ``candidates`` is the stats-pruned file set: ONE scan of it both
-    decides which files are touched (>= 1 matched position) and yields
-    the positions themselves."""
-    path = os.path.realpath(os.path.abspath(path))
-    cols = [f.name for f in snap["schema"].fields]
-    src_rows = source.select(*cols)
-    pcols = snap["partition_columns"]
-    if not candidates:
-        return write_delta(
-            src_rows, path, mode="append", partition_by=pcols,
-            expected_version=snap["version"], txn=txn,
-        )
-    probe = _scan_file_groups(
-        spark, path, snap["schema"], pcols, candidates,
-        snap.get("physical_names"),
-        keep_file_path=True, keep_row_index=True,
-    ).join(
-        source.select(*key_cols).distinct(), key_cols, "left_semi"
-    ).select("_fp", "_pos")
-    by_file = _collect_probe_hits(probe, max_mor_rows, "MERGE")
-    if not by_file:
-        # insert-only merge: no candidate file holds a source key
-        return write_delta(
-            src_rows, path, mode="append", partition_by=pcols,
-            expected_version=snap["version"], txn=txn,
-        )
-    rel_by_abs = {
-        os.path.join(path, _decode_path(f["path"])): f for f in candidates
-    }
-    dv_rows = _merged_dv_rows(path, by_file, rel_by_abs)
+        dv_rows[fp] = rows
     descriptors = _write_dv_blob(path, dv_rows)
-    dv_readds = []
-    for abs_fp in sorted(dv_rows):
-        f = rel_by_abs[abs_fp]
+    readds = []
+    for fp in sorted(dv_rows):
+        f = by_fp[fp]
         add = {
             "path": f["path"],
             "partitionValues": dict(f.get("partitionValues") or {}),
             "size": int(f.get("size") or 0),
             "modificationTime": 0,
             "dataChange": True,
-            "deletionVector": descriptors[abs_fp],
+            "deletionVector": descriptors[fp],
         }
         if f.get("stats"):
             add["stats"] = f["stats"]
-        dv_readds.append(add)
-    return write_delta(
-        src_rows,
-        path,
-        mode="append",
-        partition_by=pcols,
-        expected_version=snap["version"],
-        dv_readds=dv_readds,
-        txn=txn,
-    )
+        readds.append(add)
+    return readds
 
 
-def _usable_delta_ranges(key_ranges: dict) -> dict:
-    """Key ranges usable against Delta JSON stats: numbers and strings
-    pass through; dates convert to ISO strings (the stats' own
-    serialization — ISO order == date order); anything else (NULL-only
-    key, timestamp, binary) drops the column from stage-1 pruning
-    (under-prune only). VERDICT r15 #2: before string support, every
-    string-keyed merge scanned all candidate files here."""
-    import datetime as _dt
-
-    def _conv(v):
-        if isinstance(v, bool):
-            return None
-        if isinstance(v, (int, float, str)):
-            return v
-        if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-            return v.isoformat()
-        return None
-
-    out = {}
-    for c, (lo, hi) in key_ranges.items():
-        clo, chi = _conv(lo), _conv(hi)
-        if clo is not None and chi is not None and (
-            type(clo) is type(chi)
-            or (isinstance(clo, (int, float))
-                and isinstance(chi, (int, float)))
-        ):
-            out[c] = (clo, chi)
-    return out
-
-
-def _touched_by_condition(
-    spark: SparkSession,
-    path: str,
-    snap: dict,
-    cond,
-    range_filter: dict | None,
-) -> tuple[list[dict], "object"]:
-    """Shared DELETE/UPDATE planning: (touched add-dicts, condition
-    Column). Stage 1 prunes by per-file stats — from the caller's
-    ``range_filter`` AND bounds auto-derived from simple
-    equality/range conjuncts of a SQL-string condition
-    (``bounds_from_condition``, VERDICT r15 #3 — a bare
-    ``delete_delta(spark, p, "id = 7")`` is file-pruned by default);
-    files whose bounds provably miss can't hold a matching row, the
-    same machinery as data skipping. Stage 2 scans the candidates once
-    and keeps only files that ACTUALLY contain a row matching the
-    condition. SQL-string conditions accept anything ``F.expr``
-    parses."""
-    from embeddinghub_spark.sources.scan_prune import (
-        bounds_from_condition,
-        range_excluded,
-        validate_range_filter,
-    )
-
-    if isinstance(cond, str):
-        derived = bounds_from_condition(
-            cond, snap["schema"].fieldNames(), date_as="iso"
+def _dv_readd_actions(snap: dict | None, dv_readds: list[dict]) -> list:
+    """Remove + re-add actions of DV'd live files, led by the protocol
+    upgrade a first DV commit needs. Every path must still be live in
+    ``snap`` (a racer may have removed it)."""
+    live = {f["path"] for f in snap["files"]} if snap else set()
+    gone = sorted({d["path"] for d in dv_readds} - live)
+    if gone:
+        raise ConcurrentWriteError(
+            f"dv_readds paths not live at version "
+            f"{(snap or {}).get('version')}: {gone[:3]}"
         )
-        if derived:
-            # the caller's explicit filter wins per column; derived
-            # bounds fill the rest (each is independently sound)
-            merged = dict(derived)
-            merged.update(range_filter or {})
-            range_filter = merged
-    cond = F.expr(cond) if isinstance(cond, str) else cond
-    files = snap["files"]
-    if range_filter:
-        validate_range_filter(range_filter, snap["schema"].fieldNames())
-
-        def _bounds(f: dict) -> dict:
-            raw = f.get("stats")
-            if not raw:
-                return {}
-            try:
-                stats = json.loads(raw)
-            except (TypeError, ValueError):
-                return {}
-            mins = stats.get("minValues") or {}
-            maxs = stats.get("maxValues") or {}
-            return {
-                c: (mins.get(c), maxs.get(c))
-                for c in set(mins) | set(maxs)
-            }
-
-        files = [
-            f for f in files
-            if not range_excluded(_bounds(f), range_filter)
-        ]
-    touched: list[dict] = []
-    if files:
-        probe = _scan_file_groups(
-            spark, path, snap["schema"], snap["partition_columns"],
-            files, snap.get("physical_names"), keep_file_path=True,
-        )
-        hit_fps = {
-            r["_fp"]
-            for r in probe.filter(cond).select("_fp").distinct().collect()
-        }
-        root_real = os.path.realpath(os.path.abspath(path))
-        touched = [
-            f for f in files
-            if os.path.join(root_real, _decode_path(f["path"])) in hit_fps
-        ]
-    return touched, cond
+    upgrade = _dv_protocol_upgrade((snap or {}).get("protocol") or {})
+    return (
+        ([upgrade] if upgrade is not None else [])
+        + [{"remove": {"path": d["path"], "deletionTimestamp": 0,
+                       "dataChange": True}} for d in dv_readds]
+        + [{"add": dict(d, dataChange=True)} for d in dv_readds]
+    )
 
 
 def delete_delta(
@@ -1968,7 +1791,8 @@ def delete_delta(
     strategy: str = "cow",
     max_mor_rows: int = 1_000_000,
 ) -> int | None:
-    """Row-level DELETE WHERE ``condition``.
+    """Row-level DELETE WHERE ``condition``, planned by
+    ``sources/row_dml.py``.
 
     ``strategy="cow"`` (default) — file-pruned copy-on-write, the
     same discipline as ``merge_delta``: only files actually holding a
@@ -2000,29 +1824,12 @@ def delete_delta(
     Returns the committed version, or None when nothing matched.
     Read-modify-write: pins ``expected_version``; a concurrent commit
     raises ``ConcurrentWriteError`` (re-invoke)."""
-    if strategy not in ("cow", "mor"):
-        raise ValueError(f"strategy must be cow|mor, got {strategy!r}")
-    snap = delta_snapshot(path)
-    touched, cond = _touched_by_condition(
-        spark, path, snap, condition, range_filter
-    )
-    if not touched:
-        return None
-    if strategy == "mor":
-        return _delete_delta_mor(
-            spark, path, snap, touched, cond, max_mor_rows
-        )
-    kept = _scan_file_groups(
-        spark, path, snap["schema"], snap["partition_columns"],
-        touched, snap.get("physical_names"),
-    ).filter(~F.coalesce(cond, F.lit(False)))
-    return write_delta(
-        kept,
-        path,
-        mode="append",
-        partition_by=snap["partition_columns"],
-        expected_version=snap["version"],
-        replace_paths=[f["path"] for f in touched],
+    from embeddinghub_spark.sources import row_dml
+
+    row_dml.check_strategy(strategy)
+    table = _dml_table(spark, path, delta_snapshot(path))
+    return row_dml.delete(
+        table, condition, range_filter, strategy, max_mor_rows
     )
 
 
@@ -2034,8 +1841,7 @@ def _write_dv_blob(
     a 1-byte format version, then per DV a 4-byte big-endian size,
     the portable RoaringBitmapArray, and a 4-byte big-endian CRC-32 —
     exactly the framing ``read_deletion_vector`` checks. Returns
-    {abs data-file path: DV descriptor}. Shared by the MoR DELETE and
-    MoR UPDATE commit builders."""
+    {abs data-file path: DV descriptor}."""
     import struct as _struct
     import uuid as _uuid
     import zlib
@@ -2105,98 +1911,6 @@ def _dv_protocol_upgrade(proto: dict) -> dict | None:
     }
 
 
-def _delete_delta_mor(
-    spark: SparkSession,
-    path: str,
-    snap: dict,
-    touched: list[dict],
-    cond,
-    max_mor_rows: int,
-) -> int:
-    """DV-writing DELETE commit (see ``delete_delta(strategy="mor")``).
-
-    One ``deletion_vector_<uuid>.bin`` holds every touched file's DV
-    at its own offset (the multi-DV packing real writers use): a
-    1-byte format version, then per DV a 4-byte big-endian size, the
-    portable RoaringBitmapArray, and a 4-byte big-endian CRC-32 —
-    exactly the framing ``read_deletion_vector`` checks. Each touched
-    file re-adds at its SAME path (stats/partitionValues/size carried
-    verbatim — numRecords stays the PHYSICAL row count per the spec)
-    with the merged descriptor; the log sees remove+add of the same
-    path, which the CDF reader pairs by (path, DV) — pinned. The
-    UPDATE twin is ``update_delta(strategy="mor")``."""
-    path = os.path.realpath(os.path.abspath(path))
-    # matched physical row positions per file — the probe scan applies
-    # existing DVs, so already-deleted rows can't re-match
-    probe = _scan_file_groups(
-        spark, path, snap["schema"], snap["partition_columns"],
-        touched, snap.get("physical_names"),
-        keep_file_path=True, keep_row_index=True,
-    ).filter(cond).select("_fp", "_pos")
-    by_file = _collect_probe_hits(probe, max_mor_rows, "DELETE")
-    rel_by_abs = {
-        os.path.join(path, _decode_path(f["path"])): f for f in touched
-    }
-    # merge with any existing DV: the descriptor REPLACES, so it must
-    # carry the file's complete deleted set
-    dv_rows = _merged_dv_rows(path, by_file, rel_by_abs)
-    if not dv_rows:
-        raise RuntimeError("probe found no rows for touched files")
-    descriptors = _write_dv_blob(path, dv_rows)
-
-    actions: list[dict] = []
-    upgrade = _dv_protocol_upgrade(snap.get("protocol") or {})
-    if upgrade is not None:
-        actions.append(upgrade)
-    for abs_fp in sorted(dv_rows):
-        f = rel_by_abs[abs_fp]
-        actions.append({
-            "remove": {
-                "path": f["path"],
-                "deletionTimestamp": 0,
-                "dataChange": True,
-            }
-        })
-    for abs_fp in sorted(dv_rows):
-        f = rel_by_abs[abs_fp]
-        add = {
-            "path": f["path"],
-            "partitionValues": dict(f.get("partitionValues") or {}),
-            "size": int(f.get("size") or 0),
-            "modificationTime": 0,
-            "dataChange": True,
-            "deletionVector": descriptors[abs_fp],
-        }
-        if f.get("stats"):
-            add["stats"] = f["stats"]
-        actions.append({"add": add})
-    actions.append({
-        "commitInfo": {
-            "operation": "DELETE",
-            "operationMetrics": {
-                "numDeletedRows": str(sum(
-                    len(v) for v in by_file.values()
-                )),
-                "numDeletionVectorsAdded": str(len(dv_rows)),
-                "numRemovedFiles": "0",
-            },
-        }
-    })
-    version = snap["version"] + 1
-    cur = delta_snapshot(path)
-    if cur["version"] != snap["version"]:
-        raise ConcurrentWriteError(
-            f"table advanced to version {cur['version']} (expected "
-            f"{snap['version']}): {path}"
-        )
-    payload = "\n".join(json.dumps(a) for a in actions) + "\n"
-    if not _atomic_claim_commit(_log_dir(path), version, payload):
-        raise ConcurrentWriteError(
-            f"lost the commit race at version {version}: {path}"
-        )
-    return version
-
-
 def update_delta(
     spark: SparkSession,
     path: str,
@@ -2207,7 +1921,8 @@ def update_delta(
     strategy: str = "cow",
     max_mor_rows: int = 1_000_000,
 ) -> int | None:
-    """Row-level UPDATE ... SET ``assignments`` WHERE ``condition``.
+    """Row-level UPDATE ... SET ``assignments`` WHERE ``condition``,
+    planned by ``sources/row_dml.py``.
 
     ``strategy="cow"`` (default) — file-pruned copy-on-write: only
     files actually holding a matching row rewrite, with the
@@ -2216,7 +1931,7 @@ def update_delta(
 
     ``strategy="mor"`` — the ROW-DELTA shape (r16): the matched rows'
     OLD positions get deletion vectors (merged with any existing DV)
-    and their UPDATED images stage as ONE new data file, committed
+    and their UPDATED images stage as new data files, committed
     atomically — bytes written ∝ the MATCHED ROWS, not the touched
     files (a point UPDATE on a 1 GB file writes KBs). This is what
     real DV-enabled engines do for UPDATE/MERGE. Matched positions
@@ -2228,130 +1943,13 @@ def update_delta(
     evolution) and expressions are cast back to the column's exact
     table type, so the file schema never drifts. Returns the
     committed version, or None when nothing matched."""
-    if strategy not in ("cow", "mor"):
-        raise ValueError(f"strategy must be cow|mor, got {strategy!r}")
-    snap = delta_snapshot(path)
-    types = {f.name: f.dataType for f in snap["schema"].fields}
-    unknown = sorted(set(assignments) - set(types))
-    if unknown:
-        raise ValueError(f"UPDATE assigns unknown columns {unknown}")
-    pcols = set(snap["partition_columns"])
-    moved = sorted(set(assignments) & pcols)
-    if moved:
-        raise ValueError(
-            f"UPDATE of partition columns {moved} moves rows between "
-            "partitions — rewrite via merge_delta instead"
-        )
-    touched, cond = _touched_by_condition(
-        spark, path, snap, condition, range_filter
-    )
-    if not touched:
-        return None
-    if strategy == "mor":
-        return _update_delta_mor(
-            spark, path, snap, touched, cond, assignments, types,
-            max_mor_rows,
-        )
-    rows = _scan_file_groups(
-        spark, path, snap["schema"], snap["partition_columns"],
-        touched, snap.get("physical_names"),
-    )
-    # ONE select evaluating every assignment (and the condition)
-    # against the PRE-update row — sequential withColumn would let a
-    # later assignment read an already-updated column, which is not
-    # SQL UPDATE
-    hit_col = "__hit"
-    while hit_col in rows.columns:
-        hit_col += "_"
-    rows = rows.withColumn(hit_col, F.coalesce(cond, F.lit(False)))
-    sel = []
-    for f in snap["schema"].fields:
-        if f.name in assignments:
-            e = assignments[f.name]
-            e = F.expr(e) if isinstance(e, str) else e
-            sel.append(
-                F.when(F.col(hit_col), e.cast(types[f.name]))
-                .otherwise(F.col(f.name)).alias(f.name)
-            )
-        else:
-            sel.append(F.col(f.name))
-    rows = rows.select(*sel)
-    return write_delta(
-        rows,
-        path,
-        mode="append",
-        partition_by=snap["partition_columns"],
-        expected_version=snap["version"],
-        replace_paths=[f["path"] for f in touched],
-    )
+    from embeddinghub_spark.sources import row_dml
 
-
-def _update_delta_mor(
-    spark: SparkSession,
-    path: str,
-    snap: dict,
-    touched: list[dict],
-    cond,
-    assignments: dict,
-    types: dict,
-    max_mor_rows: int,
-) -> int:
-    """Row-delta UPDATE commit (see ``update_delta(strategy="mor")``):
-    DV the matched rows' old positions and stage their updated images
-    as new data files, in ONE ``write_delta(dv_readds=…)`` commit —
-    two commits would expose a state with the updated rows present
-    twice. The matched set is computed twice over the SAME immutable
-    files (one driver collect for positions, one staged write for the
-    images) — parquet row_index is deterministic at rest, so the two
-    reads agree by construction."""
-    path = os.path.realpath(os.path.abspath(path))
-    scan = _scan_file_groups(
-        spark, path, snap["schema"], snap["partition_columns"],
-        touched, snap.get("physical_names"),
-        keep_file_path=True, keep_row_index=True,
-    ).filter(cond)
-    by_file = _collect_probe_hits(
-        scan.select("_fp", "_pos"), max_mor_rows, "UPDATE"
-    )
-    if not by_file:
-        raise RuntimeError("probe found no rows for touched files")
-    rel_by_abs = {
-        os.path.join(path, _decode_path(f["path"])): f for f in touched
-    }
-    dv_rows = _merged_dv_rows(path, by_file, rel_by_abs)
-    descriptors = _write_dv_blob(path, dv_rows)
-    dv_readds = []
-    for abs_fp in sorted(dv_rows):
-        f = rel_by_abs[abs_fp]
-        add = {
-            "path": f["path"],
-            "partitionValues": dict(f.get("partitionValues") or {}),
-            "size": int(f.get("size") or 0),
-            "modificationTime": 0,
-            "dataChange": True,
-            "deletionVector": descriptors[abs_fp],
-        }
-        if f.get("stats"):
-            add["stats"] = f["stats"]
-        dv_readds.append(add)
-    # updated images of EXACTLY the matched rows, assignments against
-    # the PRE-update row in one projection (the cow discipline)
-    sel = []
-    for fld in snap["schema"].fields:
-        if fld.name in assignments:
-            e = assignments[fld.name]
-            e = F.expr(e) if isinstance(e, str) else e
-            sel.append(e.cast(types[fld.name]).alias(fld.name))
-        else:
-            sel.append(F.col(fld.name))
-    updated = scan.select(*sel)
-    return write_delta(
-        updated,
-        path,
-        mode="append",
-        partition_by=snap["partition_columns"],
-        expected_version=snap["version"],
-        dv_readds=dv_readds,
+    row_dml.check_strategy(strategy)
+    table = _dml_table(spark, path, delta_snapshot(path))
+    return row_dml.update(
+        table, condition, assignments, range_filter, strategy,
+        max_mor_rows,
     )
 
 

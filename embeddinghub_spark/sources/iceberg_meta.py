@@ -1184,6 +1184,42 @@ def _prunable_pair(a, b) -> bool:
     return False
 
 
+def _drop_position_deleted(spark: SparkSession, snap: dict, path: str, rows):
+    """LEFT ANTI join ``rows`` (carrying the decoded data-file path
+    ``_fp`` and row index ``_pos``) against the snapshot's
+    position-delete files — position-grain merge-on-read, shared by
+    ``read_iceberg`` and the MoR UPDATE probe. Delete files record
+    their data-file paths under the WRITE-time table location; that
+    prefix rebases onto the actual canonical root so a relocated table
+    keeps matching (``_resolve`` rebases manifest paths the same way).
+    Deletes are churn-sized, so AQE broadcasts the anti-join side."""
+    from pyspark.sql import functions as F
+
+    from embeddinghub_spark.sources.scan_prune import decoded_file_path_col
+
+    root = os.path.realpath(os.path.abspath(path))
+    location = snap["metadata"].get("location")
+    loc = re.sub(r"^file:/*", "/", location).rstrip("/") if location else None
+    dfp = decoded_file_path_col(F.col("file_path"))
+    if loc and loc != root:
+        pref = loc + "/"
+        dfp = F.when(
+            dfp.startswith(pref),
+            F.concat(
+                F.lit(root + "/"),
+                F.substring(dfp, len(pref) + 1, 2_000_000_000),
+            ),
+        ).otherwise(dfp)
+    dels = spark.read.parquet(*sorted(snap["position_deletes"])).select(
+        dfp.alias("_dfp"), F.col("pos").cast("long").alias("_dpos")
+    )
+    return rows.join(
+        dels,
+        (rows["_fp"] == dels["_dfp"]) & (rows["_pos"] == dels["_dpos"]),
+        "left_anti",
+    )
+
+
 def read_iceberg(
     spark: SparkSession,
     path: str,
@@ -1303,29 +1339,9 @@ def read_iceberg(
     # so relocated tables keep matching.
     from pyspark.sql import functions as F
 
-    root_real = os.path.realpath(os.path.abspath(path))
-    location = snap["metadata"].get("location")
-    loc_plain = (
-        re.sub(r"^file:/*", "/", location).rstrip("/") if location else None
-    )
-
     from embeddinghub_spark.sources.scan_prune import (
         decoded_file_path_col as norm,
     )
-
-    def rebase(c):
-        # recorded write-time prefix -> actual canonical root (the
-        # driver-side twin is _resolve's location rebase)
-        if loc_plain and loc_plain != root_real:
-            pref = loc_plain + "/"
-            return F.when(
-                c.startswith(pref),
-                F.concat(
-                    F.lit(root_real + "/"),
-                    F.substring(c, len(pref) + 1, 2_000_000_000),
-                ),
-            ).otherwise(c)
-        return c
 
     tagged = data.select(
         *cols,
@@ -1333,19 +1349,7 @@ def read_iceberg(
         F.col("_pos"),
     )
     if snap["position_deletes"]:
-        dels = (
-            spark.read.parquet(*sorted(snap["position_deletes"]))
-            .select(
-                rebase(norm(F.col("file_path"))).alias("_dfp"),
-                F.col("pos").cast("long").alias("_dpos"),
-            )
-        )
-        tagged = tagged.join(
-            dels,
-            (tagged["_fp"] == dels["_dfp"])
-            & (tagged["_pos"] == dels["_dpos"]),
-            "left_anti",
-        )
+        tagged = _drop_position_deleted(spark, snap, path, tagged)
     if snap["equality_deletes"]:
         # data rows carry their file's sequence number AND partition
         # identity via a (#files)-row broadcast frame on the canonical

@@ -1883,6 +1883,33 @@ def test_delete_delta_mor_writes_deletion_vectors(spark, tmp_path):
                      strategy="mor", max_mor_rows=10)
 
 
+def test_delete_delta_mor_keeps_checkpoint_cadence(spark, tmp_path):
+    """MoR DELETE commits go through the same commit step as every
+    other write, so they keep the ``checkpoint_interval`` cadence: ten
+    DV deletes on a fresh table write the version-10 checkpoint, and
+    the table replays exactly from it once the JSON commits before it
+    are gone."""
+    from embeddinghub_spark.sources.delta_log import (
+        delete_delta,
+        write_delta,
+    )
+
+    t = str(tmp_path / "mor_ckpt")
+    write_delta(
+        spark.range(0, 100).selectExpr("id", "concat('v', id) AS v"), t
+    )
+    for i in range(10):
+        assert delete_delta(spark, t, f"id = {i}", strategy="mor") == i + 1
+    log = os.path.join(t, "_delta_log")
+    assert os.path.exists(os.path.join(log, f"{10:020d}.checkpoint.parquet"))
+    assert json.load(open(os.path.join(log, "_last_checkpoint")))[
+        "version"] == 10
+    for v in range(10):
+        os.remove(os.path.join(log, f"{v:020d}.json"))
+    got = {r["id"] for r in read_delta(spark, t).collect()}
+    assert got == set(range(10, 100))
+
+
 def test_mor_delete_vacuum_and_compaction_interplay(spark, tmp_path):
     """The DV lifecycle around the maintenance ops, on a REAL
     MoR-written table (the prior pins used hand fixtures): vacuum

@@ -1411,13 +1411,23 @@ def test_update_iceberg_mor_row_delta(spark, tmp_path):
     position-delete files, updated images stage as new data files,
     one atomic commit; assignments see the PRE-update row; required
     columns stay required through the staging round-trip; MoR delete
-    composes; COW afterwards purges."""
+    composes; COW afterwards purges. The second input RELOCATES the
+    table after the MoR delete (metadata location != its path): the
+    MoR update probe must rebase the delete file's recorded paths, or
+    the deleted row comes back."""
+    for relocate in (False, True):
+        _update_iceberg_mor_row_delta(spark, tmp_path, relocate)
+
+
+def _update_iceberg_mor_row_delta(spark, tmp_path, relocate):
+    import shutil
+
     from embeddinghub_spark.sources.iceberg_write import (
         delete_iceberg,
         update_iceberg,
     )
 
-    t = str(tmp_path / "imorupd")
+    t = str(tmp_path / f"imorupd{int(relocate)}")
     write_iceberg(
         spark.range(0, 20000).selectExpr(
             "id", "concat('v', id) AS v", "CAST(id % 7 AS DOUBLE) AS w"
@@ -1466,6 +1476,9 @@ def test_update_iceberg_mor_row_delta(spark, tmp_path):
                           strategy="mor") is not None
     rows2 = {r["id"] for r in read_iceberg(spark, t).collect()}
     assert rows2 == set(range(20000)) - {5000}
+    if relocate:
+        shutil.move(t, t + "_moved")
+        t += "_moved"
     # RESURRECTION GUARD: a MoR update whose condition matches the
     # position-deleted row must NOT write an updated image of it —
     # the probe applies existing deletes (review find r16)
