@@ -23,9 +23,9 @@ from embeddinghub_spark.catalog import Catalog, FeatureLag
 from embeddinghub_spark.operators.batch import batch_features
 from embeddinghub_spark.operators.materialize import (
     chunk,
+    global_prefix,
     materialize,
     materialize_no_ts,
-    with_global_row_number,
 )
 from embeddinghub_spark.operators.split import with_split
 from embeddinghub_spark.sources.readers import read_incremental
@@ -187,7 +187,9 @@ WHERE rn = 1
 
 def q_c5_chunked_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    numbered = with_global_row_number(orders, ["o_orderkey"])
+    numbered, _ = global_prefix(
+        orders, [F.col("o_orderkey")], out_col="row_number"
+    )
     return chunk(numbered, 3, 1000).select("o_orderkey", "o_totalprice", "row_number")
 
 
@@ -2285,8 +2287,7 @@ _SHARD_TOKENS = 500
 def q_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget shard packing (functions/text.py
     pack_token_shards): start-offset packing over the doc_id order via
-    the C5 range-partition + prefix-sum machinery — never a
-    single-partition global window."""
+    ``global_prefix`` (the C5 prefix sum)."""
     from embeddinghub_spark.functions.text import pack_token_shards
 
     return pack_token_shards(_t(spark, sf_dir, "documents"), _SHARD_TOKENS)
@@ -8108,8 +8109,8 @@ def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep the best documents by an exact-integer quality score
     (stopword tokens per million — the English-naturalness proxy,
     engine-stable unlike a raw-double score) until the corpus-wide
-    token budget fills. Cumulative sum via the C5 range-partition +
-    offset discipline — no single-partition global window."""
+    token budget fills. Cumulative sum via ``global_prefix`` (the C5
+    prefix sum)."""
     from embeddinghub_spark.functions.selection import budget_select
     from embeddinghub_spark.functions.text import stopword_count, token_count
 
@@ -8171,9 +8172,8 @@ def q_domain_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixture_budgets + domain_budget_select): apportion a corpus-wide
     token budget across languages by mixture weight (largest-remainder
     integer split), then fill each domain with its best documents by
-    the exact stopword-per-million score. The C5 discipline
-    generalized per-domain: a head domain splits across range
-    partitions instead of collapsing onto one task."""
+    the exact stopword-per-million score, via ``grouped_prefix`` (the
+    per-domain C5 prefix sum)."""
     from embeddinghub_spark.functions.selection import (
         domain_budget_select,
         mixture_budgets,
@@ -8290,8 +8290,8 @@ _SHUFFLE_SHARD_SIZE = 1000
 def q_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training order + shard layout (functions/
     selection.py shuffle_order): md5(doc_id|seed) permutation of the
-    corpus, 1-based position via the C5 range-partition numbering (no
-    single-partition global sort), shard = (position-1) DIV
+    corpus, 1-based position via ``global_prefix`` (the C5 prefix
+    sum), shard = (position-1) DIV
     shard_size. The freeze-the-shuffle step every LLM training
     pipeline runs after curation; a new seed is a new epoch order."""
     from embeddinghub_spark.functions.selection import shuffle_order

@@ -50,33 +50,13 @@ from embeddinghub_spark.functions.vector import (
     _collect_cells,
     _topk_per_query,
     assign_ivf_cells,
+    default_centroids,
     dot,
     norm,
 )
 
 _CELLS = "cells"
 _CENTROIDS = "centroids"
-
-
-def default_centroids(
-    vectors: DataFrame,
-    n_cells: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The deterministic quantizer knn_ivf defaults to: first
-    ``n_cells`` vectors by id, cell = 1-based rank. Swap in
-    ``kmeans_centroids`` for production recall — every downstream
-    step is unchanged."""
-    return (
-        vectors.orderBy(F.col(id_col).asc())
-        .limit(n_cells)
-        .select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("centroid"))
-        .withColumn(
-            "cell", F.row_number().over(Window.orderBy(F.col("_cid").asc()))
-        )
-        .select("cell", "centroid")
-    )
 
 
 def ivf_index_build(

@@ -33,16 +33,13 @@ def binary_auc(
 
     Scale shape: one groupBy collapses the data to DISTINCT-score
     rows (map-side combine — the only pass over the data). The
-    cumulative count below each score is then a DISTRIBUTED prefix
-    sum (the C5 range-partition pattern — materialize.py:114): range-
-    partition the distinct-score frame on score, window WITHIN each
-    partition, collect one subtotal row per partition and fold the
-    exclusive offsets back in as a literal array. No operator touches
-    a single-partition window at any |distinct scores|. On top of
-    that, ``quantize`` (default 4 decimal places — standard reporting
-    precision for AUC) rounds scores IN-OP before the groupBy so a
-    continuous scorer cannot blow up the distinct-score frame in the
-    first place; pass ``quantize=None`` for bit-exact unquantized
+    cumulative count below each score is then ``global_prefix`` (the
+    C5 prefix sum, operators/materialize.py) over the distinct-score
+    frame — no single-partition window at any |distinct scores|. On
+    top of that, ``quantize`` (default 4 decimal places — standard
+    reporting precision for AUC) rounds scores IN-OP before the
+    groupBy so a continuous scorer cannot blow up the distinct-score
+    frame in the first place; pass ``quantize=None`` for bit-exact unquantized
     ranks (the prefix sum keeps even that fully parallel). Rows with
     NULL score or label are excluded.
 
@@ -59,44 +56,29 @@ def binary_auc(
         s.alias("_s"),
         F.col(label_col).cast("int").alias("_y"),
     )
+    from embeddinghub_spark.operators.materialize import global_prefix
+
     per_score = t.groupBy("_s").agg(
         F.count(F.lit(1)).alias("_n"), F.sum("_y").alias("_p")
     )
-    # Distributed prefix sum over distinct scores (C5 pattern).
-    # localCheckpoint pins the ranged layout so the subtotal job and
-    # the main plan see identical partition ids (AQE may otherwise
-    # coalesce the range exchange differently per job).
-    n_parts = (
-        num_partitions
-        or df.sparkSession.sparkContext.defaultParallelism
+    ranked, _ = global_prefix(
+        per_score,
+        [F.col("_s")],
+        out_col="_cum",
+        value_col="_n",
+        num_partitions=num_partitions,
     )
-    ranged = per_score.repartitionByRange(
-        n_parts, F.col("_s")
-    ).localCheckpoint(eager=True)
-    part = ranged.withColumn("_pid", F.spark_partition_id())
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy("_s")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    totals = (
-        part.groupBy("_pid").agg(F.sum("_n").alias("_t"))
-        .orderBy("_pid")
-        .collect()
-    )  # one tiny row per partition — driver-safe at any scale
-    offsets, acc = {}, 0
-    for r in totals:
-        offsets[r["_pid"]] = acc
-        acc += r["_t"]
-    offset_arr = F.array(
-        *[F.lit(offsets.get(i, 0)).cast("bigint") for i in range(n_parts)]
-    )
-    ranked = part.withColumn(
-        "_cum",
-        F.sum("_n").over(w) + F.element_at(offset_arr, F.col("_pid") + 1),
-    ).withColumn("_cb", F.col("_cum") - F.col("_n"))
-    # 2*avg_rank = 2*cum_before + n + 1  (exact bigint)
-    agg = ranked.agg(
+    return _rank_sum_auc(ranked.withColumn("_cb", F.col("_cum") - F.col("_n")))
+
+
+def _rank_sum_auc(ranked: DataFrame, *group_cols: str) -> DataFrame:
+    """The tie-aware rank-sum tail shared by every AUC here: ``ranked``
+    holds one row per distinct score with ``_n`` rows, ``_p``
+    positives and ``_cb`` rows ranked strictly below it; the output is
+    ``(*group_cols, auc, n_pos, n_neg)`` per group (one row without
+    groups). 2·avg_rank = 2·_cb + _n + 1 keeps every sum an exact
+    bigint; AUC is NULL when either class is empty."""
+    agg = ranked.groupBy(*group_cols).agg(
         F.sum(
             F.col("_p") * (F.lit(2) * F.col("_cb") + F.col("_n") + F.lit(1))
         ).alias("_s2"),  # Σ_pos 2·avg_rank
@@ -108,6 +90,7 @@ def binary_auc(
         / (F.lit(2.0) * F.col("n_pos") * F.col("n_neg"))
     )
     return agg.select(
+        *group_cols,
         F.when(
             (F.col("n_pos") > 0) & (F.col("n_neg") > 0), F.round(auc, 9)
         ).alias("auc"),
@@ -161,28 +144,8 @@ def auc_by_group(
         .orderBy("_s")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    ranked = per_score.withColumn("_cum", F.sum("_n").over(w)).withColumn(
-        "_cb", F.col("_cum") - F.col("_n")
-    )
-    agg = ranked.groupBy("_g").agg(
-        F.sum(
-            F.col("_p") * (F.lit(2) * F.col("_cb") + F.col("_n") + F.lit(1))
-        ).alias("_s2"),
-        F.sum("_p").alias("n_pos"),
-        F.sum(F.col("_n") - F.col("_p")).alias("n_neg"),
-    )
-    auc = (
-        (F.col("_s2") - F.col("n_pos") * (F.col("n_pos") + 1)).cast("double")
-        / (F.lit(2.0) * F.col("n_pos") * F.col("n_neg"))
-    )
-    return agg.select(
-        F.col("_g").alias(group_col),
-        F.when(
-            (F.col("n_pos") > 0) & (F.col("n_neg") > 0), F.round(auc, 9)
-        ).alias("auc"),
-        F.col("n_pos").cast("bigint").alias("n_pos"),
-        F.col("n_neg").cast("bigint").alias("n_neg"),
-    )
+    ranked = per_score.withColumn("_cb", F.sum("_n").over(w) - F.col("_n"))
+    return _rank_sum_auc(ranked, "_g").withColumnRenamed("_g", group_col)
 
 
 def ranking_metrics(

@@ -15,9 +15,9 @@ to keep; these two pick WHICH documents):
 - ``budget_select`` — exact token-budget curation: keep the
   highest-scoring documents until a corpus-wide token budget fills
   (the FineWeb-Edu-style "take the best N tokens" step), with the
-  cumulative sum computed by the C5 range-partition + offset
-  discipline (operators/materialize.py) — no single-partition global
-  window at any scale.
+  cumulative sum computed by ``global_prefix`` (the C5 prefix sum,
+  operators/materialize.py) — no single-partition global window at
+  any scale.
 
 Both are pure JVM expressions (split / md5 / aggregate / window) — no
 Python UDFs — and both are oracle-replayable: the md5 bucket hash and
@@ -32,7 +32,7 @@ discipline these operators reuse.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from embeddinghub_spark.functions.text import tokens
@@ -243,18 +243,9 @@ def budget_select(
     Output: the kept rows plus ``cum_cost`` (the inclusive running
     total, so callers can see how full the budget ran).
 
-    Scale shape: a literal global-ORDER-BY window collapses to one
-    partition — fatal at 100 TB. This uses the C5 discipline
-    (operators/materialize.py with_global_row_number_counted):
-    range-partition on the order key, cumulative-sum WITHIN each
-    partition, then add the exclusive prefix sum of per-partition
-    totals (one tiny driver-side row per partition, folded back as a
-    literal array — no join). localCheckpoint pins the ranged layout
-    so the totals job and the final pass see identical partition ids.
-    The offset array is PARTITIONS-sized, not data-sized — fine at any
-    data scale, but at extreme parallelism (10⁵ partitions) the
-    literal bloats the plan; cap ``num_partitions`` accordingly (same
-    bound operators/materialize.py documents for C5).
+    Scale shape: the running sum is ``global_prefix`` (the C5
+    prefix sum, operators/materialize.py) — no single-partition
+    global window.
 
     Determinism: ``(score_col, id_col)`` must be a total order with an
     engine-stable score — use exact-integer or pre-rounded scores, not
@@ -266,11 +257,9 @@ def budget_select(
     silently inflating the kept set past the budget — so the first
     NULL encountered raises at execution time instead.
     """
-    _require_absent(
-        df, ("_cost", "_pid", "_local_cum", "cum_cost"), "budget_select"
-    )
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    _require_absent(df, ("_cost", "cum_cost"), "budget_select")
+    from embeddinghub_spark.operators.materialize import global_prefix
+
     # fail-fast on NULL costs (see cost contract above): evaluated once
     # per row inside the checkpointed ranged pass, zero extra jobs.
     checked_cost = F.when(
@@ -279,40 +268,14 @@ def budget_select(
             F.lit(f"budget_select: cost_col {cost_col!r} contains NULL")
         ).cast("bigint"),
     ).otherwise(F.col(cost_col).cast("bigint"))
-    ranged = (
-        df.withColumn("_cost", checked_cost)
-        .repartitionByRange(n, F.col(score_col).desc(), F.col(id_col).asc())
-        .localCheckpoint(eager=True)
+    cum, _ = global_prefix(
+        df.withColumn("_cost", checked_cost),
+        [F.col(score_col).desc(), F.col(id_col).asc()],
+        out_col="cum_cost",
+        value_col="_cost",
+        num_partitions=num_partitions,
     )
-    part = ranged.withColumn("_pid", F.spark_partition_id())
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(F.col(score_col).desc(), F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = part.withColumn("_local_cum", F.sum(F.col("_cost")).over(w))
-    totals = (
-        part.groupBy("_pid")
-        .agg(F.sum("_cost").alias("_t"))
-        .orderBy("_pid")
-        .collect()
-    )  # one row per partition — driver-safe at any scale
-    offsets, acc = {}, 0
-    for r in totals:
-        offsets[r["_pid"]] = acc
-        acc += r["_t"] or 0
-    offset_arr = F.array(
-        *[F.lit(offsets.get(i, 0)).cast("bigint") for i in range(n)]
-    )
-    return (
-        local.withColumn(
-            "cum_cost",
-            F.col("_local_cum")
-            + F.element_at(offset_arr, F.col("_pid") + 1),
-        )
-        .filter(F.col("cum_cost") <= F.lit(int(budget)))
-        .drop("_pid", "_local_cum", "_cost")
-    )
+    return cum.filter(F.col("cum_cost") <= F.lit(int(budget))).drop("_cost")
 
 
 def mixture_budgets(weights: dict, total_budget: int) -> dict:
@@ -376,19 +339,9 @@ def domain_budget_select(
     running total). Rows whose domain is ABSENT from ``budgets`` are
     dropped (budget 0) — pass an explicit entry to keep a domain.
 
-    Scale shape: a per-domain global window would put each domain on
-    ONE task — fatal when a head domain holds most of the corpus
-    (web-crawl mixtures are exactly that skewed). Instead the C5
-    discipline generalizes: range-partition on ``(domain, score DESC,
-    id)`` (a dominant domain SPLITS across many partitions),
-    cumulative-sum within each (partition, domain) slice, then add the
-    exclusive per-domain prefix of (partition, domain) subtotals. The
-    subtotal frame is ≤ partitions × |domains| rows, so its prefix
-    window and the broadcast join back are both trivially small; no
-    driver-side literal is needed (unlike ``budget_select``'s
-    partitions-sized array, this offset frame is keyed by domain too,
-    so it rides a broadcast join). localCheckpoint pins the ranged
-    layout so every pass sees identical partition ids.
+    Scale shape: the per-domain running sum is ``grouped_prefix``
+    (the C5 prefix sum, operators/materialize.py): a head domain splits
+    across partitions instead of landing on one task.
 
     Determinism and cost contracts are ``budget_select``'s: the score
     must be engine-stable (exact-integer or pre-rounded) and costs
@@ -396,11 +349,9 @@ def domain_budget_select(
     """
     if not budgets:
         raise ValueError("budgets must be non-empty")
-    _require_absent(
-        df,
-        ("_cost", "_pid", "_local_cum", "_off", "cum_cost"),
-        "domain_budget_select",
-    )
+    # _pid is the prefix-sum core's; listed here too so the error names
+    # this op (pinned by test)
+    _require_absent(df, ("_cost", "_pid", "cum_cost"), "domain_budget_select")
     from embeddinghub_spark.operators.materialize import grouped_prefix
 
     checked_cost = F.when(
@@ -463,13 +414,10 @@ def interleave_sources(
     ``weights`` — or rounding to a zero share — are dropped; pass an
     explicit weight to keep a domain. A new ``seed`` is a new epoch.
 
-    Scale shape: per-domain numbering uses the same generalized C5
-    discipline as ``domain_budget_select`` (range exchange on
-    ``(domain, hash, keys)``; a head domain splits across partitions;
-    per-domain offsets ride a broadcast-joined (partitions × domains)
-    subtotal frame), and the merged rank reuses
-    ``with_global_row_number`` on the stride key. Two range exchanges
-    total — never a per-domain or global single-task sort.
+    Scale shape: per-domain numbering is ``grouped_prefix`` and the
+    merged rank ``global_prefix`` on the stride key (the C5 prefix
+    sum, operators/materialize.py). Two range exchanges total — never
+    a per-domain or global single-task sort.
 
     Overflow bound: the stride key is ≤ 2·rows·share_scale/s_d; with
     the default 1e6 scale, bigint holds past 10¹¹ rows per domain even
@@ -481,11 +429,13 @@ def interleave_sources(
         raise ValueError("share_scale must be positive")
     _require_absent(
         df,
-        ("_h", "_share", "_pid", "_local_rn", "_off", "_stride",
-         "domain_position", "position"),
+        ("_h", "_share", "_stride", "domain_position", "position"),
         "interleave_sources",
     )
-    from embeddinghub_spark.operators.materialize import with_global_row_number
+    from embeddinghub_spark.operators.materialize import (
+        global_prefix,
+        grouped_prefix,
+    )
 
     shares = {
         d: s
@@ -494,8 +444,6 @@ def interleave_sources(
     }
     if not shares:
         raise ValueError("weights apportion to zero shares")
-    from embeddinghub_spark.operators.materialize import grouped_prefix
-
     h = F.md5(
         F.concat_ws(
             "|", *[F.col(c).cast("string") for c in key_cols], F.lit(str(seed))
@@ -531,12 +479,13 @@ def interleave_sources(
         )
         .drop("_h", "_share")
     )
-    return with_global_row_number(
+    merged, _ = global_prefix(
         numbered,
-        ["_stride", domain_col, "domain_position"],
-        row_col="position",
+        [F.col(c) for c in ["_stride", domain_col, "domain_position"]],
+        out_col="position",
         num_partitions=num_partitions,
-    ).drop("_stride")
+    )
+    return merged.drop("_stride")
 
 
 def shuffle_order(
@@ -553,10 +502,10 @@ def shuffle_order(
     ``md5(keys|seed)`` — the split.py hash discipline, so the exact
     permutation is replayable in any md5-bearing engine and stable
     across partitionings — and the 1-based ``position`` within it is
-    computed by the C5 range-partition + offset numbering
-    (operators/materialize.py): no single-partition global sort at
-    any scale. ``shard = (position-1) DIV shard_size`` gives the
-    contiguous shard assignment a sequential trainer reads.
+    ``global_prefix`` (the C5 prefix sum, operators/materialize.py): no
+    single-partition global sort at any scale. ``shard = (position-1)
+    DIV shard_size`` gives the contiguous shard assignment a sequential
+    trainer reads.
 
     Re-shuffling per epoch = a new ``seed``. ``key_cols`` must be
     unique per row (they tie-break the astronomically-unlikely md5
@@ -567,17 +516,17 @@ def shuffle_order(
     if shard_size <= 0:
         raise ValueError("shard_size must be positive")
     _require_absent(df, ("_h", "position", "shard"), "shuffle_order")
-    from embeddinghub_spark.operators.materialize import with_global_row_number
+    from embeddinghub_spark.operators.materialize import global_prefix
 
     h = F.md5(
         F.concat_ws(
             "|", *[F.col(c).cast("string") for c in key_cols], F.lit(str(seed))
         )
     )
-    numbered = with_global_row_number(
+    numbered, _ = global_prefix(
         df.withColumn("_h", h),
-        ["_h", *key_cols],
-        row_col="position",
+        [F.col(c) for c in ["_h", *key_cols]],
+        out_col="position",
         num_partitions=num_partitions,
     )
     # integer DIV, never double division: (pos-1)/size then cast would
@@ -628,13 +577,12 @@ def epoch_interleave(
 
     Scale shape (100 TB discipline): the epoch explode multiplies rows
     by at most ``max_epochs`` — linear in the REALIZED stream length,
-    which is the output size. Per-(domain, epoch) numbering is the
-    generalized C5 machinery (range exchange on (domain, epoch, hash);
-    per-partition window; a (partitions × domains × epochs)-row
-    subtotal frame riding a broadcast join); the merged rank reuses
-    ``with_global_row_number`` on the stride key. The only collect is
-    the one-row-per-domain size frame. Overflow: the stride key is
-    ≤ 2·total_rows, far inside bigint.
+    which is the output size. Per-(domain, epoch) numbering is
+    ``grouped_prefix`` and the merged rank ``global_prefix`` on the
+    stride key (the C5 prefix sum, operators/materialize.py). Besides
+    the prefix-sum subtotals, the only collect is the one-row-per-domain
+    size frame. Overflow: the stride key is ≤ 2·total_rows, far inside
+    bigint.
     """
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
@@ -644,11 +592,14 @@ def epoch_interleave(
         raise ValueError("max_epochs must be >= 1")
     _require_absent(
         df,
-        ("_h", "_quota", "_nd", "_kd", "_emax", "_pid", "_local_rn",
-         "_off", "_stride", "epoch", "domain_position", "slot", "position"),
+        ("_h", "_quota", "_stride", "epoch", "domain_position", "slot",
+         "position"),
         "epoch_interleave",
     )
-    from embeddinghub_spark.operators.materialize import with_global_row_number
+    from embeddinghub_spark.operators.materialize import (
+        global_prefix,
+        grouped_prefix,
+    )
 
     quotas = {
         d: q
@@ -707,8 +658,6 @@ def epoch_interleave(
             F.col("epoch").cast("string"),
         )
     )
-    from embeddinghub_spark.operators.materialize import grouped_prefix
-
     numbered = (
         grouped_prefix(
             exploded.withColumn("_h", h),
@@ -742,12 +691,13 @@ def epoch_interleave(
         )
         .drop("_h", "_quota")
     )
-    return with_global_row_number(
+    merged, _ = global_prefix(
         numbered,
-        ["_stride", domain_col, "slot"],
-        row_col="position",
+        [F.col(c) for c in ["_stride", domain_col, "slot"]],
+        out_col="position",
         num_partitions=num_partitions,
-    ).drop("_stride")
+    )
+    return merged.drop("_stride")
 
 
 def length_buckets(
@@ -786,13 +736,9 @@ def length_buckets(
     ``padded_len`` (the bucket boundary; NULL for overflow), and
     ``pad_waste`` = padded_len - n_tokens.
 
-    Scale shape: per-bucket numbering is the generalized C5 machinery
-    (range exchange on (bucket, hash, keys) so a dominant bucket
-    splits across partitions; per-partition window; a (partitions ×
-    buckets)-row subtotal frame riding a broadcast join) — never a
-    per-bucket single-task sort. Everything else is map-side CASE
-    arithmetic. No collect of data rows; the subtotal frame is the
-    only driver-adjacent state and it is (partitions × buckets)-sized.
+    Scale shape: per-bucket numbering is ``grouped_prefix`` (the C5
+    prefix sum, operators/materialize.py), so a dominant bucket splits
+    across partitions; everything else is map-side CASE arithmetic.
     """
     if batch_size < 1:
         raise ValueError("batch_size must be >= 1")
@@ -806,8 +752,8 @@ def length_buckets(
     key_cols = list(key_cols or ("doc_id",))
     _require_absent(
         df,
-        ("_h", "_pid", "_local_rn", "_off", "bucket_id", "bucket_position",
-         "batch_id", "batch_slot", "padded_len", "pad_waste"),
+        ("_h", "bucket_id", "bucket_position", "batch_id", "batch_slot",
+         "padded_len", "pad_waste"),
         "length_buckets",
     )
     tok = F.col(n_tokens_col).cast("bigint")
@@ -883,9 +829,8 @@ def pack_bins(
        boundary >= n_tokens (``length_buckets``' bucket rule);
     2. order by (padded_len DESC, md5(keys|seed), keys) — a frozen
        total order;
-    3. global exclusive prefix sum of padded_len (the C5 machinery —
-       range exchange + per-partition cumsum + broadcast subtotal
-       offsets, never a single-partition window);
+    3. global exclusive prefix sum of padded_len (``global_prefix``,
+       the C5 prefix sum — never a single-partition window);
     4. ``bin_id = start DIV capacity``, ``bin_offset = start %
        capacity``.
 
@@ -912,9 +857,9 @@ def pack_bins(
     tokens) and ``pad_waste`` (= padded_len - n_tokens).
 
     Scale shape: one range exchange (the prefix sum) + map-side CASE
-    arithmetic; the only driver-adjacent state is the (partitions)-row
-    subtotal frame inside ``grouped_prefix``. Work is O(N log N by
-    range exchange), independent of bin count.
+    arithmetic; the only driver-adjacent state is the partitions-sized
+    offset array inside ``global_prefix``. Work is O(N log N by range
+    exchange), independent of bin count.
     """
     if capacity < 1:
         raise ValueError("capacity must be >= 1")
@@ -942,9 +887,8 @@ def pack_bins(
             f"{capacity} (the no-straddle alignment guarantee)"
         )
     key_cols = list(key_cols or ("doc_id",))
-    # only the names THIS op injects — grouped_prefix guards its own
-    # internals itself (review find r13: re-reserving them here is the
-    # exact stale-tuple drift the helper guard was added to end)
+    # only the names THIS op injects — the prefix-sum core guards its
+    # own internals
     _require_absent(
         df,
         ("_h", "_cum", "padded_len", "bin_id", "bin_offset", "pad_waste"),
@@ -984,11 +928,10 @@ def pack_bins(
     packable = base.filter(F.col("padded_len").isNotNull())
     overflow = base.filter(F.col("padded_len").isNull())
 
-    from embeddinghub_spark.operators.materialize import grouped_prefix
+    from embeddinghub_spark.operators.materialize import global_prefix
 
-    cum = grouped_prefix(
+    cum, _ = global_prefix(
         packable,
-        [],
         [F.col("padded_len").desc(), F.col("_h").asc(),
          *[F.col(c).asc() for c in key_cols]],
         out_col="_cum",

@@ -447,48 +447,26 @@ def pack_token_shards(
     sequential recurrence; start-offset packing is the
     prefix-sum-parallel form used by shard writers).
 
-    Scale shape: a naive ``sum() OVER (ORDER BY id)`` collapses to ONE
-    partition. Instead this reuses the C5 machinery: range-partition on
-    the id, per-partition running sums, then add the exclusive prefix
-    sum of per-partition totals (a bounded driver-side list folded in
-    as a literal array) — fully parallel, same result.
+    Scale shape: the running token total is ``global_prefix`` (the C5
+    prefix sum, operators/materialize.py) — never a one-partition
+    ``sum() OVER (ORDER BY id)``.
 
     Output: (id, n_tokens, start_offset, shard_id, shard_pos).
     """
-    from pyspark.sql import Window
+    from embeddinghub_spark.operators.materialize import global_prefix
 
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
     with_tok = df.select(
         F.col(id_col), token_count(text_col).cast("bigint").alias("n_tokens")
     )
-    ranged = with_tok.repartitionByRange(n, F.col(id_col)).localCheckpoint(
-        eager=True
-    )
-    part = ranged.withColumn("_pid", F.spark_partition_id())
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = part.withColumn("_local_end", F.sum("n_tokens").over(w))
-    totals = part.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).orderBy(
-        "_pid"
-    ).collect()  # one row per partition — bounded at any scale
-    offsets, acc = {}, 0
-    for row in totals:
-        offsets[row["_pid"]] = acc
-        acc += row["t"]
-    offset_arr = F.array(
-        *[F.lit(offsets.get(i, 0)).cast("bigint") for i in range(n)]
-    )
-    start = (
-        F.col("_local_end")
-        + F.element_at(offset_arr, F.col("_pid") + 1)
-        - F.col("n_tokens")
+    ends, _ = global_prefix(
+        with_tok,
+        [F.col(id_col).asc()],
+        out_col="_end",
+        value_col="n_tokens",
+        num_partitions=num_partitions,
     )
     return (
-        local.withColumn("start_offset", start)
+        ends.withColumn("start_offset", F.col("_end") - F.col("n_tokens"))
         .withColumn(
             "shard_id", F.expr(f"start_offset DIV {int(shard_tokens)}")
         )
@@ -529,37 +507,30 @@ def pack_sequences(
     Zero-token documents contribute nothing and are dropped.
 
     Scale shape (100 TB discipline): the only global state is the
-    exclusive prefix sum of token counts over the order — the C5
-    range-partition + per-partition-window + driver-offset machinery
-    (``pack_token_shards``/``budget_select``), never a one-partition
-    global window. The slice explode adds ≤ total_tokens/max_seq_len
-    + n_docs rows — linear in corpus size. Everything else is
-    map-side arithmetic on (start, end) offsets.
+    exclusive prefix sum of token counts over the order —
+    ``global_prefix`` (the C5 prefix sum, operators/materialize.py),
+    never a one-partition global window. The slice explode adds
+    ≤ total_tokens/max_seq_len + n_docs rows — linear in corpus size.
+    Everything else is map-side arithmetic on (start, end) offsets.
 
     Contracts: ``order_cols`` must be a total order (tie-break with
     the id); ``n_tokens_col`` must be NON-NULL and non-negative — the
     first NULL or negative value raises at execution time (either
     would silently shift every later document's offsets).
     """
-    from pyspark.sql import Window
+    from embeddinghub_spark.functions.selection import _require_absent
+    from embeddinghub_spark.operators.materialize import global_prefix
 
     if max_seq_len < 1:
         raise ValueError("max_seq_len must be >= 1")
     if not order_cols:
         raise ValueError("order_cols must be non-empty")
-    reserved = (
-        "_tok", "_pid", "_local_end", "_start", "_end", "_sbase",
-        "_from", "_to", "seq_id", "seq_offset", "doc_offset",
-        "slice_len",
+    _require_absent(
+        df,
+        ("_tok", "_end", "_start", "_sbase", "_from", "_to", "seq_id",
+         "seq_offset", "doc_offset", "slice_len"),
+        "pack_sequences",
     )
-    clash = sorted(set(reserved) & set(df.columns))
-    if clash:
-        raise ValueError(
-            f"pack_sequences: input columns collide with reserved "
-            f"helper/output names {clash}; rename or drop them first"
-        )
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
     checked_tok = F.when(
         F.col(n_tokens_col).isNull() | (F.col(n_tokens_col) < 0),
         F.raise_error(
@@ -567,39 +538,16 @@ def pack_sequences(
                   "contains NULL or negative values")
         ).cast("bigint"),
     ).otherwise(F.col(n_tokens_col).cast("bigint"))
-    ranged = (
-        df.withColumn("_tok", checked_tok)
-        .filter(F.col("_tok") > 0)
-        .repartitionByRange(n, *[F.col(c).asc() for c in order_cols])
-        .localCheckpoint(eager=True)
-    )
-    part = ranged.withColumn("_pid", F.spark_partition_id())
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*[F.col(c).asc() for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = part.withColumn("_local_end", F.sum("_tok").over(w))
-    totals = (
-        part.groupBy("_pid").agg(F.sum("_tok").alias("_t"))
-        .orderBy("_pid").collect()
-    )  # one row per partition — bounded at any scale
-    offsets, acc = {}, 0
-    for r in totals:
-        offsets[r["_pid"]] = acc
-        acc += r["_t"]
-    offset_arr = F.array(
-        *[F.lit(offsets.get(i, 0)).cast("bigint") for i in range(n)]
+    ends, _ = global_prefix(
+        df.withColumn("_tok", checked_tok).filter(F.col("_tok") > 0),
+        [F.col(c).asc() for c in order_cols],
+        out_col="_end",
+        value_col="_tok",
+        num_partitions=num_partitions,
     )
     L = int(max_seq_len)
-    start = (
-        F.col("_local_end")
-        + F.element_at(offset_arr, F.col("_pid") + 1)
-        - F.col("_tok")
-    )
     spanned = (
-        local.withColumn("_start", start)
-        .withColumn("_end", F.col("_start") + F.col("_tok"))
+        ends.withColumn("_start", F.col("_end") - F.col("_tok"))
         # a doc covering global tokens [start, end) touches sequences
         # start DIV L .. (end-1) DIV L — explode one row per overlap
         .withColumn(
@@ -620,10 +568,7 @@ def pack_sequences(
         spanned.withColumn("seq_offset", F.col("_from") - F.col("_sbase"))
         .withColumn("doc_offset", F.col("_from") - F.col("_start"))
         .withColumn("slice_len", F.col("_to") - F.col("_from"))
-        .drop(
-            "_tok", "_pid", "_local_end", "_start", "_end", "_sbase",
-            "_from", "_to",
-        )
+        .drop("_tok", "_start", "_end", "_sbase", "_from", "_to")
     )
 
 

@@ -254,6 +254,28 @@ def _collect_cells(
     )
 
 
+def default_centroids(
+    vectors: DataFrame,
+    n_cells: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The deterministic quantizer every IVF path defaults to
+    (``knn_ivf*``, ``ivf_index_build``): first ``n_cells`` vectors by
+    id, cell = 1-based rank — replayable by a SQL oracle. Swap in
+    ``kmeans_centroids`` for production recall — every downstream
+    step is unchanged."""
+    return (
+        vectors.orderBy(F.col(id_col).asc())
+        .limit(n_cells)
+        .select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("centroid"))
+        .withColumn(
+            "cell", F.row_number().over(Window.orderBy(F.col("_cid").asc()))
+        )
+        .select("cell", "centroid")
+    )
+
+
 def _inline_ok(cents: list, vec_col, dim: int | None) -> bool:
     return (
         0 < len(cents)
@@ -470,18 +492,9 @@ def knn_ivf(
     query, scored with the same two-stage top-k as the exact path.
     """
     if centroids is None:
-        centroids = (
-            vectors.orderBy(F.col(id_col).asc())
-            .limit(n_cells)
-            .select(
-                F.col(id_col).alias("_cid"), F.col(vec_col).alias("centroid")
-            )
-            .withColumn(
-                "cell", F.row_number().over(Window.orderBy(F.col("_cid").asc()))
-            )
-            .select("cell", "centroid")
-            .localCheckpoint(eager=False)
-        )
+        centroids = default_centroids(
+            vectors, n_cells, id_col, vec_col
+        ).localCheckpoint(eager=False)
     cents = _collect_cells(centroids, "cell", "centroid")
     # the materialized inverted file IS the index: checkpointing it
     # (lazily) also stops whole-stage codegen from fusing the K×dim
@@ -497,24 +510,9 @@ def knn_ivf(
     # same order the window variant used): no broadcast, no exchange,
     # no window on the query side.
     if _inline_ok(cents, query_vec_col, dim):
-        cell_dt = centroids.schema["cell"].dataType
-        fold = _cells_fold_sql(cents, query_vec_col, dim)
-        probes = queries.select(
-            F.col(query_id_col),
-            F.col(query_vec_col),
-            F.explode(
-                F.expr(
-                    f"slice(array_sort(transform({fold},"
-                    " p -> named_struct('ns', -p.s, 'cell', p.id))),"
-                    f" 1, {int(nprobe)})"
-                )
-            ).alias("_p"),
-        ).select(
-            query_id_col,
-            query_vec_col,
-            F.col("_p.cell").cast(cell_dt).alias("cell"),
-        ).localCheckpoint(eager=False)  # Q×nprobe rows; stops every
-        # downstream job from re-running the probe expression
+        probes = _ivf_query_probes(
+            queries, centroids, cents, nprobe, query_id_col, query_vec_col, dim
+        )
     else:
         qpaired = queries.join(F.broadcast(centroids))
         qscored = qpaired.select(
@@ -1141,16 +1139,9 @@ def knn_ivfpq(
     if not qrows:
         return _pq_empty_result(vectors, queries, id_col, query_id_col)
     if centroids is None:
-        centroids = (
-            vectors.orderBy(F.col(id_col).asc())
-            .limit(n_cells)
-            .select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("centroid"))
-            .withColumn(
-                "cell", F.row_number().over(Window.orderBy(F.col("_cid").asc()))
-            )
-            .select("cell", "centroid")
-            .localCheckpoint(eager=False)
-        )
+        centroids = default_centroids(
+            vectors, n_cells, id_col, vec_col
+        ).localCheckpoint(eager=False)
     cents = _collect_cells(centroids, "cell", "centroid")
     if cb is None:
         cb = pq_codebooks(vectors, m, k_codes, id_col, vec_col, dim)
@@ -1300,16 +1291,9 @@ def knn_ivfpq_batch(
     """
     d = dim // m
     if centroids is None:
-        centroids = (
-            vectors.orderBy(F.col(id_col).asc())
-            .limit(n_cells)
-            .select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("centroid"))
-            .withColumn(
-                "cell", F.row_number().over(Window.orderBy(F.col("_cid").asc()))
-            )
-            .select("cell", "centroid")
-            .localCheckpoint(eager=False)
-        )
+        centroids = default_centroids(
+            vectors, n_cells, id_col, vec_col
+        ).localCheckpoint(eager=False)
     cents = _collect_cells(centroids, "cell", "centroid")
     if cb is None:
         cb = pq_codebooks(vectors, m, k_codes, id_col, vec_col, dim)
@@ -1482,16 +1466,9 @@ def knn_ivfpq_residual(
     _pq_guard_queries(qrows)
     if not qrows:
         return _pq_empty_result(vectors, queries, id_col, query_id_col)
-    centroids = (
-        vectors.orderBy(F.col(id_col).asc())
-        .limit(n_cells)
-        .select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("centroid"))
-        .withColumn(
-            "cell", F.row_number().over(Window.orderBy(F.col("_cid").asc()))
-        )
-        .select("cell", "centroid")
-        .localCheckpoint(eager=False)
-    )
+    centroids = default_centroids(
+        vectors, n_cells, id_col, vec_col
+    ).localCheckpoint(eager=False)
     cents = _collect_cells(centroids, "cell", "centroid")
     cent_vecs, cents_arr_sql, cb = _residual_index(
         vectors, cents, k_codes, m, d, dim, id_col, vec_col
@@ -1501,20 +1478,9 @@ def knn_ivfpq_residual(
         id_col, vec_col, dim,
     )
 
-    cell_dt = centroids.schema["cell"].dataType
-    fold = _cells_fold_sql(cents, query_vec_col, dim)
-    probes = queries.select(
-        F.col(query_id_col),
-        F.explode(
-            F.expr(
-                f"slice(array_sort(transform({fold},"
-                " p -> named_struct('ns', -p.s, 'cell', p.id))),"
-                f" 1, {int(nprobe)})"
-            )
-        ).alias("_p"),
-    ).select(
-        query_id_col, F.col("_p.cell").cast(cell_dt).alias("cell")
-    ).localCheckpoint(eager=False)
+    probes = _ivf_query_probes(
+        queries, centroids, cents, nprobe, query_id_col, query_vec_col, dim
+    ).select(query_id_col, "cell")
 
     # per-(query, probed cell) ADC tables, driver-built with the same
     # fold order as the encode expression
@@ -1782,16 +1748,9 @@ def knn_ivfpq_residual_batch(
     bit-identical to the literal path (equivalence pinned by test).
     """
     d = dim // m
-    centroids = (
-        vectors.orderBy(F.col(id_col).asc())
-        .limit(n_cells)
-        .select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("centroid"))
-        .withColumn(
-            "cell", F.row_number().over(Window.orderBy(F.col("_cid").asc()))
-        )
-        .select("cell", "centroid")
-        .localCheckpoint(eager=False)
-    )
+    centroids = default_centroids(
+        vectors, n_cells, id_col, vec_col
+    ).localCheckpoint(eager=False)
     cents = _collect_cells(centroids, "cell", "centroid")
     cent_vecs, cents_arr_sql, cb = _residual_index(
         vectors, cents, k_codes, m, d, dim, id_col, vec_col

@@ -23,9 +23,9 @@ but partial-aggregates map-side, so the exchange carries one row per
 is |entities|-sized, not |events|-sized, and a hot entity collapses
 to one row per map task before the exchange (no AQE skew handling
 needed — the skew never reaches the wire). No global sort anywhere
-except C5's explicit serve-ordering, which is implemented as
-range-partition + per-partition numbering + prefix-sum offsets
-instead of a single-partition window.
+except C5's explicit serve-ordering: ``global_prefix`` /
+``grouped_prefix``, the one prefix-sum core every running total in
+the package uses (mechanism on ``_running``).
 """
 
 from __future__ import annotations
@@ -157,72 +157,6 @@ def materialize_no_ts(
     )
 
 
-def with_global_row_number_counted(
-    df: DataFrame,
-    order_cols: list[str],
-    row_col: str = "row_number",
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, int]:
-    """C5: deterministic global 1-based row numbering for chunked serve
-    (``row_number() OVER (ORDER BY ...)`` — provider/sql.go:1683-1690).
-    Returns ``(numbered_df, total_row_count)`` — the total falls out of
-    the prefix-sum for free, so callers needing both (C15 split) don't
-    run a second count job.
-
-    A plain global-order window collapses to ONE partition — fatal at
-    100 TB. Instead: range-partition on the order key, number within
-    each partition, then add the exclusive prefix sum of partition
-    counts (a tiny driver-side list, broadcast back). Same result,
-    fully parallel. ``order_cols`` must be a total order (include a
-    unique key) for determinism.
-    """
-    spark = df.sparkSession
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # localCheckpoint pins the ranged layout: the counts job and the
-    # final join MUST see the identical partitioning (AQE may otherwise
-    # coalesce the range exchange differently per job, shifting
-    # partition ids and corrupting the offsets). Unlike persist(), the
-    # blocks are released by the ContextCleaner when the plan is GC'd —
-    # no unpersist contract needed from callers.
-    ranged = df.repartitionByRange(n, *[F.col(c) for c in order_cols]).localCheckpoint(
-        eager=True
-    )
-    part = ranged.withColumn("_pid", F.spark_partition_id())
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c).asc() for c in order_cols])
-    numbered = part.withColumn("_local_rn", F.row_number().over(w))
-    counts = (
-        part.groupBy("_pid").count().orderBy("_pid").collect()
-    )  # one tiny row per partition — driver-safe at any scale
-    offsets, acc = {}, 0
-    for r in counts:
-        offsets[r["_pid"]] = acc
-        acc += r["count"]
-    # fold the offsets into the plan as a literal array lookup — no
-    # join at all (an n_partitions-sized literal is trivially small
-    # next to even a broadcast-join exchange)
-    offset_arr = F.array(
-        *[F.lit(offsets.get(i, 0)).cast("bigint") for i in range(n)]
-    )
-    out = (
-        numbered.withColumn(
-            row_col, F.col("_local_rn") + F.element_at(offset_arr, F.col("_pid") + 1)
-        )
-        .drop("_pid", "_local_rn")
-    )
-    return out, acc
-
-
-def with_global_row_number(
-    df: DataFrame,
-    order_cols: list[str],
-    row_col: str = "row_number",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """C5 numbering without the count (see _counted variant)."""
-    out, _ = with_global_row_number_counted(df, order_cols, row_col, num_partitions)
-    return out
-
-
 def chunk(df_with_rn: DataFrame, chunk_idx: int, rows_per_chunk: int = 100_000,
           row_col: str = "row_number") -> DataFrame:
     """V2 segment read: ``row_number BETWEEN lo AND hi`` (provider/
@@ -237,6 +171,90 @@ def num_chunks(row_count: int, rows_per_chunk: int = 100_000) -> int:
     return -(-row_count // rows_per_chunk)
 
 
+
+
+def _running(df, group_cols, order_exprs, value_col, num_partitions):
+    """The C5 prefix-sum core behind ``global_prefix`` and
+    ``grouped_prefix``: the inclusive running count (``value_col=None``)
+    or running sum of ``value_col`` in ``(group_cols ASC, *order_exprs)``
+    order, without a single-partition window.
+
+    A literal ``row_number() OVER (ORDER BY ...)`` (provider/
+    sql.go:1683-1690) collapses to ONE partition — fatal at 100 TB.
+    Instead: one range exchange on the order (a head group splits
+    across partitions), a window WITHIN each partition (and group) for
+    the local running total ``_local``, then the caller adds the
+    exclusive prefix of per-partition subtotals as an offset. An eager
+    ``localCheckpoint`` pins the ranged layout: the subtotal job and
+    the final plan MUST see identical partition ids (AQE may otherwise
+    coalesce the range exchange differently per job, shifting ids and
+    corrupting the offsets); the ContextCleaner releases the blocks
+    once the plan is GC'd. Totals are bigint (``value_col`` must be an
+    integer column); the order must be total (tie-break with a unique
+    key) for a deterministic result.
+
+    Returns ``(frame + _pid + _local, per-partition subtotal
+    aggregate aliased _t, n_partitions)``. The internal names are
+    guarded here, so callers reserve only what they inject themselves.
+    """
+    if group_cols:
+        op, reserved = "grouped_prefix", ("_pid", "_local", "_off", "_t")
+    else:
+        op, reserved = "global_prefix", ("_pid", "_local")
+    clash = sorted(set(reserved) & set(df.columns))
+    if clash:
+        raise ValueError(
+            f"{op} reserves internal column(s) {clash}; "
+            "rename them on the input first"
+        )
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    ranged = df.repartitionByRange(
+        n, *[F.col(g).asc() for g in group_cols], *order_exprs
+    ).localCheckpoint(eager=True)
+    w = (
+        Window.partitionBy("_pid", *group_cols)
+        .orderBy(*order_exprs)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    total = F.count(F.lit(1)) if value_col is None else F.sum(value_col)
+    local = ranged.withColumn("_pid", F.spark_partition_id()).withColumn(
+        "_local", total.over(w)
+    )
+    return local, total.alias("_t"), n
+
+
+def global_prefix(
+    df: DataFrame,
+    order_exprs: list,
+    *,
+    out_col: str,
+    value_col: str | None = None,
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, int]:
+    """C5 global running total: ``out_col`` = the inclusive running
+    count (a 1-based global row number) or running sum of ``value_col``
+    in ``order_exprs`` order (Columns, directions included). Returns
+    ``(df + out_col, grand total)`` — the total falls out of the
+    offsets for free, so callers needing both run no count job.
+
+    Mechanism: ``_running``. The per-partition subtotals are one tiny
+    collected row per partition, ordered on the driver and folded into
+    the plan as a literal offset array — no join (partitions-sized: at
+    extreme parallelism, 10⁵ partitions, cap ``num_partitions``).
+    """
+    local, total, n = _running(df, [], order_exprs, value_col, num_partitions)
+    subtotals = sorted(map(tuple, local.groupBy("_pid").agg(total).collect()))
+    offsets, acc = [0] * n, 0
+    for pid, t in subtotals:
+        offsets[pid] = acc
+        acc += t or 0
+    offset_arr = F.array(*[F.lit(o).cast("bigint") for o in offsets])
+    out = local.withColumn(
+        out_col, F.col("_local") + F.element_at(offset_arr, F.col("_pid") + 1)
+    ).drop("_pid", "_local")
+    return out, acc
+
+
 def grouped_prefix(
     df,
     group_cols: list[str],
@@ -246,64 +264,32 @@ def grouped_prefix(
     value_col: str | None = None,
     num_partitions: int | None = None,
 ):
-    """Generalized per-GROUP C5 prefix aggregate: the running
+    """Per-GROUP C5 running total: ``out_col`` = the inclusive running
     count (``value_col=None``) or running sum of ``value_col`` within
-    each ``group_cols`` combination, ordered by ``order_exprs``
-    (Columns, directions included) — without ever putting a whole
-    group on one task.
+    each ``group_cols`` combination, in ``order_exprs`` order (total
+    WITHIN each group) — without ever putting a whole group on one
+    task. Empty ``group_cols`` is the global case: ``global_prefix``.
 
-    Mechanics (the C5 discipline, per-group): one range exchange on
-    ``(group_cols ASC, *order_exprs)`` so a HEAD group splits across
-    partitions (web-crawl mixtures are head-heavy; a naive
-    ``PARTITION BY group`` window would put the whole head group on
-    one task), a per-(partition, group) window for local prefixes,
-    and a (partitions × groups)-row subtotal frame whose exclusive
-    per-group prefix rides a broadcast join back — never a
-    driver-side literal. ``localCheckpoint`` pins the ranged layout
-    (AQE may otherwise coalesce the exchange differently per job,
-    shifting partition ids and corrupting the offsets — the
-    with_global_row_number_counted note).
-
-    Shared by ``functions/selection.py``'s budget / interleave /
-    bucketing family (review find r12: four diverging copies of this
-    ~30-line idiom); ``order_exprs`` must make the order total WITHIN
-    each group (tie-break with a unique key).
+    Mechanism: ``_running``. The offsets are a (partitions × groups)-row
+    subtotal frame whose exclusive per-group prefix rides a broadcast
+    join back — never a driver-side literal.
     """
-    # Guard the helper's OWN internal names (ADVICE r12: callers'
-    # _require_absent tuples still reserved the pre-extraction names
-    # _local_cum/_local_rn, so an input carrying _local passed their
-    # guard and was silently clobbered then dropped here). The helper
-    # checks what the helper injects — callers need not track it.
-    clash = sorted({"_pid", "_local", "_off", "_t"} & set(df.columns))
-    if clash:
-        raise ValueError(
-            f"grouped_prefix reserves internal column(s) {clash}; "
-            "rename them on the input first"
-        )
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(
-        n, *[F.col(g).asc() for g in group_cols], *order_exprs
-    ).localCheckpoint(eager=True)
-    part = ranged.withColumn("_pid", F.spark_partition_id())
-    w = (
-        Window.partitionBy("_pid", *group_cols)
-        .orderBy(*order_exprs)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    if not group_cols:
+        return global_prefix(
+            df, order_exprs, out_col=out_col, value_col=value_col,
+            num_partitions=num_partitions,
+        )[0]
+    local, total, _ = _running(
+        df, group_cols, order_exprs, value_col, num_partitions
     )
-    val = F.count(F.lit(1)) if value_col is None else F.sum(value_col)
-    local = part.withColumn("_local", val.over(w))
     offw = (
         Window.partitionBy(*group_cols)
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    agg = (
-        F.count(F.lit(1)) if value_col is None else F.sum(value_col)
-    ).alias("_t")
     offsets = (
-        part.groupBy("_pid", *group_cols)
-        .agg(agg)
+        local.groupBy("_pid", *group_cols)
+        .agg(total)
         .withColumn("_off", F.coalesce(F.sum("_t").over(offw), F.lit(0)))
         .select("_pid", *group_cols, "_off")
     )

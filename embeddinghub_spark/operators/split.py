@@ -19,8 +19,8 @@ Scale: no global sort is materialized — the rank threshold needs only
 a count; we compare the hash against the empirical quantile computed
 from a total count + window-free percent_rank equivalent. To stay
 exact (reference counts rows, not approximate), we rank with a global
-row_number over the hash — implemented via the same
-range-partition + offset trick as C5 when exactness matters, or the
+row_number over the hash — ``global_prefix`` (operators/materialize.py,
+the C5 prefix sum) when exactness matters, or the
 ``hash < threshold`` variant for the streaming-friendly path.
 """
 
@@ -52,10 +52,12 @@ def with_split(
     """
     keys = key_cols or df.columns
     hashed = df.withColumn("_h", _row_hash(keys, seed))
-    from embeddinghub_spark.operators.materialize import with_global_row_number_counted
+    from embeddinghub_spark.operators.materialize import global_prefix
 
     # single pass: the numbering's prefix-sum already yields the total
-    ranked, total = with_global_row_number_counted(hashed, ["_h"] + keys, row_col="_split_rn")
+    ranked, total = global_prefix(
+        hashed, [F.col(c) for c in ["_h", *keys]], out_col="_split_rn"
+    )
     n_test = int(total * test_size)
     return (
         ranked.withColumn("is_test", (F.col("_split_rn") <= n_test).cast("int"))
@@ -314,8 +316,7 @@ def negative_samples(
     UP TO k negatives per anchor (the standard sample-then-filter
     semantics; callers needing exactly k over-draw and rank).
 
-    The id corpus is positioned with the C5 range-partition
-    prefix-sum numbering (``with_global_row_number_counted``) — no
+    The id corpus is positioned by ``global_prefix`` (C5) — no
     single-partition global window, so the position table
     parallelizes at any corpus size; requests are |anchors|·k rows
     joined to it on position (AQE broadcasts the request side while
@@ -326,14 +327,12 @@ def negative_samples(
 
     Output: (anchor, neg_id), distinct.
     """
-    from embeddinghub_spark.operators.materialize import (
-        with_global_row_number_counted,
-    )
+    from embeddinghub_spark.operators.materialize import global_prefix
 
     if k < 1:
         raise ValueError("k must be >= 1")
-    numbered, n = with_global_row_number_counted(
-        ids_df.select(id_col).distinct(), [id_col], row_col="_pos"
+    numbered, n = global_prefix(
+        ids_df.select(id_col).distinct(), [F.col(id_col)], out_col="_pos"
     )
     if n == 0:
         raise ValueError("ids_df is empty — nothing to sample")
@@ -421,8 +420,8 @@ def temporal_split(
     same property on externally-built frames).
 
     The cutoff is COUNT-exact, not quantile-approximate: rows are
-    globally numbered over (ts, *order_cols) with the C5
-    range-partition prefix-sum (no single-partition window), and the
+    globally numbered over (ts, *order_cols) by ``global_prefix``
+    (C5, no single-partition window), and the
     first ``total − ceil(total·test_frac)`` rows are the train+
     embargo side — deterministic under ties when ``order_cols``
     complete the ordering. The test boundary timestamp is then the
@@ -437,14 +436,10 @@ def temporal_split(
         raise ValueError("test_frac must be in (0, 1)")
     import math
 
-    from embeddinghub_spark.operators.materialize import (
-        with_global_row_number_counted,
-    )
+    from embeddinghub_spark.operators.materialize import global_prefix
 
-    order = [ts_col] + list(order_cols or [])
-    numbered, total = with_global_row_number_counted(
-        df, order, row_col="_trn"
-    )
+    order = [F.col(c) for c in [ts_col, *(order_cols or [])]]
+    numbered, total = global_prefix(df, order, out_col="_trn")
     n_test = math.ceil(total * test_frac)
     boundary = total - n_test  # rows with _trn > boundary are test
     marked = numbered.withColumn(

@@ -1504,7 +1504,7 @@ def read_delta_changes(
         + [T.StructField("_change_type", T.StringType(), False),
            T.StructField("_commit_version", T.LongType(), False)]
     )
-    value_cols = [c for c in schema.fieldNames() if c not in key_cols]
+    from embeddinghub_spark.sources.row_dml import change_rows
 
     out: DataFrame | None = None
     prev = snap_from
@@ -1553,54 +1553,9 @@ def read_delta_changes(
         pn = snap_to.get("physical_names")
         old_rows = _scan_file_groups(spark, path, schema, pcols, removed, pn)
         new_rows = _scan_file_groups(spark, path, schema, pcols, added, pn)
-        o = old_rows.select(
-            *[F.col(k).alias(f"_ok_{k}") for k in key_cols],
-            *[F.col(c).alias(f"_o_{c}") for c in value_cols],
-            F.lit(True).alias("_in_old"),
-        )
-        n = new_rows.select(
-            *[F.col(k).alias(f"_nk_{k}") for k in key_cols],
-            *[F.col(c).alias(f"_n_{c}") for c in value_cols],
-            F.lit(True).alias("_in_new"),
-        )
-        cond = None
-        for k in key_cols:
-            eq = F.col(f"_ok_{k}").eqNullSafe(F.col(f"_nk_{k}"))
-            cond = eq if cond is None else cond & eq
-        joined = n.join(o, cond, "full_outer")
-        in_old = F.col("_in_old").isNotNull()
-        in_new = F.col("_in_new").isNotNull()
-        differs = F.lit(False)
-        for c in value_cols:
-            differs = differs | ~F.col(f"_o_{c}").eqNullSafe(
-                F.col(f"_n_{c}")
-            )
-        old_img = [
-            F.col(f"_ok_{c}").alias(c) if c in key_cols
-            else F.col(f"_o_{c}").alias(c)
-            for c in schema.fieldNames()
-        ]
-        new_img = [
-            F.col(f"_nk_{c}").alias(c) if c in key_cols
-            else F.col(f"_n_{c}").alias(c)
-            for c in schema.fieldNames()
-        ]
-        vlit = F.lit(v).cast("long").alias("_commit_version")
-        inserts = joined.filter(~in_old).select(
-            *new_img, F.lit("insert").alias("_change_type"), vlit
-        )
-        deletes = joined.filter(in_old & ~in_new).select(
-            *old_img, F.lit("delete").alias("_change_type"), vlit
-        )
-        upd = joined.filter(in_old & in_new & differs)
-        pre = upd.select(
-            *old_img, F.lit("update_preimage").alias("_change_type"), vlit
-        )
-        post = upd.select(
-            *new_img, F.lit("update_postimage").alias("_change_type"), vlit
-        )
-        step = inserts.unionByName(deletes).unionByName(pre).unionByName(
-            post
+        step = change_rows(
+            old_rows, new_rows, schema.fieldNames(), key_cols,
+            "_commit_version", v,
         )
         out = step if out is None else out.unionByName(step)
     if out is None:

@@ -1040,8 +1040,6 @@ def read_iceberg_changes(
     Cost: each snapshot resolves its OWN manifest list (no cumulative
     log replay), so an R-snapshot range is O(R × manifests) — linear
     by construction."""
-    from pyspark.sql import functions as F
-
     mfile = _latest_metadata_file(path)
     with open(mfile, encoding="utf-8") as fh:
         meta = json.load(fh)
@@ -1089,9 +1087,8 @@ def read_iceberg_changes(
         + [T.StructField("_change_type", T.StringType(), False),
            T.StructField("_snapshot_id", T.LongType(), False)]
     )
-    value_cols = [
-        c for c in base_schema.fieldNames() if c not in key_cols
-    ]
+    from embeddinghub_spark.sources.row_dml import change_rows
+
     out: DataFrame | None = None
     for prev, cur in zip(states, states[1:]):
         prev_files, cur_files = set(prev["files"]), set(cur["files"])
@@ -1107,58 +1104,9 @@ def read_iceberg_changes(
             _scan_parquet(spark, cur, added)
             if added else spark.createDataFrame([], base_schema)
         )
-        o = old_rows.select(
-            *[F.col(k).alias(f"_ok_{k}") for k in key_cols],
-            *[F.col(c).alias(f"_o_{c}") for c in value_cols],
-            F.lit(True).alias("_in_old"),
-        )
-        n = new_rows.select(
-            *[F.col(k).alias(f"_nk_{k}") for k in key_cols],
-            *[F.col(c).alias(f"_n_{c}") for c in value_cols],
-            F.lit(True).alias("_in_new"),
-        )
-        cond = None
-        for k in key_cols:
-            eq = F.col(f"_ok_{k}").eqNullSafe(F.col(f"_nk_{k}"))
-            cond = eq if cond is None else cond & eq
-        joined = n.join(o, cond, "full_outer")
-        in_old = F.col("_in_old").isNotNull()
-        in_new = F.col("_in_new").isNotNull()
-        differs = F.lit(False)
-        for c in value_cols:
-            differs = differs | ~F.col(f"_o_{c}").eqNullSafe(
-                F.col(f"_n_{c}")
-            )
-        old_img = [
-            F.col(f"_ok_{c}").alias(c) if c in key_cols
-            else F.col(f"_o_{c}").alias(c)
-            for c in base_schema.fieldNames()
-        ]
-        new_img = [
-            F.col(f"_nk_{c}").alias(c) if c in key_cols
-            else F.col(f"_n_{c}").alias(c)
-            for c in base_schema.fieldNames()
-        ]
-        slit = F.lit(cur["snapshot_id"]).cast("long").alias(
-            "_snapshot_id"
-        )
-        inserts = joined.filter(~in_old).select(
-            *new_img, F.lit("insert").alias("_change_type"), slit
-        )
-        deletes = joined.filter(in_old & ~in_new).select(
-            *old_img, F.lit("delete").alias("_change_type"), slit
-        )
-        upd = joined.filter(in_old & in_new & differs)
-        pre = upd.select(
-            *old_img, F.lit("update_preimage").alias("_change_type"),
-            slit,
-        )
-        post = upd.select(
-            *new_img, F.lit("update_postimage").alias("_change_type"),
-            slit,
-        )
-        step = inserts.unionByName(deletes).unionByName(pre).unionByName(
-            post
+        step = change_rows(
+            old_rows, new_rows, base_schema.fieldNames(), key_cols,
+            "_snapshot_id", cur["snapshot_id"],
         )
         out = step if out is None else out.unionByName(step)
     if out is None:

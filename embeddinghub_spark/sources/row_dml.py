@@ -334,3 +334,64 @@ def _touched(t: DmlTable, files: list, matching) -> list:
         .select("_fp").distinct().collect()
     }
     return [f for f in files if t.fp(f) in hit]
+
+
+def change_rows(
+    old_rows: DataFrame,
+    new_rows: DataFrame,
+    columns: list[str],
+    key_cols: list[str],
+    version_col: str,
+    version: int,
+) -> DataFrame:
+    """Row-level change feed of one commit, shared by
+    ``read_delta_changes`` and ``read_iceberg_changes``: the rows of
+    the files the commit removed (``old_rows``) full-outer-join the
+    rows of the files it added (``new_rows``) null-safely on
+    ``key_cols``. A key only on the new side is an ``insert``, only on
+    the old side a ``delete``; on both sides with any differing value
+    column it is an ``update_preimage`` + ``update_postimage`` pair
+    (unchanged rows of a rewritten file emit nothing). Output:
+    ``columns`` + ``_change_type`` + ``version_col`` (= ``version``)."""
+    value_cols = [c for c in columns if c not in key_cols]
+    o = old_rows.select(
+        *[F.col(k).alias(f"_ok_{k}") for k in key_cols],
+        *[F.col(c).alias(f"_o_{c}") for c in value_cols],
+        F.lit(True).alias("_in_old"),
+    )
+    n = new_rows.select(
+        *[F.col(k).alias(f"_nk_{k}") for k in key_cols],
+        *[F.col(c).alias(f"_n_{c}") for c in value_cols],
+        F.lit(True).alias("_in_new"),
+    )
+    cond = None
+    for k in key_cols:
+        eq = F.col(f"_ok_{k}").eqNullSafe(F.col(f"_nk_{k}"))
+        cond = eq if cond is None else cond & eq
+    joined = n.join(o, cond, "full_outer")
+    in_old = F.col("_in_old").isNotNull()
+    in_new = F.col("_in_new").isNotNull()
+    differs = F.lit(False)
+    for c in value_cols:
+        differs = differs | ~F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}"))
+
+    def image(key_prefix: str, val_prefix: str) -> list:
+        return [
+            F.col(f"{key_prefix}{c}" if c in key_cols else f"{val_prefix}{c}")
+            .alias(c)
+            for c in columns
+        ]
+
+    old_img, new_img = image("_ok_", "_o_"), image("_nk_", "_n_")
+    vlit = F.lit(version).cast("long").alias(version_col)
+
+    def tagged(rows: DataFrame, img: list, change: str) -> DataFrame:
+        return rows.select(*img, F.lit(change).alias("_change_type"), vlit)
+
+    upd = joined.filter(in_old & in_new & differs)
+    return (
+        tagged(joined.filter(~in_old), new_img, "insert")
+        .unionByName(tagged(joined.filter(in_old & ~in_new), old_img, "delete"))
+        .unionByName(tagged(upd, old_img, "update_preimage"))
+        .unionByName(tagged(upd, new_img, "update_postimage"))
+    )

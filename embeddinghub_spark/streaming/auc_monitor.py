@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from embeddinghub_spark.functions.metrics import _rank_sum_auc
+
 _META = "_auc_meta.json"
 
 
@@ -105,28 +107,12 @@ def read_auc(spark: SparkSession, state_dir: str) -> DataFrame:
     doubled-integer rank-sum over the (bounded) distinct-score table;
     the window partitions trivially (grid ≤ 10^q+1 rows). Output: one
     row (auc, n_pos, n_neg), AUC NULL while either class is empty."""
-    ps = spark.read.parquet(state_dir).select("s", "n", "p")
+    ps = spark.read.parquet(state_dir).select(
+        F.col("s"), F.col("n").alias("_n"), F.col("p").alias("_p")
+    )
     w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, 0)
-    ranked = ps.withColumn("_cum", F.sum("n").over(w)).withColumn(
-        "_cb", F.col("_cum") - F.col("n")
-    )
-    agg = ranked.agg(
-        F.sum(
-            F.col("p") * (F.lit(2) * F.col("_cb") + F.col("n") + F.lit(1))
-        ).alias("_s2"),
-        F.sum("p").alias("n_pos"),
-        F.sum(F.col("n") - F.col("p")).alias("n_neg"),
-    )
-    auc = (
-        (F.col("_s2") - F.col("n_pos") * (F.col("n_pos") + 1)).cast("double")
-        / (F.lit(2.0) * F.col("n_pos") * F.col("n_neg"))
-    )
-    return agg.select(
-        F.when(
-            (F.col("n_pos") > 0) & (F.col("n_neg") > 0), F.round(auc, 9)
-        ).alias("auc"),
-        F.col("n_pos").cast("bigint").alias("n_pos"),
-        F.col("n_neg").cast("bigint").alias("n_neg"),
+    return _rank_sum_auc(
+        ps.withColumn("_cb", F.sum("_n").over(w) - F.col("_n"))
     )
 
 

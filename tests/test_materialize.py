@@ -1,13 +1,15 @@
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from embeddinghub_spark.operators.materialize import (
     chunk,
+    global_prefix,
+    grouped_prefix,
     materialize,
     materialize_no_ts,
     num_chunks,
-    with_global_row_number,
 )
 
 
@@ -56,14 +58,19 @@ def test_materialize_no_ts_dedup_with_tiebreak(spark):
 
 def test_global_row_number_matches_sort_order(spark):
     df = spark.range(0, 1000).withColumn("k", F.expr("id * 7919 % 1000"))
-    numbered = with_global_row_number(df, ["k"], num_partitions=7)
+    numbered, total = global_prefix(
+        df, [F.col("k")], out_col="row_number", num_partitions=7
+    )
+    assert total == 1000
     rows = numbered.orderBy("k").collect()
     assert [r["row_number"] for r in rows] == list(range(1, 1001))
 
 
 def test_chunking(spark):
     df = spark.range(0, 250).withColumn("k", F.col("id"))
-    numbered = with_global_row_number(df, ["k"], num_partitions=4)
+    numbered, _ = global_prefix(
+        df, [F.col("k")], out_col="row_number", num_partitions=4
+    )
     assert num_chunks(250, 100) == 3
     c0 = chunk(numbered, 0, 100)
     c2 = chunk(numbered, 2, 100)
@@ -166,11 +173,6 @@ def test_grouped_prefix_rejects_reserved_internal_columns(spark):
     pre-extraction names (_local_cum/_local_rn) — an input already
     carrying _local passed their guard and was silently clobbered then
     dropped. The helper now guards its OWN names."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from embeddinghub_spark.operators.materialize import grouped_prefix
-
     df = spark.createDataFrame(
         [("a", 1, 7)], "g string, k int, _local int"
     )
@@ -184,3 +186,73 @@ def test_grouped_prefix_rejects_reserved_internal_columns(spark):
     assert set(out.columns) == {"g", "k", "rn"}
     got = {(r["g"], r["k"], r["rn"]) for r in out.collect()}
     assert got == {("a", 1, 1), ("a", 2, 2), ("b", 3, 1)}
+
+
+def test_global_prefix_rejects_reserved_internal_columns(spark):
+    """The global numbering used to overwrite an input ``_pid`` and drop
+    an input ``_local_rn`` without a word (train/test split over such a
+    frame lost the column). The shared prefix-sum core now refuses its
+    own internal names and leaves every other column alone."""
+    from embeddinghub_spark.operators.split import with_split
+
+    clash = spark.createDataFrame([(1, 7)], "k int, _pid int")
+    with pytest.raises(ValueError, match="_pid"):
+        with_split(clash, 0.5, key_cols=["k"])
+    local = spark.createDataFrame([(1, 7)], "k int, _local int")
+    with pytest.raises(ValueError, match="_local"):
+        global_prefix(local, [F.col("k")], out_col="rn")
+    ok = spark.createDataFrame([(i, -i) for i in range(5)], "k int, _local_rn int")
+    marked = with_split(ok, 0.4, key_cols=["k"])
+    assert {(r["k"], r["_local_rn"]) for r in marked.collect()} == {
+        (i, -i) for i in range(5)
+    }
+    assert sum(r["is_test"] for r in marked.collect()) == 2
+
+
+def _replay_running(rows, group_of, value_of):
+    """Python replay of a running total: ``rows`` sorted by (k DESC,
+    id ASC); the inclusive running count/sum restarts per group."""
+    out, acc = {}, {}
+    for r in sorted(rows, key=lambda r: (-r[2], r[0])):
+        g = group_of(r)
+        acc[g] = acc.get(g, 0) + value_of(r)
+        out[r[0]] = acc[g]
+    return out
+
+
+@pytest.mark.parametrize("n_rows,num_partitions", [(300, 7), (40, 64)])
+def test_prefix_sums_match_python_replay(spark, n_rows, num_partitions):
+    """global_prefix and grouped_prefix against a running-sum replay on
+    seeded input: a head group holding ~80% of the rows, heavy ties in
+    the order key broken by id, both count and sum, and (second case)
+    more partitions than rows."""
+    import random
+
+    rnd = random.Random(20260417 + n_rows)
+    rows = [
+        (
+            i,
+            "head" if rnd.random() < 0.8 else f"g{rnd.randrange(4)}",
+            rnd.randrange(6),
+            rnd.randrange(0, 50),
+        )
+        for i in range(n_rows)
+    ]
+    df = spark.createDataFrame(rows, "id int, g string, k int, v bigint")
+    order = [F.col("k").desc(), F.col("id").asc()]
+    for value_col, value_of in ((None, lambda r: 1), ("v", lambda r: r[3])):
+        want = _replay_running(rows, lambda r: None, value_of)
+        got, total = global_prefix(
+            df, order, out_col="run", value_col=value_col,
+            num_partitions=num_partitions,
+        )
+        assert got.columns == ["id", "g", "k", "v", "run"]
+        assert {r["id"]: r["run"] for r in got.collect()} == want
+        assert total == sum(value_of(r) for r in rows)
+
+        want_g = _replay_running(rows, lambda r: r[1], value_of)
+        got_g = grouped_prefix(
+            df, ["g"], order, out_col="run", value_col=value_col,
+            num_partitions=num_partitions,
+        )
+        assert {r["id"]: r["run"] for r in got_g.collect()} == want_g

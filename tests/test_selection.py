@@ -547,6 +547,26 @@ def test_interleave_sources_matches_python_replica(spark, interleave_df):
     assert got == _py_interleave(INTERLEAVE_ROWS, weights)
 
 
+def test_interleave_sources_accepts_input_column_local_rn(spark):
+    """``_local_rn`` is not a name interleave_sources (or the prefix-sum
+    core under it) injects, so an input carrying it is valid: the op
+    runs, the column survives unchanged and the order is the replay's."""
+    from embeddinghub_spark.functions.selection import interleave_sources
+
+    df = spark.createDataFrame(
+        [(k, d, -k) for k, d in INTERLEAVE_ROWS], ["doc_id", "domain", "_local_rn"]
+    )
+    weights = {"a": 3.0, "b": 1.0}
+    out = interleave_sources(df, ["doc_id"], domain_col="domain", weights=weights)
+    rows = out.collect()
+    assert all(r["_local_rn"] == -r["doc_id"] for r in rows)
+    got = {
+        r["doc_id"]: (r["domain"], r["domain_position"], r["position"])
+        for r in rows
+    }
+    assert got == _py_interleave(INTERLEAVE_ROWS, weights)
+
+
 def test_interleave_sources_prefix_proportionality(spark, interleave_df):
     """Stride scheduling: every prefix of the merged stream holds each
     domain within ~1 emission of its proportional share (until a
