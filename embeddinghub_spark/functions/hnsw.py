@@ -12,15 +12,39 @@ HNSW algorithm (Malkov & Yashunin 2016, arXiv 1603.09320) implemented
 directly:
 
 - exponentially-distributed insertion levels with mL = 1/ln(M);
-  DETERMINISTIC per key (md5(key|seed) drives the level draw), so the
-  same inserts in the same order rebuild the same graph on any host —
-  the repo's replay discipline applied to an index structure;
+  DETERMINISTIC per key (md5(key|seed) drives the level draw);
 - greedy descent from the top layer, best-first beam (ef) at each
   layer, bidirectional M-degree links with hnswlib's degree caps
   (M_max = M above layer 0, M_max0 = 2M at layer 0) and
   closest-first pruning;
 - L2 metric like the reference's default space; vectors are Python
-  tuples (no numpy requirement in the serving hot path).
+  tuples of finite floats (no numpy requirement in the serving hot
+  path; a NaN or infinite component is rejected by ``add`` and
+  ``search``, naming the key or the query).
+
+Distance kernel: ``math.dist(a, b) ** 2``, a C loop, evaluated at the
+three sites that rank candidates (``_dist``, the inner neighbor loop
+of ``_search_layer`` and the ``_shrink`` ranking), all through the
+module name ``dist``. ``search`` returns these L2² values. It replaced
+a Python generator fold ``sum((x - y) * (x - y) ...)``: with 528
+64-d vectors on 4 vCPUs, a ``Space.multiset`` of 32 existing keys went
+from ~92 to ~23 ms and a k-NN query from ~1.5 to ~0.34 ms. The two
+kernels round differently (by ~1e-15 relative), but on seeded
+clustered 64-d sets they build the same links, levels and entry point
+and return the same keys — pinned in tests against a copy of the old
+fold.
+
+Determinism contract:
+
+- the same inserts in the same order, with the same parameters, build
+  the same graph on the same CPython build. ``math.dist``'s rounding
+  is fixed per build, not across builds, so another build may order
+  two near-equal distances the other way and build another graph;
+- a saved ``.hnsw.json`` carries its graph (links, levels, entry
+  point), so ``load`` restores it exactly on any build with zero
+  distance evaluations;
+- ``state_key``/``digest_rows`` digest the rows only, never the graph
+  or the kernel, so indexes saved before the kernel change stay valid.
 
 Scale posture: this is the DRIVER-side online index — memory is
 O(N·(dim + M)) and build is O(N·ef·log N) distance evaluations; the
@@ -36,6 +60,19 @@ import json
 import math
 import os
 from heapq import heappop, heappush
+from math import dist
+
+
+def _finite_vector(vector, what: str) -> tuple[float, ...]:
+    """``vector`` as a tuple of floats; raises ValueError naming
+    ``what`` and the first NaN or infinite component."""
+    vec = tuple(float(x) for x in vector)
+    if not all(map(math.isfinite, vec)):
+        i = next(i for i, x in enumerate(vec) if not math.isfinite(x))
+        raise ValueError(
+            f"{what} has non-finite component {i}: {vec[i]!r}"
+        )
+    return vec
 
 
 class HnswIndex:
@@ -64,7 +101,7 @@ class HnswIndex:
         return key in self._vecs
 
     def _dist(self, a: tuple[float, ...], b: tuple[float, ...]) -> float:
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
+        return dist(a, b) ** 2
 
     def _draw_level(self, key: str) -> int:
         """Deterministic exponential level: uniform from md5(key|seed),
@@ -84,6 +121,7 @@ class HnswIndex:
         """Best-first beam search; returns up to ef (dist, key) pairs
         sorted ascending."""
         links = self._links[layer]
+        vecs, l2 = self._vecs, dist
         visited = set(entry)
         cand: list[tuple[float, str]] = []
         best: list[tuple[float, str]] = []  # max-heap via negated dist
@@ -99,7 +137,7 @@ class HnswIndex:
                 if n in visited:
                     continue
                 visited.add(n)
-                dn = self._dist(q, self._vecs[n])
+                dn = l2(q, vecs[n]) ** 2
                 if len(best) < ef or dn < -best[0][0]:
                     heappush(cand, (dn, n))
                     heappush(best, (-dn, n))
@@ -111,10 +149,8 @@ class HnswIndex:
         links = self._links[layer]
         if len(links.get(key, ())) <= cap:
             return
-        v = self._vecs[key]
-        ranked = sorted(
-            links[key], key=lambda n: self._dist(v, self._vecs[n])
-        )
+        v, vecs = self._vecs[key], self._vecs
+        ranked = sorted(links[key], key=lambda n: dist(v, vecs[n]) ** 2)
         links[key] = ranked[:cap]
 
     def add(self, key: str, vector) -> None:
@@ -131,7 +167,7 @@ class HnswIndex:
                 f"HNSW keys must be str, got {type(key).__name__}: "
                 f"{key!r}"
             )
-        vec = tuple(float(x) for x in vector)
+        vec = _finite_vector(vector, f"HNSW vector for key {key!r}")
         if len(vec) != self.dim:
             raise ValueError(f"expected dim {self.dim}, got {len(vec)}")
         if key in self._vecs:
@@ -259,11 +295,11 @@ class HnswIndex:
         """k nearest (key, l2_squared) pairs, ascending distance.
         ``ef`` defaults to max(k, ef_construction // 2); raise it for
         recall, lower it for latency — the hnswlib knob."""
-        if self._entry is None:
-            return []
-        q = tuple(float(x) for x in vector)
+        q = _finite_vector(vector, "HNSW query")
         if len(q) != self.dim:
             raise ValueError(f"expected dim {self.dim}, got {len(q)}")
+        if self._entry is None:
+            return []
         ef = max(k, ef or max(k, self.ef_construction // 2))
         exclude = exclude or set()
         ep = [self._entry]

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from embeddinghub_spark.functions.hnsw import HnswIndex, _finite_vector
 from embeddinghub_spark.functions.vector import knn_bruteforce
 
 _SCHEMA = StructType(
@@ -64,11 +65,18 @@ class Space:
             raise FrozenSpaceError(f"space {self.name} is frozen")  # server.cc FreezeSpace
 
     def _check_dims(self, key: str, v) -> list[float]:
-        if len(v) != self.dims:
-            raise ValueError(
-                f"embedding for {key!r} has dim {len(v)}, space expects {self.dims}"
+        """One write's (key, embedding) checked as the overlay and the
+        HNSW both need it: a str key and ``dims`` finite floats."""
+        if not isinstance(key, str):
+            raise TypeError(
+                f"space keys must be str, got {type(key).__name__}: {key!r}"
             )
-        return [float(x) for x in v]
+        vec = _finite_vector(v, f"embedding for {key!r}")
+        if len(vec) != self.dims:
+            raise ValueError(
+                f"embedding for {key!r} has dim {len(vec)}, space expects {self.dims}"
+            )
+        return list(vec)
 
     def load_dataframe(
         self,
@@ -152,7 +160,9 @@ class Space:
         return out
 
     def multiset(self, items: dict[str, list[float]]) -> None:
-        """MultiSet upsert (server.cc:120-150); dim-checked, O(len(items))."""
+        """MultiSet upsert (server.cc:120-150), O(len(items)). The whole
+        batch is checked first, so a rejected call changes neither the
+        overlay nor the HNSW."""
         self._check_mutable()
         staged = {k: self._check_dims(k, v) for k, v in items.items()}
         self._buf.update(staged)
@@ -223,10 +233,9 @@ class Space:
         of a pipeline whose 100 TB side stays in Spark
         (functions/ann_index.py); insertion order is the sorted key
         order, and levels are md5-seeded, so the same space state
-        builds the same graph anywhere."""
+        builds the same graph on the same CPython build (see the
+        determinism contract in ``functions/hnsw.py``)."""
         import os
-
-        from embeddinghub_spark.functions.hnsw import HnswIndex
 
         rows = {r["key"]: r["embedding"] for r in self._current().collect()}
         idx_path = (

@@ -8,9 +8,11 @@ from __future__ import annotations
 
 import hashlib
 import math
+import random
 
 import pytest
 
+from embeddinghub_spark.functions import hnsw
 from embeddinghub_spark.functions.hnsw import HnswIndex
 
 
@@ -141,16 +143,20 @@ def test_save_load_identical_and_o_n(tmp_path, monkeypatch):
     p = str(tmp_path / "space.hnsw.json")
     idx.save(p)
 
+    # every kernel evaluation (``_dist``, the inlined neighbor loop,
+    # the ``_shrink`` ranking) goes through the module name ``dist``
     calls = {"n": 0}
-    orig = HnswIndex._dist
+    orig = hnsw.dist
 
-    def counting(self, a, b):
+    def counting(a, b):
         calls["n"] += 1
-        return orig(self, a, b)
+        return orig(a, b)
 
-    monkeypatch.setattr(HnswIndex, "_dist", counting)
+    monkeypatch.setattr(hnsw, "dist", counting)
     loaded = HnswIndex.load(p)
     assert calls["n"] == 0, "load must not evaluate distances"
+    loaded.search(_vec(3, 8), 5, ef=60)
+    assert calls["n"] > 1, "the counter must see the search loop"
     monkeypatch.undo()
 
     assert loaded._entry == idx._entry
@@ -170,6 +176,127 @@ def test_save_load_identical_and_o_n(tmp_path, monkeypatch):
         _json.dump({"format": 99}, fh)
     with pytest.raises(ValueError, match="format"):
         HnswIndex.load(bad)
+
+
+def test_non_finite_vectors_rejected():
+    """A NaN or infinite component fails early, naming the key (or the
+    query) and the component, and leaves the index unchanged — a NaN
+    distance would otherwise rank arbitrarily."""
+    idx = HnswIndex(2, m=4, ef_construction=20)
+    for i in range(5):
+        idx.add(f"k{i}", [float(i), 0.0])
+    with pytest.raises(ValueError, match=r"key 'x' has non-finite "
+                       r"component 1: nan"):
+        idx.add("x", [0.0, math.nan])
+    with pytest.raises(ValueError, match=r"key 'k1' .*component 0: inf"):
+        idx.add("k1", [math.inf, 0.0])
+    assert len(idx) == 5 and "x" not in idx
+    assert idx._vecs["k1"] == (1.0, 0.0)
+    with pytest.raises(ValueError, match=r"query has non-finite "
+                       r"component 0: nan"):
+        idx.search([math.nan, 0.0], 3)
+    with pytest.raises(ValueError, match=r"query .*component 1: -inf"):
+        HnswIndex(2).search([0.0, -math.inf], 3)
+    assert [k for k, _ in idx.search([0.0, 0.0], 2)] == ["k0", "k1"]
+
+
+def test_rejected_space_multiset_changes_nothing(spark):
+    """A Space.multiset batch with one bad entry (non-str key,
+    non-finite or wrong-dim vector) is rejected as a whole: the
+    overlay, ``download()`` and the HNSW keep their state, so the
+    valid rows of the batch are not half-applied either."""
+    from embeddinghub_spark.serving.spaces import EmbeddingHub
+
+    sp = EmbeddingHub(spark).create_space("rejects", dims=2)
+    sp.multiset({f"k{i}": [float(i), 1.0] for i in range(6)})
+    assert sp.build_ann_index(m=4, ef_construction=20) == 6
+    buf = dict(sp._buf)
+    ok = [9.0, 9.0]
+    bad_batches = [
+        ({"ok": ok, 7: [1.0, 1.0]}, TypeError, "keys must be str"),
+        ({"ok": ok, "nan": [math.nan, 1.0]}, ValueError,
+         r"'nan' has non-finite component 0"),
+        ({"ok": ok, "short": [1.0]}, ValueError, "dim 1"),
+    ]
+    for batch, exc, msg in bad_batches:
+        with pytest.raises(exc, match=msg):
+            sp.multiset(batch)
+        assert sp._buf == buf
+        assert len(sp._ann) == 6 and "ok" not in sp._ann
+    assert sp.download().count() == 6
+    assert "ok" not in sp.nearest_neighbor(
+        6, vector=ok, approximate=True)
+
+
+def _old_fold_dist(a, b):
+    """The kernel before ``math.dist``: a Python generator fold of
+    squared differences. Returned wrapped so that the module's
+    ``dist(a, b) ** 2`` evaluates to exactly this fold."""
+    return _Squared(sum((x - y) * (x - y) for x, y in zip(a, b)))
+
+
+class _Squared:
+    __slots__ = ("sq",)
+
+    def __init__(self, sq: float):
+        self.sq = sq
+
+    def __pow__(self, p):
+        assert p == 2
+        return self.sq
+
+
+def _clustered(rng: random.Random, n: int, centers) -> list[list[float]]:
+    return [
+        [c + rng.gauss(0.0, 0.35) for c in centers[rng.randrange(len(centers))]]
+        for _ in range(n)
+    ]
+
+
+def _serving_history(idx: HnswIndex, seed: int) -> None:
+    """400 clustered 64-d keys in sorted-key order, then the serving
+    workload's write shape: 32-key batches upserting a 4 x 32 pool in
+    turn (the later batches re-link existing keys), each followed by an
+    overwrite of the current entry-point key."""
+    rng = random.Random(seed)
+    centers = [[rng.uniform(-1.0, 1.0) for _ in range(64)]
+               for _ in range(8)]
+    for i, v in enumerate(_clustered(rng, 400, centers)):
+        idx.add(f"v{i:04d}", v)
+    for r in range(12):
+        for j, v in enumerate(_clustered(rng, 32, centers)):
+            idx.add(f"w{r % 4}_{j:02d}", v)
+        idx.add(idx._entry, _clustered(rng, 1, centers)[0])
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_l2_kernel_builds_the_generator_fold_graph(monkeypatch, seed):
+    """``math.dist(a, b) ** 2`` rounds differently from the generator
+    fold it replaced, but on a seeded clustered set with overwrites
+    (entry point included) both kernels build the same graph and
+    answer with the same keys; distances agree to 1e-12 relative."""
+    new = HnswIndex(64, seed=seed)
+    _serving_history(new, seed)
+    old = HnswIndex(64, seed=seed)
+    monkeypatch.setattr(hnsw, "dist", _old_fold_dist)
+    _serving_history(old, seed)
+    queries = _clustered(random.Random(seed + 100), 60,
+                         [list(v) for v in list(new._vecs.values())[:8]])
+    old_hits = [old.search(q, 10) for q in queries]
+    monkeypatch.undo()
+
+    assert len(new) == len(old) == 400 + 4 * 32
+    assert new._entry == old._entry
+    assert new._levels == old._levels
+    assert new._links == old._links
+    n_rounded_apart = 0
+    for q, want in zip(queries, old_hits):
+        got = new.search(q, 10)
+        assert [k for k, _ in got] == [k for k, _ in want]
+        for (_, d_new), (_, d_old) in zip(got, want):
+            assert math.isclose(d_new, d_old, rel_tol=1e-12)
+            n_rounded_apart += d_new != d_old
+    assert n_rounded_apart, "the old fold was not the kernel in effect"
 
 
 def test_space_persist_dir_roundtrip(spark, tmp_path, monkeypatch):
