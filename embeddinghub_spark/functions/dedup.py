@@ -1029,50 +1029,60 @@ def embedding_near_duplicates(
     )
 
 
-# -- incremental embedding near-dup index (banded sign-LSH on disk) -----------
-
-_EMB_INDEX_PARAMS_FILE = "_emb_lsh_params.json"
+# -- on-disk index params sidecar --------------------------------------------
 
 
-def _emb_index_params_check(
+def _index_params_check(
     index_dir: str,
-    dim: int,
-    n_planes: int,
-    bands: int,
-    seed: int,
-    n_buckets: int,
+    filename: str,
+    params: dict,
+    what: str,
     record: bool = True,
 ) -> None:
-    """Validate (or, on first append, record) the embedding index's
-    LSH parameters in a JSON sidecar — the `_minhash_index_params_check`
-    rule applied to the sign-LSH plane space: band values are only
-    comparable when dim/n_planes/bands/seed/n_buckets match the values
-    used at append time, so a mismatched probe is an ERROR, not a
-    silently-empty candidate set."""
+    """Validate (or, on first append, record) an on-disk index's
+    integer hashing parameters in the JSON sidecar
+    ``index_dir/filename``. Bucket ids and hashes are only comparable
+    when the parameters match the values used at append time — a
+    mismatched probe would silently return mostly-empty candidates,
+    so mismatch is an error, not a wrong answer; ``what`` names the
+    family's values that would not line up. A probe
+    (``record=False``) of a legacy sidecar-less index skips both
+    record and validation. The sidecar is written to a temp file in
+    the same directory and renamed into place, so an interrupted
+    append never leaves a truncated sidecar behind."""
     import json
     import os
+    import uuid
 
-    params = {
-        "dim": int(dim),
-        "n_planes": int(n_planes),
-        "bands": int(bands),
-        "seed": int(seed),
-        "n_buckets": int(n_buckets),
-    }
-    path = os.path.join(index_dir, _EMB_INDEX_PARAMS_FILE)
+    params = {k: int(v) for k, v in params.items()}
+    path = os.path.join(index_dir, filename)
     if os.path.isfile(path):
         with open(path) as f:
             stored = json.load(f)
         if stored != params:
             raise ValueError(
-                f"embedding LSH index at {index_dir!r} was built with "
-                f"{stored}; got {params} — band values would not line "
-                "up. Rebuild the index or pass the original parameters."
+                f"{what} would not line up: the index at {index_dir!r} "
+                f"was built with {stored}; got {params}. Rebuild the "
+                "index or pass the original parameters."
             )
     elif record:
         os.makedirs(index_dir, exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(params, f)
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(params, f)
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+
+
+# -- incremental embedding near-dup index (banded sign-LSH on disk) -----------
+
+_EMB_INDEX_SIDECAR = {
+    "filename": "_emb_lsh_params.json",
+    "what": "embedding LSH index's band values",
+}
 
 
 def _emb_band_rows(
@@ -1155,7 +1165,14 @@ def emb_index_append(
     The embedding twin of ``minhash_index_append`` — the ingest-side
     half of the near-dup stack for a crawl that dedups on VECTOR
     similarity rather than text shingles."""
-    _emb_index_params_check(index_dir, dim, n_planes, bands, seed, n_buckets)
+    _index_params_check(
+        index_dir,
+        params=dict(
+            dim=dim, n_planes=n_planes, bands=bands, seed=seed,
+            n_buckets=n_buckets,
+        ),
+        **_EMB_INDEX_SIDECAR,
+    )
     rows = (
         _band_rows
         if _band_rows is not None
@@ -1213,8 +1230,14 @@ def emb_index_probe(
     Output: ``(probe_id, index_id, cosine)`` distinct pairs."""
     from embeddinghub_spark.functions.vector import dot, norm
 
-    _emb_index_params_check(
-        index_dir, dim, n_planes, bands, seed, n_buckets, record=False
+    _index_params_check(
+        index_dir,
+        params=dict(
+            dim=dim, n_planes=n_planes, bands=bands, seed=seed,
+            n_buckets=n_buckets,
+        ),
+        record=False,
+        **_EMB_INDEX_SIDECAR,
     )
     # The index layout is fixed by emb_index_append, and the id/vector
     # types must match the probe's own (the params sidecar pins the
@@ -1423,48 +1446,10 @@ def _band_bucket(n_buckets: int):
     ).cast("int")
 
 
-_MINHASH_PARAMS_FILE = "_minhash_params.json"
-
-
-def _minhash_index_params_check(
-    index_dir: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    n_buckets: int,
-    record: bool = True,
-) -> None:
-    """Validate (or, on first append, record) the index's hashing
-    parameters in a JSON sidecar. Band hashes and bucket ids are only
-    comparable when num_hashes/bands/shingle_n/n_buckets match the
-    values used at append time — a mismatched probe would silently
-    return mostly-empty candidates, so mismatch is an error, not a
-    wrong answer."""
-    import json
-    import os
-
-    params = {
-        "num_hashes": int(num_hashes),
-        "bands": int(bands),
-        "shingle_n": int(shingle_n),
-        "n_buckets": int(n_buckets),
-    }
-    path = os.path.join(index_dir, _MINHASH_PARAMS_FILE)
-    if os.path.isfile(path):
-        with open(path) as f:
-            stored = json.load(f)
-        if stored != params:
-            raise ValueError(
-                f"minhash index at {index_dir!r} was built with {stored}; "
-                f"got {params} — band hashes/buckets would not line up. "
-                "Rebuild the index or pass the original parameters."
-            )
-    elif record:
-        # first append records the index's parameters; a probe of a
-        # legacy sidecar-less index skips both record and validation
-        os.makedirs(index_dir, exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(params, f)
+_MINHASH_SIDECAR = {
+    "filename": "_minhash_params.json",
+    "what": "minhash index's band hashes/buckets",
+}
 
 
 def minhash_index_append(
@@ -1484,7 +1469,14 @@ def minhash_index_append(
     (bytes ∝ |batch| × bands, never the corpus). First append writes
     a params sidecar; later appends/probes with different parameters
     raise instead of silently mis-bucketing."""
-    _minhash_index_params_check(index_dir, num_hashes, bands, shingle_n, n_buckets)
+    _index_params_check(
+        index_dir,
+        params=dict(
+            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+            n_buckets=n_buckets,
+        ),
+        **_MINHASH_SIDECAR,
+    )
     rows = minhash_candidates(df, text_col, id_col, num_hashes, bands, shingle_n)
     (
         rows.withColumn("bucket", _band_bucket(n_buckets))
@@ -1522,8 +1514,14 @@ def minhash_index_probe(
     Self-matches (re-probing an already-indexed id) are dropped.
     Raises if the parameters differ from the ones recorded at append
     time."""
-    _minhash_index_params_check(
-        index_dir, num_hashes, bands, shingle_n, n_buckets, record=False
+    _index_params_check(
+        index_dir,
+        params=dict(
+            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+            n_buckets=n_buckets,
+        ),
+        record=False,
+        **_MINHASH_SIDECAR,
     )
     idx = spark.read.parquet(index_dir).select(
         F.col(id_col).alias("index_id"),
@@ -1924,35 +1922,10 @@ def remove_duplicate_spans(
 
 # -- incremental on-disk gram index (substring grain) -------------------------
 
-_GRAM_PARAMS_FILE = "_gram_params.json"
-
-
-def _gram_index_params_check(
-    index_dir: str, gram_n: int, n_buckets: int, record: bool = True
-) -> None:
-    """Sidecar-validated gram-index parameters — the
-    ``_minhash_index_params_check`` convention at substring grain:
-    fingerprints and bucket ids only line up when gram_n/n_buckets
-    match the append-time values, so mismatch raises instead of
-    silently returning empty matches."""
-    import json
-    import os
-
-    params = {"gram_n": int(gram_n), "n_buckets": int(n_buckets)}
-    path = os.path.join(index_dir, _GRAM_PARAMS_FILE)
-    if os.path.isfile(path):
-        with open(path) as f:
-            stored = json.load(f)
-        if stored != params:
-            raise ValueError(
-                f"gram index at {index_dir!r} was built with {stored}; "
-                f"got {params} — fingerprints/buckets would not line up. "
-                "Rebuild the index or pass the original parameters."
-            )
-    elif record:
-        os.makedirs(index_dir, exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(params, f)
+_GRAM_SIDECAR = {
+    "filename": "_gram_params.json",
+    "what": "gram index's fingerprints/buckets",
+}
 
 
 def _tokenized_base(df: DataFrame, text_col: str, id_col: str, gram_n: int):
@@ -1982,7 +1955,11 @@ def gram_index_append(
     copied SPANS against the whole standing corpus without re-reading
     its text. Map-only up to the single bucket-clustering exchange of
     the batch's own gram rows."""
-    _gram_index_params_check(index_dir, gram_n, n_buckets)
+    _index_params_check(
+        index_dir,
+        params=dict(gram_n=gram_n, n_buckets=n_buckets),
+        **_GRAM_SIDECAR,
+    )
     rows = _gram_fingerprints(
         _tokenized_base(df, text_col, id_col, gram_n), id_col, gram_n
     ).withColumn("bucket", _md5_long(F.col("fp")) % n_buckets)
@@ -2022,7 +1999,12 @@ def gram_index_probe_spans(
     maximal span of the probe document that exists verbatim
     somewhere in the indexed corpus.
     """
-    _gram_index_params_check(index_dir, gram_n, n_buckets, record=False)
+    _index_params_check(
+        index_dir,
+        params=dict(gram_n=gram_n, n_buckets=n_buckets),
+        record=False,
+        **_GRAM_SIDECAR,
+    )
     idx = spark.read.parquet(index_dir).select(
         F.col(id_col).alias("_index_id"), "fp", "bucket"
     )

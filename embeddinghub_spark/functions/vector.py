@@ -812,6 +812,11 @@ def ivf_inertia(
 # distance computation): per query, a (m × k_codes) table of partial
 # squared distances is computed ONCE, and every corpus vector's
 # approximate distance is m table lookups — no float math per pair.
+#
+# Every PQ op builds those tables as a COLUMN (`pq_query_tables`,
+# map-only over the query frame: no driver collect, no bound on the
+# query count), encodes the corpus through one expression
+# (`_pq_codes_sql`) and scores through one tail (`_adc_topk`).
 
 
 def pq_codebooks(
@@ -835,16 +840,15 @@ def pq_codebooks(
     path — matches the recall intent of the reference's trained HNSW
     index, embeddinghub/embeddingstore/index.cc:10-54): ALL m
     subspaces train TOGETHER keyed on (subspace, code), so each
-    iteration is one map-only literal-fold assignment over the corpus
-    plus one (subspace, code, position) mean shuffle of
-    |vectors|·dim scalars — the classic distributed KMeans shape, m
-    subproblems in the same two jobs, never m separate runs. Empty
-    codes keep their previous codeword (Lloyd's degeneracy guard).
-    Refined means come from distributed avg (not bit-replayable
-    across partitionings) — keep ``refine=False`` anywhere an engine-
-    independent oracle must replay the index."""
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} not divisible by m={m}")
+    iteration is one map-only literal-fold encode of the corpus plus
+    one (subspace, code, position) mean shuffle of |vectors|·dim
+    scalars — the classic distributed KMeans shape, m subproblems in
+    the same two jobs, never m separate runs. Empty codes keep their
+    previous codeword (Lloyd's degeneracy guard). Refined means come
+    from distributed avg (not bit-replayable across partitionings) —
+    keep ``refine=False`` anywhere an engine-independent oracle must
+    replay the index."""
+    _pq_check(dim, m)
     d = dim // m
     rows = (
         vectors.orderBy(F.col(id_col).asc())
@@ -859,34 +863,31 @@ def pq_codebooks(
     if not refine:
         return cb
 
-    qv = _bq(vec_col)
-    # (subspace j, subvector) rows: map-only explode, m rows per vector
-    sub = vectors.select(
-        F.expr(
-            f"explode(transform(sequence(1, {m}), j -> named_struct("
-            f"'j', j, 'sv', transform(slice({qv}, (j - 1) * {d} + 1, {d}),"
-            " x -> cast(x as double)))))"
-        ).alias("_s")
-    ).select(F.col("_s.j").alias("j"), F.col("_s.sv").alias("sv"))
-    sub = sub.localCheckpoint(eager=False)  # slice once, reuse per iter
-
-    seqc = "array(" + ", ".join(str(c) for c in range(k_codes)) + ")"
+    # the corpus as double arrays, projected once and reused per iter;
+    # position p of a vector is coordinate p % d of subspace p div d
+    dv = vectors.select(
+        F.expr(f"transform({_bq(vec_col)}, x -> cast(x as double))").alias("v")
+    ).localCheckpoint(eager=False)
     for _ in range(n_iters):
-        ssd = _ssd_sql("cv", "sv")
-        code = (
-            f"array_min(zip_with(element_at({_pq_cb_sql(cb)}, j), {seqc},"
-            f" (cv, c) -> named_struct('s', {ssd}, 'c', c))).c"
-        )
         means = (
-            sub.select("j", F.expr(code).alias("code"),
-                       F.posexplode("sv").alias("pos", "x"))
-            .groupBy("j", "code", "pos")
+            dv.select(
+                F.expr(_pq_codes_sql(cb, _pq_slice("v", d))).alias("codes"),
+                F.posexplode("v").alias("pos", "x"),
+            )
+            .select(
+                F.expr(f"pos div {d}").alias("j"),
+                F.expr(f"element_at(codes, cast(pos div {d} as int) + 1)")
+                .alias("code"),
+                F.expr(f"pos % {d}").alias("p"),
+                "x",
+            )
+            .groupBy("j", "code", "p")
             .agg(F.avg("x").alias("mean"))
             .collect()
         )
         new_cb = [[list(cv) for cv in subcb] for subcb in cb]
         for r in means:  # m·k_codes·d rows — bounded driver-side
-            new_cb[r["j"] - 1][r["code"]][r["pos"]] = float(r["mean"])
+            new_cb[r["j"]][r["code"]][r["p"]] = float(r["mean"])
         cb = new_cb
     return cb
 
@@ -906,58 +907,34 @@ def _pq_cb_sql(cb: list[list[list[float]]]) -> str:
     )
 
 
-# The PQ family builds per-query ADC distance tables DRIVER-SIDE and
-# ships them as one SQL literal (Q·m·k_codes doubles). That is the
-# right shape for a bounded serve-side query set (the reference's
-# per-request kNN); an unbounded batch Q would OOM the driver or blow
-# the SQL parser long before the cluster sees work. The guard makes
-# that bound explicit instead of letting a caller discover it as a
-# janino/driver failure; batch-scale query sets belong on
-# knn_bruteforce / knn_ivf, whose query side is a broadcast join.
-MAX_PQ_QUERIES = 1024
-
-
-def _pq_empty_result(vectors, queries, id_col, query_id_col):
-    """Typed empty (query_id, neighbor_id, dist, rank) frame — the
-    PQ scorers short-circuit to this on an empty query set because
-    ``sequence(1, 0)`` yields ``[1, 0]`` (Spark infers step -1), so
-    the generated ``element_at(..., 0)`` would raise instead of
-    returning nothing."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[query_id_col].dataType),
-            T.StructField("neighbor_id", vectors.schema[id_col].dataType),
-            T.StructField("dist", T.DoubleType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-    return vectors.sparkSession.createDataFrame([], schema)
-
-
-def _pq_guard_queries(qrows):
-    if len(qrows) > MAX_PQ_QUERIES:
+def _pq_check(dim: int, m: int, cb: list[list[list[float]]] | None = None) -> None:
+    """Refuse a PQ configuration that cannot encode ``dim``-long
+    vectors before any Spark job runs: m must divide dim, and a
+    supplied codebook must hold m subspaces of equally many
+    dim/m-long codewords. Unchecked, a remainder silently scores only
+    m·(dim // m) dimensions and a mismatched codebook fails mid-job
+    on an array index."""
+    shape = None
+    ok = m > 0 and dim % m == 0
+    if cb is not None:
+        k = len(cb[0]) if cb else 0
+        shape = (len(cb), k, len(cb[0][0]) if k else 0)
+        ok = ok and len(cb) == m and k > 0 and all(
+            len(sub) == k and all(len(cv) == dim // m for cv in sub)
+            for sub in cb
+        )
+    if not ok:
         raise ValueError(
-            f"PQ/ADC scoring got {len(qrows)} queries; the per-query "
-            f"distance tables are driver-built SQL literals, bounded at "
-            f"MAX_PQ_QUERIES={MAX_PQ_QUERIES}. For batch-scale query sets "
-            "use knn_bruteforce or knn_ivf (broadcast-join query side)."
+            "PQ needs m to divide dim and a codebook of m subspaces of "
+            f"dim/m-long codewords; got dim={dim}, m={m}, cb shape="
+            f"{shape} (subspaces, codes, subvector length)"
         )
 
 
-def _qid_sql(q, dt) -> str:
-    """Typed, quote-escaped SQL literal for a query id. Branches on
-    the query column's Spark dataType (not Python ``isinstance``), so
-    integral ids that surface as numpy/pandas scalars still produce a
-    key matching the column type in the generated map lookup, and a
-    string id containing a single quote can't break (or inject into)
-    the generated expression."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return f"CAST({int(q)} AS {dt.simpleString()})"
-    return "'" + str(q).replace("'", "''") + "'"
+def _pq_slice(arr_sql: str, d: int) -> str:
+    """Subvector ``j`` (the 1-based subspace lambda variable) of a
+    dim-long array expression."""
+    return f"slice({arr_sql}, (j - 1) * {d} + 1, {d})"
 
 
 def _ssd_sql(a_sql: str, b_sql: str) -> str:
@@ -968,6 +945,23 @@ def _ssd_sql(a_sql: str, b_sql: str) -> str:
         f"aggregate(zip_with({a_sql}, {b_sql},"
         " (a, b) -> (a - cast(b as double)) * (a - cast(b as double))),"
         " 0D, (acc, x) -> acc + x)"
+    )
+
+
+def _pq_codes_sql(cb: list[list[list[float]]], slice_sql: str) -> str:
+    """The PQ encoder: ``array<int>`` of each subspace's nearest
+    codeword index (lowest squared distance, then lowest code), the
+    codebooks riding in the plan as one constant-folded literal.
+    ``slice_sql`` is subspace ``j``'s subvector (``_pq_slice``). m and
+    the code range come from ``cb`` itself, so codebooks trained on
+    fewer than ``k_codes`` vectors encode over the codes they have."""
+    m, k = len(cb), len(cb[0])
+    seqc = "array(" + ", ".join(str(c) for c in range(k)) + ")"
+    ssd = _ssd_sql("cv", slice_sql)
+    return (
+        f"transform(sequence(1, {m}), j -> "
+        f"array_min(zip_with(element_at({_pq_cb_sql(cb)}, j), {seqc},"
+        f" (cv, c) -> named_struct('s', {ssd}, 'c', c))).c)"
     )
 
 
@@ -983,17 +977,52 @@ def pq_encode(
     pattern as the IVF quantizer); zero joins, zero exchanges, so
     encoding a 100 TB corpus is embarrassingly parallel. Tiebreak:
     lowest squared distance, then lowest code."""
-    m, k = len(cb), len(cb[0])
-    d = len(cb[0][0])
-    qv = _bq(vec_col)
-    seqc = "array(" + ", ".join(str(c) for c in range(k)) + ")"
-    ssd = _ssd_sql("cv", f"slice({qv}, (j - 1) * {d} + 1, {d})")
-    codes = (
-        f"transform(sequence(1, {m}), j -> "
-        f"array_min(zip_with(element_at({_pq_cb_sql(cb)}, j), {seqc},"
-        f" (cv, c) -> named_struct('s', {ssd}, 'c', c))).c)"
-    )
+    codes = _pq_codes_sql(cb, _pq_slice(_bq(vec_col), len(cb[0][0])))
     return vectors.select(F.col(id_col), F.expr(codes).alias("codes"))
+
+
+def pq_query_tables(
+    queries: DataFrame,
+    cb: list[list[list[float]]],
+    query_vec_col: str = "query_vec",
+    tab_col: str = "tab",
+) -> DataFrame:
+    """ADC distance tables as a COLUMN: tab[j][c] = ssd(cb[j][c],
+    query_slice_j), computed JVM-side from the codebook literal —
+    map-only over the query table, no driver collect. The fold order
+    is the one the registry oracles replay in DuckDB, so distances
+    are bit-identical across engines (pinned by the oracle test)."""
+    m = len(cb)
+    d = len(cb[0][0])
+    ssd = _ssd_sql(_pq_slice(_bq(query_vec_col), d), "cv")
+    # NB: argument order — codeword as the CAST side: cv is already
+    # double (literal), the query slice is float; _ssd_sql casts its
+    # SECOND argument, so pass (query_slice, cv) to cast cv (a no-op
+    # on doubles) and keep the subtraction order (q - c)² == (c - q)²
+    tab = (
+        f"transform(sequence(1, {m}), j -> "
+        f"transform(element_at({_pq_cb_sql(cb)}, j), cv -> {ssd}))"
+    )
+    return queries.withColumn(tab_col, F.expr(tab))
+
+
+def _adc_topk(pairs: DataFrame, m: int, k: int) -> DataFrame:
+    """The ADC tail every PQ op shares. Over ``(query_id,
+    neighbor_id, tab, codes)`` pairs: dist = Σ_j tab[j][codes[j]]
+    (a left-associated double fold from 0D, the order the oracles
+    replay), the two-stage top-k by (dist, neighbor_id), and dist
+    rounded to 6 for display only — rank is on the exact double."""
+    dist = F.expr(
+        f"aggregate(sequence(1, {m}), 0D, (acc, j) -> acc +"
+        " element_at(element_at(tab, j), element_at(codes, j) + 1))"
+    )
+    scored = pairs.select("query_id", "neighbor_id", dist.alias("dist"))
+    top = _topk_per_query(
+        scored, k, [F.col("dist").asc(), F.col("neighbor_id").asc()]
+    )
+    return top.select(
+        "query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank"
+    )
 
 
 def knn_pq(
@@ -1013,87 +1042,30 @@ def knn_pq(
     against each query through its (m × k_codes) distance table —
     m array lookups per (vector, query), no per-pair float math.
 
-    Scale shape: encode is map-only; the query distance tables
-    (Q·m·k_codes doubles — driver-built, queries are a bounded
-    serve-side set like the reference's per-request kNN) ride as one
-    literal; scoring explodes each corpus row into its Q (query,
-    dist) pairs in-row (the same corpus×Q pairing the exact path's
-    broadcast join produces) and the two-stage top-k keeps the final
-    exchange at parts×Q×k rows. Raises ``ValueError`` above
-    ``MAX_PQ_QUERIES`` (=1024) queries — past that the literal tables
-    stop being a serve-side set and belong on the broadcast-join
-    scorers (knn_bruteforce/knn_ivf). Output: (query_id, neighbor_id,
-    dist rounded to 6, rank) — rank on the exact double, rounding
-    display-only."""
-    d = dim // m
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    _pq_guard_queries(qrows)
-    if not qrows:
-        return _pq_empty_result(vectors, queries, id_col, query_id_col)
+    Scale shape: encode is map-only; each query computes its own ADC
+    table as a column (`pq_query_tables`, map-only), and the pairing
+    is a broadcast of the (query, table) frame against the encoded
+    corpus — the corpus×Q pairing `knn_bruteforce` uses, with m
+    byte-code lookups per pair instead of a dim-length fold. The
+    corpus never shuffles until the two-stage top-k's parts×Q×k
+    exchange. The broadcast holds Q·m·k_codes doubles — fine to ~10⁶
+    queries; past that, exhaustive scoring of every (vector, query)
+    pair is the real cost and belongs on the cell-pruned `knn_ivfpq`
+    layout instead.
+
+    Output: (query_id, neighbor_id, dist rounded to 6, rank) — rank
+    on the exact double, rounding display-only."""
+    _pq_check(dim, m, cb)
     if cb is None:
         cb = pq_codebooks(vectors, m, k_codes, id_col, vec_col, dim)
-    enc = pq_encode(vectors, cb, id_col, vec_col).localCheckpoint(eager=False)
-
-    # dtab[q][j][c] = ssd(cb[j][c], query_slice_j): plain Python
-    # doubles summed in index order — the exact fold _ssd_sql runs
-    tabs, qids = [], []
-    for r in qrows:
-        qv = [float(x) for x in r[1]]
-        tabs.append(
-            [
-                [
-                    sum(
-                        (cv[i] - qv[j * d + i]) * (cv[i] - qv[j * d + i])
-                        for i in range(d)
-                    )
-                    for cv in cb[j]
-                ]
-                for j in range(m)
-            ]
-        )
-        qids.append(r[0])
-    tabs_sql = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"{x!r}D" for x in row) + ")"
-                for row in tab
-            )
-            + ")"
-            for tab in tabs
-        )
-        + ")"
+    enc = pq_encode(vectors, cb, id_col, vec_col)
+    qtab = pq_query_tables(queries, cb, query_vec_col).select(
+        F.col(query_id_col).alias("query_id"), F.col("tab")
     )
-    qdt = queries.schema[query_id_col].dataType
-    qids_sql = "array(" + ", ".join(_qid_sql(q, qdt) for q in qids) + ")"
-    pairs = (
-        f"transform(sequence(1, {len(qids)}), qi -> named_struct("
-        f"'qid', element_at({qids_sql}, qi),"
-        f" 'tab', element_at({tabs_sql}, qi)))"
+    pairs = enc.join(F.broadcast(qtab)).select(
+        "query_id", F.col(id_col).alias("neighbor_id"), "tab", "codes"
     )
-    dist = (
-        f"aggregate(sequence(1, {m}), 0D, (acc, j) -> acc +"
-        " element_at(element_at(_q.tab, j), element_at(codes, j) + 1))"
-    )
-    scored = (
-        enc.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col("codes"),
-            F.explode(F.expr(pairs)).alias("_q"),
-        )
-        .select(
-            F.col("_q.qid").alias("query_id"),
-            F.col("neighbor_id"),
-            F.expr(dist).alias("dist"),
-        )
-    )
-    top = _topk_per_query(
-        scored, k, [F.col("dist").asc(), F.col("neighbor_id").asc()]
-    )
-    return top.select(
-        "query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank"
-    )
+    return _adc_topk(pairs, m, k)
 
 
 def knn_ivfpq(
@@ -1120,24 +1092,21 @@ def knn_ivfpq(
     the index stores one byte per code instead of 4·dim.
 
     Codes here quantize the RAW vectors (IVF-flat storage with PQ
-    scoring); encoding the cell RESIDUALS instead — FAISS's default,
-    better recall per byte — is the named upgrade and changes only
-    ``pq_encode``'s input. Both quantizers are the deterministic
+    scoring); encoding the cell RESIDUALS instead is
+    ``knn_ivfpq_residual``. Both quantizers are the deterministic
     replayable defaults (first-by-id); swap KMeans for production.
 
     Scale shape: cell assignment and PQ encode are both map-only
-    literal folds (zero shuffles over the corpus); the probe set
-    (Q × nprobe rows) broadcasts; the only corpus-wide exchange is
-    the two-stage top-k's bounded parts×Q×k window input. Query set
-    is capped at ``MAX_PQ_QUERIES`` (ADC tables are driver-built
-    literals — see module note). Output: (query_id, neighbor_id,
-    dist, rank), dist rounded to 6.
+    literal folds (zero shuffles over the corpus); the ADC tables are
+    computed per probe row as a column (`pq_query_tables`). The
+    probe↔corpus pairing is a plain equi-join on cell with NO
+    broadcast hint: AQE broadcasts the (query, cell, table) frame
+    while it fits and falls back to a cell-partitioned shuffle join
+    for huge query sets. The only other corpus-wide exchange is the
+    two-stage top-k's bounded parts×Q×k window input. Output:
+    (query_id, neighbor_id, dist, rank), dist rounded to 6.
     """
-    d = dim // m
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    _pq_guard_queries(qrows)
-    if not qrows:
-        return _pq_empty_result(vectors, queries, id_col, query_id_col)
+    _pq_check(dim, m, cb)
     if centroids is None:
         centroids = default_centroids(
             vectors, n_cells, id_col, vec_col
@@ -1145,92 +1114,32 @@ def knn_ivfpq(
     cents = _collect_cells(centroids, "cell", "centroid")
     if cb is None:
         cb = pq_codebooks(vectors, m, k_codes, id_col, vec_col, dim)
-
-    # one map-only pass computes BOTH the cell and the codes per row
-    # (joining a separate pq_encode output back on id would shuffle
-    # the corpus; two projections over the same scan cost nothing)
-    enc = _ivfpq_corpus_enc(
-        vectors, centroids, cents, cb, m, k_codes, d, id_col, vec_col, dim
-    )
-
-    # query side: nprobe cells (inline fold) + driver-built ADC tables
+    enc = _ivfpq_corpus_enc(vectors, centroids, cents, cb, id_col, vec_col, dim)
     probes = _ivf_query_probes(
         queries, centroids, cents, nprobe, query_id_col, query_vec_col, dim
     )
-
-    tabs, qids = [], []
-    for r in qrows:
-        qvec = [float(x) for x in r[1]]
-        tabs.append(
-            [
-                [
-                    sum(
-                        (cv[i] - qvec[j * d + i]) * (cv[i] - qvec[j * d + i])
-                        for i in range(d)
-                    )
-                    for cv in cb[j]
-                ]
-                for j in range(m)
-            ]
-        )
-        qids.append(r[0])
-    tabs_sql = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"{x!r}D" for x in row) + ")"
-                for row in tab
-            )
-            + ")"
-            for tab in tabs
-        )
-        + ")"
+    qtab = pq_query_tables(probes, cb, query_vec_col).select(
+        F.col(query_id_col).alias("query_id"), F.col("cell"), F.col("tab")
     )
-    qdt = queries.schema[query_id_col].dataType
-    qids_sql = "array(" + ", ".join(_qid_sql(q, qdt) for q in qids) + ")"
-    tab_map = f"map_from_arrays({qids_sql}, {tabs_sql})"
-    dist = (
-        f"aggregate(sequence(1, {m}), 0D, (acc, j) -> acc +"
-        f" element_at(element_at(element_at({tab_map}, query_id), j),"
-        " element_at(codes, j) + 1))"
+    pairs = enc.join(qtab, "cell").select(
+        "query_id", F.col(id_col).alias("neighbor_id"), "tab", "codes"
     )
-    scored = (
-        enc.join(F.broadcast(probes.select(query_id_col, "cell")), "cell")
-        .select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.col("codes"),
-        )
-        .select("query_id", "neighbor_id", F.expr(dist).alias("dist"))
-    )
-    top = _topk_per_query(
-        scored, k, [F.col("dist").asc(), F.col("neighbor_id").asc()]
-    )
-    return top.select(
-        "query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank"
-    )
+    return _adc_topk(pairs, m, k)
 
 
 def _ivfpq_corpus_enc(
-    vectors, centroids, cents, cb, m, k_codes, d, id_col, vec_col, dim
+    vectors, centroids, cents, cb, id_col, vec_col, dim
 ) -> DataFrame:
     """Corpus side of the IVFPQ layout: (id, cell, codes) from ONE
     map-only pass (cell fold + PQ encode as two projections over the
-    same scan), checkpointed for the probe join."""
+    same scan — joining a separate pq_encode output back on id would
+    shuffle the corpus), checkpointed for the probe join."""
     assigned = assign_ivf_cells(
         vectors, centroids, id_col, vec_col, dim=dim, cells=cents
     )
-    qv = _bq(vec_col)
-    seqc = "array(" + ", ".join(str(c) for c in range(k_codes)) + ")"
-    ssd = _ssd_sql("cv", f"slice({qv}, (j - 1) * {d} + 1, {d})")
-    codes_sql = (
-        f"transform(sequence(1, {m}), j -> "
-        f"array_min(zip_with(element_at({_pq_cb_sql(cb)}, j), {seqc},"
-        f" (cv, c) -> named_struct('s', {ssd}, 'c', c))).c)"
-    )
+    codes = _pq_codes_sql(cb, _pq_slice(_bq(vec_col), len(cb[0][0])))
     return assigned.select(
-        F.col(id_col), F.col("cell"), F.expr(codes_sql).alias("codes")
+        F.col(id_col), F.col("cell"), F.expr(codes).alias("codes")
     ).localCheckpoint(eager=False)
 
 
@@ -1257,70 +1166,6 @@ def _ivf_query_probes(
         query_vec_col,
         F.col("_p.cell").cast(cell_dt).alias("cell"),
     ).localCheckpoint(eager=False)
-
-
-def knn_ivfpq_batch(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    dim: int = 64,
-    centroids: DataFrame | None = None,
-    cb: list[list[list[float]]] | None = None,
-) -> DataFrame:
-    """`knn_ivfpq` for UNBOUNDED query sets — the composition of the
-    two scale paths: cell pruning bounds the pairing (each query
-    scores only its nprobe cells' vectors, unlike `knn_pq_batch`'s
-    exhaustive corpus×Q), and per-query ADC tables are computed
-    JVM-side as a column (`pq_query_tables`) instead of driver-built
-    literals — no collect, no Q cap.
-
-    The probe↔corpus pairing is a plain equi-join on cell with NO
-    broadcast hint: AQE broadcasts the (query, cell, table) frame
-    while it fits and falls back to a cell-partitioned shuffle join
-    for truly huge query sets — exactly the behavior a 100 TB corpus
-    with a 10⁸-query backfill needs. Distances are bit-identical to
-    the literal path (equivalence pinned by test).
-    """
-    d = dim // m
-    if centroids is None:
-        centroids = default_centroids(
-            vectors, n_cells, id_col, vec_col
-        ).localCheckpoint(eager=False)
-    cents = _collect_cells(centroids, "cell", "centroid")
-    if cb is None:
-        cb = pq_codebooks(vectors, m, k_codes, id_col, vec_col, dim)
-    enc = _ivfpq_corpus_enc(
-        vectors, centroids, cents, cb, m, k_codes, d, id_col, vec_col, dim
-    )
-    probes = _ivf_query_probes(
-        queries, centroids, cents, nprobe, query_id_col, query_vec_col, dim
-    )
-    qtab = pq_query_tables(probes, cb, query_vec_col).select(
-        F.col(query_id_col).alias("query_id"), F.col("cell"), F.col("tab")
-    )
-    dist = F.expr(
-        f"aggregate(sequence(1, {m}), 0D, (acc, j) -> acc +"
-        " element_at(element_at(tab, j), element_at(codes, j) + 1))"
-    )
-    scored = enc.join(qtab, "cell").select(
-        F.col("query_id"),
-        F.col(id_col).alias("neighbor_id"),
-        dist.alias("dist"),
-    )
-    top = _topk_per_query(
-        scored, k, [F.col("dist").asc(), F.col("neighbor_id").asc()]
-    )
-    return top.select(
-        "query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank"
-    )
 
 
 def ann_recall(
@@ -1364,15 +1209,14 @@ def _py_dot(c, q):
     return s
 
 
-def _residual_index(
-    vectors, cents, k_codes, m, d, dim, id_col, vec_col
-):
-    """Residual-IVFPQ index constants: centroid vectors by cell id,
-    the centroid matrix as one SQL literal (element_at(..., cell)
-    works because cells are 1..K by row_number), and the residual
-    codebooks — subspace slices of (first-k vectors − their own cell
-    centroid), with assignment replayed driver-side in the same
-    left-assoc fold order the plan runs (oracle-pinned)."""
+def _residual_index(vectors, cents, k_codes, m, dim, id_col, vec_col):
+    """Residual-IVFPQ index constants: the centroid matrix as one SQL
+    literal (element_at(..., cell) works because cells are 1..K by
+    row_number), and the residual codebooks — subspace slices of
+    (first-k vectors − their own cell centroid), with assignment
+    replayed driver-side in the same left-assoc fold order the plan
+    runs (oracle-pinned)."""
+    d = dim // m
     cent_vecs = {int(cid): [float(x) for x in v] for cid, v in cents}
     cents_arr_sql = (
         "array("
@@ -1400,12 +1244,11 @@ def _residual_index(
         [rv[j * d : (j + 1) * d] for rv in resids]
         for j in range(m)
     ]
-    return cent_vecs, cents_arr_sql, cb
+    return cents_arr_sql, cb
 
 
 def _residual_corpus_enc(
-    vectors, centroids, cents, cents_arr_sql, cb, m, k_codes, d,
-    id_col, vec_col, dim,
+    vectors, centroids, cents, cents_arr_sql, cb, id_col, vec_col, dim
 ) -> DataFrame:
     """Corpus side of residual IVFPQ: (id, cell, codes) where codes
     quantize v − centroid(cell(v)) — one map-only pass (cell fold +
@@ -1413,21 +1256,15 @@ def _residual_corpus_enc(
     assigned = assign_ivf_cells(
         vectors, centroids, id_col, vec_col, dim=dim, cells=cents
     )
-    qv = _bq(vec_col)
-    seqc = "array(" + ", ".join(str(c) for c in range(k_codes)) + ")"
+    d = len(cb[0][0])
     rslice = (
-        f"zip_with(slice({qv}, (j - 1) * {d} + 1, {d}),"
-        f" slice(element_at({cents_arr_sql}, cell), (j - 1) * {d} + 1, {d}),"
+        f"zip_with({_pq_slice(_bq(vec_col), d)},"
+        f" {_pq_slice(f'element_at({cents_arr_sql}, cell)', d)},"
         " (b, cc) -> cast(b as double) - cc)"
     )
-    ssd = _ssd_sql("cv", rslice)
-    codes_sql = (
-        f"transform(sequence(1, {m}), j -> "
-        f"array_min(zip_with(element_at({_pq_cb_sql(cb)}, j), {seqc},"
-        f" (cv, c) -> named_struct('s', {ssd}, 'c', c))).c)"
-    )
     return assigned.select(
-        F.col(id_col), F.col("cell"), F.expr(codes_sql).alias("codes")
+        F.col(id_col), F.col("cell"),
+        F.expr(_pq_codes_sql(cb, rslice)).alias("codes"),
     ).localCheckpoint(eager=False)
 
 
@@ -1450,105 +1287,41 @@ def knn_ivfpq_residual(
     so the codebooks only have to cover the within-cell spread
     (better recall per code byte than raw-vector PQ, which must span
     the whole space). ADC tables become per-(query, probed cell):
-    the query's residual against each probed centroid gets its own
-    (m × k_codes) table — Q·nprobe·m·k_codes doubles, still a
-    driver-built literal (so the ``MAX_PQ_QUERIES`` cap applies —
-    see module note).
+    each probe ROW computes its own table as a column from the
+    query's residual against that row's centroid.
 
     Everything else matches ``knn_ivfpq``: one map-only corpus pass
     computes cell + residual codes (centroid matrix and codebooks are
-    constant-folded literals), the probe set broadcasts, and the only
-    corpus exchange is the two-stage top-k. Quantizers stay the
-    deterministic first-by-id convention so a SQL oracle replays the
-    whole index."""
-    d = dim // m
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    _pq_guard_queries(qrows)
-    if not qrows:
-        return _pq_empty_result(vectors, queries, id_col, query_id_col)
+    constant-folded literals), the cell equi-join is left to AQE
+    (broadcast while the probe frame fits, shuffle join past that),
+    and the only other corpus exchange is the two-stage top-k.
+    Quantizers stay the deterministic first-by-id convention so a SQL
+    oracle replays the whole index."""
+    _pq_check(dim, m)
     centroids = default_centroids(
         vectors, n_cells, id_col, vec_col
     ).localCheckpoint(eager=False)
     cents = _collect_cells(centroids, "cell", "centroid")
-    cent_vecs, cents_arr_sql, cb = _residual_index(
-        vectors, cents, k_codes, m, d, dim, id_col, vec_col
+    cents_arr_sql, cb = _residual_index(
+        vectors, cents, k_codes, m, dim, id_col, vec_col
     )
     enc = _residual_corpus_enc(
-        vectors, centroids, cents, cents_arr_sql, cb, m, k_codes, d,
-        id_col, vec_col, dim,
+        vectors, centroids, cents, cents_arr_sql, cb, id_col, vec_col, dim
     )
-
     probes = _ivf_query_probes(
         queries, centroids, cents, nprobe, query_id_col, query_vec_col, dim
-    ).select(query_id_col, "cell")
-
-    # per-(query, probed cell) ADC tables, driver-built with the same
-    # fold order as the encode expression
-    qdt = queries.schema[query_id_col].dataType
-    qmap_entries = []
-    for r in qrows:
-        qvec = [float(x) for x in r[1]]
-        scored_cells = sorted(
-            ((-_py_dot(cent_vecs[cid], qvec), cid) for cid in sorted(cent_vecs))
-        )[: int(nprobe)]
-        cell_maps = []
-        for _, cid in scored_cells:
-            cent = cent_vecs[cid]
-            qres = [qvec[i] - cent[i] for i in range(dim)]
-            tab = [
-                [
-                    sum(
-                        (cv[i] - qres[j * d + i]) * (cv[i] - qres[j * d + i])
-                        for i in range(d)
-                    )
-                    for cv in cb[j]
-                ]
-                for j in range(m)
-            ]
-            tab_sql = (
-                "array("
-                + ", ".join(
-                    "array(" + ", ".join(f"{x!r}D" for x in row) + ")"
-                    for row in tab
-                )
-                + ")"
-            )
-            cell_maps.append((cid, tab_sql))
-        cells_sql = "array(" + ", ".join(str(c) for c, _ in cell_maps) + ")"
-        tabs_sql = "array(" + ", ".join(t for _, t in cell_maps) + ")"
-        qid_sql = _qid_sql(r[0], qdt)
-        qmap_entries.append(
-            (qid_sql, f"map_from_arrays({cells_sql}, {tabs_sql})")
-        )
-    qmap = (
-        "map_from_arrays(array("
-        + ", ".join(q for q, _ in qmap_entries)
-        + "), array("
-        + ", ".join(t for _, t in qmap_entries)
-        + "))"
     )
-    dist = (
-        f"aggregate(sequence(1, {m}), 0D, (acc, j) -> acc +"
-        f" element_at(element_at(element_at(element_at({qmap}, query_id),"
-        " cast(cell as int)), j), element_at(codes, j) + 1))"
+    qres = F.expr(
+        f"zip_with({_bq(query_vec_col)}, element_at({cents_arr_sql}, cell),"
+        " (b, cc) -> cast(b as double) - cc)"
     )
-    scored = (
-        enc.join(F.broadcast(probes), "cell")
-        .select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
-            F.col("cell"),
-            F.col("codes"),
-        )
-        .select("query_id", "neighbor_id", "cell", F.expr(dist).alias("dist"))
-        .drop("cell")
+    qtab = pq_query_tables(probes.withColumn("_qres", qres), cb, "_qres").select(
+        F.col(query_id_col).alias("query_id"), F.col("cell"), F.col("tab")
     )
-    top = _topk_per_query(
-        scored, k, [F.col("dist").asc(), F.col("neighbor_id").asc()]
+    pairs = enc.join(qtab, "cell").select(
+        "query_id", F.col(id_col).alias("neighbor_id"), "tab", "codes"
     )
-    return top.select(
-        "query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank"
-    )
+    return _adc_topk(pairs, m, k)
 
 
 def knn_join(
@@ -1637,153 +1410,6 @@ def knn_join(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(id_col, "neighbor_id", "cosine", "rank")
-    )
-
-
-def pq_query_tables(
-    queries: DataFrame,
-    cb: list[list[list[float]]],
-    query_vec_col: str = "query_vec",
-    tab_col: str = "tab",
-) -> DataFrame:
-    """ADC distance tables as a COLUMN: tab[j][c] = ssd(cb[j][c],
-    query_slice_j), computed JVM-side from the codebook literal —
-    map-only over the query table, no driver collect. Values are
-    bit-identical to the driver-built tables `knn_pq` inlines (same
-    left-associated fold order), pinned by the batch≡literal
-    equivalence test."""
-    m = len(cb)
-    d = len(cb[0][0])
-    qv = _bq(query_vec_col)
-    ssd = _ssd_sql(f"slice({qv}, (j - 1) * {d} + 1, {d})", "cv")
-    # NB: argument order — codeword as the CAST side: cv is already
-    # double (literal), the query slice is float; _ssd_sql casts its
-    # SECOND argument, so pass (query_slice, cv) to cast cv (a no-op
-    # on doubles) and keep the subtraction order (q - c)² == (c - q)²
-    tab = (
-        f"transform(sequence(1, {m}), j -> "
-        f"transform(element_at({_pq_cb_sql(cb)}, j), cv -> {ssd}))"
-    )
-    return queries.withColumn(tab_col, F.expr(tab))
-
-
-def knn_pq_batch(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    m: int = 8,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    dim: int = 64,
-    cb: list[list[list[float]]] | None = None,
-) -> DataFrame:
-    """`knn_pq` for UNBOUNDED query sets — the batch path the literal
-    variant's ``MAX_PQ_QUERIES`` guard points at. No driver collect:
-    each query computes its own ADC table as a column
-    (`pq_query_tables`, map-only), and the pairing is a broadcast of
-    the (query, table) frame against the encoded corpus — the same
-    corpus×Q pairing `knn_bruteforce` uses, with m byte-code lookups
-    per pair instead of a dim-length fold.
-
-    Scale: corpus side never shuffles until the two-stage top-k's
-    parts×Q×k exchange. The broadcast holds Q·(m·k_codes+dim) doubles
-    — fine to ~10⁶ queries; past that, exhaustive scoring of every
-    (vector, query) pair is the real cost and belongs on the
-    cell-pruned `knn_ivfpq` layout instead.
-
-    Output: identical schema and values to `knn_pq` (equivalence
-    pinned by test).
-    """
-    if cb is None:
-        cb = pq_codebooks(vectors, m, k_codes, id_col, vec_col, dim)
-    enc = pq_encode(vectors, cb, id_col, vec_col)
-    qtab = pq_query_tables(queries, cb, query_vec_col).select(
-        F.col(query_id_col).alias("query_id"), F.col("tab")
-    )
-    dist = F.expr(
-        f"aggregate(sequence(1, {m}), 0D, (acc, j) -> acc +"
-        " element_at(element_at(tab, j), element_at(codes, j) + 1))"
-    )
-    scored = enc.join(F.broadcast(qtab)).select(
-        F.col("query_id"),
-        F.col(id_col).alias("neighbor_id"),
-        dist.alias("dist"),
-    )
-    top = _topk_per_query(
-        scored, k, [F.col("dist").asc(), F.col("neighbor_id").asc()]
-    )
-    return top.select(
-        "query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank"
-    )
-
-
-def knn_ivfpq_residual_batch(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    dim: int = 64,
-) -> DataFrame:
-    """`knn_ivfpq_residual` for UNBOUNDED query sets — completes the
-    batch trio (`knn_pq_batch`, `knn_ivfpq_batch`): residual ADC
-    tables are per-(query, probed cell), and here each probe ROW
-    computes its own table JVM-side from the query's residual against
-    that row's centroid — no driver collect, no Q cap.
-
-    The probe rows carry (query_id, cell, query_vec); the residual
-    ``qvec − centroid[cell]`` is one zip_with against the centroid
-    matrix literal, the table one `pq_query_tables`-shaped fold over
-    it, and the pairing is the plain cell equi-join AQE sizes
-    (broadcast small query sets, shuffle-join huge ones). Distances
-    bit-identical to the literal path (equivalence pinned by test).
-    """
-    d = dim // m
-    centroids = default_centroids(
-        vectors, n_cells, id_col, vec_col
-    ).localCheckpoint(eager=False)
-    cents = _collect_cells(centroids, "cell", "centroid")
-    cent_vecs, cents_arr_sql, cb = _residual_index(
-        vectors, cents, k_codes, m, d, dim, id_col, vec_col
-    )
-    enc = _residual_corpus_enc(
-        vectors, centroids, cents, cents_arr_sql, cb, m, k_codes, d,
-        id_col, vec_col, dim,
-    )
-    probes = _ivf_query_probes(
-        queries, centroids, cents, nprobe, query_id_col, query_vec_col, dim
-    )
-    qres = F.expr(
-        f"zip_with({_bq(query_vec_col)}, element_at({cents_arr_sql}, cell),"
-        " (b, cc) -> cast(b as double) - cc)"
-    )
-    with_res = probes.withColumn("_qres", qres)
-    qtab = pq_query_tables(with_res, cb, "_qres").select(
-        F.col(query_id_col).alias("query_id"), F.col("cell"), F.col("tab")
-    )
-    dist = F.expr(
-        f"aggregate(sequence(1, {m}), 0D, (acc, j) -> acc +"
-        " element_at(element_at(tab, j), element_at(codes, j) + 1))"
-    )
-    scored = enc.join(qtab, "cell").select(
-        F.col("query_id"),
-        F.col(id_col).alias("neighbor_id"),
-        dist.alias("dist"),
-    )
-    top = _topk_per_query(
-        scored, k, [F.col("dist").asc(), F.col("neighbor_id").asc()]
-    )
-    return top.select(
-        "query_id", "neighbor_id", F.round("dist", 6).alias("dist"), "rank"
     )
 
 

@@ -135,3 +135,18 @@ def test_large_k_cell_assignment_is_map_only(spark):
     s = _shape(df)
     assert s["shuffles"] == 0 and s["broadcast"] == 0 and not s["bnlj"]
     assert "ArrowEvalPython" in plan
+
+
+def test_knn_ivfpq_cell_join_broadcasts(spark, sf_dir):
+    """The registry-shape knn_ivfpq carries no broadcast hint on the
+    probe↔corpus cell join: the planner's size estimate must still
+    make it one BroadcastHashJoin on cell, so the only hash Exchanges
+    are the two-stage top-k's two windows."""
+    import __spark_entry__ as entry
+
+    plan = (
+        entry.q_knn_ivfpq(spark, sf_dir)._jdf.queryExecution()
+        .executedPlan().toString()
+    )
+    assert len(re.findall(r"BroadcastHashJoin \[cell#\d+\], \[cell#\d+\]", plan)) == 1
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 2

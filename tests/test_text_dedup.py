@@ -681,6 +681,30 @@ def test_gram_index_incremental_probe(spark, tmp_path):
         gram_index_probe_spans(spark, idx, probe, gram_n=4)
 
 
+def test_index_sidecar_first_append_leaves_only_the_json(spark, tmp_path):
+    """The params sidecar is written to a temp file and renamed into
+    place: after a first append the index directory holds the sidecar
+    JSON with the append's parameters, next to Spark's own output,
+    and no temp file."""
+    import json
+    import os
+
+    from embeddinghub_spark.functions.dedup import gram_index_append
+
+    idx = str(tmp_path / "gram_idx")
+    batch = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta")], ["doc_id", "text"]
+    )
+    gram_index_append(spark, idx, batch, gram_n=3)
+    own = sorted(
+        f for f in os.listdir(idx)
+        if not f.startswith("bucket=") and "_SUCCESS" not in f
+    )
+    assert own == ["_gram_params.json"]
+    with open(os.path.join(idx, "_gram_params.json")) as f:
+        assert json.load(f) == {"gram_n": 3, "n_buckets": 16}
+
+
 def test_source_divergence_detects_outlier(spark):
     """A group whose vocabulary diverges from the corpus scores
     strictly higher KL than corpus-typical groups; KL >= 0 up to the

@@ -257,13 +257,9 @@ def test_ivfpq_residual_self_match_and_recall(spark, sf_dir):
 
 def test_pq_family_empty_and_guarded_queries(spark):
     """ADVICE round 3: empty query sets must return an empty typed
-    frame (not an element_at(...,0) error from sequence(1,0)); string
-    ids with quotes must not break the generated SQL; and past
-    MAX_PQ_QUERIES the driver-literal ADC path must refuse."""
-    import pytest
-
+    frame (not an element_at(...,0) error from sequence(1,0)), and
+    string ids with quotes must not break the generated SQL."""
     from embeddinghub_spark.functions.vector import (
-        MAX_PQ_QUERIES,
         knn_ivfpq,
         knn_ivfpq_residual,
         knn_pq,
@@ -295,13 +291,76 @@ def test_pq_family_empty_and_guarded_queries(spark):
     out = knn_pq(vecs, quoted, 1, m=2, k_codes=8, dim=8).collect()
     assert out[0]["query_id"] == "o'brien" and out[0]["neighbor_id"] == 5
 
-    # past the cap: explicit refusal, not a driver OOM / parser blowup
-    over = spark.createDataFrame(
-        [(i, [0.0] * 8) for i in range(MAX_PQ_QUERIES + 1)],
-        "query_id bigint, query_vec array<double>",
+
+def test_ivfpq_codebook_smaller_than_k_codes(spark):
+    """A corpus with fewer than k_codes vectors yields codebooks with
+    fewer codewords; the encoders must range over the codes the
+    codebook has (not 0..k_codes-1, whose padded null distances sort
+    first and index past the table). Every codeword here is a corpus
+    vector's own slice, so each query's rank-1 neighbor is itself at
+    ADC distance 0."""
+    from embeddinghub_spark.functions.vector import (
+        knn_ivfpq,
+        knn_ivfpq_residual,
+        knn_pq,
     )
-    with pytest.raises(ValueError, match="MAX_PQ_QUERIES"):
-        knn_pq(vecs, over, 1, m=2, k_codes=8, dim=8)
+
+    vecs = spark.createDataFrame(
+        [(i, [float((5 * i + 3 * j) % 11) for j in range(8)]) for i in range(8)],
+        ["vec_id", "embedding"],
+    )
+    qs = vecs.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    for fn, kw in (
+        (knn_pq, {}),
+        (knn_ivfpq, dict(n_cells=2, nprobe=2)),
+        (knn_ivfpq_residual, dict(n_cells=2, nprobe=2)),
+    ):
+        rows = fn(vecs, qs, 1, m=2, k_codes=16, dim=8, **kw).collect()
+        assert sorted(
+            (r["query_id"], r["neighbor_id"], r["dist"]) for r in rows
+        ) == [(i, i, 0.0) for i in range(8)], fn.__name__
+
+
+@pytest.mark.parametrize(
+    "case", ["residual_m_not_dividing_dim", "pq_cb_vs_m", "ivfpq_cb_vs_m"]
+)
+def test_pq_family_misuse_raises_before_any_job(spark, case):
+    """m that does not divide dim, or a supplied codebook whose
+    subspace count differs from m, raises a ValueError naming dim, m
+    and the codebook shape, before any Spark job runs."""
+    from embeddinghub_spark.functions.vector import (
+        knn_ivfpq,
+        knn_ivfpq_residual,
+        knn_pq,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(8)]) for i in range(16)],
+        ["vec_id", "embedding"],
+    )
+    qs = vecs.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    # valid codebooks for m=4 (4 subspaces of 2-long codewords)
+    cb4 = [[[float(c), float(c)] for c in range(4)] for _ in range(4)]
+    fn, kw, shape = {
+        "residual_m_not_dividing_dim": (knn_ivfpq_residual, dict(m=3), "None"),
+        "pq_cb_vs_m": (knn_pq, dict(m=2, cb=cb4), r"\(4, 4, 2\)"),
+        "ivfpq_cb_vs_m": (knn_ivfpq, dict(m=2, cb=cb4), r"\(4, 4, 2\)"),
+    }[case]
+    sc = spark.sparkContext
+    group = f"pq_misuse_{case}"
+    sc.setJobGroup(group, case)
+    try:
+        with pytest.raises(
+            ValueError, match=rf"dim=8, m={kw['m']}, cb shape={shape}"
+        ):
+            fn(vecs, qs, 1, dim=8, **kw)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_refined_pq_codebooks_improve_recall(spark, sf_dir):
@@ -381,84 +440,36 @@ def test_knn_join_invariants(spark, sf_dir):
         assert c <= exact[src] + 1e-9, f"{src}: approx {c} > exact {exact[src]}"
 
 
-def test_knn_pq_batch_equals_literal_path(spark, sf_dir):
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("name", ["knn_pq", "knn_ivfpq", "knn_ivfpq_residual"])
+def test_pq_family_matches_oracle(spark, sf_dir, name):
+    """Each PQ registry entry equals its DuckDB oracle twin row for
+    row (bit-identical ADC distances, same ranking), and the op takes
+    a query set of more than 1024 ids without raising: 2 rows each."""
+    import duckdb
 
-    from embeddinghub_spark.functions.vector import knn_pq, knn_pq_batch
+    import __spark_entry__ as entry
+    from embeddinghub_spark.functions import vector
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'"
+    )
+    want = sorted(tuple(r) for r in con.execute(entry.oracle_sql()[name]).fetchall())
+    got = sorted(
+        tuple(r) for r in getattr(entry, f"q_{name}")(spark, sf_dir).collect()
+    )
+    assert got and got == want
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    lit_rows = sorted(
-        tuple(r) for r in knn_pq(emb, qs, 5, dim=64).collect()
-    )
-    batch_rows = sorted(
-        tuple(r) for r in knn_pq_batch(emb, qs, 5, dim=64).collect()
-    )
-    assert lit_rows == batch_rows  # bit-identical dist, same ranking
-
-    # the batch path has no Q cap: replicate the embeddings to >1024
-    # distinct query ids (past MAX_PQ_QUERIES)
     reps = spark.range(5).select(F.col("id").alias("_rep"))
     big_q = emb.crossJoin(reps).select(
         (F.col("vec_id") * 10 + F.col("_rep") + 100000).alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    out = knn_pq_batch(emb, big_q, 2, dim=64)
-    assert out.count() == big_q.count() * 2
-    import pytest
-
-    with pytest.raises(ValueError, match="queries"):
-        knn_pq(emb, big_q, 2, dim=64)
-
-
-def test_knn_ivfpq_batch_equals_literal_path(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from embeddinghub_spark.functions.vector import knn_ivfpq, knn_ivfpq_batch
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    lit_rows = sorted(tuple(r) for r in knn_ivfpq(emb, qs, 5, dim=64).collect())
-    batch_rows = sorted(
-        tuple(r) for r in knn_ivfpq_batch(emb, qs, 5, dim=64).collect()
-    )
-    assert lit_rows == batch_rows
-
-    # no Q cap: replicate past MAX_PQ_QUERIES; every query gets results
-    reps = spark.range(5).select(F.col("id").alias("_rep"))
-    big_q = emb.crossJoin(reps).select(
-        (F.col("vec_id") * 10 + F.col("_rep") + 200000).alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    out = knn_ivfpq_batch(emb, big_q, 2, dim=64)
     n_q = big_q.count()
-    got = out.groupBy().count().collect()[0][0]
-    assert got == n_q * 2
-
-
-def test_knn_ivfpq_residual_batch_equals_literal_path(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from embeddinghub_spark.functions.vector import (
-        knn_ivfpq_residual,
-        knn_ivfpq_residual_batch,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    lit_rows = sorted(
-        tuple(r) for r in knn_ivfpq_residual(emb, qs, 5, dim=64).collect()
-    )
-    batch_rows = sorted(
-        tuple(r) for r in knn_ivfpq_residual_batch(emb, qs, 5, dim=64).collect()
-    )
-    assert lit_rows == batch_rows
+    assert n_q > 1024
+    out = getattr(vector, name)(emb, big_q, 2, dim=64)
+    assert out.count() == 2 * n_q
 
 
 def test_assign_ivf_cells_fallback_equals_inline(spark, sf_dir):
