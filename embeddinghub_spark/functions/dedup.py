@@ -971,41 +971,24 @@ def embedding_near_duplicates(
                 RuntimeWarning,
                 stacklevel=2,
             )
-    if n_planes % bands != 0:
-        raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
-    bits = n_planes // bands
-    mask = (1 << bits) - 1
-    from embeddinghub_spark.functions.vector import ensure_parallelism
+    # 16 plane dot-products + norm per vector — checkpoint so the
+    # self-join doesn't evaluate them twice
+    banded = _emb_band_rows(
+        df, dim, id_col, vec_col, n_planes, bands, seed
+    ).localCheckpoint(eager=False)
+    return _emb_band_pairs(banded, dim, id_col, vec_col, threshold)
 
-    b = with_lsh_bucket(ensure_parallelism(df), vec_col, dim, n_planes, seed)
-    bandstructs = F.array(*[
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftright(F.col("lsh_bucket"), i * bits).bitwiseAND(F.lit(mask)).alias("band_val"),
-        )
-        for i in range(bands)
-    ])
-    from embeddinghub_spark.functions.vector import dot, norm
 
-    banded = (
-        b.withColumn("bv", F.explode(bandstructs))
-        .select(
-            F.col(id_col), F.col(vec_col),
-            F.col("bv.band").alias("band"), F.col("bv.band_val").alias("band_val"),
-            # norm ONCE PER ROW here, not per candidate pair: cheaper
-            # (norms were recomputed for every pair a row appears in)
-            # AND it keeps the join's generated method under janino's
-            # 64 KB limit — inlining dot + two unrolled norms into the
-            # pair projection overflowed it, silently dropping the
-            # whole join stage out of codegen. The pair expression is
-            # now just the unrolled dot / (nx · ny) — same doubles,
-            # same oracle hash (sqrt then multiply, either order).
-            norm(vec_col, dim).alias("_norm"),
-        )
-        # 16 plane dot-products + norm per vector — checkpoint so the
-        # self-join doesn't evaluate them twice
-        .localCheckpoint(eager=False)
-    )
+def _emb_band_pairs(
+    banded: DataFrame, dim: int, id_col: str, vec_col: str, threshold: float
+) -> DataFrame:
+    """Verified near-dup pairs ``(id_a < id_b, cosine)`` over
+    ``_emb_band_rows`` output: a shared (band, band_val) makes a
+    candidate, exact cosine (rounded to 6) ≥ ``threshold`` keeps it.
+    The one pair join behind ``embedding_near_duplicates`` and the
+    within-batch step of embedding dedup-on-ingest."""
+    from embeddinghub_spark.functions.vector import dot
+
     x, y = banded.alias("x"), banded.alias("y")
     return (
         x.join(
@@ -1018,7 +1001,10 @@ def embedding_near_duplicates(
             F.col(f"x.{id_col}").alias("id_a"),
             F.col(f"y.{id_col}").alias("id_b"),
             F.round(
-                # qualified names unroll too (dim-known codegen path)
+                # qualified names unroll too (dim-known codegen path);
+                # the norms come precomputed per row (_norm), which
+                # keeps the join's generated method under janino's
+                # 64 KB limit
                 dot(f"x.{vec_col}", f"y.{vec_col}", dim)
                 / (F.col("x._norm") * F.col("y._norm")),
                 6,
@@ -1094,10 +1080,11 @@ def _emb_band_rows(
     bands: int,
     seed: int,
 ) -> DataFrame:
-    """``(id, band, band_val, vec, _norm)`` band rows — the exact
-    banding recipe of ``embedding_near_duplicates`` (same planes, same
-    seed, same band split), factored so the on-disk index and the
-    one-shot batch op can never disagree on a bucket."""
+    """``(id, band, band_val, vec, _norm)`` band rows — the one
+    banding recipe (planes, seed, band split) behind
+    ``embedding_near_duplicates`` and the on-disk index, so the
+    index and the one-shot batch op can never disagree on a bucket.
+    The norm is computed once per row, not per candidate pair."""
     from embeddinghub_spark.functions.vector import ensure_parallelism, norm
 
     if n_planes % bands != 0:

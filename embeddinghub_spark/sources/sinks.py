@@ -7,6 +7,7 @@ Reference: timestamped output dirs ``offline_store_spark_runner.py:
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 import shutil
@@ -81,9 +82,7 @@ def _read_lineage_parent(version_dir: str) -> str | None:
 
 
 def _all_version_dirs(target_dir: str) -> list[str]:
-    import glob as _glob
-
-    return [p for p in _glob.glob(target_dir + ".v-*") if os.path.isdir(p)]
+    return [p for p in glob.glob(target_dir + ".v-*") if os.path.isdir(p)]
 
 
 def list_versions(target_dir: str) -> list[str]:
@@ -125,6 +124,25 @@ def read_version(spark, target_dir: str, steps_back: int = 0) -> DataFrame:
     return spark.read.parquet(vs[-1 - steps_back])
 
 
+def _flip_symlink(target_dir: str, version_dir: str) -> None:
+    """Repoint the ``target_dir`` symlink at ``version_dir`` atomically:
+    a temp link plus one ``os.replace`` — readers see old XOR new. Then
+    sweep stale ``.link-*`` temp links (a crash between the symlink
+    and the replace leaves one, and nothing else would ever remove
+    it). The one flip behind ``atomic_update``, the bucketed snapshot
+    commit and the streaming state stores; each keeps its own
+    retention policy for the superseded versions."""
+    tmp_link = target_dir + ".link-" + uuid.uuid4().hex[:8]
+    os.symlink(version_dir, tmp_link)
+    os.replace(tmp_link, target_dir)
+    for stale in glob.glob(glob.escape(target_dir) + ".link-*"):
+        if os.path.islink(stale):
+            try:
+                os.unlink(stale)
+            except OSError:
+                pass
+
+
 def atomic_update(df: DataFrame, target_dir: str, keep_versions: int = 2) -> str:
     """C18: refresh a materialized output atomically.
 
@@ -158,9 +176,7 @@ def atomic_update(df: DataFrame, target_dir: str, keep_versions: int = 2) -> str
     # list_versions/read_version never surface it and the next
     # successful update garbage-collects it below.
     _write_lineage(version_dir, parent)
-    tmp_link = target_dir + ".link-" + uuid.uuid4().hex[:8]
-    os.symlink(version_dir, tmp_link)
-    os.replace(tmp_link, target_dir)  # atomic: readers see old XOR new
+    _flip_symlink(target_dir, version_dir)
     # prune to the newest keep_versions COMMITTED dirs (the lineage
     # chain from the symlink). The default (2: new + just-superseded)
     # is the reader grace window; larger values turn the retained tail

@@ -433,6 +433,8 @@ def _commit_version(
     import shutil
     import uuid
 
+    from embeddinghub_spark.sources.sinks import _flip_symlink
+
     new_version = target_dir + ".v-" + uuid.uuid4().hex[:8]
     os.makedirs(new_version)
     with open(os.path.join(new_version, _BUCKET_META), "w") as fh:
@@ -440,9 +442,7 @@ def _commit_version(
     for name, path in links.items():
         os.symlink(os.path.realpath(path), os.path.join(new_version, name))
 
-    tmp_link = target_dir + ".link-" + uuid.uuid4().hex[:8]
-    os.symlink(new_version, tmp_link)
-    os.replace(tmp_link, target_dir)  # atomic: readers see old XOR new
+    _flip_symlink(target_dir, new_version)
 
     keep = {os.path.realpath(p) for p in (new_version, prev_version) if p}
     referenced: set[str] = set()

@@ -1,12 +1,28 @@
-"""Shared atomic symlink-flip commit for on-disk streaming state.
+"""The one micro-batch core behind every ``streaming/`` entry point.
 
-Every *_dir streaming state store (auc_monitor, cms_by, distinct_by,
-psi_monitor, cdc_ingest) commits a freshly-written version directory
-the same way: write ``<state_dir>.v-<nonce>``, flip the ``state_dir``
-symlink atomically, retire the superseded version. One copy of that
-sequence lives here so the crash-recovery rules — the legacy
-plain-dir migration and the orphan sweep — can never drift between
-stores (ADVICE r8: the sweep was first fixed in one copy only).
+Each streaming module supplies only its per-batch math; the protocol
+around it lives here once, so its rules cannot drift between stores:
+
+- ``_start_stream``: the foreachBatch writer tail every stream ends in.
+- ``_last_committed_batch`` / ``_record_committed_batch``: the
+  committed-batch watermark, a stamp ``{"committed_batch",
+  "checkpoint"}``. Batch ids number from 0 per checkpoint, so a
+  checkpointless stream applies every batch and writes no stamp
+  (nothing replays it); a checkpointed stream skips only batches at or
+  below a stamp written under its OWN checkpoint; a direct call with an
+  explicit ``batch_id``, and a stamp without a ``checkpoint`` key,
+  compare ids only. (The Delta and Iceberg sinks keep the watermark in
+  the table commit instead.)
+- ``_merge_commit``: the algebraic stores (auc, cms, distinct, psi) —
+  skip a committed batch, union the prior state, ``groupBy(keys)``
+  with one aggregate, write a one-file version, commit.
+- ``commit_version_dir``: the versioned commit every ``*_dir`` store
+  (and ``cdc_ingest``) uses. The stamp lands in the version dir BEFORE
+  the flip, so a version is never observable without its watermark; a
+  legacy plain-dir snapshot is migrated; orphan ``.v-*``/``.legacy-*``
+  siblings are swept. The symlink flip itself, with its stale
+  ``.link-*`` sweep, is ``sources.sinks._flip_symlink`` — shared with
+  ``atomic_update`` and the bucketed snapshot commit.
 """
 
 from __future__ import annotations
@@ -15,6 +31,119 @@ import json
 import os
 import shutil
 import uuid
+
+from embeddinghub_spark.sources.sinks import _flip_symlink
+
+_STAMP = "_ingest_commit.json"
+
+
+def _start_stream(
+    stream_df,
+    process_batch,
+    checkpoint_dir: str | None = None,
+    trigger_available_now: bool = True,
+):
+    """Start ``process_batch(batch_df, batch_id)`` as a foreachBatch
+    stream and return the ``StreamingQuery``."""
+    writer = stream_df.writeStream.foreachBatch(process_batch)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _last_committed_batch(
+    stamp_dir: str, checkpoint_dir: str | None, name: str = _STAMP
+) -> int:
+    """The batch id stamped in ``stamp_dir`` (symlinks resolved), or -1
+    when there is none or it belongs to another stream's checkpoint.
+    ``checkpoint_dir=None`` is a direct call: ids only."""
+    path = os.path.join(os.path.realpath(stamp_dir), name)
+    if not os.path.isfile(path):
+        return -1
+    with open(path) as fh:
+        meta = json.load(fh)
+    owner = meta.get("checkpoint")
+    if owner and checkpoint_dir and owner != os.path.abspath(checkpoint_dir):
+        return -1
+    return int(meta["committed_batch"])
+
+
+def _record_committed_batch(
+    stamp_dir: str,
+    batch_id: int,
+    checkpoint_dir: str | None,
+    name: str = _STAMP,
+) -> None:
+    """Atomically stamp ``batch_id`` as fully applied (tmp + rename),
+    under ``checkpoint_dir`` when there is one."""
+    os.makedirs(stamp_dir, exist_ok=True)
+    meta: dict = {"committed_batch": int(batch_id)}
+    if checkpoint_dir:
+        meta["checkpoint"] = os.path.abspath(checkpoint_dir)
+    path = os.path.join(stamp_dir, name)
+    with open(path + ".tmp", "w") as fh:
+        json.dump(meta, fh)
+    os.replace(path + ".tmp", path)
+
+
+def _stream_batch_id(batch_id: int, checkpoint_dir: str | None) -> int | None:
+    """The id a stream guards and stamps its commit with: None without
+    a checkpoint — nothing replays, so every batch applies unstamped."""
+    return batch_id if checkpoint_dir else None
+
+
+def _is_committed(
+    state_dir: str, batch_id: int | None, checkpoint_dir: str | None, name: str
+) -> bool:
+    return batch_id is not None and batch_id <= _last_committed_batch(
+        state_dir, checkpoint_dir, name
+    )
+
+
+def _commit_frame(
+    state_dir: str,
+    df,
+    batch_id: int | None,
+    checkpoint_dir: str | None,
+    name: str,
+) -> None:
+    """Write ``df`` as the next version of ``state_dir``, stamp it
+    (unless ``batch_id`` is None) and flip it live."""
+    phys = new_version_dir(state_dir)
+    df.write.parquet(phys)
+    if batch_id is not None:
+        _record_committed_batch(phys, batch_id, checkpoint_dir, name)
+    commit_version_dir(state_dir, phys)
+
+
+def _merge_commit(
+    spark,
+    state_dir: str,
+    batch,
+    keys: list[str],
+    agg,
+    name: str = _STAMP,
+    batch_id: int | None = None,
+    checkpoint_dir: str | None = None,
+) -> bool:
+    """Fold one batch's partial state into ``state_dir``: every
+    non-key column merges with ``agg`` (``F.sum`` for counters,
+    ``F.max`` for HLL registers). Returns False — and writes nothing —
+    when ``batch_id`` is already committed; ``batch_id=None`` merges
+    without a watermark."""
+    if _is_committed(state_dir, batch_id, checkpoint_dir, name):
+        return False
+    merged = batch
+    if os.path.islink(state_dir) or os.path.isdir(state_dir):
+        prior = spark.read.parquet(state_dir).select(*batch.columns)
+        merged = merged.unionByName(prior)
+    merged = merged.groupBy(*keys).agg(
+        *[agg(c).alias(c) for c in batch.columns if c not in keys]
+    )
+    _commit_frame(state_dir, merged.coalesce(1), batch_id, checkpoint_dir, name)
+    return True
 
 
 def new_version_dir(state_dir: str) -> str:
@@ -34,8 +163,8 @@ def commit_version_dir(
     - Optionally stamps ``{meta_name: {"committed_batch": batch_id}}``
       inside ``phys`` FIRST, so a version is never observable without
       its watermark (the transactional exactly-once gate).
-    - Symlink-flips via a temp link + ``os.replace`` — readers see the
-      old version XOR the new one, never a partial state.
+    - Flips the ``state_dir`` symlink (``_flip_symlink``) — readers see
+      the old version XOR the new one, never a partial state.
     - A legacy PLAIN-dir snapshot (seeded outside the symlink
       protocol) is moved aside before the flip (``os.replace`` cannot
       replace a real directory with a symlink) and then retired.
@@ -44,36 +173,21 @@ def commit_version_dir(
       unboundedly across restarts.
     """
     if meta_name is not None and batch_id is not None:
-        with open(os.path.join(phys, meta_name), "w") as fh:
-            json.dump({"committed_batch": int(batch_id)}, fh)
-    tmp = state_dir + ".link-" + uuid.uuid4().hex[:8]
-    os.symlink(phys, tmp)
+        _record_committed_batch(phys, batch_id, None, meta_name)
     prev = os.path.realpath(state_dir) if os.path.islink(state_dir) else None
     if prev is None and os.path.isdir(state_dir):
         prev = state_dir + ".legacy-" + uuid.uuid4().hex[:8]
         os.rename(state_dir, prev)
-    os.replace(tmp, state_dir)
+    _flip_symlink(state_dir, phys)
     if prev and os.path.isdir(prev):
         shutil.rmtree(prev, ignore_errors=True)
     live = os.path.realpath(state_dir)
     stem = os.path.basename(state_dir)
     parent = os.path.dirname(os.path.abspath(state_dir))
     for name in os.listdir(parent):
-        cand = os.path.join(parent, name)
-        if name.startswith(stem + ".v-"):
-            # crash between version-write and flip
-            if os.path.realpath(cand) != live:
-                shutil.rmtree(cand, ignore_errors=True)
-        elif name.startswith(stem + ".link-"):
-            # crash between temp-symlink creation and os.replace
-            # (ADVICE r9: these were never swept and leaked forever)
-            if os.path.islink(cand):
-                try:
-                    os.unlink(cand)
-                except OSError:
-                    pass
-        elif name.startswith(stem + ".legacy-"):
-            # crash after moving a legacy plain dir aside but before
-            # retiring it (ADVICE r9)
+        # .v-*: crash between version-write and flip; .legacy-*: crash
+        # after moving a legacy plain dir aside but before retiring it
+        if name.startswith((stem + ".v-", stem + ".legacy-")):
+            cand = os.path.join(parent, name)
             if os.path.realpath(cand) != live:
                 shutil.rmtree(cand, ignore_errors=True)

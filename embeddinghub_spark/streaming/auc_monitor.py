@@ -23,14 +23,16 @@ the whole input (pinned by test, including a simulated replay).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from embeddinghub_spark.functions.metrics import _rank_sum_auc
+from embeddinghub_spark.streaming._state import (
+    _merge_commit,
+    _start_stream,
+    _stream_batch_id,
+)
 
 _META = "_auc_meta.json"
 
@@ -58,15 +60,6 @@ def _batch_score_counts(
     )
 
 
-def _committed_batch(state_dir: str) -> int:
-    real = os.path.realpath(state_dir)
-    path = os.path.join(real, _META)
-    if os.path.isfile(path):
-        with open(path) as fh:
-            return int(json.load(fh)["committed_batch"])
-    return -1
-
-
 def merge_score_counts_dir(
     spark: SparkSession,
     state_dir: str,
@@ -77,29 +70,9 @@ def merge_score_counts_dir(
     (returns False) when ``batch_id`` is already committed. Atomic
     symlink-flip commit of (counts, watermark) together — the
     ``cms_by.merge_counters_dir`` discipline on the AUC state."""
-
-    exists = os.path.islink(state_dir) or os.path.isdir(state_dir)
-    if exists and batch_id <= _committed_batch(state_dir):
-        return False
-    layers = [batch_counts]
-    if exists:
-        prior = spark.read.parquet(state_dir)
-        layers.append(prior.select("s", "n", "p"))
-    merged = layers[0]
-    for other in layers[1:]:
-        merged = merged.unionByName(other)
-    merged = merged.groupBy("s").agg(
-        F.sum("n").alias("n"), F.sum("p").alias("p")
+    return _merge_commit(
+        spark, state_dir, batch_counts, ["s"], F.sum, _META, batch_id
     )
-    from embeddinghub_spark.streaming._state import (
-        commit_version_dir,
-        new_version_dir,
-    )
-
-    phys = new_version_dir(state_dir)
-    merged.coalesce(1).write.parquet(phys)
-    commit_version_dir(state_dir, phys, batch_id, _META)
-    return True
 
 
 def read_auc(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -133,13 +106,11 @@ def streaming_auc(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         counts = _batch_score_counts(batch_df, score_col, label_col, quantize)
-        merge_score_counts_dir(
-            batch_df.sparkSession, state_dir, counts, batch_id
+        _merge_commit(
+            batch_df.sparkSession, state_dir, counts, ["s"], F.sum, _META,
+            _stream_batch_id(batch_id, checkpoint_dir), checkpoint_dir,
         )
 
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, trigger_available_now
+    )

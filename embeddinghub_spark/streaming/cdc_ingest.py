@@ -29,23 +29,48 @@ this adds the delete-bearing changelog form.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from embeddinghub_spark.streaming._state import (
+    _commit_frame,
+    _is_committed,
+    _start_stream,
+    _stream_batch_id,
+)
+
 _META = "_cdc_meta.json"
 
 
-def _committed_batch(state_dir: str) -> int:
-    path = os.path.join(os.path.realpath(state_dir), _META)
-    if os.path.isfile(path):
-        with open(path) as fh:
-            return int(json.load(fh)["committed_batch"])
-    return -1
+def _apply_changelog(
+    spark: SparkSession,
+    state_dir: str,
+    batch: DataFrame,
+    key_cols: list[str],
+    snapshot_cols: list[str],
+    seq_col: str,
+    op_col: str,
+    delete_op: str,
+    batch_id: int | None,
+    checkpoint_dir: str | None,
+) -> bool:
+    from embeddinghub_spark.operators.cdc import cdc_apply
+
+    if _is_committed(state_dir, batch_id, checkpoint_dir, _META):
+        return False
+    if os.path.islink(state_dir) or os.path.isdir(state_dir):
+        snapshot = spark.read.parquet(state_dir).select(*snapshot_cols)
+    else:
+        snapshot = (
+            batch.select(*snapshot_cols).filter("1=0")  # empty, typed
+        )
+    new_snap = cdc_apply(
+        snapshot, batch, key_cols, seq_col, op_col, delete_op
+    )
+    _commit_frame(state_dir, new_snap, batch_id, checkpoint_dir, _META)
+    return True
 
 
 def apply_changelog_batch(
@@ -65,29 +90,10 @@ def apply_changelog_batch(
     for a latest-value store that must absorb DELETES this is the
     floor without an LSM (which ``merge_materialization_bucketed_dir``
     provides for the append-only case)."""
-    from embeddinghub_spark.operators.cdc import cdc_apply
-
-    exists = os.path.islink(state_dir) or os.path.isdir(state_dir)
-    if exists and batch_id <= _committed_batch(state_dir):
-        return False
-    if exists:
-        snapshot = spark.read.parquet(state_dir).select(*snapshot_cols)
-    else:
-        snapshot = (
-            batch.select(*snapshot_cols).filter("1=0")  # empty, typed
-        )
-    new_snap = cdc_apply(
-        snapshot, batch, key_cols, seq_col, op_col, delete_op
+    return _apply_changelog(
+        spark, state_dir, batch, key_cols, snapshot_cols, seq_col, op_col,
+        delete_op, batch_id, None,
     )
-    from embeddinghub_spark.streaming._state import (
-        commit_version_dir,
-        new_version_dir,
-    )
-
-    phys = new_version_dir(state_dir)
-    new_snap.write.parquet(phys)
-    commit_version_dir(state_dir, phys, batch_id, _META)
-    return True
 
 
 def streaming_cdc_apply(
@@ -109,21 +115,12 @@ def streaming_cdc_apply(
     ]
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        apply_changelog_batch(
-            batch_df.sparkSession,
-            state_dir,
-            batch_df,
-            batch_id,
-            key_cols,
-            snapshot_cols,
-            seq_col,
-            op_col,
-            delete_op,
+        _apply_changelog(
+            batch_df.sparkSession, state_dir, batch_df, key_cols,
+            snapshot_cols, seq_col, op_col, delete_op,
+            _stream_batch_id(batch_id, checkpoint_dir), checkpoint_dir,
         )
 
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, trigger_available_now
+    )

@@ -29,12 +29,15 @@ test, including a simulated replay).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from embeddinghub_spark.streaming._state import (
+    _merge_commit,
+    _start_stream,
+    _stream_batch_id,
+)
 
 _META = "_cms_meta.json"
 
@@ -60,15 +63,6 @@ def _batch_counters(df: DataFrame, text_col: str, depth: int, width: int) -> Dat
     )
 
 
-def _committed_batch(state_dir: str) -> int:
-    real = os.path.realpath(state_dir)
-    path = os.path.join(real, _META)
-    if os.path.isfile(path):
-        with open(path) as fh:
-            return int(json.load(fh)["committed_batch"])
-    return -1
-
-
 def merge_counters_dir(
     spark: SparkSession,
     state_dir: str,
@@ -79,27 +73,10 @@ def merge_counters_dir(
     False) if ``batch_id`` is already committed — the exactly-once
     gate that idempotent max-merge state does not need. Atomic
     symlink-flip commit of (counters, watermark) together."""
-
-    exists = os.path.islink(state_dir) or os.path.isdir(state_dir)
-    if exists and batch_id <= _committed_batch(state_dir):
-        return False
-    layers = [batch_counters]
-    if exists:
-        prior = spark.read.parquet(state_dir)
-        layers.append(prior.select("row", "bucket", "c"))
-    merged = layers[0]
-    for other in layers[1:]:
-        merged = merged.unionByName(other)
-    merged = merged.groupBy("row", "bucket").agg(F.sum("c").alias("c"))
-    from embeddinghub_spark.streaming._state import (
-        commit_version_dir,
-        new_version_dir,
+    return _merge_commit(
+        spark, state_dir, batch_counters, ["row", "bucket"], F.sum, _META,
+        batch_id,
     )
-
-    phys = new_version_dir(state_dir)
-    merged.coalesce(1).write.parquet(phys)
-    commit_version_dir(state_dir, phys, batch_id, _META)
-    return True
 
 
 def read_cms_estimates(
@@ -149,11 +126,12 @@ def streaming_cms(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         counters = _batch_counters(batch_df, text_col, depth, width)
-        merge_counters_dir(batch_df.sparkSession, state_dir, counters, batch_id)
+        _merge_commit(
+            batch_df.sparkSession, state_dir, counters, ["row", "bucket"],
+            F.sum, _META, _stream_batch_id(batch_id, checkpoint_dir),
+            checkpoint_dir,
+        )
 
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, trigger_available_now
+    )

@@ -50,73 +50,77 @@ the dedup coverage brief; dedup rule matches
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-# Replay guard (ADVICE r9): foreachBatch may re-deliver a micro-batch
-# after a crash between the batch's writes and the checkpoint commit.
-# Without a guard a replayed batch re-appends its output and band rows,
-# and the replayed probe then finds the batch's OWN vectors already in
-# the index — rejecting rows a smaller-id rule should keep. Two layers
-# close this, mirroring `_state.py`'s committed_batch convention:
-#
-# 1. Both streaming twins stamp the last FULLY-applied batch_id in a
-#    meta file inside the index dir (leading underscore → invisible to
-#    parquet directory listing) and skip batches at or below the stamp
-#    — the whole-batch-replay case (crash after the batch's writes but
-#    before the streaming checkpoint commit) becomes a no-op.
-# 2. The probe step excludes candidates whose index_id is in the
-#    current batch, so even a TORN replay (crash between the index
-#    append and the stamp) recomputes the same reject set instead of
-#    self-rejecting. Under normal id-monotone ingest the exclusion
-#    matches nothing (a batch's ids are not yet indexed), so certified
-#    behavior is unchanged.
-#
-# Remaining torn-batch artifact, documented not hidden: the accepted-
-# output append is not transactional with the index append, so a crash
-# between them leaves the batch's accepted rows duplicated in out_dir
-# after replay (same rows — the reject set is deterministic). Readers
-# needing exactly-once must dedupe on id; the streaming checkpoint
-# makes this window one batch wide.
-_INGEST_COMMIT_FILE = "_ingest_commit.json"
+from embeddinghub_spark.streaming._state import (
+    _last_committed_batch,
+    _record_committed_batch,
+    _start_stream,
+)
 
 
-def _last_committed_batch(index_dir: str, checkpoint_dir: str) -> int:
-    """Last batch_id fully applied to (out_dir, index_dir) BY THE
-    STREAM identified by ``checkpoint_dir``; -1 if none. batch_ids are
-    a per-checkpoint sequence, so a stamp left by a different stream
-    (fresh checkpoint against an existing index — ids restart at 0)
-    must not suppress the new stream's batches."""
-    path = os.path.join(index_dir, _INGEST_COMMIT_FILE)
-    if not os.path.isfile(path):
-        return -1
-    with open(path) as fh:
-        meta = json.load(fh)
-    if meta.get("checkpoint") != os.path.abspath(checkpoint_dir):
-        return -1
-    return int(meta["committed_batch"])
+def _ingest_batch(batch, index_dir, out_dir, id_col, probe, pairs, append):
+    """The dedup-on-ingest steps for one batch; each family supplies
+    ``probe()`` (index hits as (probe_id, index_id)), ``pairs()``
+    (within-batch (id_a < id_b) pairs) and ``append()`` (all batch
+    rows into the index).
 
-
-def _record_committed_batch(
-    index_dir: str, batch_id: int, checkpoint_dir: str
-) -> None:
-    """Atomically stamp ``batch_id`` as fully applied (tmp + rename)."""
-    os.makedirs(index_dir, exist_ok=True)
-    path = os.path.join(index_dir, _INGEST_COMMIT_FILE)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "committed_batch": int(batch_id),
-                "checkpoint": os.path.abspath(checkpoint_dir),
-            },
-            fh,
+    Torn-replay guard: foreachBatch may re-deliver a batch whose band
+    rows a crashed attempt already appended. Index hits on the batch's
+    OWN ids are dropped (in-batch pairs are the smaller-id rule's
+    job), so the replay recomputes the same reject set instead of
+    self-rejecting; under normal id-monotone ingest this matches
+    nothing. What remains, documented not hidden: the accepted-output
+    append is not transactional with the index append, so a crash
+    between them leaves the batch's accepted rows duplicated in
+    ``out_dir`` after replay (same rows) — readers needing exactly-once
+    dedupe on id; the streaming checkpoint keeps this window one
+    batch wide."""
+    rejected = None
+    # 1. probe vs the already-ingested corpus (index may not exist yet)
+    if os.path.isdir(index_dir) and any(
+        name.startswith("bucket=") for name in os.listdir(index_dir)
+    ):
+        hits = probe().join(
+            batch.select(F.col(id_col).alias("index_id")),
+            "index_id",
+            "left_anti",
         )
-    os.replace(tmp, path)
+        rejected = hits.select(F.col("probe_id").alias(id_col)).distinct()
+    # 2. within-batch pairs, smaller id wins
+    in_batch = pairs().select(F.col("id_b").alias(id_col)).distinct()
+    rejected = in_batch if rejected is None else rejected.union(in_batch).distinct()
+    # 3. accepted rows append to the output
+    batch.join(rejected, id_col, "left_anti").write.mode("append").parquet(out_dir)
+    # 4. ALL batch docs enter the index (reject rule = candidate
+    # relation only — see module docstring)
+    append()
+
+
+def _start_ingest(
+    stream_df, index_dir, checkpoint_dir, trigger_available_now, ingest
+) -> StreamingQuery:
+    """Both ingest streams: ``ingest(batch_df)`` per micro-batch behind
+    the committed-batch stamp in ``index_dir``, so a replay of a
+    fully-applied batch (crash after its writes, before the streaming
+    checkpoint commit) is a no-op. Without a checkpoint nothing
+    replays, so there is no stamp to keep."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if checkpoint_dir:
+            if batch_id <= _last_committed_batch(index_dir, checkpoint_dir):
+                return
+        ingest(batch_df)
+        if checkpoint_dir:
+            _record_committed_batch(index_dir, batch_id, checkpoint_dir)
+
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, trigger_available_now
+    )
 
 
 def dedup_ingest_batch(
@@ -144,43 +148,18 @@ def dedup_ingest_batch(
     # index append reuses the cached partitions — eager paid a whole
     # extra job per micro-batch just to populate the cache (r16)
     batch = batch_df.localCheckpoint(eager=False)
-
-    rejected = None
-    # 1. probe vs the already-ingested corpus (index may not exist yet)
-    if os.path.isdir(index_dir) and any(
-        name.startswith("bucket=") for name in os.listdir(index_dir)
-    ):
-        hits = minhash_index_probe(
-            spark, index_dir, batch, text_col, id_col,
-            num_hashes, bands, shingle_n, n_buckets,
-        )
-        # torn-replay guard: a candidate whose index_id belongs to THIS
-        # batch means the batch's bands were already appended by a
-        # crashed attempt — in-batch pairs are step 2's job (smaller-id
-        # rule), so drop them here instead of self-rejecting. Matches
-        # nothing under normal ingest (batch ids are not yet indexed).
-        hits = hits.join(
-            batch.select(F.col(id_col).alias("index_id")),
-            "index_id",
-            "left_anti",
-        )
-        rejected = hits.select(F.col("probe_id").alias(id_col)).distinct()
-    # 2. within-batch pairs, smaller id wins
-    pairs = minhash_duplicate_pairs(
-        batch, text_col, id_col, num_hashes, bands, shingle_n
-    )
-    in_batch = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    rejected = in_batch if rejected is None else rejected.union(in_batch).distinct()
-
-    # 3. accepted rows append to the output
-    accepted = batch.join(rejected, id_col, "left_anti")
-    accepted.write.mode("append").parquet(out_dir)
-
-    # 4. ALL batch docs enter the index (reject rule = candidate
-    # relation only — see module docstring)
-    minhash_index_append(
-        spark, index_dir, batch, text_col, id_col,
-        num_hashes, bands, shingle_n, n_buckets,
+    params = (num_hashes, bands, shingle_n, n_buckets)
+    _ingest_batch(
+        batch, index_dir, out_dir, id_col,
+        probe=lambda: minhash_index_probe(
+            spark, index_dir, batch, text_col, id_col, *params
+        ),
+        pairs=lambda: minhash_duplicate_pairs(
+            batch, text_col, id_col, num_hashes, bands, shingle_n
+        ),
+        append=lambda: minhash_index_append(
+            spark, index_dir, batch, text_col, id_col, *params
+        ),
     )
 
 
@@ -201,26 +180,13 @@ def streaming_dedup_ingest(
     rows land in ``out_dir``; every document's band rows land in the
     ``index_dir`` band index, which outlives the stream and serves
     later probes/ingests with the same recorded parameters."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # replay of a fully-applied batch → no-op (ADVICE r9); without
-        # a checkpoint there is no replay, so no guard to maintain
-        if checkpoint_dir:
-            if batch_id <= _last_committed_batch(index_dir, checkpoint_dir):
-                return
-        dedup_ingest_batch(
+    return _start_ingest(
+        stream_df, index_dir, checkpoint_dir, trigger_available_now,
+        lambda batch_df: dedup_ingest_batch(
             batch_df, index_dir, out_dir, text_col, id_col,
             num_hashes, bands, shingle_n, n_buckets,
-        )
-        if checkpoint_dir:
-            _record_committed_batch(index_dir, batch_id, checkpoint_dir)
-
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        ),
+    )
 
 
 def emb_dedup_ingest_batch(
@@ -250,24 +216,18 @@ def emb_dedup_ingest_batch(
     batch's vectors re-join by id only after candidate generation),
     within-batch banded self-join ∝ |batch|, index append one bucket
     exchange of the batch's rows. No driver state, no corpus
-    re-read.
-
-    r16 optimization (guide §1.2/§2.4 — don't compute things twice):
-    the banded plane projection used to be built THREE times per
-    batch (probe keys, within-batch self-join, index append) — three
-    constructions of the dim×n_planes plane expression and three
-    runtime evaluations of 16 dot products per row. One shared,
-    lazily-checkpointed band frame (WITH bucket) now feeds all three;
-    every downstream expression is identical, so accepted/rejected
-    sets and the on-disk index bytes are byte-for-byte unchanged
-    (pinned by the standing stream ≡ batch test)."""
+    re-read. One lazily-checkpointed band frame (with bucket) feeds
+    the probe keys, the within-batch self-join
+    (``embedding_near_duplicates``' pair join, explicit planes frozen
+    in the index sidecar) and the index append, so the plane
+    projection is evaluated once per batch."""
     from embeddinghub_spark.functions.dedup import (
         _emb_band_bucket,
+        _emb_band_pairs,
         _emb_band_rows,
         emb_index_append,
         emb_index_probe,
     )
-    from embeddinghub_spark.functions.vector import dot
 
     spark = batch_df.sparkSession
     # lazy for the same reason as the text twin above (r16)
@@ -277,62 +237,18 @@ def emb_dedup_ingest_batch(
         .withColumn("bucket", _emb_band_bucket(n_buckets))
         .localCheckpoint(eager=False)
     )
-
-    rejected = None
-    # 1. probe vs the already-ingested corpus (index may not exist yet)
-    if os.path.isdir(index_dir) and any(
-        name.startswith("bucket=") for name in os.listdir(index_dir)
-    ):
-        hits = emb_index_probe(
+    params = (n_planes, bands, seed, n_buckets)
+    _ingest_batch(
+        batch, index_dir, out_dir, id_col,
+        probe=lambda: emb_index_probe(
             spark, index_dir, batch, dim, threshold, id_col, vec_col,
-            n_planes, bands, seed, n_buckets, _band_rows=banded,
-        )
-        # torn-replay guard — same rationale as the text twin above
-        hits = hits.join(
-            batch.select(F.col(id_col).alias("index_id")),
-            "index_id",
-            "left_anti",
-        )
-        rejected = hits.select(F.col("probe_id").alias(id_col)).distinct()
-    # 2. within-batch pairs, smaller id wins — the exact
-    # embedding_near_duplicates join (same banded recipe, same
-    # rounding), inlined over the SHARED band frame. Explicit planes
-    # (frozen in the index sidecar), no warn probe: the within-batch
-    # corpus is micro-batch-sized by construction.
-    x, y = banded.alias("x"), banded.alias("y")
-    pairs = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_val") == F.col("y.band_val"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("id_a"),
-            F.col(f"y.{id_col}").alias("id_b"),
-            F.round(
-                dot(f"x.{vec_col}", f"y.{vec_col}", dim)
-                / (F.col("x._norm") * F.col("y._norm")),
-                6,
-            ).alias("cosine"),
-        )
-        .distinct()
-        .filter(F.col("cosine") >= threshold)
-    )
-    in_batch = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    rejected = (
-        in_batch if rejected is None
-        else rejected.union(in_batch).distinct()
-    )
-
-    # 3. accepted rows append to the output
-    accepted = batch.join(rejected, id_col, "left_anti")
-    accepted.write.mode("append").parquet(out_dir)
-
-    # 4. ALL batch vectors enter the index (no-chaining rule)
-    emb_index_append(
-        spark, index_dir, batch, dim, id_col, vec_col,
-        n_planes, bands, seed, n_buckets, _band_rows=banded,
+            *params, _band_rows=banded,
+        ),
+        pairs=lambda: _emb_band_pairs(banded, dim, id_col, vec_col, threshold),
+        append=lambda: emb_index_append(
+            spark, index_dir, batch, dim, id_col, vec_col,
+            *params, _band_rows=banded,
+        ),
     )
 
 
@@ -359,22 +275,10 @@ def streaming_embedding_dedup_ingest(
     batch rule "keep x iff no banded candidate y < x with
     cosine ≥ threshold", whatever the micro-batch slicing (pinned by
     test — the ``streaming_dedup_ingest`` contract on vectors)."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # replay guard, same protocol as the text twin above
-        if checkpoint_dir:
-            if batch_id <= _last_committed_batch(index_dir, checkpoint_dir):
-                return
-        emb_dedup_ingest_batch(
+    return _start_ingest(
+        stream_df, index_dir, checkpoint_dir, trigger_available_now,
+        lambda batch_df: emb_dedup_ingest_batch(
             batch_df, index_dir, out_dir, dim, threshold, id_col,
             vec_col, n_planes, bands, seed, n_buckets,
-        )
-        if checkpoint_dir:
-            _record_committed_batch(index_dir, batch_id, checkpoint_dir)
-
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        ),
+    )

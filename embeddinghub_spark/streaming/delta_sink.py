@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from embeddinghub_spark.streaming._state import _start_stream
+
 DEFAULT_APP_ID = "embeddinghub-spark-upsert"
 
 
@@ -131,10 +133,6 @@ def streaming_upsert_delta(
 
             compact_delta(spark, path)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

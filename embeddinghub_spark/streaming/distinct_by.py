@@ -27,11 +27,11 @@ always see a complete register set.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from embeddinghub_spark.streaming._state import _merge_commit, _start_stream
 
 
 def _registers(df: DataFrame, group_col: str, value_col: str, p: int) -> DataFrame:
@@ -56,24 +56,7 @@ def merge_registers_dir(
     (atomic symlink-flip commit, the C18 protocol). The table is
     ≤ |groups| × 2^p rows, so the full rewrite is a bounded tiny job
     at ANY stream length."""
-
-    layers = [batch_registers]
-    if os.path.islink(state_dir) or os.path.isdir(state_dir):
-        layers.append(spark.read.parquet(state_dir))
-    merged = layers[0]
-    for other in layers[1:]:
-        merged = merged.unionByName(other)
-    merged = merged.groupBy("grp", "bucket").agg(
-        F.max("max_rho").alias("max_rho")
-    )
-    from embeddinghub_spark.streaming._state import (
-        commit_version_dir,
-        new_version_dir,
-    )
-
-    phys = new_version_dir(state_dir)
-    merged.coalesce(1).write.parquet(phys)
-    commit_version_dir(state_dir, phys)
+    _merge_commit(spark, state_dir, batch_registers, ["grp", "bucket"], F.max)
 
 
 def read_distinct_estimates(
@@ -129,9 +112,6 @@ def streaming_distinct_by(
         regs = _registers(batch_df, group_col, value_col, p)
         merge_registers_dir(batch_df.sparkSession, state_dir, regs)
 
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, trigger_available_now
+    )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from embeddinghub_spark.sources.sinks import read_version
+from embeddinghub_spark.streaming._state import _start_stream
 
 
 def enrich_batch(
@@ -73,12 +74,9 @@ def streaming_enrich(
             how,
         )
 
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, trigger_available_now
+    )
 
 
 def read_enriched(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from embeddinghub_spark.streaming._state import _start_stream
+
 
 def last_committed_streaming_batch(path: str) -> int:
     """The ``streaming.last-batch-id`` the table carries, or -1."""
@@ -127,10 +129,6 @@ def streaming_upsert_iceberg(
 
             compact_iceberg(spark, path)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -23,19 +23,51 @@ including a simulated replay.
 
 from __future__ import annotations
 
-import json
 import math
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from embeddinghub_spark.streaming._state import (
+    _merge_commit,
+    _start_stream,
+    _stream_batch_id,
+)
+
 _META = "_psi_meta.json"
 _REF = "reference"
 _CUR = "current"
+
+
+def _bin_counts(
+    df: DataFrame, value_col: str, grid: DataFrame, lo: str, hi: str, n_bins: int
+) -> DataFrame:
+    """(bin, n) counts of ``df`` on the equal-width grid [lo, hi] carried
+    by the one-row ``grid`` frame; out-of-range values clamp to the
+    edge bins, a degenerate grid (hi == lo) puts everything in bin 0."""
+    c = F.col(value_col).cast("double")
+    width = (F.col(hi) - F.col(lo)) / F.lit(float(n_bins))
+    return (
+        df.filter(c.isNotNull())
+        .crossJoin(F.broadcast(grid))
+        .select(
+            F.when(F.col(hi) == F.col(lo), F.lit(0))
+            .otherwise(
+                F.greatest(
+                    F.lit(0),
+                    F.least(
+                        F.lit(n_bins - 1),
+                        F.floor((c - F.col(lo)) / width).cast("int"),
+                    ),
+                )
+            )
+            .alias("bin")
+        )
+        .groupBy("bin")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
 
 def freeze_reference(
@@ -48,25 +80,8 @@ def freeze_reference(
         raise ValueError("n_bins must be >= 2")
     c = F.col(value_col).cast("double")
     mm = ref.agg(F.min(c).alias("_lo"), F.max(c).alias("_hi"))
-    width = (F.col("_hi") - F.col("_lo")) / F.lit(float(n_bins))
     counts = (
-        ref.filter(c.isNotNull())
-        .crossJoin(F.broadcast(mm))
-        .select(
-            F.when(F.col("_hi") == F.col("_lo"), F.lit(0))
-            .otherwise(
-                F.greatest(
-                    F.lit(0),
-                    F.least(
-                        F.lit(n_bins - 1),
-                        F.floor((c - F.col("_lo")) / width).cast("int"),
-                    ),
-                )
-            )
-            .alias("bin")
-        )
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
+        _bin_counts(ref, value_col, mm, "_lo", "_hi", n_bins)
         .crossJoin(F.broadcast(mm))
         .select("bin", "n", F.col("_lo").alias("lo"), F.col("_hi").alias("hi"))
     )
@@ -75,12 +90,22 @@ def freeze_reference(
     )
 
 
-def _committed_batch(cur_dir: str) -> int:
-    path = os.path.join(os.path.realpath(cur_dir), _META)
-    if os.path.isfile(path):
-        with open(path) as fh:
-            return int(json.load(fh)["committed_batch"])
-    return -1
+def _merge_bins(
+    spark: SparkSession,
+    state_dir: str,
+    batch: DataFrame,
+    value_col: str,
+    n_bins: int,
+    batch_id: int | None,
+    checkpoint_dir: str | None,
+) -> bool:
+    ref = spark.read.parquet(os.path.join(state_dir, _REF))
+    grid = ref.select("lo", "hi").limit(1)
+    binned = _bin_counts(batch, value_col, grid, "lo", "hi", n_bins)
+    return _merge_commit(
+        spark, os.path.join(state_dir, _CUR), binned, ["bin"], F.sum, _META,
+        batch_id, checkpoint_dir,
+    )
 
 
 def merge_batch_bins(
@@ -94,49 +119,9 @@ def merge_batch_bins(
     """Bin one micro-batch on the FROZEN reference grid and +-merge
     into the current-side counters; SKIP (False) when ``batch_id`` is
     already committed."""
-    cur_dir = os.path.join(state_dir, _CUR)
-    exists = os.path.islink(cur_dir) or os.path.isdir(cur_dir)
-    if exists and batch_id <= _committed_batch(cur_dir):
-        return False
-    ref = spark.read.parquet(os.path.join(state_dir, _REF))
-    grid = ref.select("lo", "hi").limit(1)
-    c = F.col(value_col).cast("double")
-    width = (F.col("hi") - F.col("lo")) / F.lit(float(n_bins))
-    binned = (
-        batch.filter(c.isNotNull())
-        .crossJoin(F.broadcast(grid))
-        .select(
-            F.when(F.col("hi") == F.col("lo"), F.lit(0))
-            .otherwise(
-                F.greatest(
-                    F.lit(0),
-                    F.least(
-                        F.lit(n_bins - 1),
-                        F.floor((c - F.col("lo")) / width).cast("int"),
-                    ),
-                )
-            )
-            .alias("bin")
-        )
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
+    return _merge_bins(
+        spark, state_dir, batch, value_col, n_bins, batch_id, None
     )
-    layers = [binned]
-    if exists:
-        layers.append(spark.read.parquet(cur_dir).select("bin", "n"))
-    merged = layers[0]
-    for other in layers[1:]:
-        merged = merged.unionByName(other)
-    merged = merged.groupBy("bin").agg(F.sum("n").alias("n"))
-    from embeddinghub_spark.streaming._state import (
-        commit_version_dir,
-        new_version_dir,
-    )
-
-    phys = new_version_dir(cur_dir)
-    merged.coalesce(1).write.parquet(phys)
-    commit_version_dir(cur_dir, phys, batch_id, _META)
-    return True
 
 
 def read_psi(
@@ -236,18 +221,11 @@ def streaming_psi(
     against ``state_dir`` first."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch_bins(
-            batch_df.sparkSession,
-            state_dir,
-            batch_df,
-            batch_id,
-            value_col,
-            n_bins,
+        _merge_bins(
+            batch_df.sparkSession, state_dir, batch_df, value_col, n_bins,
+            _stream_batch_id(batch_id, checkpoint_dir), checkpoint_dir,
         )
 
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, trigger_available_now
+    )

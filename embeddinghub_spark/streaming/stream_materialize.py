@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from embeddinghub_spark.operators.materialize import materialize
+from embeddinghub_spark.streaming._state import _start_stream
 
 
 class StreamingSnapshot:
@@ -74,12 +75,9 @@ def streaming_materialize(
         latest = materialize(batch_df, entity_col, value_col, ts_col)
         snapshot.merge(latest.collect())  # ≤ |entities in batch| rows
 
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, trigger_available_now
+    )
 
 
 def streaming_materialize_to_dir(
@@ -138,9 +136,6 @@ def streaming_materialize_to_dir(
             entity_col="entity", ts_col="ts", value_col="value",
         )
 
-    writer = stream_df.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(
+        stream_df, process_batch, checkpoint_dir, trigger_available_now
+    )

@@ -435,3 +435,18 @@ def test_orc_roundtrip_and_zstd_parquet(spark, tmp_path):
     files = [f for f in os.listdir(out) if f.endswith(".parquet")]
     assert files and all(".zstd." in f for f in files)
     assert spark.read.parquet(out).count() == 2
+
+
+def test_atomic_update_sweeps_stale_temp_link(spark, tmp_path):
+    """A crash between the temp-link ``os.symlink`` and the
+    ``os.replace`` of a refresh leaves a ``.link-*`` symlink beside the
+    target; the next successful update must remove it (it is referenced
+    by nothing and would otherwise leak forever)."""
+    target = str(tmp_path / "feat")
+    atomic_update(spark.createDataFrame([(1,)], ["v"]), target)
+    stale = target + ".link-deadbeef"
+    os.symlink(os.path.realpath(target), stale)
+    atomic_update(spark.createDataFrame([(2,)], ["v"]), target)
+    assert not os.path.lexists(stale), "stale temp link leaked"
+    assert spark.read.parquet(target).collect()[0]["v"] == 2
+    assert not [n for n in os.listdir(str(tmp_path)) if ".link-" in n]

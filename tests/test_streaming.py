@@ -1946,7 +1946,7 @@ def test_ingest_commit_stamp_is_checkpoint_scoped(tmp_path):
     batches of the SAME stream (checkpoint identity) — a fresh
     checkpoint restarts batch numbering at 0 against an existing
     index and must not be suppressed by the previous stream's stamp."""
-    from embeddinghub_spark.streaming.dedup_ingest import (
+    from embeddinghub_spark.streaming._state import (
         _last_committed_batch,
         _record_committed_batch,
     )
@@ -2308,3 +2308,112 @@ def test_streaming_upsert_delta_sink(spark, tmp_path):
     dupb = spark.createDataFrame([(7, "x"), (7, "y")], schema)
     with _pytest.raises(ValueError, match="duplicate keys"):
         apply_upsert_batch_delta(spark, tbl, dupb, 4, ["id"])
+
+
+def _drain(q):
+    assert q.awaitTermination(180)
+    assert q.exception() is None
+
+
+def test_second_stream_into_existing_state_applies_its_batches(spark, tmp_path):
+    """Batch ids number from 0 per stream, so the committed-batch
+    watermark is scoped to the stream that wrote it: a second stream
+    into an existing state dir — checkpointless, or on its own fresh
+    checkpoint — applies every one of its batches, and the state ends
+    equal to the batch answer over the union of both sources. A restart
+    on the SAME checkpoint that re-runs an uncommitted batch is still
+    skipped."""
+    import shutil
+
+    from embeddinghub_spark.functions.profile import cms_topk
+    from embeddinghub_spark.operators.cdc import cdc_apply
+    from embeddinghub_spark.streaming.cdc_ingest import streaming_cdc_apply
+    from embeddinghub_spark.streaming.cms_by import (
+        read_cms_estimates,
+        streaming_cms,
+    )
+
+    words = ["alpha", "beta", "gamma"]
+    docs = {
+        "a": [(i, "alpha alpha beta") for i in range(4)],
+        "b": [(10 + i, "gamma alpha gamma") for i in range(4)],
+    }
+    # changelog halves with globally increasing seq: b follows a
+    changes = {
+        "a": [(k, k + 1, "U", f"a{k}") for k in range(6)],
+        "b": [(k, 10 + k, "D" if k == 1 else "U", f"b{k}") for k in range(3)],
+    }
+    for name in "ab":
+        for f in range(2):  # two files -> two micro-batches per source
+            spark.createDataFrame(
+                docs[name][f * 2:(f + 1) * 2], ["doc_id", "text"]
+            ).coalesce(1).write.parquet(str(tmp_path / f"docs_{name}" / f"f{f}"))
+        spark.createDataFrame(
+            changes[name], ["k", "seq", "op", "val"]
+        ).coalesce(1).write.parquet(str(tmp_path / f"log_{name}"))
+    all_docs = spark.createDataFrame(docs["a"] + docs["b"], ["doc_id", "text"])
+    want_cms = {
+        r["token"]: r["cms_estimate"]
+        for r in cms_topk(all_docs, depth=4, width=64, k=3).collect()
+    }
+    full = spark.createDataFrame(
+        changes["a"] + changes["b"], ["k", "seq", "op", "val"]
+    )
+    want_cdc = {
+        r.k: r.val
+        for r in cdc_apply(full.select("k", "val").filter("1=0"), full, ["k"])
+        .collect()
+    }
+
+    def doc_stream(name):
+        return (
+            spark.readStream.schema("doc_id LONG, text STRING")
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(str(tmp_path / f"docs_{name}"))
+        )
+
+    def log_stream(name):
+        return spark.readStream.schema(
+            "k LONG, seq LONG, op STRING, val STRING"
+        ).parquet(str(tmp_path / f"log_{name}"))
+
+    for mode in ("none", "fresh"):
+        cms_state = str(tmp_path / f"cms_{mode}")
+        cdc_state = str(tmp_path / f"cdc_{mode}")
+        for name in "ab":
+            ck = str(tmp_path / f"ck_{mode}_{name}") if mode == "fresh" else None
+            _drain(streaming_cms(
+                doc_stream(name), cms_state, depth=4, width=64,
+                checkpoint_dir=ck and ck + "_cms",
+            ))
+            _drain(streaming_cdc_apply(
+                log_stream(name), cdc_state, ["k"],
+                checkpoint_dir=ck and ck + "_cdc",
+            ))
+        got_cms = {
+            r["token"]: r["cms_estimate"]
+            for r in read_cms_estimates(
+                spark, cms_state, words, depth=4, width=64
+            ).collect()
+        }
+        assert got_cms == want_cms, mode
+        got_cdc = {r.k: r.val for r in spark.read.parquet(cdc_state).collect()}
+        assert got_cdc == want_cdc, mode
+
+    # same checkpoint, batch 1 re-run (its commit marker lost in a
+    # crash): the stamp written under this checkpoint makes it a no-op
+    ck_b = str(tmp_path / "ck_fresh_b_cms")
+    shutil.rmtree(os.path.join(ck_b, "commits"))
+    os.makedirs(os.path.join(ck_b, "commits"))
+    _drain(streaming_cms(
+        doc_stream("b"), str(tmp_path / "cms_fresh"), depth=4, width=64,
+        checkpoint_dir=ck_b,
+    ))
+    again = {
+        r["token"]: r["cms_estimate"]
+        for r in read_cms_estimates(
+            spark, str(tmp_path / "cms_fresh"), words, depth=4, width=64
+        ).collect()
+    }
+    assert again == want_cms

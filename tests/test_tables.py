@@ -641,3 +641,37 @@ def test_backfill_partitions_idempotent_and_incremental(spark, tmp_path):
         spark.createDataFrame([(None, 0)], "day STRING, v BIGINT")
     )
     assert backfill_partitions(df3, tgt, "day") == []
+
+
+def test_bucketed_merge_sweeps_stale_temp_link(spark, tmp_path):
+    """The bucketed snapshot commit flips its symlink through the same
+    temp link + ``os.replace`` as ``atomic_update``: a ``.link-*`` left
+    by a crash between the two calls is swept by the next merge."""
+    import datetime as dt
+
+    from embeddinghub_spark.sources.tables import (
+        merge_materialization_bucketed_dir,
+        read_bucketed_snapshot,
+    )
+
+    target = str(tmp_path / "snap")
+    t0 = dt.datetime(2024, 1, 1)
+    merge_materialization_bucketed_dir(
+        spark, target,
+        spark.createDataFrame([("u1", 1.0, t0)], ["entity", "value", "ts"]),
+        n_buckets=4,
+    )
+    stale = target + ".link-deadbeef"
+    os.symlink(os.path.realpath(target), stale)
+    merge_materialization_bucketed_dir(
+        spark, target,
+        spark.createDataFrame(
+            [("u1", 2.0, dt.datetime(2024, 1, 2))], ["entity", "value", "ts"]
+        ),
+    )
+    assert not os.path.lexists(stale), "stale temp link leaked"
+    got = {
+        r["entity"]: r["value"]
+        for r in read_bucketed_snapshot(spark, target).collect()
+    }
+    assert got == {"u1": 2.0}
