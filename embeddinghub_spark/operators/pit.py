@@ -879,6 +879,27 @@ def decay_hl_tag(hl: float) -> str:
     )
 
 
+def _decay_half_lives(
+    half_life_seconds: float | list[float], out_prefix: str
+) -> list[tuple[float, str, str]]:
+    """``[(hl, score_col, sum_col), ...]`` of a decayed trailing op,
+    validated positive and distinct up front (not as a schema mismatch
+    mid-stream). One half-life names ``<prefix>_score`` /
+    ``<prefix>_sum``; a list suffixes each pair with its
+    ``decay_hl_tag`` — shared by the batch op and its streaming twin."""
+    multi = isinstance(half_life_seconds, (list, tuple))
+    hls = [float(h) for h in (
+        half_life_seconds if multi else [half_life_seconds]
+    )]
+    if not hls or any(h <= 0 for h in hls) or len(set(hls)) != len(hls):
+        raise ValueError("half_life_seconds must be positive and distinct")
+    tags = [decay_hl_tag(hl) if multi else "" for hl in hls]
+    return [
+        (hl, f"{out_prefix}{t}_score", f"{out_prefix}{t}_sum")
+        for hl, t in zip(hls, tags)
+    ]
+
+
 def decay_bucket_weights(
     n_buckets: int, bucket_seconds: int, half_life_seconds: float
 ) -> list[float]:
@@ -902,6 +923,51 @@ def _epoch_seconds_expr(ts_col: str) -> str:
     return (
         f"timestampdiff(SECOND, CAST('1970-01-01 00:00:00' AS "
         f"TIMESTAMP_NTZ), CAST({q} AS TIMESTAMP_NTZ))"
+    )
+
+
+def _window_args(bucket_seconds: int, n_buckets: int) -> tuple[int, int]:
+    """``(g, K)`` of a bucketed trailing window, rejected up front unless
+    both are > 0 — the one argument check of the batch ops here and
+    of their streaming twins (``streaming.windows._bucketed_window``)."""
+    g, K = int(bucket_seconds), int(n_buckets)
+    if g <= 0 or K <= 0:
+        raise ValueError("bucket_seconds and n_buckets must be > 0")
+    return g, K
+
+
+def _bucket_of(ts_col: str, g: int):
+    """The epoch-aligned bucket index ``floor(epoch_s / g)`` as BIGINT."""
+    return F.expr(
+        f"CAST(floor(({_epoch_seconds_expr(ts_col)}) / {g}) AS BIGINT)"
+    )
+
+
+def _label_probes(
+    labels: DataFrame, label_entity_col: str, label_ts_col: str, g: int, K: int
+) -> DataFrame:
+    """One row per (label, probed bucket) of the bucketed trailing
+    window: ``_aid`` (a per-label id, assigned before the explode),
+    the label columns, ``_e`` (the entity), ``_b`` (each of the K
+    complete buckets ``[_lb − K, _lb − 1]`` before the label's own
+    bucket ``_lb``) and ``_lb``. The caller left-joins its
+    (entity, bucket) partials on ``["_e", "_b"]``."""
+    return (
+        labels.withColumn("_aid", F.monotonically_increasing_id())
+        .withColumn("_lb", _bucket_of(label_ts_col, g))
+        .select(
+            "_aid",
+            *labels.columns,
+            F.col(label_entity_col).alias("_e"),
+            # explode_OUTER: a NULL-ts label has no bucket sequence but
+            # must survive with count 0 / NULL score (the
+            # trailing_window_features convention) instead of silently
+            # vanishing from a training frame
+            F.explode_outer(
+                F.sequence(F.col("_lb") - K, F.col("_lb") - 1)
+            ).alias("_b"),
+            "_lb",
+        )
     )
 
 
@@ -988,29 +1054,12 @@ def decayed_trailing_features(
     empty); with a half-life list, ``<prefix><hl>_score`` /
     ``<prefix><hl>_sum`` per half-life.
     """
-    g = int(bucket_seconds)
-    K = int(n_buckets)
-    if g <= 0 or K <= 0:
-        raise ValueError("bucket_seconds and n_buckets must be > 0")
-    multi = isinstance(half_life_seconds, (list, tuple))
-    hls = [float(h) for h in (
-        half_life_seconds if multi else [half_life_seconds]
-    )]
-    if not hls or any(h <= 0 for h in hls) or len(set(hls)) != len(hls):
-        raise ValueError("half_life_seconds must be positive and distinct")
-
-    def hl_names(hl: float) -> tuple[str, str]:
-        # MULTI-HALF-LIFE FUSION (the C11 lag-fusion story): a LIST of
-        # half-lives (fast 1d decay + slow 30d decay) shares the SAME
-        # bucket partials and the SAME K-probe join — extra half-lives
-        # cost one more literal-weight column each, zero extra
-        # exchanges. Columns are then suffixed per half-life.
-        if not multi:
-            return f"{out_prefix}_score", f"{out_prefix}_sum"
-        tag = decay_hl_tag(hl)
-        return f"{out_prefix}{tag}_score", f"{out_prefix}{tag}_sum"
-
-    weights_by_hl = {hl: decay_bucket_weights(K, g, hl) for hl in hls}
+    g, K = _window_args(bucket_seconds, n_buckets)
+    # MULTI-HALF-LIFE FUSION (the C11 lag-fusion story): a LIST of
+    # half-lives (fast 1d decay + slow 30d decay) shares the SAME
+    # bucket partials and the SAME K-probe join — extra half-lives
+    # cost one more literal-weight column each, zero extra exchanges
+    decays = _decay_half_lives(half_life_seconds, out_prefix)
     # 1e9-scaled BIGINT of round(v, 9): exact, order-free summation
     val9 = (
         F.round(
@@ -1019,42 +1068,20 @@ def decayed_trailing_features(
         if value_col
         else F.lit(0).cast("bigint")
     )
-    ev_bucket = F.expr(
-        f"CAST(floor(({_epoch_seconds_expr(event_ts_col)}) / {g}) AS BIGINT)"
-    )
     partials = (
         events.select(
             F.col(event_entity_col).alias("_e"),
-            ev_bucket.alias("_b"),
+            _bucket_of(event_ts_col, g).alias("_b"),
             val9.alias("_v9"),
         )
         .groupBy("_e", "_b")
         .agg(F.count(F.lit(1)).alias("_c"), F.sum("_v9").alias("_v9"))
     )
-    lab_bucket = F.expr(
-        f"CAST(floor(({_epoch_seconds_expr(label_ts_col)}) / {g}) AS BIGINT)"
-    )
-    probes = (
-        labels.withColumn("_aid", F.monotonically_increasing_id())
-        .withColumn("_lb", lab_bucket)
-        .select(
-            "_aid",
-            *labels.columns,
-            F.col(label_entity_col).alias("_e"),
-            # explode_OUTER: a NULL-ts label has no bucket sequence but
-            # must survive with count 0 / NULL score (the
-            # trailing_window_features convention) instead of silently
-            # vanishing from a training frame
-            F.explode_outer(
-                F.sequence(F.col("_lb") - K, F.col("_lb") - 1)
-            ).alias("_b"),
-            "_lb",
-        )
-    )
+    probes = _label_probes(labels, label_entity_col, label_ts_col, g, K)
     # per-half-life weight lookup rides as a plan-literal array
     # indexed by d — every half-life shares the same probes and join
-    for i, hl in enumerate(hls):
-        w_arr = F.array(*[F.lit(w) for w in weights_by_hl[hl]])
+    for i, (hl, _, _) in enumerate(decays):
+        w_arr = F.array(*[F.lit(w) for w in decay_bucket_weights(K, g, hl)])
         probes = probes.withColumn(
             f"_w{i}",
             F.element_at(w_arr, (F.col("_lb") - F.col("_b")).cast("int")),
@@ -1065,7 +1092,7 @@ def decayed_trailing_features(
     aggs = [
         F.sum(F.coalesce(F.col("_c"), F.lit(0))).alias(f"{out_prefix}_count"),
     ]
-    for i, hl in enumerate(hls):
+    for i in range(len(decays)):
         term_cnt9 = F.round(
             F.col("_c").cast("double") * F.col(f"_w{i}") * F.lit(1e9), 0
         ).cast("bigint")
@@ -1089,8 +1116,7 @@ def decayed_trailing_features(
 
     out = [F.col(c) for c in labels.columns]
     out.append(F.col(f"{out_prefix}_count"))
-    for i, hl in enumerate(hls):
-        score_col, sum_col = hl_names(hl)
+    for i, (_, score_col, sum_col) in enumerate(decays):
         out.append(F.when(nonempty, to6(f"_score9_{i}")).alias(score_col))
         if value_col:
             out.append(
@@ -1150,10 +1176,7 @@ def trailing_distinct_features(
         hll_register_frame,
     )
 
-    g = int(bucket_seconds)
-    K = int(n_buckets)
-    if g <= 0 or K <= 0:
-        raise ValueError("bucket_seconds and n_buckets must be > 0")
+    g, K = _window_args(bucket_seconds, n_buckets)
     if K > 63:
         # buckets_used rides as a 64-bit bit_or bitmask over the probe
         # distance d ∈ [1, K]; Spark's shiftleft wraps the shift amount
@@ -1174,16 +1197,13 @@ def trailing_distinct_features(
             "engine-specific — hash a stable encoding instead"
         )
     m = 1 << p
-    ev_bucket = F.expr(
-        f"CAST(floor(({_epoch_seconds_expr(event_ts_col)}) / {g}) AS BIGINT)"
-    )
     # the shared register recipe (profile.hll_register_frame) — ONE
     # protocol definition across the batch sketch, the streaming twin,
     # this PIT feature, and their oracles
     registers = hll_register_frame(
         events.select(
             F.col(event_entity_col).alias("_e"),
-            ev_bucket.alias("_b"),
+            _bucket_of(event_ts_col, g).alias("_b"),
             F.col(value_col),
         ),
         ["_e", "_b"],
@@ -1195,26 +1215,7 @@ def trailing_distinct_features(
         F.col("bucket").alias("_reg"),
         F.col("max_rho").alias("_max_rho"),
     )
-    lab_bucket = F.expr(
-        f"CAST(floor(({_epoch_seconds_expr(label_ts_col)}) / {g}) AS BIGINT)"
-    )
-    probes = (
-        labels.withColumn("_aid", F.monotonically_increasing_id())
-        .withColumn("_lb", lab_bucket)
-        .select(
-            "_aid",
-            *labels.columns,
-            F.col(label_entity_col).alias("_e"),
-            # explode_OUTER: a NULL-ts label has no bucket sequence but
-            # must survive with count 0 / NULL score (the
-            # trailing_window_features convention) instead of silently
-            # vanishing from a training frame
-            F.explode_outer(
-                F.sequence(F.col("_lb") - K, F.col("_lb") - 1)
-            ).alias("_b"),
-            "_lb",
-        )
-    )
+    probes = _label_probes(labels, label_entity_col, label_ts_col, g, K)
     joined = probes.join(registers, ["_e", "_b"], "left")
     # bucket support rides as a bitmask over the probe distance d
     # (bit_or is associative, so it folds through both groupBys and
@@ -1309,41 +1310,19 @@ def trailing_topk_features(
     """
     from pyspark.sql import Window
 
-    g = int(bucket_seconds)
-    K = int(n_buckets)
-    if g <= 0 or K <= 0:
-        raise ValueError("bucket_seconds and n_buckets must be > 0")
+    g, K = _window_args(bucket_seconds, n_buckets)
     if k <= 0:
         raise ValueError("k must be > 0")
-    ev_bucket = F.expr(
-        f"CAST(floor(({_epoch_seconds_expr(event_ts_col)}) / {g}) AS BIGINT)"
-    )
     partials = (
         events.filter(F.col(item_col).isNotNull())
         .groupBy(
             F.col(event_entity_col).alias("_e"),
-            ev_bucket.alias("_b"),
+            _bucket_of(event_ts_col, g).alias("_b"),
             F.col(item_col).alias("_item"),
         )
         .agg(F.count(F.lit(1)).alias("_c"))
     )
-    lab_bucket = F.expr(
-        f"CAST(floor(({_epoch_seconds_expr(label_ts_col)}) / {g}) AS BIGINT)"
-    )
-    probes = (
-        labels.withColumn("_aid", F.monotonically_increasing_id())
-        .withColumn("_lb", lab_bucket)
-        .select(
-            "_aid",
-            *labels.columns,
-            F.col(label_entity_col).alias("_e"),
-            # explode_OUTER: a NULL-ts label has no bucket sequence
-            # but must survive (the trailing-family convention)
-            F.explode_outer(
-                F.sequence(F.col("_lb") - K, F.col("_lb") - 1)
-            ).alias("_b"),
-        )
-    )
+    probes = _label_probes(labels, label_entity_col, label_ts_col, g, K)
     summed = (
         probes.join(partials, ["_e", "_b"], "left")
         .groupBy("_aid", *labels.columns, "_item")

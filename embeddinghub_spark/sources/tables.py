@@ -501,10 +501,15 @@ def merge_materialization_bucketed_dir(
     (touched-bucket rewrite per batch, zero read-side merge cost).
     """
     import os
+    import uuid
 
     from embeddinghub_spark.operators.materialize import materialize
 
-    version, cur_n, buckets, deltas = _version_layout(target_dir)
+    if not os.path.islink(target_dir) and os.path.isdir(target_dir):
+        # a legacy PLAIN-dir snapshot: folded in below as the flat base
+        version, cur_n, buckets, deltas = target_dir, None, {}, []
+    else:
+        version, cur_n, buckets, deltas = _version_layout(target_dir)
     legacy_base = None
     if version is not None and cur_n is None:
         # legacy flat snapshot: fold it in as one more layer below
@@ -539,6 +544,12 @@ def merge_materialization_bucketed_dir(
             for d in os.listdir(phys)
             if d.startswith("bucket=")
         }
+        if version == target_dir:
+            # only now that the new version is written: move the plain
+            # dir aside (a symlink cannot replace a real dir) as the
+            # superseded version the next commit retires
+            version = target_dir + ".v-" + uuid.uuid4().hex[:8]
+            os.rename(target_dir, version)
         _commit_version(target_dir, links, n_buckets, version)
         return target_dir
 

@@ -4,6 +4,8 @@ Each streaming module supplies only its per-batch math; the protocol
 around it lives here once, so its rules cannot drift between stores:
 
 - ``_start_stream``: the foreachBatch writer tail every stream ends in.
+- ``_start_upsert_stream``: the Delta and Iceberg upsert sinks' batch
+  body — apply the batch, then compact every ``compact_every`` batches.
 - ``_last_committed_batch`` / ``_record_committed_batch``: the
   committed-batch watermark, a stamp ``{"committed_batch",
   "checkpoint"}``. Batch ids number from 0 per checkpoint, so a
@@ -51,6 +53,32 @@ def _start_stream(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _start_upsert_stream(
+    stream_df,
+    apply_batch,
+    compact,
+    compact_every: int | None,
+    checkpoint_dir: str,
+    available_now: bool,
+):
+    """Start a table-format upsert sink: ``apply_batch(spark, batch_df,
+    batch_id)`` folds each micro-batch in (None when it skipped a
+    replayed or empty batch); after every ``compact_every``-th
+    committed batch ``compact(spark)`` runs the format's compaction —
+    the read-amplification valve."""
+    def process_batch(batch_df, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        if (
+            apply_batch(spark, batch_df, batch_id) is not None
+            and compact_every
+            and batch_id > 0
+            and batch_id % int(compact_every) == 0
+        ):
+            compact(spark)
+
+    return _start_stream(stream_df, process_batch, checkpoint_dir, available_now)
 
 
 def _last_committed_batch(

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from embeddinghub_spark.streaming._state import _start_stream
+from embeddinghub_spark.streaming._state import _start_upsert_stream
 
 DEFAULT_APP_ID = "embeddinghub-spark-upsert"
 
@@ -115,24 +115,15 @@ def streaming_upsert_delta(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start the sink (see module docstring)."""
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        v = apply_upsert_batch_delta(
-            spark, path, batch_df, batch_id, key_cols,
-            app_id=app_id, strategy=strategy,
-        )
-        if (
-            v is not None
-            and compact_every
-            and batch_id > 0
-            and batch_id % int(compact_every) == 0
-        ):
-            from embeddinghub_spark.sources.delta_log import (
-                compact_delta,
-            )
+    from embeddinghub_spark.sources.delta_log import compact_delta
 
-            compact_delta(spark, path)
-
-    return _start_stream(
-        stream_df, process_batch, checkpoint_dir, available_now
+    return _start_upsert_stream(
+        stream_df,
+        lambda spark, df, bid: apply_upsert_batch_delta(
+            spark, path, df, bid, key_cols, app_id=app_id, strategy=strategy
+        ),
+        lambda spark: compact_delta(spark, path),
+        compact_every,
+        checkpoint_dir,
+        available_now,
     )

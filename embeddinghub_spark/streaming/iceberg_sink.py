@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from embeddinghub_spark.streaming._state import _start_stream
+from embeddinghub_spark.streaming._state import _start_upsert_stream
 
 
 def last_committed_streaming_batch(path: str) -> int:
@@ -112,23 +112,15 @@ def streaming_upsert_iceberg(
     ``available_now=False`` leaves the trigger continuous (the
     default drains what is available and stops — the batch-refresh
     shape the tests and backfills use)."""
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sid = apply_upsert_batch(
-            spark, path, batch_df, batch_id, key_cols
-        )
-        if (
-            sid is not None
-            and compact_every
-            and batch_id > 0
-            and batch_id % int(compact_every) == 0
-        ):
-            from embeddinghub_spark.sources.iceberg_write import (
-                compact_iceberg,
-            )
+    from embeddinghub_spark.sources.iceberg_write import compact_iceberg
 
-            compact_iceberg(spark, path)
-
-    return _start_stream(
-        stream_df, process_batch, checkpoint_dir, available_now
+    return _start_upsert_stream(
+        stream_df,
+        lambda spark, df, bid: apply_upsert_batch(
+            spark, path, df, bid, key_cols
+        ),
+        lambda spark: compact_iceberg(spark, path),
+        compact_every,
+        checkpoint_dir,
+        available_now,
     )

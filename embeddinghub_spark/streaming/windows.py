@@ -17,12 +17,40 @@ O(groups × windows-in-horizon), independent of stream length.
 (the sanctioned Python path); the latest-per-entity example keeps one
 (value, ts) pair per entity — the same O(|entities|) bound as the C20
 snapshot.
+
+Every stateful operator here ends in ONE ``applyInPandasWithState``
+tail, ``_stateful`` (group by entity, update mode, no timeout). The
+four bucketed trailing counters (``trailing_distinct_counter``,
+``decayed_trailing_counter``, ``trailing_topk_counter`` and its
+``_capped`` twin, which share one body) run on ONE per-entity fold,
+``_bucketed_window``: it decodes the state into ``{bucket: payload}``,
+skips events without a bucket, folds the live events, prunes, encodes
+and emits AS OF ``r = max_seen_bucket + 1``. The window rule — a
+bucket b is live iff ``1 <= r - b <= K`` — is written there once; each
+operator supplies only its state fields, its per-event fold into a
+bucket payload, its encode/decode and its emit from the live window.
+
+Each operator's state schema (``stateStructType``) is a CHECKPOINT
+FORMAT: a restarted query resumes from the state its checkpoint
+holds, so a state field's name, type and order never change once
+shipped (``_unpack_decay_state`` still reads the pre-``vcnts``
+layout for that reason).
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 
 def windowed_aggregate(
@@ -129,6 +157,135 @@ def streaming_dedup(
     return df.dropDuplicates(key_cols)
 
 
+def _stateful(stream_df, entity_col, update_fn, out_fields, state_fields):
+    """The one ``applyInPandasWithState`` tail of every operator here:
+    group by ``entity_col``, emit in update mode with no timeout. The
+    output schema is ``(entity_col, *out_fields)``; ``state_fields``
+    is the operator's checkpoint format (module docstring)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    entity = StructField(entity_col, stream_df.schema[entity_col].dataType)
+    return stream_df.groupBy(entity_col).applyInPandasWithState(
+        update_fn,
+        outputStructType=StructType([entity, *out_fields]),
+        stateStructType=StructType(state_fields),
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _bucketed_window(
+    stream_df,
+    bucket_seconds,
+    n_buckets,
+    entity_col,
+    ts_col,
+    value_col,
+    *,
+    skip_null_values,
+    out_fields,
+    state_fields,
+    new,
+    fold,
+    decode,
+    encode,
+    emit,
+):
+    """The one per-entity fold behind the bucketed trailing counters.
+
+    Per micro-batch and entity: decode the state into ``{bucket:
+    payload}``; bucket every event with a ts (``b = epoch_s // g``;
+    NULL values are dropped too when ``skip_null_values``); with
+    ``r = max(state and batch buckets) + 1``, fold the LIVE events
+    (``fold(payload, value)``, a missing bucket starting as
+    ``new()``), keep only the live buckets as the new state
+    (``encode`` gets them bucket-sorted) and emit ``emit([(r − b,
+    payload), ...])`` — a dict of equal-length output columns, to
+    which the core prepends the entity and ``ref_ts = bucket_start(r)``.
+
+    A bucket is live iff ``1 <= r − b <= K``: r only grows, so no
+    future reference weighs an older bucket and dropping it (and any
+    late event landing in it) loses nothing. Every payload fold is
+    commutative per bucket or, for SpaceSaving, touches only its own
+    bucket, so computing the bound once from the batch's final max
+    leaves the same state as checking each event against the running
+    max."""
+    import pandas as pd
+
+    from embeddinghub_spark.operators.pit import _window_args
+
+    g, K = _window_args(bucket_seconds, n_buckets)
+
+    def update_fn(key, pdf_iter, state):
+        part = decode(state.get) if state.exists else {}
+        events = []
+        for pdf in pdf_iter:
+            vals = pdf[value_col] if value_col else None
+            for i, t in enumerate(pdf[ts_col]):
+                if pd.isna(t):
+                    continue  # batch parity: a NULL ts has no bucket
+                v = None if vals is None else vals.iloc[i]
+                if isinstance(v, float) and pd.isna(v):
+                    v = None
+                if v is None and skip_null_values:
+                    continue  # batch parity: NULLs never count
+                events.append((pd.Timestamp(t).value // 10**9 // g, v))
+        seen = {*part, *(b for b, _ in events)}
+        if not seen:
+            return  # nothing bucketable ever arrived for this key
+        r = max(seen) + 1
+        live = {b for b in seen if 1 <= r - b <= K}
+        for b, v in events:
+            if b in live:
+                fold(part.setdefault(b, new()), v)
+        window = [(b, part[b]) for b in sorted(live)]
+        state.update(encode(window))
+        cols = emit([(r - b, p) for b, p in window])
+        n = len(next(iter(cols.values())))
+        yield pd.DataFrame(
+            {
+                entity_col: [key[0]] * n,
+                "ref_ts": [pd.Timestamp(r * g, unit="s")] * n,
+                **cols,
+            }
+        )
+
+    out = [StructField("ref_ts", TimestampNTZType()), *out_fields]
+    return _stateful(stream_df, entity_col, update_fn, out, state_fields)
+
+
+def _nest(st) -> dict:
+    """``(buckets, keys, *payload_arrays)`` state → ``{bucket: {key:
+    [payload, ...]}}`` (the HLL and top-k layouts)."""
+    part: dict = {}
+    for b, key, *payload in zip(*st):
+        part.setdefault(b, {})[key] = payload
+    return part
+
+
+def _flatten(live, n_arrays: int) -> tuple:
+    """Inverse of ``_nest`` over bucket-sorted ``live``, keys sorted
+    within each bucket; each row keeps its first ``n_arrays`` fields."""
+    rows = [(b, key, *p) for b, d in live for key, p in sorted(d.items())]
+    return tuple([row[j] for row in rows] for j in range(n_arrays))
+
+
+def _half_up(x: float, quantum: str) -> Decimal:
+    """HALF_UP rounding of a double's shortest repr to ``quantum`` —
+    Spark's ``round(double, n)`` and DuckDB's, not Python's banker's
+    ``round``."""
+    return Decimal(repr(float(x))).quantize(Decimal(quantum), ROUND_HALF_UP)
+
+
+def _half_life_us(half_life_seconds: float) -> float:
+    """The half-life in microseconds, rejected unless > 0."""
+    if not float(half_life_seconds) > 0:
+        raise ValueError(
+            f"half_life_seconds must be > 0, got {half_life_seconds!r}"
+        )
+    return float(half_life_seconds) * 1e6
+
+
 def stateful_latest(
     stream_df: DataFrame,
     entity_col: str = "entity",
@@ -148,29 +305,6 @@ def stateful_latest(
     everything JVM-side.
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampNTZType,
-    )
-
-    entity_type = stream_df.schema[entity_col].dataType
-    out_schema = StructType(
-        [
-            StructField(entity_col, entity_type),
-            StructField(value_col, DoubleType()),
-            StructField(ts_col, TimestampNTZType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("value", DoubleType()),
-            StructField("ts_us", LongType()),  # NTZ micros (state-safe)
-        ]
-    )
 
     def update_fn(key, pdf_iter, state):
         best_v, best_us = state.get if state.exists else (None, None)
@@ -188,12 +322,18 @@ def stateful_latest(
             }
         )
 
-    return stream_df.groupBy(entity_col).applyInPandasWithState(
+    return _stateful(
+        stream_df,
+        entity_col,
         update_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        [
+            StructField(value_col, DoubleType()),
+            StructField(ts_col, TimestampNTZType()),
+        ],
+        [
+            StructField("value", DoubleType()),
+            StructField("ts_us", LongType()),  # NTZ micros (state-safe)
+        ],
     )
 
 
@@ -223,30 +363,8 @@ def decayed_counter(
     micro-batch (update semantics, like C20's online push).
     """
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampNTZType,
-    )
 
-    entity_type = stream_df.schema[entity_col].dataType
-    out_schema = StructType(
-        [
-            StructField(entity_col, entity_type),
-            StructField("decayed_count", DoubleType()),
-            StructField("ref_ts", TimestampNTZType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("s", DoubleType()),
-            StructField("ref_us", LongType()),
-        ]
-    )
-    hl_us = float(half_life_seconds) * 1e6
+    hl_us = _half_life_us(half_life_seconds)
 
     def update_fn(key, pdf_iter, state):
         s, ref_us = state.get if state.exists else (0.0, None)
@@ -269,12 +387,18 @@ def decayed_counter(
             }
         )
 
-    return stream_df.groupBy(entity_col).applyInPandasWithState(
+    return _stateful(
+        stream_df,
+        entity_col,
         update_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        [
+            StructField("decayed_count", DoubleType()),
+            StructField("ref_ts", TimestampNTZType()),
+        ],
+        [
+            StructField("s", DoubleType()),
+            StructField("ref_us", LongType()),
+        ],
     )
 
 
@@ -307,17 +431,6 @@ def trailing_distinct_counter(
     import hashlib
     import math
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampNTZType,
-    )
-
     from embeddinghub_spark.functions.profile import (
         _HLL_BUCKET_HEX,
         _HLL_RHO_CAP,
@@ -325,8 +438,6 @@ def trailing_distinct_counter(
         _hll_alpha,
     )
 
-    g = int(bucket_seconds)
-    K = int(n_buckets)
     if not 7 <= p <= 12:
         raise ValueError(f"p={p} outside [7, 12]")
     # same construction-time guard as the batch twin: Python's str(v)
@@ -343,83 +454,23 @@ def trailing_distinct_counter(
         )
     m = 1 << p
     c1 = _hll_alpha(m) * m * m * float(1 << _HLL_RHO_CAP)
-    entity_type = stream_df.schema[entity_col].dataType
-    out_schema = StructType(
-        [
-            StructField(entity_col, entity_type),
-            StructField("ref_ts", TimestampNTZType()),
-            StructField("approx_distinct", DoubleType()),
-            StructField("buckets_used", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("buckets", ArrayType(LongType())),
-            StructField("regs", ArrayType(LongType())),
-            StructField("rhos", ArrayType(LongType())),
-        ]
-    )
 
-    def update_fn(key, pdf_iter, state):
-        if state.exists:
-            bks, regs, rhos = state.get
-            part: dict = {}
-            for b, rg, rh in zip(bks, regs, rhos):
-                part.setdefault(b, {})[rg] = rh
-        else:
-            part = {}
-        for pdf in pdf_iter:
-            vals = pdf[value_col]
-            for i, t in enumerate(pdf[ts_col]):
-                v = vals.iloc[i]
-                if pd.isna(t) or v is None or (
-                    isinstance(v, float) and pd.isna(v)
-                ):
-                    continue  # batch parity: NULLs never hash
-                sec = pd.Timestamp(t).value // 1_000_000_000
-                b = int(sec // g)
-                mx = max(part) if part else None
-                if mx is not None and b < max(mx, b) - K:
-                    continue  # outside every future window
-                # the shared register recipe (profile.hll_register_frame)
-                # — slicing constants imported, not hardcoded
-                h = hashlib.md5(str(v).encode()).hexdigest()
-                reg = int(h[:_HLL_BUCKET_HEX], 16) % m
-                tail = int(
-                    h[_HLL_BUCKET_HEX:_HLL_BUCKET_HEX + _HLL_VALUE_HEX], 16
-                )
-                rho = (
-                    _HLL_RHO_CAP if tail == 0
-                    else _HLL_RHO_CAP - tail.bit_length()
-                )
-                slot = part.setdefault(b, {})
-                if rho > slot.get(reg, 0):
-                    slot[reg] = rho
-        if not part:
-            return  # nothing bucketable ever arrived for this key
-        mx = max(part)
-        part = {b: rr for b, rr in part.items() if b > mx - K}
-        flat = [
-            (b, rg, rh)
-            for b in sorted(part)
-            for rg, rh in sorted(part[b].items())
-        ]
-        state.update(
-            (
-                [int(b) for b, _, _ in flat],
-                [int(rg) for _, rg, _ in flat],
-                [int(rh) for _, _, rh in flat],
-            )
-        )
-        r = mx + 1
+    def fold(regs, v):
+        # the shared register recipe (profile.hll_register_frame) —
+        # slicing constants imported, not hardcoded
+        h = hashlib.md5(str(v).encode()).hexdigest()
+        reg = int(h[:_HLL_BUCKET_HEX], 16) % m
+        tail = int(h[_HLL_BUCKET_HEX:_HLL_BUCKET_HEX + _HLL_VALUE_HEX], 16)
+        rho = _HLL_RHO_CAP if tail == 0 else _HLL_RHO_CAP - tail.bit_length()
+        if rho > regs.get(reg, [0])[0]:
+            regs[reg] = [rho]
+
+    def emit(window):
         merged: dict = {}
-        used_buckets = 0
-        for b, rr in part.items():
-            if 1 <= r - b <= K:
-                used_buckets += 1
-                for rg, rh in rr.items():
-                    if rh > merged.get(rg, 0):
-                        merged[rg] = rh
+        for _, regs in window:
+            for rg, (rh,) in regs.items():
+                if rh > merged.get(rg, 0):
+                    merged[rg] = rh
         used = len(merged)
         s_total = sum(
             1 << (_HLL_RHO_CAP - rh) for rh in merged.values()
@@ -430,31 +481,28 @@ def trailing_distinct_counter(
             est = m * math.log(m / float(empties))
         else:
             est = raw
-        # shortest-repr HALF_UP at 3 — Spark's round(double, 3), not
-        # Python's banker's round (the decayed_trailing_counter _r0
-        # discipline)
-        from decimal import ROUND_HALF_UP, Decimal
+        return {
+            "approx_distinct": [float(_half_up(est, "1e-3"))],
+            "buckets_used": [len(window)],
+        }
 
-        est3 = float(
-            Decimal(repr(float(est))).quantize(
-                Decimal("1e-3"), ROUND_HALF_UP
-            )
-        )
-        yield pd.DataFrame(
-            {
-                entity_col: [key[0]],
-                "ref_ts": [pd.Timestamp(r * g, unit="s")],
-                "approx_distinct": [est3],
-                "buckets_used": [int(used_buckets)],
-            }
-        )
-
-    return stream_df.groupBy(entity_col).applyInPandasWithState(
-        update_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _bucketed_window(
+        stream_df, bucket_seconds, n_buckets, entity_col, ts_col, value_col,
+        skip_null_values=True,
+        out_fields=[
+            StructField("approx_distinct", DoubleType()),
+            StructField("buckets_used", LongType()),
+        ],
+        state_fields=[
+            StructField("buckets", ArrayType(LongType())),
+            StructField("regs", ArrayType(LongType())),
+            StructField("rhos", ArrayType(LongType())),
+        ],
+        new=dict,
+        fold=fold,
+        decode=_nest,
+        encode=lambda live: _flatten(live, 3),
+        emit=emit,
     )
 
 
@@ -520,55 +568,65 @@ def decayed_trailing_counter(
     Emits ``(entity, ref_ts, <prefix>_count, <prefix>_score[,
     <prefix>_sum])`` per updated entity per micro-batch (update
     semantics)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampNTZType,
-    )
-
     from embeddinghub_spark.operators.pit import (
+        _decay_half_lives,
         decay_bucket_weights,
-        decay_hl_tag,
     )
 
-    g = int(bucket_seconds)
-    K = int(n_buckets)
-    multi = isinstance(half_life_seconds, (list, tuple))
-    hls = [float(h) for h in (
-        half_life_seconds if multi else [half_life_seconds]
-    )]
-    # same validation as the batch twin: fail fast at construction,
-    # not as an Arrow schema mismatch mid-stream
-    if not hls or any(h <= 0 for h in hls) or len(set(hls)) != len(hls):
-        raise ValueError("half_life_seconds must be positive and distinct")
-    weights_by_hl = [decay_bucket_weights(K, g, hl) for hl in hls]
-
-    def hl_cols(hl: float) -> tuple[str, str]:
-        # multi-half-life column naming shares the batch op's tag
-        if not multi:
-            return "decay_score", "decay_sum"
-        tag = decay_hl_tag(hl)
-        return f"decay{tag}_score", f"decay{tag}_sum"
-
-    entity_type = stream_df.schema[entity_col].dataType
-    fields = [
-        StructField(entity_col, entity_type),
-        StructField("ref_ts", TimestampNTZType()),
-        StructField("decay_count", LongType()),
+    # the batch twin's validation and column names
+    decays = [
+        (s_col, v_col, decay_bucket_weights(n_buckets, bucket_seconds, hl))
+        for hl, s_col, v_col in _decay_half_lives(half_life_seconds, "decay")
     ]
-    for hl in hls:
-        s, v = hl_cols(hl)
-        fields.append(StructField(s, DoubleType()))
+    out_fields = [StructField("decay_count", LongType())]
+    for s_col, v_col, _ in decays:
+        out_fields.append(StructField(s_col, DoubleType()))
         if value_col:
-            fields.append(StructField(v, DoubleType()))
-    out_schema = StructType(fields)
-    state_schema = StructType(
-        [
+            out_fields.append(StructField(v_col, DoubleType()))
+
+    def fold(slot, v):
+        slot[0] += 1
+        if v is not None:
+            # NULL values count toward decay_count but add nothing to
+            # the value sum — exactly the batch twin's SUM-skips-NULL
+            # behavior
+            slot[1] += int(_half_up(v, "1e-9").scaleb(9))
+            slot[2] += 1
+
+    def encode(live):
+        return (
+            [b for b, _ in live],
+            *([p[j] for _, p in live] for j in range(3)),
+        )
+
+    def emit(window):
+        # scale-0 HALF_UP on the shared double via shortest repr —
+        # bit-identical to Spark's round(double, 0) and DuckDB's
+        def _r0(x: float) -> int:
+            return int(_half_up(x, "1"))
+
+        def _to6(s9: int) -> float:
+            return _r0(s9 / 1000.0) / 1e6
+
+        cnt = sum(c for _, (c, _, _) in window)
+        vwin = sum(vc for _, (_, _, vc) in window)
+        row = {"decay_count": [cnt]}
+        for s_col, v_col, ws in decays:
+            score9 = sum(_r0(c * ws[d - 1] * 1e9) for d, (c, _, _) in window)
+            row[s_col] = [_to6(score9) if cnt else None]
+            if value_col:
+                sum9 = sum(_r0(v9 * ws[d - 1]) for d, (_, v9, _) in window)
+                # NULL when the window never saw a non-NULL value —
+                # the batch twin's SUM over all-NULLs is NULL, not 0.0
+                # (ADVICE r8 medium)
+                row[v_col] = [_to6(sum9) if vwin else None]
+        return row
+
+    return _bucketed_window(
+        stream_df, bucket_seconds, n_buckets, entity_col, ts_col, value_col,
+        skip_null_values=False,
+        out_fields=out_fields,
+        state_fields=[
             StructField("buckets", ArrayType(LongType())),
             StructField("counts", ArrayType(LongType())),
             StructField("vals9", ArrayType(LongType())),
@@ -577,104 +635,12 @@ def decayed_trailing_counter(
             # never saw a non-NULL value" (emit NULL, the batch twin's
             # SUM-over-all-NULLs result) — ADVICE r8 parity fix
             StructField("vcnts", ArrayType(LongType())),
-        ]
-    )
-
-    def update_fn(key, pdf_iter, state):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        if state.exists:
-            part = _unpack_decay_state(state.get, value_col)
-        else:
-            part = {}
-        for pdf in pdf_iter:
-            vals = pdf[value_col] if value_col else None
-            for i, t in enumerate(pdf[ts_col]):
-                if pd.isna(t):
-                    # batch-twin parity: a NULL-ts event has no bucket
-                    # and is excluded there too
-                    continue
-                sec = pd.Timestamp(t).value // 1_000_000_000
-                b = sec // g
-                mx = max(part) if part else None
-                if mx is not None and b < max(mx, b) - K:
-                    continue  # outside every future window
-                slot = part.setdefault(int(b), [0, 0, 0])
-                slot[0] += 1
-                if value_col and not pd.isna(vals.iloc[i]):
-                    # NULL values count toward decay_count but add
-                    # nothing to the value sum — exactly the batch
-                    # twin's SUM-skips-NULL behavior
-                    q = Decimal(repr(float(vals.iloc[i]))).quantize(
-                        Decimal("1e-9"), ROUND_HALF_UP
-                    )
-                    slot[1] += int(q.scaleb(9))
-                    slot[2] += 1
-        if not part:
-            # nothing bucketable ever arrived for this key (e.g. all
-            # NULL-ts rows) — no reference time exists, emit nothing
-            return
-        mx = max(part)
-        part = {b: cv for b, cv in part.items() if b > mx - K}
-        bks = sorted(part)
-        state.update(
-            (
-                [int(b) for b in bks],
-                [int(part[b][0]) for b in bks],
-                [int(part[b][1]) for b in bks],
-                [int(part[b][2]) for b in bks],
-            )
-        )
-        r = mx + 1
-
-        def _r0(x: float) -> int:
-            # scale-0 HALF_UP on the shared double via shortest repr —
-            # bit-identical to Spark's round(double, 0) and DuckDB's
-            return int(
-                Decimal(repr(float(x))).quantize(
-                    Decimal("1"), ROUND_HALF_UP
-                )
-            )
-
-        cnt = 0
-        vwin = 0
-        score9 = [0] * len(hls)
-        sum9 = [0] * len(hls)
-        for b, (c, v9, vc) in part.items():
-            d = r - b
-            if 1 <= d <= K:
-                cnt += c
-                vwin += vc
-                for i, ws in enumerate(weights_by_hl):
-                    w = ws[d - 1]
-                    score9[i] += _r0(c * w * 1e9)
-                    if value_col:
-                        sum9[i] += _r0(float(v9) * w)
-
-        def _to6(s9: int) -> float:
-            return _r0(s9 / 1000.0) / 1e6
-
-        row = {
-            entity_col: [key[0]],
-            "ref_ts": [pd.Timestamp(r * g, unit="s")],
-            "decay_count": [int(cnt)],
-        }
-        for i, hl in enumerate(hls):
-            s_col, v_col = hl_cols(hl)
-            row[s_col] = [_to6(score9[i]) if cnt else None]
-            if value_col:
-                # NULL when the window never saw a non-NULL value —
-                # the batch twin's SUM over all-NULLs is NULL, not 0.0
-                # (ADVICE r8 medium)
-                row[v_col] = [_to6(sum9[i]) if vwin else None]
-        yield pd.DataFrame(row)
-
-    return stream_df.groupBy(entity_col).applyInPandasWithState(
-        update_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        ],
+        new=lambda: [0, 0, 0],
+        fold=fold,
+        decode=lambda st: _unpack_decay_state(st, value_col),
+        encode=encode,
+        emit=emit,
     )
 
 
@@ -699,7 +665,7 @@ def decayed_count_batch(
 
     Output: ``(entity, decayed_count, ref_ts)``.
     """
-    hl_us = float(half_life_seconds) * 1e6
+    hl_us = _half_life_us(half_life_seconds)
     refs = df.groupBy(entity_col).agg(F.max(ts_col).alias("ref_ts"))
     # exact bigint microsecond difference (timestampdiff works for NTZ
     # and TZ alike; DuckDB's date_diff('microsecond', ...) is its
@@ -849,115 +815,9 @@ def trailing_topk_counter(
     bucket r) emits one ``rank=1, item=NULL`` row — the batch twin's
     empty-window sentinel.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampNTZType,
-    )
-
-    g = int(bucket_seconds)
-    K = int(n_buckets)
-    if g <= 0 or K <= 0:
-        raise ValueError("bucket_seconds and n_buckets must be > 0")
-    if k <= 0:
-        raise ValueError("k must be > 0")
-    entity_type = stream_df.schema[entity_col].dataType
-    item_type = stream_df.schema[item_col].dataType
-    out_schema = StructType(
-        [
-            StructField(entity_col, entity_type),
-            StructField("ref_ts", TimestampNTZType()),
-            StructField("rank", LongType()),
-            StructField("item", item_type),
-            StructField("item_count", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("buckets", ArrayType(LongType())),
-            StructField("items", ArrayType(item_type)),
-            StructField("counts", ArrayType(LongType())),
-        ]
-    )
-
-    def update_fn(key, pdf_iter, state):
-        if state.exists:
-            bks, its, cts = state.get
-            part: dict = {}
-            for b, it, c in zip(bks, its, cts):
-                part.setdefault(b, {})[it] = c
-        else:
-            part = {}
-        for pdf in pdf_iter:
-            items = pdf[item_col]
-            for i, t in enumerate(pdf[ts_col]):
-                it = items.iloc[i]
-                if pd.isna(t) or it is None or (
-                    isinstance(it, float) and pd.isna(it)
-                ):
-                    continue  # batch parity: NULLs never count
-                sec = pd.Timestamp(t).value // 1_000_000_000
-                b = int(sec // g)
-                mx = max(part) if part else None
-                if mx is not None and b < max(mx, b) - K:
-                    continue  # outside every future window
-                slot = part.setdefault(b, {})
-                slot[it] = slot.get(it, 0) + 1
-        if not part:
-            return  # nothing bucketable ever arrived for this key
-        mx = max(part)
-        part = {b: d for b, d in part.items() if b > mx - K}
-        flat = [
-            (b, it, c)
-            for b in sorted(part)
-            for it, c in sorted(part[b].items())
-        ]
-        state.update(
-            (
-                [int(b) for b, _, _ in flat],
-                [it for _, it, _ in flat],
-                [int(c) for _, _, c in flat],
-            )
-        )
-        r = mx + 1
-        merged: dict = {}
-        for b, d in part.items():
-            if 1 <= r - b <= K:
-                for it, c in d.items():
-                    merged[it] = merged.get(it, 0) + c
-        ref = pd.Timestamp(r * g, unit="s")
-        if not merged:
-            yield pd.DataFrame(
-                {
-                    entity_col: [key[0]],
-                    "ref_ts": [ref],
-                    "rank": [1],
-                    "item": [None],
-                    "item_count": [None],
-                }
-            )
-            return
-        top = sorted(merged.items(), key=lambda x: (-x[1], x[0]))[:k]
-        yield pd.DataFrame(
-            {
-                entity_col: [key[0]] * len(top),
-                "ref_ts": [ref] * len(top),
-                "rank": list(range(1, len(top) + 1)),
-                "item": [it for it, _ in top],
-                "item_count": [c for _, c in top],
-            }
-        )
-
-    return stream_df.groupBy(entity_col).applyInPandasWithState(
-        update_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _topk_counter(
+        stream_df, bucket_seconds, n_buckets, item_col, k, None,
+        entity_col, ts_col,
     )
 
 
@@ -990,7 +850,8 @@ def trailing_topk_counter_capped(
     UNDERSHOOT by at most Σ_b ⌊N_b/capacity⌋ over buckets where the
     item went untracked. With ``capacity`` ≥ the bucket's distinct
     item count, no eviction ever fires and the output is BIT-EQUAL to
-    the exact twin with ``max_overcount=0`` (pinned by test).
+    the exact twin with ``max_overcount=0`` (pinned by test) — the
+    two share one body, ``_topk_counter``.
 
     Unlike the exact twin, results are ARRIVAL-ORDER dependent once
     eviction fires (inherent to SpaceSaving — evictions depend on
@@ -1004,142 +865,96 @@ def trailing_topk_counter_capped(
     Emits up to ``k`` rows ``(entity, ref_ts, rank, item, item_count,
     max_overcount)`` per updated entity per micro-batch; empty-window
     sentinel as the exact twin."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-        TimestampNTZType,
+    return _topk_counter(
+        stream_df, bucket_seconds, n_buckets, item_col, k, int(capacity),
+        entity_col, ts_col,
     )
 
-    g = int(bucket_seconds)
-    K = int(n_buckets)
-    m = int(capacity)
-    if g <= 0 or K <= 0:
-        raise ValueError("bucket_seconds and n_buckets must be > 0")
+
+def _topk_counter(
+    stream_df, bucket_seconds, n_buckets, item_col, k, capacity,
+    entity_col, ts_col,
+):
+    """The one top-k body: per-bucket ``{item: [count, err]}``
+    summaries, SpaceSaving-capped at ``capacity`` counters per bucket
+    (``None``: exact, never evicts, so every err stays 0). The exact
+    state drops the errs array and the exact output the
+    ``max_overcount`` column — each public name keeps its own
+    checkpoint format and schema."""
+    capped = capacity is not None
     if k <= 0:
         raise ValueError("k must be > 0")
-    if m < k:
+    if capped and capacity < k:
         raise ValueError(
-            f"capacity={m} < k={k}: the summary cannot even hold the "
-            "answer; SpaceSaving needs capacity >= k (and in practice "
-            "a healthy multiple of it)"
+            f"capacity={capacity} < k={k}: the summary cannot even hold "
+            "the answer; SpaceSaving needs capacity >= k (and in "
+            "practice a healthy multiple of it)"
         )
-    entity_type = stream_df.schema[entity_col].dataType
     item_type = stream_df.schema[item_col].dataType
-    out_schema = StructType(
-        [
-            StructField(entity_col, entity_type),
-            StructField("ref_ts", TimestampNTZType()),
-            StructField("rank", LongType()),
-            StructField("item", item_type),
-            StructField("item_count", LongType()),
-            StructField("max_overcount", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("buckets", ArrayType(LongType())),
-            StructField("items", ArrayType(item_type)),
-            StructField("counts", ArrayType(LongType())),
-            StructField("errs", ArrayType(LongType())),
-        ]
-    )
+    out_fields = [
+        StructField("rank", LongType()),
+        StructField("item", item_type),
+        StructField("item_count", LongType()),
+    ]
+    state_fields = [
+        StructField("buckets", ArrayType(LongType())),
+        StructField("items", ArrayType(item_type)),
+        StructField("counts", ArrayType(LongType())),
+    ]
+    if capped:
+        out_fields.append(StructField("max_overcount", LongType()))
+        state_fields.append(StructField("errs", ArrayType(LongType())))
 
-    def update_fn(key, pdf_iter, state):
-        if state.exists:
-            bks, its, cts, ers = state.get
-            part: dict = {}
-            for b, it, c, e in zip(bks, its, cts, ers):
-                part.setdefault(b, {})[it] = [c, e]
+    def decode(st):
+        part = _nest(st)
+        if not capped:  # the exact layout stores no errs: all are 0
+            for slot in part.values():
+                for ce in slot.values():
+                    ce.append(0)
+        return part
+
+    def fold(slot, it):
+        if it in slot:
+            slot[it][0] += 1
+        elif not capped or len(slot) < capacity:
+            slot[it] = [1, 0]
         else:
-            part = {}
-        for pdf in pdf_iter:
-            items = pdf[item_col]
-            for i, t in enumerate(pdf[ts_col]):
-                it = items.iloc[i]
-                if pd.isna(t) or it is None or (
-                    isinstance(it, float) and pd.isna(it)
-                ):
-                    continue  # batch parity: NULLs never count
-                sec = pd.Timestamp(t).value // 1_000_000_000
-                b = int(sec // g)
-                mx = max(part) if part else None
-                if mx is not None and b < max(mx, b) - K:
-                    continue  # outside every future window
-                slot = part.setdefault(b, {})
-                if it in slot:
-                    slot[it][0] += 1
-                elif len(slot) < m:
-                    slot[it] = [1, 0]
-                else:
-                    # SpaceSaving eviction: min count, largest item
-                    # breaks ties (any fixed rule keeps a given
-                    # arrival order deterministic)
-                    evict = min(
-                        slot.items(), key=lambda x: (x[1][0], _inv(x[0]))
-                    )
-                    floor = evict[1][0]
-                    del slot[evict[0]]
-                    slot[it] = [floor + 1, floor]
-        if not part:
-            return  # nothing bucketable ever arrived for this key
-        mx = max(part)
-        part = {b: d for b, d in part.items() if b > mx - K}
-        flat = [
-            (b, it, ce[0], ce[1])
-            for b in sorted(part)
-            for it, ce in sorted(part[b].items())
-        ]
-        state.update(
-            (
-                [int(b) for b, _, _, _ in flat],
-                [it for _, it, _, _ in flat],
-                [int(c) for _, _, c, _ in flat],
-                [int(e) for _, _, _, e in flat],
-            )
-        )
-        r = mx + 1
-        merged: dict = {}
-        for b, d in part.items():
-            if 1 <= r - b <= K:
-                for it, (c, e) in d.items():
-                    est = merged.setdefault(it, [0, 0])
-                    est[0] += c
-                    est[1] += e
-        ref = pd.Timestamp(r * g, unit="s")
-        if not merged:
-            yield pd.DataFrame(
-                {
-                    entity_col: [key[0]],
-                    "ref_ts": [ref],
-                    "rank": [1],
-                    "item": [None],
-                    "item_count": [None],
-                    "max_overcount": [None],
-                }
-            )
-            return
-        top = sorted(merged.items(), key=lambda x: (-x[1][0], x[0]))[:k]
-        yield pd.DataFrame(
-            {
-                entity_col: [key[0]] * len(top),
-                "ref_ts": [ref] * len(top),
-                "rank": list(range(1, len(top) + 1)),
-                "item": [it for it, _ in top],
-                "item_count": [ce[0] for _, ce in top],
-                "max_overcount": [ce[1] for _, ce in top],
-            }
-        )
+            # SpaceSaving eviction: min count, largest item breaks ties
+            # (any fixed rule keeps a given arrival order deterministic)
+            evict = min(slot.items(), key=lambda x: (x[1][0], _inv(x[0])))
+            floor = evict[1][0]
+            del slot[evict[0]]
+            slot[it] = [floor + 1, floor]
 
-    return stream_df.groupBy(entity_col).applyInPandasWithState(
-        update_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def emit(window):
+        merged: dict = {}
+        for _, slot in window:
+            for it, (c, e) in slot.items():
+                est = merged.setdefault(it, [0, 0])
+                est[0] += c
+                est[1] += e
+        top = sorted(merged.items(), key=lambda x: (-x[1][0], x[0]))[:k]
+        # an empty window emits the batch twin's sentinel row:
+        # rank 1 with a NULL item and NULL counts
+        cols = {
+            "rank": list(range(1, len(top) + 1)) or [1],
+            "item": [it for it, _ in top] or [None],
+            "item_count": [ce[0] for _, ce in top] or [None],
+        }
+        if capped:
+            cols["max_overcount"] = [ce[1] for _, ce in top] or [None]
+        return cols
+
+    return _bucketed_window(
+        stream_df, bucket_seconds, n_buckets, entity_col, ts_col, item_col,
+        skip_null_values=True,
+        out_fields=out_fields,
+        state_fields=state_fields,
+        new=dict,
+        fold=fold,
+        decode=decode,
+        encode=lambda live: _flatten(live, len(state_fields)),
+        emit=emit,
     )
 
 

@@ -6,6 +6,7 @@ import os
 import tempfile
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -2417,3 +2418,206 @@ def test_second_stream_into_existing_state_applies_its_batches(spark, tmp_path):
         ).collect()
     }
     assert again == want_cms
+
+
+_BAD_WINDOW_ARGS = {
+    "distinct_g0": lambda w, st, b: w.trailing_distinct_counter(
+        st, bucket_seconds=0, n_buckets=4, value_col="item"
+    ),
+    "decayed_trailing_g0": lambda w, st, b: w.decayed_trailing_counter(
+        st, bucket_seconds=0, n_buckets=4, half_life_seconds=60.0
+    ),
+    "decayed_trailing_k0": lambda w, st, b: w.decayed_trailing_counter(
+        st, bucket_seconds=60, n_buckets=0, half_life_seconds=60.0
+    ),
+    "decayed_counter_hl0": lambda w, st, b: w.decayed_counter(
+        st, half_life_seconds=0.0
+    ),
+    "decayed_count_batch_hl0": lambda w, st, b: w.decayed_count_batch(
+        b, half_life_seconds=0.0
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_WINDOW_ARGS))
+def test_counters_reject_bad_window_args_at_construction(spark, tmp_path, case):
+    """A zero bucket width, bucket count or half-life is rejected with
+    a ValueError when the operator is built — not a ZeroDivisionError
+    inside the Python worker mid-stream, nor all-zero counts."""
+    from embeddinghub_spark.streaming import windows
+
+    schema = "entity STRING, ts TIMESTAMP, item STRING"
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path))
+    batch = spark.createDataFrame([], schema)
+    with pytest.raises(ValueError, match="must be > 0"):
+        _BAD_WINDOW_ARGS[case](windows, stream, batch)
+
+
+def _resume_cases():
+    """name -> (build(stream), batch twin(labels, events) -> {entity:
+    [row tuple, ...]} or None, the output columns compared)."""
+    from embeddinghub_spark.operators import pit
+    from embeddinghub_spark.streaming import windows as w
+
+    g, K, k = 60, 6, 3
+
+    def ranks(df):
+        out: dict = {}
+        for r in df.collect():
+            out.setdefault(r["entity"], []).append(
+                (r["rank"], r["item"], r["item_count"])
+            )
+        return {e: sorted(v) for e, v in out.items()}
+
+    def topk_batch(labels, ev):
+        return ranks(pit.trailing_topk_features(
+            labels, ev, bucket_seconds=g, n_buckets=K, item_col="item", k=k
+        ))
+
+    return {
+        "trailing_distinct_counter": (
+            lambda st: w.trailing_distinct_counter(
+                st, bucket_seconds=g, n_buckets=K, value_col="item"
+            ),
+            lambda lab, ev: {
+                r["entity"]: [(r["approx_distinct"],
+                               r["approx_distinct_buckets_used"])]
+                for r in pit.trailing_distinct_features(
+                    lab, ev, bucket_seconds=g, n_buckets=K, value_col="item"
+                ).collect()
+            },
+            ("approx_distinct", "buckets_used"),
+        ),
+        "decayed_trailing_counter": (
+            lambda st: w.decayed_trailing_counter(
+                st, bucket_seconds=g, n_buckets=K, half_life_seconds=180.0,
+                value_col="value",
+            ),
+            lambda lab, ev: {
+                r["entity"]: [(r["decay_count"], r["decay_score"],
+                               r["decay_sum"])]
+                for r in pit.decayed_trailing_features(
+                    lab, ev, bucket_seconds=g, n_buckets=K,
+                    half_life_seconds=180.0, value_col="value",
+                ).collect()
+            },
+            ("decay_count", "decay_score", "decay_sum"),
+        ),
+        "trailing_topk_counter": (
+            lambda st: w.trailing_topk_counter(
+                st, bucket_seconds=g, n_buckets=K, item_col="item", k=k
+            ),
+            topk_batch,
+            ("rank", "item", "item_count"),
+        ),
+        "trailing_topk_counter_capped": (
+            lambda st: w.trailing_topk_counter_capped(
+                st, bucket_seconds=g, n_buckets=K, item_col="item", k=k,
+                capacity=64,
+            ),
+            topk_batch,
+            ("rank", "item", "item_count"),
+        ),
+        "decayed_counter": (
+            lambda st: w.decayed_counter(st, half_life_seconds=600.0),
+            None,
+            ("decayed_count",),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "trailing_distinct_counter",
+        "decayed_trailing_counter",
+        "trailing_topk_counter",
+        "trailing_topk_counter_capped",
+        "decayed_counter",
+    ],
+)
+def test_counter_resumes_from_same_checkpoint(spark, tmp_path, name):
+    """The state round trip across a query restart: drain half the
+    input files, stop, add the rest and restart on the SAME
+    checkpointLocation. The last rows emitted per entity equal those
+    of one uninterrupted run over all files, and the batch twin's
+    answer at the stream's reference time."""
+    from datetime import timedelta
+
+    from embeddinghub_spark.streaming.windows import decayed_count_batch
+
+    build, batch_twin, cols = _resume_cases()[name]
+    base = datetime(2024, 1, 1)
+    rows = [
+        (
+            f"u{i % 4}",
+            base + timedelta(seconds=(i * 131) % 900),
+            round(((i * 7) % 50) / 10.0 - 2.5, 3),
+            ["x", "y", "z", "w", None][i % 5],
+        )
+        for i in range(160)
+    ]
+    schema = "entity STRING, ts TIMESTAMP, value DOUBLE, item STRING"
+    in_dir = str(tmp_path / "in")
+
+    def add_files(part):
+        spark.createDataFrame(part, schema).repartition(2).write.mode(
+            "append"
+        ).parquet(in_dir)
+
+    def run(ckpt):
+        last: dict = {}
+
+        def drain(bdf, _):
+            fresh: dict = {}
+            for r in bdf.collect():
+                fresh.setdefault(r["entity"], []).append(
+                    tuple(r[c] for c in cols) + (r["ref_ts"],)
+                )
+            last.update({e: sorted(v) for e, v in fresh.items()})
+
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(in_dir)
+        )
+        q = (
+            build(stream).writeStream.foreachBatch(drain)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(180)
+        assert q.exception() is None
+        return last
+
+    ckpt = str(tmp_path / "ckpt")
+    add_files(rows[:80])
+    first = run(ckpt)
+    assert first
+    add_files(rows[80:])
+    resumed = {**first, **run(ckpt)}
+    once = run(str(tmp_path / "ckpt_once"))
+    assert set(resumed) == set(once) == {"u0", "u1", "u2", "u3"}
+
+    events = spark.read.parquet(in_dir)
+    if batch_twin is None:  # decayed_counter: a raw double fold
+        want = {
+            r["entity"]: (r["decayed_count"], r["ref_ts"])
+            for r in decayed_count_batch(
+                events, half_life_seconds=600.0
+            ).collect()
+        }
+        for e, ((s, ref),) in resumed.items():
+            assert s == pytest.approx(once[e][0][0], rel=1e-12), e
+            assert ref == once[e][0][1] == want[e][1], e
+            assert abs(s - want[e][0]) < 1e-6, (e, s, want[e])
+        return
+    assert resumed == once
+    labels = spark.createDataFrame(
+        [(e, v[0][-1]) for e, v in resumed.items()], ["entity", "ts"]
+    )
+    want = batch_twin(labels, events)
+    got = {e: [r[:-1] for r in v] for e, v in resumed.items()}
+    assert got == want

@@ -675,3 +675,42 @@ def test_bucketed_merge_sweeps_stale_temp_link(spark, tmp_path):
         for r in read_bucketed_snapshot(spark, target).collect()
     }
     assert got == {"u1": 2.0}
+
+
+def test_bucketed_merge_migrates_legacy_plain_dir_snapshot(spark, tmp_path):
+    """A snapshot seeded as a PLAIN parquet dir (outside the symlink
+    protocol) is folded in as the legacy base on the first bucketed
+    merge: its rows survive newest-wins, the target becomes a symlink
+    and no temp ``.link-*`` is left behind."""
+    import datetime as dt
+    import glob
+
+    from embeddinghub_spark.sources.tables import (
+        merge_materialization_bucketed_dir,
+        read_bucketed_snapshot,
+    )
+
+    target = str(tmp_path / "snap")
+    t0 = dt.datetime(2024, 1, 1)
+    old = spark.createDataFrame(
+        [(f"u{i}", float(i), t0) for i in range(6)], ["entity", "value", "ts"]
+    )
+    old.write.parquet(target)
+    upd = spark.createDataFrame(
+        [("u1", 10.0, dt.datetime(2024, 1, 2)), ("u9", 9.0, t0),
+         ("u2", -2.0, dt.datetime(2023, 1, 1))],
+        ["entity", "value", "ts"],
+    )
+    merge_materialization_bucketed_dir(spark, target, upd, n_buckets=4)
+
+    assert os.path.islink(target)
+    assert glob.glob(target + ".link-*") == []
+    got = {
+        r["entity"]: r["value"]
+        for r in read_bucketed_snapshot(spark, target).collect()
+    }
+    expected = {
+        r["entity"]: r["value"]
+        for r in materialize(old.unionByName(upd)).collect()
+    }
+    assert got == expected
