@@ -13,25 +13,242 @@ instead, which collapses the expand entirely.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType, TimestampNTZType, TimestampType
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
-# HyperLogLog register geometry (hll_profile): md5 supplies the hash —
-# 3 hex chars (12 bits) pick the register, the next 13 hex chars
-# (52 bits) feed the leading-zero rank, so every quantity is exact
-# 64-bit integer arithmetic until one final scalar division.
+# ---------------------------------------------------------------------
+# Sketch core. Each sketch's register/bin column, merge and estimate is
+# written once here and used by the batch sketches below, the streaming
+# stores (streaming/distinct_by, cms_by, psi_monitor), the PIT feature
+# (operators/pit.trailing_distinct_features) and the stateful worker
+# (streaming/windows.trailing_distinct_counter); the DuckDB oracles
+# replay the same arithmetic verbatim.
+# ---------------------------------------------------------------------
+
+# HyperLogLog register geometry: md5 supplies the hash — 3 hex chars
+# (12 bits) pick the register, the next 13 hex chars (52 bits) feed the
+# leading-zero rank, so every quantity is exact integer arithmetic
+# until one final scalar division.
 _HLL_BUCKET_HEX = 3
 _HLL_VALUE_HEX = 13
 _HLL_VALUE_BITS = 4 * _HLL_VALUE_HEX  # 52
 _HLL_RHO_CAP = _HLL_VALUE_BITS + 1  # 53: rho for a 0-valued suffix
+# The harmonic-mean denominator S = Σ 2^(53 - rho) + empties·2^53
+# reaches m·2^53, past 2^63 from p = 11 on (p = 10 in an empty PIT
+# window): it is summed exactly in DECIMAL(38,0), then cast to double
+# once.
+_EXACT = "decimal(38,0)"
 
 
 def _hll_alpha(m: int) -> float:
     """Flajolet et al. 2007 bias constant for m >= 128 registers."""
     return 0.7213 / (1.0 + 1.079 / m)
+
+
+def _hll_check(df: DataFrame | None, col: str | None, p: int, op: str) -> None:
+    """Construction-time guards of every HLL entry point: ``p`` in
+    [7, 12] (bucket bits fit the 12 hash bits reserved for them and
+    m >= 128 keeps ``_hll_alpha`` valid), and no fractional ``col`` —
+    values hash as their string rendering, exact for
+    integer/string/bool/date but engine-specific for floats (Spark
+    renders 1e20 as '1.0E20', Python as '1e+20')."""
+    if not 7 <= p <= 12:
+        raise ValueError(f"p={p} outside [7, 12]")
+    if col is None:
+        return
+    dt = df.schema[col].dataType
+    if dt.typeName() in ("float", "double", "decimal"):
+        raise ValueError(
+            f"{op}: column {col!r} is {dt.simpleString()}; fractional "
+            "string renderings are engine-specific — hash a stable "
+            "encoding instead"
+        )
+
+
+def _hll_merge(rho: str) -> list[Column]:
+    """The register merge feeding the estimate: ``_s_used``, the exact
+    Σ 2^(53 - rho) over used registers, and ``_used``, their count. A
+    NULL ``rho`` (a probe that matched no register) counts as empty."""
+    term = F.expr(f"shiftleft(1L, {_HLL_RHO_CAP} - {rho})").cast(_EXACT)
+    return [
+        F.coalesce(F.sum(term), F.lit(0).cast(_EXACT)).alias("_s_used"),
+        F.count(rho).alias("_used"),
+    ]
+
+
+def _hll_estimate_cols(p: int) -> tuple[Column, Column]:
+    """``(estimate, n_empty_buckets)`` over the ``_hll_merge`` columns:
+    alpha·m²·2^53 / S, switched to linear counting m·ln(m/empties)
+    while the raw estimate is <= 2.5·m and a register is empty, round 3
+    (HALF_UP). ``_hll_estimate`` is its Python twin."""
+    m = 1 << p
+    empties = (F.lit(m) - F.col("_used")).cast("bigint")
+    s_total = F.col("_s_used") + empties.cast(_EXACT) * F.lit(
+        1 << _HLL_RHO_CAP
+    ).cast(_EXACT)
+    c1 = _hll_alpha(m) * m * m * float(1 << _HLL_RHO_CAP)
+    raw = F.lit(c1) / s_total.cast("double")
+    est = F.when(
+        (raw <= F.lit(2.5 * m)) & (empties > 0),
+        F.lit(float(m)) * F.log(F.lit(float(m)) / empties.cast("double")),
+    ).otherwise(raw)
+    return F.round(est, 3), empties
+
+
+def _hll_estimate(rhos, p: int) -> float:
+    """Python twin of ``_hll_estimate_cols`` over the max rho of each
+    used register, before the round (Python ints are exact, so S needs
+    no care)."""
+    rhos = list(rhos)
+    m = 1 << p
+    empties = m - len(rhos)
+    s_total = sum(1 << (_HLL_RHO_CAP - r) for r in rhos) + empties * (
+        1 << _HLL_RHO_CAP
+    )
+    raw = _hll_alpha(m) * m * m * float(1 << _HLL_RHO_CAP) / float(s_total)
+    if raw <= 2.5 * m and empties > 0:
+        return m * math.log(m / float(empties))
+    return raw
+
+
+def _hll_estimate_by(registers: DataFrame, group_cols: list[str], p: int) -> DataFrame:
+    """``(*group_cols, approx_ndv, n_empty_buckets)`` from a
+    ``hll_register_frame`` table (or any union of them: registers
+    merge by max)."""
+    est, empties = _hll_estimate_cols(p)
+    return (
+        registers.groupBy(*group_cols)
+        .agg(*_hll_merge("max_rho"))
+        .select(
+            *group_cols,
+            est.alias("approx_ndv"),
+            empties.alias("n_empty_buckets"),
+        )
+    )
+
+
+def _cms_check(depth: int, width: int) -> None:
+    """Count-min guards: width=0 would surface as a modulo-by-zero deep
+    in the exchange, depth=0 as a silently empty sketch."""
+    if depth < 1 or width < 1:
+        raise ValueError(
+            f"count-min sketch needs depth/width >= 1 (got {depth}/{width})"
+        )
+
+
+def _cms_rows(tok: Column, depth: int, width: int) -> Column:
+    """The ``depth`` counter buckets of a token, as an array indexed by
+    row: row d hashes ``'{d}:' || token`` (md5-prefix bigint) mod
+    ``width``."""
+    from embeddinghub_spark.functions.dedup import _md5_long
+
+    return F.array(*[
+        _md5_long(F.concat(F.lit(f"{d}:"), tok)) % width for d in range(depth)
+    ])
+
+
+def _with_bounds(df: DataFrame, bounds: DataFrame, keys: list[str]) -> DataFrame:
+    """Attach the broadcast bounds: per group on ``keys``, else the
+    one row."""
+    b = F.broadcast(bounds)
+    return df.join(b, keys) if keys else df.crossJoin(b)
+
+
+def _bin_counts(
+    df: DataFrame,
+    keys: list[str],
+    value_col: str,
+    bounds: DataFrame,
+    n_bins: int,
+) -> DataFrame:
+    """``(*keys, _bin, _cnt)``: the non-NULL values of ``value_col`` (as
+    double) counted per equal-width bin of the ``[_lo, _hi]`` grid in
+    ``bounds``. Out-of-range values clamp to the edge bins; a
+    degenerate grid (``_hi == _lo``) puts everything in bin 0. Counts
+    merge by +, and the exchange carries <= |groups| × n_bins rows per
+    task."""
+    lo, hi = F.col("_lo"), F.col("_hi")
+    width = (hi - lo) / F.lit(float(n_bins))
+    bin_ = F.when(hi == lo, F.lit(0)).otherwise(
+        F.greatest(
+            F.lit(0),
+            F.least(
+                F.lit(n_bins - 1),
+                F.floor((F.col("_x") - lo) / width).cast("int"),
+            ),
+        )
+    )
+    x = df.select(*keys, F.col(value_col).cast("double").alias("_x"))
+    return (
+        _with_bounds(x.filter(F.col("_x").isNotNull()), bounds, keys)
+        .select(*keys, bin_.alias("_bin"))
+        .groupBy(*keys, "_bin")
+        .agg(F.count(F.lit(1)).alias("_cnt"))
+    )
+
+
+def _quantile_pick(
+    bins: DataFrame,
+    bounds: DataFrame,
+    keys: list[str],
+    quantiles: list[float],
+    n_bins: int,
+) -> DataFrame:
+    """``(*keys, quantile, value)`` from ``(*keys, _bin, _cnt)`` counts
+    on the ``bounds`` grid ``(*keys, _lo, _hi, _n)``: each q
+    interpolates linearly inside the first bin whose cumulative count
+    reaches q·n, clamped to ``_hi`` and rounded to 6 (HALF_UP); a
+    degenerate grid answers ``_lo``. The windows run on the bin frame
+    (<= |groups| × n_bins rows), never the data."""
+    width = (F.col("_hi") - F.col("_lo")) / F.lit(float(n_bins))
+    w = Window.partitionBy(*keys).orderBy("_bin").rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    cum = _with_bounds(
+        bins.withColumn("_cum", F.sum("_cnt").over(w)).withColumn(
+            "_cum_before", F.col("_cum") - F.col("_cnt")
+        ),
+        bounds,
+        keys,
+    )
+    qdf = bins.sparkSession.createDataFrame(
+        [(float(q),) for q in sorted(quantiles)], "quantile double"
+    )
+    hits = (
+        cum.crossJoin(F.broadcast(qdf))
+        .withColumn("_t", F.col("quantile") * F.col("_n").cast("double"))
+        .filter(F.col("_cum").cast("double") >= F.col("_t"))
+    )
+    pick = Window.partitionBy(*keys, "quantile").orderBy("_bin")
+    est = (
+        F.col("_lo")
+        + F.col("_bin").cast("double") * width
+        + F.when(
+            F.col("_cnt") > 0,
+            (F.col("_t") - F.col("_cum_before").cast("double"))
+            / F.col("_cnt").cast("double")
+            * width,
+        ).otherwise(F.lit(0.0))
+    )
+    return (
+        hits.withColumn("_rn", F.row_number().over(pick))
+        .filter(F.col("_rn") == 1)
+        .select(
+            *keys,
+            F.col("quantile"),
+            F.round(
+                F.when(F.col("_hi") == F.col("_lo"), F.col("_lo")).otherwise(
+                    F.least(F.col("_hi"), est)
+                ),
+                6,
+            ).alias("value"),
+        )
+    )
 
 
 def profile_table(
@@ -139,21 +356,9 @@ def hll_profile(df: DataFrame, columns: list[str] | None = None, p: int = 9) -> 
     Output: ``(column, approx_ndv, n_empty_buckets)``, one row per
     profiled column. Standard error ≈ 1.04/√m (~4.6% at p=9).
     """
-    if not 7 <= p <= 12:
-        # bucket bits must fit the 12 hash bits reserved for them and
-        # keep m >= 128 so _hll_alpha's constant applies
-        raise ValueError(f"p={p} outside [7, 12]")
     cols = columns or df.columns
     for c in cols:
-        dt = df.schema[c].dataType
-        if dt.typeName() in ("float", "double", "decimal"):
-            raise ValueError(
-                f"hll_profile: column {c!r} is {dt.simpleString()}; "
-                "fractional string renderings are engine-specific — "
-                "hash a stable encoding (e.g. cast to string with "
-                "explicit format) instead"
-            )
-    m = 1 << p
+        _hll_check(df, c, p, "hll_profile")
     pairs = F.array(*[
         F.struct(
             F.lit(c).alias("column"), F.col(c).cast("string").alias("val")
@@ -167,64 +372,17 @@ def hll_profile(df: DataFrame, columns: list[str] | None = None, p: int = 9) -> 
     # cluster the scan has >= cores splits and this branch never
     # fires, so no shuffle is added at scale (and the register
     # exchange itself always stays <= columns x m rows per task,
-    # map-side combined).
+    # map-side combined). Measured 4.9 s -> ~1.5 s for 600k rows x 4
+    # columns at sf0.1.
     sc = df.sparkSession.sparkContext
     df = df.select(*cols)  # prune BEFORE any fan-out shuffle
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         df = df.repartition(sc.defaultParallelism)
-    # md5 and the 52-bit rank value are each materialized ONCE via
-    # chained projections (an alias referenced more than once blocks
-    # CollapseProject from inlining it): computing bucket/v/rho as
-    # sibling expressions re-evaluated the hash 3x per exploded row —
-    # measured 6.2 s -> 4.9 s warm for 600k rows x 4 columns at
-    # sf0.1, and 4.9 s -> ~1.5 s with the fan-out above
-    registers = (
-        df.select(F.explode(pairs).alias("pair"))
-        .filter(F.col("pair.val").isNotNull())
-        .select(
-            F.col("pair.column").alias("column"),
-            F.md5(F.col("pair.val")).alias("_h"),
-        )
-        .select(
-            "column",
-            F.expr(
-                f"pmod(cast(conv(substr(_h, 1, {_HLL_BUCKET_HEX}), 16, 10)"
-                f" as bigint), {m})"
-            ).alias("bucket"),
-            F.expr(
-                f"cast(conv(substr(_h, {_HLL_BUCKET_HEX + 1},"
-                f" {_HLL_VALUE_HEX}), 16, 10) as bigint)"
-            ).alias("_v"),
-        )
-        .select(
-            "column",
-            "bucket",
-            F.when(F.col("_v") == 0, F.lit(_HLL_RHO_CAP))
-            .otherwise(F.lit(_HLL_VALUE_BITS + 1) - F.length(F.bin("_v")))
-            .alias("rho"),
-        )
-        .groupBy("column", "bucket")
-        .agg(F.max("rho").alias("max_rho"))
+    exploded = df.select(F.explode(pairs).alias("_pair")).select(
+        F.col("_pair.column").alias("column"), F.col("_pair.val").alias("val")
     )
-    # S over ALL m registers: used buckets contribute 2^(53-max_rho),
-    # the (m - used) empty registers contribute 2^53 each — computed
-    # arithmetically instead of materializing empty register rows
-    per_col = registers.groupBy("column").agg(
-        F.sum(F.expr(f"shiftleft(1L, {_HLL_RHO_CAP} - max_rho)")).alias("_s_used"),
-        F.count(F.lit(1)).alias("_used"),
-    )
-    c1 = _hll_alpha(m) * m * m * float(1 << _HLL_RHO_CAP)
-    s_total = F.col("_s_used") + (F.lit(m) - F.col("_used")) * F.lit(1 << _HLL_RHO_CAP).cast("bigint")
-    empties = (F.lit(m) - F.col("_used")).cast("bigint")
-    raw = F.lit(c1) / s_total.cast("double")
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (empties > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / empties.cast("double")),
-    ).otherwise(raw)
-    return per_col.select(
-        F.col("column"),
-        F.round(est, 3).alias("approx_ndv"),
-        empties.alias("n_empty_buckets"),
+    return _hll_estimate_by(
+        hll_register_frame(exploded, ["column"], "val", p), ["column"], p
     )
 
 
@@ -243,6 +401,12 @@ def hll_register_frame(
     the batch sketch, the streaming twin, and the PIT feature (and
     their oracles). Output: ``(*group_cols, bucket, max_rho)`` —
     one map-side-combined exchange, ≤ |groups| × 2^p rows.
+
+    md5 and the 52-bit rank value are each materialized ONCE via
+    chained projections (an alias referenced more than once blocks
+    CollapseProject from inlining it): sibling expressions re-evaluated
+    the hash 3x per row — measured 6.2 s -> 4.9 s warm for 600k rows x
+    4 columns in ``hll_profile`` at sf0.1.
     """
     m = 1 << p
     return (
@@ -305,35 +469,9 @@ def hll_distinct_by(
     """
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
-    if not 7 <= p <= 12:
-        raise ValueError(f"p={p} outside [7, 12]")
-    dt = df.schema[value_col].dataType
-    if dt.typeName() in ("float", "double", "decimal"):
-        raise ValueError(
-            f"hll_distinct_by: column {value_col!r} is "
-            f"{dt.simpleString()}; fractional string renderings are "
-            "engine-specific — hash a stable encoding instead"
-        )
-    m = 1 << p
-    registers = hll_register_frame(df, group_cols, value_col, p)
-    per_group = registers.groupBy(*group_cols).agg(
-        F.sum(F.expr(f"shiftleft(1L, {_HLL_RHO_CAP} - max_rho)")).alias("_s_used"),
-        F.count(F.lit(1)).alias("_used"),
-    )
-    c1 = _hll_alpha(m) * m * m * float(1 << _HLL_RHO_CAP)
-    s_total = F.col("_s_used") + (F.lit(m) - F.col("_used")) * F.lit(
-        1 << _HLL_RHO_CAP
-    ).cast("bigint")
-    empties = (F.lit(m) - F.col("_used")).cast("bigint")
-    raw = F.lit(c1) / s_total.cast("double")
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (empties > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / empties.cast("double")),
-    ).otherwise(raw)
-    return per_group.select(
-        *group_cols,
-        F.round(est, 3).alias("approx_ndv"),
-        empties.alias("n_empty_buckets"),
+    _hll_check(df, value_col, p, "hll_distinct_by")
+    return _hll_estimate_by(
+        hll_register_frame(df, group_cols, value_col, p), group_cols, p
     )
 
 
@@ -446,76 +584,8 @@ def histogram_quantiles(
     by robust_scale/_by, winsorize, quantiles_by_group and
     perplexity_buckets, which embed this sketch).
     """
-    if not quantiles or not all(0.0 < q <= 1.0 for q in quantiles):
-        raise ValueError("quantiles must be in (0, 1]")
-    c = F.col(col).cast("double")
-    # the 1-row bounds frame is referenced by THREE broadcast joins
-    # below (binned, cum, hits) and by every downstream composition
-    # (robust_scale embeds this whole sketch twice); without the lazy
-    # checkpoint each reference re-plans and re-executes the full
-    # (min,max,n) pass over df — robust_scale's physical plan carried
-    # 80 Exchanges / 40 CartesianProducts of repeated subtrees
-    mm = df.agg(
-        F.min(c).alias("_lo"),
-        F.max(c).alias("_hi"),
-        F.count(c).alias("_n"),
-    ).localCheckpoint(eager=False)
-    width = (F.col("_hi") - F.col("_lo")) / F.lit(float(n_bins))
-    binned = (
-        df.select(c.alias("_x"))
-        .filter(F.col("_x").isNotNull())
-        .crossJoin(F.broadcast(mm))
-        .select(
-            F.when(F.col("_hi") == F.col("_lo"), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.lit(n_bins - 1),
-                    F.floor((F.col("_x") - F.col("_lo")) / width).cast("int"),
-                )
-            )
-            .alias("_bin")
-        )
-        .groupBy("_bin")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-    )
-    w = Window.orderBy("_bin").rowsBetween(Window.unboundedPreceding, 0)
-    cum = (
-        binned.withColumn("_cum", F.sum("_cnt").over(w))
-        .withColumn("_cum_before", F.col("_cum") - F.col("_cnt"))
-        .crossJoin(F.broadcast(mm))
-    )
-    qdf = df.sparkSession.createDataFrame(
-        [(float(q),) for q in sorted(quantiles)], "quantile double"
-    )
-    hits = (
-        cum.crossJoin(F.broadcast(qdf))
-        .withColumn("_t", F.col("quantile") * F.col("_n").cast("double"))
-        .filter(F.col("_cum").cast("double") >= F.col("_t"))
-    )
-    pick = Window.partitionBy("quantile").orderBy("_bin")
-    est = (
-        F.col("_lo")
-        + F.col("_bin").cast("double") * width
-        + F.when(
-            F.col("_cnt") > 0,
-            (F.col("_t") - F.col("_cum_before").cast("double"))
-            / F.col("_cnt").cast("double")
-            * width,
-        ).otherwise(F.lit(0.0))
-    )
-    return (
-        hits.withColumn("_rn", F.row_number().over(pick))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("quantile"),
-            F.round(
-                F.when(F.col("_hi") == F.col("_lo"), F.col("_lo")).otherwise(
-                    F.least(F.col("_hi"), est)
-                ),
-                6,
-            ).alias("value"),
-        )
-        .orderBy("quantile")
+    return _histogram_quantiles(df, [], col, quantiles, n_bins).orderBy(
+        "quantile"
     )
 
 
@@ -549,74 +619,36 @@ def histogram_quantiles_by(
     """
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
+    return _histogram_quantiles(df, group_cols, col, quantiles, n_bins)
+
+
+def _histogram_quantiles(
+    df: DataFrame,
+    keys: list[str],
+    col: str,
+    quantiles: list[float],
+    n_bins: int,
+) -> DataFrame:
+    """The histogram quantile sketch per ``keys`` group (one group when
+    ``keys`` is empty): bounds pass, ``_bin_counts``,
+    ``_quantile_pick``."""
     if not quantiles or not all(0.0 < q <= 1.0 for q in quantiles):
         raise ValueError("quantiles must be in (0, 1]")
     c = F.col(col).cast("double")
-    # |groups|-row bounds frame, referenced twice below plus by every
-    # caller composition — lazy-checkpointed for the same reason as
-    # the global sketch's mm (plan-subtree re-execution)
-    mm = df.groupBy(*group_cols).agg(
-        F.min(c).alias("_lo"), F.max(c).alias("_hi"), F.count(c).alias("_n")
-    ).filter(F.col("_n") > 0).localCheckpoint(eager=False)
-    width = (F.col("_hi") - F.col("_lo")) / F.lit(float(n_bins))
-    binned = (
-        df.select(*group_cols, c.alias("_x"))
-        .filter(F.col("_x").isNotNull())
-        .join(F.broadcast(mm), group_cols)
-        .select(
-            *group_cols,
-            F.when(F.col("_hi") == F.col("_lo"), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.lit(n_bins - 1),
-                    F.floor((F.col("_x") - F.col("_lo")) / width).cast("int"),
-                )
-            )
-            .alias("_bin"),
-        )
-        .groupBy(*group_cols, "_bin")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
+    # the bounds frame (one row per group) is referenced by the bin
+    # join and the pick, and by every downstream composition
+    # (robust_scale embeds this whole sketch twice); without the lazy
+    # checkpoint each reference re-plans and re-executes the full
+    # (min, max, n) pass over df — robust_scale's physical plan carried
+    # 80 Exchanges / 40 CartesianProducts of repeated subtrees
+    mm = (
+        df.groupBy(*keys)
+        .agg(F.min(c).alias("_lo"), F.max(c).alias("_hi"), F.count(c).alias("_n"))
+        .filter(F.col("_n") > 0)
+        .localCheckpoint(eager=False)
     )
-    w = Window.partitionBy(*group_cols).orderBy("_bin").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = (
-        binned.withColumn("_cum", F.sum("_cnt").over(w))
-        .withColumn("_cum_before", F.col("_cum") - F.col("_cnt"))
-        .join(F.broadcast(mm), group_cols)
-    )
-    qdf = df.sparkSession.createDataFrame(
-        [(float(q),) for q in sorted(quantiles)], "quantile double"
-    )
-    hits = (
-        cum.crossJoin(F.broadcast(qdf))
-        .withColumn("_t", F.col("quantile") * F.col("_n").cast("double"))
-        .filter(F.col("_cum").cast("double") >= F.col("_t"))
-    )
-    pick = Window.partitionBy(*group_cols, "quantile").orderBy("_bin")
-    est = (
-        F.col("_lo")
-        + F.col("_bin").cast("double") * width
-        + F.when(
-            F.col("_cnt") > 0,
-            (F.col("_t") - F.col("_cum_before").cast("double"))
-            / F.col("_cnt").cast("double")
-            * width,
-        ).otherwise(F.lit(0.0))
-    )
-    return (
-        hits.withColumn("_rn", F.row_number().over(pick))
-        .filter(F.col("_rn") == 1)
-        .select(
-            *group_cols,
-            F.col("quantile"),
-            F.round(
-                F.when(F.col("_hi") == F.col("_lo"), F.col("_lo")).otherwise(
-                    F.least(F.col("_hi"), est)
-                ),
-                6,
-            ).alias("value"),
-        )
+    return _quantile_pick(
+        _bin_counts(df, keys, col, mm, n_bins), mm, keys, quantiles, n_bins
     )
 
 
@@ -660,17 +692,10 @@ def cms_topk(
     orderBy+limit as TakeOrderedAndProject). The k-row probe side is
     broadcast against the sketch.
     """
-    if depth < 1 or width < 1 or k < 1:
-        # width=0 would surface as a modulo-by-zero null deep in the
-        # exchange; depth=0 silently returns an empty frame
-        raise ValueError(
-            f"cms_topk needs depth/width/k >= 1 (got {depth}/{width}/{k})"
-        )
-    from embeddinghub_spark.functions.dedup import _md5_long
+    _cms_check(depth, width)
+    if k < 1:
+        raise ValueError(f"cms_topk needs k >= 1 (got {k})")
     from embeddinghub_spark.functions.text import tokens
-
-    def bucket(d: int, tok) -> Column:
-        return _md5_long(F.concat(F.lit(f"{d}:"), tok)) % width
 
     # Per-token counts FIRST (one pass, map-side partial aggregation),
     # then everything downstream works on the DISTINCT vocabulary:
@@ -690,7 +715,7 @@ def cms_topk(
         tf.select(
             F.col("exact_count").alias("_tf"),
             F.posexplode(
-                F.array(*[bucket(d, F.col("tok")) for d in range(depth)])
+                _cms_rows(F.col("tok"), depth, width)
             ).alias("row", "bucket"),
         )
         .groupBy("row", "bucket")
@@ -701,7 +726,7 @@ def cms_topk(
         "tok",
         "exact_count",
         F.posexplode(
-            F.array(*[bucket(d, F.col("tok")) for d in range(depth)])
+            _cms_rows(F.col("tok"), depth, width)
         ).alias("row", "bucket"),
     )
     return (

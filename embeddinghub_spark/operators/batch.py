@@ -802,6 +802,8 @@ def psi_drift(
     (bin, lo, hi, ref_n, cur_n, ref_share, cur_share, psi_term),
     shares/terms rounded to 6; ``SUM(psi_term)`` is the index.
     """
+    from embeddinghub_spark.functions.profile import _bin_counts
+
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
     c_ref = F.col(value_col).cast("double")
@@ -811,26 +813,10 @@ def psi_drift(
     width = (F.col("_hi") - F.col("_lo")) / F.lit(float(n_bins))
 
     def bin_counts(df: DataFrame, name: str) -> DataFrame:
-        x = F.col(value_col).cast("double")
-        return (
-            df.filter(F.col(value_col).isNotNull())
-            .crossJoin(F.broadcast(mm))
-            .select(
-                F.when(F.col("_hi") == F.col("_lo"), F.lit(0))
-                .otherwise(
-                    F.greatest(
-                        F.lit(0),
-                        F.least(
-                            F.lit(n_bins - 1),
-                            F.floor((x - F.col("_lo")) / width).cast("int"),
-                        ),
-                    )
-                )
-                .alias("bin")
-            )
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias(name))
+        return _bin_counts(df, [], value_col, mm, n_bins).select(
+            F.col("_bin").alias("bin"), F.col("_cnt").alias(name)
         )
+
     grid = ref.sparkSession.range(0, n_bins).select(
         F.col("id").cast("int").alias("bin")
     )

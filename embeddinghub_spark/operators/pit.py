@@ -1171,8 +1171,9 @@ def trailing_distinct_features(
     any events — the support indicator).
     """
     from embeddinghub_spark.functions.profile import (
-        _HLL_RHO_CAP,
-        _hll_alpha,
+        _hll_check,
+        _hll_estimate_cols,
+        _hll_merge,
         hll_register_frame,
     )
 
@@ -1187,16 +1188,7 @@ def trailing_distinct_features(
             f"n_buckets={K} > 63: buckets_used bitmask is exact only "
             "for K <= 63 — increase bucket_seconds instead"
         )
-    if not 7 <= p <= 12:
-        raise ValueError(f"p={p} outside [7, 12]")
-    dt = events.schema[value_col].dataType
-    if dt.typeName() in ("float", "double", "decimal"):
-        raise ValueError(
-            f"trailing_distinct_features: column {value_col!r} is "
-            f"{dt.simpleString()}; fractional string renderings are "
-            "engine-specific — hash a stable encoding instead"
-        )
-    m = 1 << p
+    _hll_check(events, value_col, p, "trailing_distinct_features")
     # the shared register recipe (profile.hll_register_frame) — ONE
     # protocol definition across the batch sketch, the streaming twin,
     # this PIT feature, and their oracles
@@ -1231,31 +1223,13 @@ def trailing_distinct_features(
         F.bit_or(dbit).alias("_mask"),
     )
     per_label = merged.groupBy("_aid", *labels.columns).agg(
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("_rho").isNotNull(),
-                    F.expr(f"shiftleft(1L, {_HLL_RHO_CAP} - _rho)"),
-                )
-            ),
-            F.lit(0).cast("bigint"),
-        ).alias("_s_used"),
-        F.count(F.when(F.col("_rho").isNotNull(), F.lit(1))).alias("_used"),
+        *_hll_merge("_rho"),
         F.expr("bit_count(bit_or(_mask))").cast("bigint").alias("_bused"),
     )
-    c1 = _hll_alpha(m) * m * m * float(1 << _HLL_RHO_CAP)
-    s_total = F.col("_s_used") + (F.lit(m) - F.col("_used")) * F.lit(
-        1 << _HLL_RHO_CAP
-    ).cast("bigint")
-    empties = (F.lit(m) - F.col("_used")).cast("bigint")
-    raw = F.lit(c1) / s_total.cast("double")
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (empties > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / empties.cast("double")),
-    ).otherwise(raw)
+    est, _ = _hll_estimate_cols(p)
     return per_label.select(
         *labels.columns,
-        F.round(est, 3).alias(out_col),
+        est.alias(out_col),
         F.col("_bused").alias(f"{out_col}_buckets_used"),
     )
 

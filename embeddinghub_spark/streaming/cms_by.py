@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from embeddinghub_spark.functions.profile import _cms_check, _cms_rows
 from embeddinghub_spark.streaming._state import (
     _merge_commit,
     _start_stream,
@@ -45,18 +46,14 @@ _META = "_cms_meta.json"
 def _batch_counters(df: DataFrame, text_col: str, depth: int, width: int) -> DataFrame:
     """(row, bucket, c) counters for one batch — the ``cms_topk``
     sketch build, shared md5 protocol."""
-    from embeddinghub_spark.functions.dedup import _md5_long
     from embeddinghub_spark.functions.text import tokens
-
-    def bucket(d: int, tok):
-        return _md5_long(F.concat(F.lit(f"{d}:"), tok)) % width
 
     return (
         df.select(F.explode(tokens(text_col)).alias("tok"))
         .select(
-            F.posexplode(
-                F.array(*[bucket(d, F.col("tok")) for d in range(depth)])
-            ).alias("row", "bucket")
+            F.posexplode(_cms_rows(F.col("tok"), depth, width)).alias(
+                "row", "bucket"
+            )
         )
         .groupBy("row", "bucket")
         .agg(F.count("*").alias("c"))
@@ -89,19 +86,14 @@ def read_cms_estimates(
     """Probe candidate tokens against the merged counters:
     estimate = min over depth rows (>= exact count always). Output:
     (token, cms_estimate)."""
-    from embeddinghub_spark.functions.dedup import _md5_long
-
+    _cms_check(depth, width)
     sketch = spark.read.parquet(state_dir)
     cand = spark.createDataFrame([(t,) for t in candidates], ["token"])
-
-    def bucket(d: int, tok):
-        return _md5_long(F.concat(F.lit(f"{d}:"), tok)) % width
-
     probe = cand.select(
         "token",
-        F.posexplode(
-            F.array(*[bucket(d, F.col("token")) for d in range(depth)])
-        ).alias("row", "bucket"),
+        F.posexplode(_cms_rows(F.col("token"), depth, width)).alias(
+            "row", "bucket"
+        ),
     )
     return (
         sketch.join(F.broadcast(probe), ["row", "bucket"])
@@ -123,6 +115,7 @@ def streaming_cms(
     aggregate (exchange ≤ depth×width rows however large the batch)
     transactionally +-merged into ``state_dir``. After the stream
     drains, counters equal the batch sketch over the whole input."""
+    _cms_check(depth, width)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         counters = _batch_counters(batch_df, text_col, depth, width)

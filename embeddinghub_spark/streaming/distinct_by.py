@@ -31,14 +31,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from embeddinghub_spark.functions.profile import (
+    _hll_check,
+    _hll_estimate_by,
+    hll_register_frame,
+)
 from embeddinghub_spark.streaming._state import _merge_commit, _start_stream
 
 
 def _registers(df: DataFrame, group_col: str, value_col: str, p: int) -> DataFrame:
     """(group, bucket, max_rho) registers for one batch — the shared
     ``profile.hll_register_frame`` build (one protocol definition)."""
-    from embeddinghub_spark.functions.profile import hll_register_frame
-
     return hll_register_frame(
         df.select(F.col(group_col).alias("grp"), F.col(value_col)),
         ["grp"],
@@ -65,31 +68,8 @@ def read_distinct_estimates(
     """Current per-group estimates from the register table — the
     ``hll_distinct_by`` estimator applied to merged registers.
     Output: (grp, approx_ndv, n_empty_buckets)."""
-    from embeddinghub_spark.functions.profile import _HLL_RHO_CAP, _hll_alpha
-
-    m = 1 << p
-    registers = spark.read.parquet(state_dir)
-    per_group = registers.groupBy("grp").agg(
-        F.sum(
-            F.expr(f"shiftleft(1L, {_HLL_RHO_CAP} - max_rho)")
-        ).alias("_s_used"),
-        F.count(F.lit(1)).alias("_used"),
-    )
-    c1 = _hll_alpha(m) * m * m * float(1 << _HLL_RHO_CAP)
-    s_total = F.col("_s_used") + (F.lit(m) - F.col("_used")) * F.lit(
-        1 << _HLL_RHO_CAP
-    ).cast("bigint")
-    empties = (F.lit(m) - F.col("_used")).cast("bigint")
-    raw = F.lit(c1) / s_total.cast("double")
-    est = F.when(
-        (raw <= F.lit(2.5 * m)) & (empties > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / empties.cast("double")),
-    ).otherwise(raw)
-    return per_group.select(
-        "grp",
-        F.round(est, 3).alias("approx_ndv"),
-        empties.alias("n_empty_buckets"),
-    )
+    _hll_check(None, None, p, "read_distinct_estimates")
+    return _hll_estimate_by(spark.read.parquet(state_dir), ["grp"], p)
 
 
 def streaming_distinct_by(
@@ -107,6 +87,7 @@ def streaming_distinct_by(
     is) and max-merge them into ``state_dir``. Read estimates any
     time with ``read_distinct_estimates`` — bit-identical to the
     batch ``hll_distinct_by`` over everything ingested so far."""
+    _hll_check(stream_df, value_col, p, "streaming_distinct_by")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         regs = _registers(batch_df, group_col, value_col, p)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from embeddinghub_spark.functions.profile import _bin_counts, _quantile_pick
 from embeddinghub_spark.streaming._state import (
     _merge_commit,
     _start_stream,
@@ -39,35 +40,6 @@ from embeddinghub_spark.streaming._state import (
 _META = "_psi_meta.json"
 _REF = "reference"
 _CUR = "current"
-
-
-def _bin_counts(
-    df: DataFrame, value_col: str, grid: DataFrame, lo: str, hi: str, n_bins: int
-) -> DataFrame:
-    """(bin, n) counts of ``df`` on the equal-width grid [lo, hi] carried
-    by the one-row ``grid`` frame; out-of-range values clamp to the
-    edge bins, a degenerate grid (hi == lo) puts everything in bin 0."""
-    c = F.col(value_col).cast("double")
-    width = (F.col(hi) - F.col(lo)) / F.lit(float(n_bins))
-    return (
-        df.filter(c.isNotNull())
-        .crossJoin(F.broadcast(grid))
-        .select(
-            F.when(F.col(hi) == F.col(lo), F.lit(0))
-            .otherwise(
-                F.greatest(
-                    F.lit(0),
-                    F.least(
-                        F.lit(n_bins - 1),
-                        F.floor((c - F.col(lo)) / width).cast("int"),
-                    ),
-                )
-            )
-            .alias("bin")
-        )
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 def freeze_reference(
@@ -81,13 +53,25 @@ def freeze_reference(
     c = F.col(value_col).cast("double")
     mm = ref.agg(F.min(c).alias("_lo"), F.max(c).alias("_hi"))
     counts = (
-        _bin_counts(ref, value_col, mm, "_lo", "_hi", n_bins)
+        _bin_counts(ref, [], value_col, mm, n_bins)
         .crossJoin(F.broadcast(mm))
-        .select("bin", "n", F.col("_lo").alias("lo"), F.col("_hi").alias("hi"))
+        .select(
+            F.col("_bin").alias("bin"),
+            F.col("_cnt").alias("n"),
+            F.col("_lo").alias("lo"),
+            F.col("_hi").alias("hi"),
+        )
     )
     counts.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(state_dir, _REF)
     )
+
+
+def _grid(spark: SparkSession, state_dir: str) -> DataFrame:
+    """The frozen reference grid as the one-row ``(_lo, _hi)`` bounds
+    frame of the profile sketch core."""
+    ref = spark.read.parquet(os.path.join(state_dir, _REF))
+    return ref.select(F.col("lo").alias("_lo"), F.col("hi").alias("_hi")).limit(1)
 
 
 def _merge_bins(
@@ -99,9 +83,9 @@ def _merge_bins(
     batch_id: int | None,
     checkpoint_dir: str | None,
 ) -> bool:
-    ref = spark.read.parquet(os.path.join(state_dir, _REF))
-    grid = ref.select("lo", "hi").limit(1)
-    binned = _bin_counts(batch, value_col, grid, "lo", "hi", n_bins)
+    binned = _bin_counts(
+        batch, [], value_col, _grid(spark, state_dir), n_bins
+    ).select(F.col("_bin").alias("bin"), F.col("_cnt").alias("n"))
     return _merge_commit(
         spark, os.path.join(state_dir, _CUR), binned, ["bin"], F.sum, _META,
         batch_id, checkpoint_dir,
@@ -158,55 +142,34 @@ def read_quantiles(
 ) -> list[tuple[float, float]]:
     """Streaming quantiles of everything ingested so far, from the
     SAME monitor state PSI reads: the frozen reference grid plus the
-    +-merged current bin counts. A live p50/p95 gate costs a
-    ≤ n_bins-row driver read — no rescan, no extra stream.
+    +-merged current bin counts. A live p50/p95 gate costs one small
+    query over ≤ 2·n_bins state rows — no rescan, no extra stream.
 
-    The math mirrors ``profile.histogram_quantiles`` bin-for-bin
+    The pick is the one ``profile.histogram_quantiles`` calls
     (cumulative counts on the grid, linear interpolation inside the
-    hit bin, round 6), so after the stream drains the answers equal
-    the batch sketch over the ingested rows — pinned by test — with
-    one caveat: the grid froze on the REFERENCE min/max, so values
-    outside it were clamped into the edge bins and estimates clamp to
-    [lo, hi]. That is the monitoring contract (drift beyond the
-    reference range saturates the edge, which PSI flags); for exact
-    tails re-freeze on a wider reference.
+    hit bin, round 6 HALF_UP), so after the stream drains the answers
+    equal the batch sketch over the ingested rows — pinned by test —
+    with one caveat: the grid froze on the REFERENCE min/max, so
+    values outside it were clamped into the edge bins and estimates
+    clamp to [lo, hi]. That is the monitoring contract (drift beyond
+    the reference range saturates the edge, which PSI flags); for
+    exact tails re-freeze on a wider reference.
 
     Output: ``(quantile, value)`` pairs ascending, empty if nothing
     has been ingested.
     """
     if not quantiles or not all(0.0 < q <= 1.0 for q in quantiles):
         raise ValueError("quantiles must be in (0, 1]")
-    ref = spark.read.parquet(os.path.join(state_dir, _REF)).limit(1).collect()
-    if not ref:
-        return []
-    lo, hi = float(ref[0]["lo"]), float(ref[0]["hi"])
     cur_dir = os.path.join(state_dir, _CUR)
     if not (os.path.islink(cur_dir) or os.path.isdir(cur_dir)):
         return []
-    cnt = {r["bin"]: r["n"] for r in spark.read.parquet(cur_dir).collect()}
-    n = sum(cnt.values())
-    if n == 0:
-        return []
-    width = (hi - lo) / float(n_bins)
-    out = []
-    for q in sorted(float(q) for q in quantiles):
-        t = q * float(n)
-        cum = 0
-        for b in range(n_bins):
-            cum_before = cum
-            cum += cnt.get(b, 0)
-            if float(cum) >= t:
-                if hi == lo:
-                    est = lo
-                else:
-                    c = cnt.get(b, 0)
-                    est = lo + float(b) * width
-                    if c > 0:
-                        est += (t - float(cum_before)) / float(c) * width
-                    est = min(hi, est)
-                out.append((q, round(est, 6)))
-                break
-    return out
+    cur = spark.read.parquet(cur_dir)
+    bounds = _grid(spark, state_dir).crossJoin(cur.agg(F.sum("n").alias("_n")))
+    bins = cur.select(F.col("bin").alias("_bin"), F.col("n").alias("_cnt"))
+    return sorted(
+        (r["quantile"], r["value"])
+        for r in _quantile_pick(bins, bounds, [], quantiles, n_bins).collect()
+    )
 
 
 def streaming_psi(

@@ -429,31 +429,17 @@ def trailing_distinct_counter(
     Emits ``(entity, ref_ts, approx_distinct, buckets_used)`` per
     updated entity per micro-batch (update semantics)."""
     import hashlib
-    import math
 
     from embeddinghub_spark.functions.profile import (
         _HLL_BUCKET_HEX,
         _HLL_RHO_CAP,
         _HLL_VALUE_HEX,
-        _hll_alpha,
+        _hll_check,
+        _hll_estimate,
     )
 
-    if not 7 <= p <= 12:
-        raise ValueError(f"p={p} outside [7, 12]")
-    # same construction-time guard as the batch twin: Python's str(v)
-    # for float/double differs from Spark's CAST(.. AS STRING)
-    # rendering (1e20 -> '1e+20' vs '1.0E20'), so a fractional value
-    # column would silently diverge instead of matching — reject it
-    # here like trailing_distinct_features does (ADVICE r9)
-    dt = stream_df.schema[value_col].dataType
-    if dt.typeName() in ("float", "double", "decimal"):
-        raise ValueError(
-            f"trailing_distinct_counter: column {value_col!r} is "
-            f"{dt.simpleString()}; fractional string renderings are "
-            "engine-specific — hash a stable encoding instead"
-        )
+    _hll_check(stream_df, value_col, p, "trailing_distinct_counter")
     m = 1 << p
-    c1 = _hll_alpha(m) * m * m * float(1 << _HLL_RHO_CAP)
 
     def fold(regs, v):
         # the shared register recipe (profile.hll_register_frame) —
@@ -471,16 +457,7 @@ def trailing_distinct_counter(
             for rg, (rh,) in regs.items():
                 if rh > merged.get(rg, 0):
                     merged[rg] = rh
-        used = len(merged)
-        s_total = sum(
-            1 << (_HLL_RHO_CAP - rh) for rh in merged.values()
-        ) + (m - used) * (1 << _HLL_RHO_CAP)
-        raw = c1 / float(s_total)
-        empties = m - used
-        if raw <= 2.5 * m and empties > 0:
-            est = m * math.log(m / float(empties))
-        else:
-            est = raw
+        est = _hll_estimate(merged.values(), p)
         return {
             "approx_distinct": [float(_half_up(est, "1e-3"))],
             "buckets_used": [len(window)],

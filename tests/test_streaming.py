@@ -1103,6 +1103,7 @@ def test_read_quantiles_matches_batch_histogram(spark, tmp_path):
     from embeddinghub_spark.functions.profile import histogram_quantiles
     from embeddinghub_spark.streaming.psi_monitor import (
         freeze_reference,
+        merge_batch_bins,
         read_quantiles,
         streaming_psi,
     )
@@ -1131,6 +1132,15 @@ def test_read_quantiles_matches_batch_histogram(spark, tmp_path):
         for r in histogram_quantiles(ref, "v", qs, n_bins=32).collect()
     }
     assert got == want
+    # a pick landing on a round-6 tie (3.5e-6) rounds HALF_UP like the
+    # batch sketch, not half-to-even
+    tie = spark.createDataFrame([Row(v=x) for x in [0.0, 1.4e-5, 1.4e-5, 1.4e-5]])
+    tie_state = str(tmp_path / "qm_tie")
+    freeze_reference(tie, tie_state, "v", n_bins=4)
+    merge_batch_bins(spark, tie_state, tie, 0, "v", n_bins=4)
+    assert read_quantiles(spark, tie_state, [0.25], n_bins=4) == [
+        tuple(r) for r in histogram_quantiles(tie, "v", [0.25], n_bins=4).collect()
+    ]
     # nothing-ingested state answers empty, not garbage
     empty_state = str(tmp_path / "qm2")
     freeze_reference(ref, empty_state, "v", n_bins=32)
