@@ -22,6 +22,20 @@ directly:
   path; a NaN or infinite component is rejected by ``add`` and
   ``search``, naming the key or the query).
 
+Overwrites (``add`` of a key already present) follow hnswlib's
+``updatePoint`` in spirit. The key keeps its md5-drawn level and drops
+its own links (the neighbours that link back lose that edge), then
+re-links with a beam of ``m_max0`` (2M, the layer-0 degree cap, never
+wider than ``ef_construction``) instead of ``ef_construction``: the
+search only has to recover the key's M links. Inbound one-way edges to
+a moved key are kept, as hnswlib keeps them; they stay valid long
+links. No neighbour is repaired. On the ``online_serving`` shape (400
++ 128 clustered 64-d vectors) an overwriting 32-key ``Space.multiset``
+costs ~3,500 distance evaluations instead of ~9,500, with the same
+layer-0 degree and recall@10 >= 0.97 after 1,500 multisets (seeds 1
+and 4). Fresh inserts, so every ``build_ann_index`` and every
+saved graph, keep the full ``ef_construction`` beam.
+
 Distance kernel: ``math.dist(a, b) ** 2``, a C loop, evaluated at the
 three sites that rank candidates (``_dist``, the inner neighbor loop
 of ``_search_layer`` and the ``_shrink`` ranking), all through the
@@ -36,10 +50,11 @@ fold.
 
 Determinism contract:
 
-- the same inserts in the same order, with the same parameters, build
-  the same graph on the same CPython build. ``math.dist``'s rounding
-  is fixed per build, not across builds, so another build may order
-  two near-equal distances the other way and build another graph;
+- the same adds (inserts and overwrites) in the same order, with the
+  same parameters, build the same graph on the same CPython build.
+  ``math.dist``'s rounding is fixed per build, not across builds, so
+  another build may order two near-equal distances the other way and
+  build another graph;
 - a saved ``.hnsw.json`` carries its graph (links, levels, entry
   point), so ``load`` restores it exactly on any build with zero
   distance evaluations;
@@ -155,8 +170,13 @@ class HnswIndex:
 
     def add(self, key: str, vector) -> None:
         """Insert (or overwrite) a vector. Overwrite re-links the key
-        in place: the old links are dropped and the key re-inserted —
-        the set()-updates-the-index behavior of the reference store.
+        in place — the set()-updates-the-index behavior of the
+        reference store: the key keeps its level, its old links are
+        dropped, and it is re-inserted with a beam of
+        ``min(m_max0, ef_construction)`` instead of
+        ``ef_construction``. Inbound one-way edges to the moved key
+        are kept. The key itself is never one of its own ``M`` links,
+        even when a stale edge leads the search back to it.
 
         Keys must be ``str``: the saved format is JSON, whose object
         keys are always strings — a non-str key would save fine but
@@ -170,7 +190,8 @@ class HnswIndex:
         vec = _finite_vector(vector, f"HNSW vector for key {key!r}")
         if len(vec) != self.dim:
             raise ValueError(f"expected dim {self.dim}, got {len(vec)}")
-        if key in self._vecs:
+        overwrite = key in self._vecs
+        if overwrite:
             self._remove_links(key)
         self._vecs[key] = vec
         level = self._draw_level(key)
@@ -190,10 +211,14 @@ class HnswIndex:
             found = self._search_layer(vec, ep, 1, lyr)
             if found:
                 ep = [found[0][1]]
+        ef = (
+            min(self.m_max0, self.ef_construction)
+            if overwrite else self.ef_construction
+        )
         for lyr in range(min(level, max_level), -1, -1):
-            found = self._search_layer(vec, ep, self.ef_construction, lyr)
+            found = self._search_layer(vec, ep, ef, lyr)
             cap = self.m_max0 if lyr == 0 else self.m
-            neighbors = [k for _, k in found[: self.m] if k != key]
+            neighbors = [k for _, k in found if k != key][: self.m]
             links = self._links[lyr]
             links[key] = list(neighbors)
             for n in neighbors:

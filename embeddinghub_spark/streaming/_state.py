@@ -18,6 +18,12 @@ around it lives here once, so its rules cannot drift between stores:
 - ``_merge_commit``: the algebraic stores (auc, cms, distinct, psi) —
   skip a committed batch, union the prior state, ``groupBy(keys)``
   with one aggregate, write a one-file version, commit.
+- ``_check_params``: the sketch parameters a store was built with (HLL
+  ``p``, CMS ``depth``/``width``) are stamped next to its state in
+  ``_sketch_params.json``, carried over by every later merge, and
+  checked on merge and read: a register or counter table read with
+  other parameters answers wrong without any error. State written
+  before the stamp existed has none and is read as before.
 - ``commit_version_dir``: the versioned commit every ``*_dir`` store
   (and ``cdc_ingest``) uses. The stamp lands in the version dir BEFORE
   the flip, so a version is never observable without its watermark; a
@@ -37,6 +43,7 @@ import uuid
 from embeddinghub_spark.sources.sinks import _flip_symlink
 
 _STAMP = "_ingest_commit.json"
+_PARAMS = "_sketch_params.json"
 
 
 def _start_stream(
@@ -130,19 +137,47 @@ def _is_committed(
     )
 
 
+def _check_params(state_dir: str, params: dict) -> dict:
+    """Raise ValueError, naming both values, when the live version of
+    ``state_dir`` is stamped with other sketch parameters than
+    ``params``; return its stamp with ``params`` added. Unstamped (or
+    absent) state passes: nothing records what it was built with."""
+    path = os.path.join(os.path.realpath(state_dir), _PARAMS)
+    stamped: dict = {}
+    if os.path.isfile(path):
+        with open(path) as fh:
+            stamped = json.load(fh)
+    bad = [
+        f"{k}={stamped[k]} (stamped), {k}={v} (this call)"
+        for k, v in params.items()
+        if k in stamped and stamped[k] != v
+    ]
+    if bad:
+        raise ValueError(
+            f"sketch state {state_dir} was built with other parameters: "
+            + "; ".join(bad)
+        )
+    return {**stamped, **params}
+
+
 def _commit_frame(
     state_dir: str,
     df,
     batch_id: int | None,
     checkpoint_dir: str | None,
     name: str,
+    params: dict | None = None,
 ) -> None:
     """Write ``df`` as the next version of ``state_dir``, stamp it
-    (unless ``batch_id`` is None) and flip it live."""
+    (unless ``batch_id`` is None) and its sketch ``params`` (when
+    given), and flip it live."""
     phys = new_version_dir(state_dir)
     df.write.parquet(phys)
     if batch_id is not None:
         _record_committed_batch(phys, batch_id, checkpoint_dir, name)
+    if params:
+        with open(os.path.join(phys, _PARAMS), "w") as fh:
+            json.dump(params, fh)
     commit_version_dir(state_dir, phys)
 
 
@@ -155,14 +190,18 @@ def _merge_commit(
     name: str = _STAMP,
     batch_id: int | None = None,
     checkpoint_dir: str | None = None,
+    params: dict | None = None,
 ) -> bool:
     """Fold one batch's partial state into ``state_dir``: every
     non-key column merges with ``agg`` (``F.sum`` for counters,
     ``F.max`` for HLL registers). Returns False — and writes nothing —
     when ``batch_id`` is already committed; ``batch_id=None`` merges
-    without a watermark."""
+    without a watermark. ``params`` (the batch's sketch parameters)
+    must agree with the state's stamp; the new version carries the
+    stamp with ``params`` added."""
     if _is_committed(state_dir, batch_id, checkpoint_dir, name):
         return False
+    params = _check_params(state_dir, params or {})
     merged = batch
     if os.path.islink(state_dir) or os.path.isdir(state_dir):
         prior = spark.read.parquet(state_dir).select(*batch.columns)
@@ -170,7 +209,9 @@ def _merge_commit(
     merged = merged.groupBy(*keys).agg(
         *[agg(c).alias(c) for c in batch.columns if c not in keys]
     )
-    _commit_frame(state_dir, merged.coalesce(1), batch_id, checkpoint_dir, name)
+    _commit_frame(
+        state_dir, merged.coalesce(1), batch_id, checkpoint_dir, name, params
+    )
     return True
 
 

@@ -35,6 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from embeddinghub_spark.functions.profile import _cms_check, _cms_rows
 from embeddinghub_spark.streaming._state import (
+    _check_params,
     _merge_commit,
     _start_stream,
     _stream_batch_id,
@@ -69,7 +70,8 @@ def merge_counters_dir(
     """Transactionally +-merge a batch's counters: SKIPS (returns
     False) if ``batch_id`` is already committed — the exactly-once
     gate that idempotent max-merge state does not need. Atomic
-    symlink-flip commit of (counters, watermark) together."""
+    symlink-flip commit of (counters, watermark) together; the
+    counters' ``depth``/``width`` stamp, if any, carries over."""
     return _merge_commit(
         spark, state_dir, batch_counters, ["row", "bucket"], F.sum, _META,
         batch_id,
@@ -85,8 +87,11 @@ def read_cms_estimates(
 ) -> DataFrame:
     """Probe candidate tokens against the merged counters:
     estimate = min over depth rows (>= exact count always). Output:
-    (token, cms_estimate)."""
+    (token, cms_estimate). Raises ValueError when the counters are
+    stamped with another ``depth`` or ``width``; counters written
+    before the stamp existed read as before."""
     _cms_check(depth, width)
+    _check_params(state_dir, {"depth": depth, "width": width})
     sketch = spark.read.parquet(state_dir)
     cand = spark.createDataFrame([(t,) for t in candidates], ["token"])
     probe = cand.select(
@@ -113,8 +118,10 @@ def streaming_cms(
 ) -> StreamingQuery:
     """Start the streaming CMS: per micro-batch, one bounded counter
     aggregate (exchange ≤ depth×width rows however large the batch)
-    transactionally +-merged into ``state_dir``. After the stream
-    drains, counters equal the batch sketch over the whole input."""
+    transactionally +-merged into ``state_dir``, stamped with
+    ``depth``/``width`` (a batch into counters stamped with others
+    raises). After the stream drains, counters equal the batch sketch
+    over the whole input."""
     _cms_check(depth, width)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -122,7 +129,7 @@ def streaming_cms(
         _merge_commit(
             batch_df.sparkSession, state_dir, counters, ["row", "bucket"],
             F.sum, _META, _stream_batch_id(batch_id, checkpoint_dir),
-            checkpoint_dir,
+            checkpoint_dir, {"depth": depth, "width": width},
         )
 
     return _start_stream(

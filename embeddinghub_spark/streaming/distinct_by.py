@@ -36,7 +36,11 @@ from embeddinghub_spark.functions.profile import (
     _hll_estimate_by,
     hll_register_frame,
 )
-from embeddinghub_spark.streaming._state import _merge_commit, _start_stream
+from embeddinghub_spark.streaming._state import (
+    _check_params,
+    _merge_commit,
+    _start_stream,
+)
 
 
 def _registers(df: DataFrame, group_col: str, value_col: str, p: int) -> DataFrame:
@@ -58,7 +62,8 @@ def merge_registers_dir(
     """Max-merge a batch's registers into the on-disk register table
     (atomic symlink-flip commit, the C18 protocol). The table is
     ≤ |groups| × 2^p rows, so the full rewrite is a bounded tiny job
-    at ANY stream length."""
+    at ANY stream length. The table's ``p`` stamp, if any, carries
+    over."""
     _merge_commit(spark, state_dir, batch_registers, ["grp", "bucket"], F.max)
 
 
@@ -67,8 +72,11 @@ def read_distinct_estimates(
 ) -> DataFrame:
     """Current per-group estimates from the register table — the
     ``hll_distinct_by`` estimator applied to merged registers.
-    Output: (grp, approx_ndv, n_empty_buckets)."""
+    Output: (grp, approx_ndv, n_empty_buckets). Raises ValueError when
+    the table is stamped with another ``p``: the estimate would be
+    wrong. A table written before the stamp existed reads as before."""
     _hll_check(None, None, p, "read_distinct_estimates")
+    _check_params(state_dir, {"p": p})
     return _hll_estimate_by(spark.read.parquet(state_dir), ["grp"], p)
 
 
@@ -84,14 +92,19 @@ def streaming_distinct_by(
     """Start the streaming grouped-distinct sketch: per micro-batch,
     build the batch's HLL registers (one bounded aggregate — the
     exchange carries ≤ |groups| × 2^p rows however large the batch
-    is) and max-merge them into ``state_dir``. Read estimates any
-    time with ``read_distinct_estimates`` — bit-identical to the
-    batch ``hll_distinct_by`` over everything ingested so far."""
+    is) and max-merge them into ``state_dir``, stamped with ``p`` (a
+    batch into a table stamped with another ``p`` raises). Read
+    estimates any time with ``read_distinct_estimates`` —
+    bit-identical to the batch ``hll_distinct_by`` over everything
+    ingested so far."""
     _hll_check(stream_df, value_col, p, "streaming_distinct_by")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         regs = _registers(batch_df, group_col, value_col, p)
-        merge_registers_dir(batch_df.sparkSession, state_dir, regs)
+        _merge_commit(
+            batch_df.sparkSession, state_dir, regs, ["grp", "bucket"], F.max,
+            params={"p": p},
+        )
 
     return _start_stream(
         stream_df, process_batch, checkpoint_dir, trigger_available_now

@@ -6,14 +6,20 @@ force)."""
 
 from __future__ import annotations
 
+import copy
 import hashlib
 import math
+import os
 import random
 
 import pytest
 
 from embeddinghub_spark.functions import hnsw
 from embeddinghub_spark.functions.hnsw import HnswIndex
+
+HNSW_FIXTURE = os.path.join(
+    os.path.dirname(__file__), "data", "hnsw", "build_64x8.hnsw.json"
+)
 
 
 def _vec(i: int, dim: int = 16) -> list[float]:
@@ -253,20 +259,32 @@ def _clustered(rng: random.Random, n: int, centers) -> list[list[float]]:
     ]
 
 
-def _serving_history(idx: HnswIndex, seed: int) -> None:
-    """400 clustered 64-d keys in sorted-key order, then the serving
-    workload's write shape: 32-key batches upserting a 4 x 32 pool in
-    turn (the later batches re-link existing keys), each followed by an
-    overwrite of the current entry-point key."""
+def _serving_history(
+    idx: HnswIndex, seed: int, rounds: int = 12, write=None,
+    n_centers: int = 8,
+) -> list[list[float]]:
+    """400 keys in sorted-key order, 64-d around ``n_centers`` cluster
+    centres, then the serving workload's write shape: ``rounds``
+    32-key batches upserting a 4 x 32 pool in turn (from the fifth on,
+    every batch re-links existing keys), each followed by an overwrite
+    of the current entry-point key. ``write(idx, batch)`` applies a
+    batch (default: ``add`` in key order, as ``Space.multiset`` does).
+    Returns the cluster centres."""
     rng = random.Random(seed)
     centers = [[rng.uniform(-1.0, 1.0) for _ in range(64)]
-               for _ in range(8)]
+               for _ in range(n_centers)]
     for i, v in enumerate(_clustered(rng, 400, centers)):
         idx.add(f"v{i:04d}", v)
-    for r in range(12):
-        for j, v in enumerate(_clustered(rng, 32, centers)):
-            idx.add(f"w{r % 4}_{j:02d}", v)
+    for r in range(rounds):
+        batch = {f"w{r % 4}_{j:02d}": v
+                 for j, v in enumerate(_clustered(rng, 32, centers))}
+        if write is None:
+            for kk, v in batch.items():
+                idx.add(kk, v)
+        else:
+            write(idx, batch)
         idx.add(idx._entry, _clustered(rng, 1, centers)[0])
+    return centers
 
 
 @pytest.mark.parametrize("seed", [1, 2])
@@ -299,6 +317,125 @@ def test_l2_kernel_builds_the_generator_fold_graph(monkeypatch, seed):
     assert n_rounded_apart, "the old fold was not the kernel in effect"
 
 
+def _assert_graph_invariants(idx: HnswIndex) -> None:
+    """No self-links or repeated links; every linked key (source and
+    target) is live at that layer; degree caps hold (``m_max0`` at
+    layer 0, ``m`` above); the entry point has the maximum level."""
+    for lyr, links in enumerate(idx._links):
+        cap = idx.m_max0 if lyr == 0 else idx.m
+        for kk, ns in links.items():
+            assert idx._levels[kk] >= lyr, (lyr, kk)
+            assert kk not in ns, (lyr, kk)
+            assert len(set(ns)) == len(ns) <= cap, (lyr, kk, ns)
+            for n in ns:
+                assert n in idx._vecs and idx._levels[n] >= lyr, (lyr, n)
+    assert idx._levels[idx._entry] == max(idx._levels.values())
+
+
+def _forget(idx: HnswIndex, key: str) -> None:
+    """Unlink ``key`` as an overwrite does, then drop it, so that the
+    next ``add`` of it is a fresh insert: same key, same md5 level, the
+    full ``ef_construction`` beam."""
+    idx._remove_links(key)
+    del idx._vecs[key], idx._levels[key]
+
+
+@pytest.mark.parametrize("seed", [1, 4])
+def test_overwrite_relinks_with_the_layer0_cap_beam(monkeypatch, seed):
+    """An overwrite re-links its key with a beam of ``m_max0`` instead
+    of ``ef_construction``. Over 300 overwriting 32-key batches of the
+    serving shape, with the benchmark's 16 clusters, it costs at most
+    half the distance evaluations of re-inserting the same keys with
+    the full beam (the greedy upper-layer descent and the ``_shrink``
+    ranking cost the same on both sides), recall@10 against brute
+    force stays >= 0.95, and the graph invariants hold."""
+    evals = {"n": 0}
+
+    def counting(a, b):
+        evals["n"] += 1
+        return math.dist(a, b)
+
+    monkeypatch.setattr(hnsw, "dist", counting)
+    overwrite_evals: list[int] = []
+    sampled = {"narrow": 0, "full": 0}
+
+    def write(idx, batch):
+        if not all(kk in idx for kk in batch):  # the pool is filling
+            for kk, v in batch.items():
+                idx.add(kk, v)
+            return
+        full = copy.deepcopy(idx) if len(overwrite_evals) % 50 == 0 else None
+        n0 = evals["n"]
+        for kk, v in batch.items():
+            idx.add(kk, v)
+        overwrite_evals.append(evals["n"] - n0)
+        if full is not None:
+            n0 = evals["n"]
+            for kk, v in batch.items():
+                _forget(full, kk)
+                full.add(kk, v)
+            sampled["full"] += evals["n"] - n0
+            sampled["narrow"] += overwrite_evals[-1]
+
+    idx = HnswIndex(64, seed=seed)
+    centers = _serving_history(idx, seed, rounds=304, write=write,
+                               n_centers=16)
+    monkeypatch.undo()
+
+    assert len(overwrite_evals) == 300 and len(idx) == 400 + 4 * 32
+    assert sampled["narrow"] <= 0.5 * sampled["full"], sampled
+    _assert_graph_invariants(idx)
+    hits = 0
+    queries = _clustered(random.Random(seed + 100), 60, centers)
+    for q in queries:
+        exact = set(_brute(idx._vecs, q, 10))
+        hits += len(exact & {kk for kk, _ in idx.search(q, 10)})
+    assert hits / (10 * len(queries)) >= 0.95
+
+
+def test_overwrite_reached_through_a_stale_edge_keeps_m_links():
+    """A one-way edge left pointing at a key (its own list was pruned
+    past the neighbour) lets the overwrite's search reach the key
+    itself at distance 0. The key is filtered out before the ``M``
+    nearest are taken, so it still gets ``min(M, n - 1)`` layer-0
+    links instead of giving one slot to itself."""
+    n, m = 40, 4
+    vecs = {f"k{i:02d}": _vec(i, 4) for i in range(n)}
+    idx = HnswIndex(4, m=m, ef_construction=60, seed=3)
+    for kk in sorted(vecs):
+        idx.add(kk, vecs[kk])
+    layer0 = idx._links[0]
+    stale = [
+        kk for kk in sorted(vecs)
+        if any(kk in ns and src not in layer0[kk] for src, ns in layer0.items())
+    ]
+    assert stale, "no key has a stale inbound edge"
+    for kk in stale:
+        moved = copy.deepcopy(idx)
+        moved.add(kk, vecs[kk])
+        assert len(moved._links[0][kk]) == min(m, n - 1), kk
+        _assert_graph_invariants(moved)
+
+
+def test_fresh_build_matches_a_graph_saved_with_the_full_beam():
+    """``data/hnsw/build_64x8.hnsw.json`` was saved by commit 6616ac4,
+    which re-linked overwrites with the full ``ef_construction`` beam
+    as well. Fresh inserts still use that beam, so building the same
+    rows today gives the same links, levels and entry point, and the
+    saved file still loads and matches the rows' digest (the check
+    ``build_ann_index(persist_dir=…)`` makes before it reuses it)."""
+    saved = HnswIndex.load(HNSW_FIXTURE)
+    vecs = {f"k{i}": _vec(i, 8) for i in range(64)}
+    assert saved.state_key() == HnswIndex.digest_rows(vecs)
+    fresh = HnswIndex(8, m=8, ef_construction=60, seed=7)
+    for kk in sorted(vecs):
+        fresh.add(kk, vecs[kk])
+    assert fresh._entry == saved._entry
+    assert fresh._levels == saved._levels
+    assert fresh._links == saved._links
+    _assert_graph_invariants(fresh)
+
+
 def test_space_persist_dir_roundtrip(spark, tmp_path, monkeypatch):
     """build_ann_index(persist_dir=…): first build saves; a second
     build with the UNCHANGED space loads (zero distance evals, same
@@ -312,7 +449,6 @@ def test_space_persist_dir_roundtrip(spark, tmp_path, monkeypatch):
     sp.multiset(vecs)
     d = str(tmp_path / "idx")
     assert sp.build_ann_index(m=8, ef_construction=60, persist_dir=d) == 80
-    import os
     assert os.path.exists(os.path.join(d, "persisted.hnsw.json"))
     q = _vec(42, 8)
     first = sp.nearest_neighbor(5, vector=q, approximate=True, ef=60)

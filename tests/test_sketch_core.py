@@ -270,3 +270,92 @@ def test_sketch_state_from_before_the_shared_core_resumes(spark, tmp_path):
     assert read_quantiles(spark, psi, qs, n_bins=8) == [
         tuple(r) for r in histogram_quantiles(cur, "v", qs, n_bins=8).collect()
     ]
+
+
+def _drain(q):
+    assert q.awaitTermination(180), "stream did not finish"
+    assert q.exception() is None
+
+
+def _drain_fails(q, message):
+    """The stream stops on its first batch with ``message`` in its
+    error."""
+    with pytest.raises(Exception) as err:
+        q.awaitTermination(180)
+    assert message in str(err.value)
+
+
+def test_sketch_params_are_stamped_and_checked_on_read(spark, tmp_path):
+    """A streamed register table records the ``p`` it was built with
+    and streamed counters their ``depth``/``width``; a read, or a
+    stream into the state, with other values raises a ValueError
+    naming both, instead of answering wrong (registers of p=9 read at
+    p=12 estimate about a quarter of the truth). The stamp survives an
+    unstamped merge. State written before stamps existed (the
+    fixtures) reads at any parameters as before and takes the stamp of
+    the first stream into it."""
+    from embeddinghub_spark.functions.profile import hll_distinct_by
+    from embeddinghub_spark.streaming.cms_by import read_cms_estimates, streaming_cms
+    from embeddinghub_spark.streaming.distinct_by import (
+        _registers,
+        merge_registers_dir,
+        read_distinct_estimates,
+        streaming_distinct_by,
+    )
+
+    d1, d2 = _distinct_batches(spark)
+    c1, _ = _cms_batches(spark)
+    for name, df in (("d1", d1), ("d2", d2), ("c1", c1)):
+        df.write.parquet(str(tmp_path / name))
+
+    def distinct(state, src, p):
+        return streaming_distinct_by(
+            spark.readStream.schema(d1.schema).parquet(str(tmp_path / src)),
+            state, "grp", "uid", p=p, checkpoint_dir=str(tmp_path / f"ck_{src}_{p}"),
+        )
+
+    def cms(state, depth):
+        return streaming_cms(
+            spark.readStream.schema(c1.schema).parquet(str(tmp_path / "c1")),
+            state, depth=depth, width=64,
+            checkpoint_dir=str(tmp_path / f"ck_cms_{depth}"),
+        )
+
+    def rows(df):
+        return {tuple(r) for r in df.collect()}
+
+    regs = str(tmp_path / "regs")
+    _drain(distinct(regs, "d1", 10))
+    assert rows(read_distinct_estimates(spark, regs, p=10)) == rows(
+        hll_distinct_by(d1, ["grp"], "uid", p=10)
+    )
+    with pytest.raises(ValueError, match=r"p=10 \(stamped\), p=12 \(this call\)"):
+        read_distinct_estimates(spark, regs, p=12)
+    _drain_fails(distinct(regs, "d2", 9), "p=10 (stamped), p=9 (this call)")
+    merge_registers_dir(spark, regs, _registers(d2, "grp", "uid", 10))
+    with pytest.raises(ValueError, match=r"p=9 \(this call\)"):
+        read_distinct_estimates(spark, regs)  # the default p=9
+
+    counters = str(tmp_path / "cms")
+    _drain(cms(counters, 3))
+    assert read_cms_estimates(spark, counters, ["fig"], depth=3, width=64).count() == 1
+    with pytest.raises(ValueError, match=r"width=64 \(stamped\), width=128"):
+        read_cms_estimates(spark, counters, ["fig"], depth=3, width=128)
+    with pytest.raises(ValueError, match=r"depth=3 \(stamped\), depth=4"):
+        read_cms_estimates(spark, counters, ["fig"], depth=4, width=64)
+    _drain_fails(cms(counters, 4), "depth=3 (stamped), depth=4 (this call)")
+
+    # unstamped fixtures: read as before at any parameters
+    old = str(tmp_path / "old_distinct")
+    _restore(os.path.join(FIXTURES, "distinct"), old)
+    assert read_distinct_estimates(spark, old, p=12).count() == 2
+    old_cms = str(tmp_path / "old_cms")
+    _restore(os.path.join(FIXTURES, "cms"), old_cms)
+    read_cms_estimates(spark, old_cms, ["fig"], width=128).collect()
+    # ... and take the stamp of the first stream into them
+    _drain(distinct(old, "d2", 9))
+    assert rows(read_distinct_estimates(spark, old)) == rows(
+        hll_distinct_by(d1.unionByName(d2), ["grp"], "uid")
+    )
+    with pytest.raises(ValueError, match=r"p=9 \(stamped\), p=12"):
+        read_distinct_estimates(spark, old, p=12)
