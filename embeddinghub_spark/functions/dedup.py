@@ -212,6 +212,115 @@ def _with_signature(
     return staged.select(*cols)
 
 
+# -- LSH banding core ---------------------------------------------------------
+#
+# Every banded family (MinHash, SimHash, pHash, sign-LSH) cuts a
+# signature into bands and calls two rows candidates when any band
+# matches (MMDS ch. 3). A family supplies only its band expression and
+# its verify predicate; the band rows, the banded self-join and the
+# bucketed on-disk append below are written once.
+
+
+def _band_width(n: int, n_bands: int, what: str) -> int:
+    """Rows (hashes or bits) per band; raises unless ``n_bands``
+    divides ``n`` — trailing rows would otherwise be silently dropped,
+    reducing LSH recall."""
+    if n % n_bands != 0:
+        raise ValueError(
+            f"{what}={n} not divisible by bands={n_bands}: the trailing "
+            f"{n % n_bands} would be silently dropped, reducing LSH recall"
+        )
+    return n // n_bands
+
+
+def _bit_slices(col: str, n_bits: int, n_bands: int, what: str = "bits"):
+    """``band_expr`` over a bit-packed signature: band b is bits
+    ``[b·w, (b+1)·w)``. Arithmetic shift + mask keeps the low bits
+    identical whatever the sign."""
+    width = _band_width(n_bits, n_bands, what)
+    mask = (1 << width) - 1
+    return lambda b: F.shiftright(F.col(col), b * width).bitwiseAND(F.lit(mask))
+
+
+def _minhash_rolls(num_hashes: int, bands: int):
+    """``band_expr`` over a ``_sig`` column: band b's hash is the
+    integer mod-P polynomial of its min-hashes (same 64-bit-safe
+    arithmetic as the shingles, no md5)."""
+    rows = _band_width(num_hashes, bands, "num_hashes")
+    return lambda b: F.aggregate(
+        F.slice(F.col("_sig"), b * rows + 1, rows),
+        F.lit(0).cast("bigint"),
+        lambda a, x: (a * MINHASH_ROLL + x) % MINHASH_P,
+    )
+
+
+def _bands(
+    df: DataFrame, keep: list, n_bands: int, band_expr, val_col: str = "band_val"
+) -> DataFrame:
+    """``keep + (band, val_col)``: one row per (row, band), the band
+    value ``band_expr(b)`` (``_bit_slices`` or ``_minhash_rolls``,
+    which also check that ``n_bands`` divides the signature) — the one
+    explode behind every banded family. ``keep`` lists the columns
+    (names or Columns) each band row carries."""
+    structs = [
+        F.struct(F.lit(b).alias("band"), band_expr(b).alias(val_col))
+        for b in range(n_bands)
+    ]
+    rows = df.select(*keep, F.explode(F.array(*structs)).alias("bh"))
+    return rows.select(
+        *rows.columns[:-1],
+        F.col("bh.band").alias("band"),
+        F.col(f"bh.{val_col}").alias(val_col),
+    )
+
+
+def _band_pairs(
+    banded: DataFrame, id_col: str, val_col: str = "band_val", directed: bool = False
+) -> DataFrame:
+    """The banded self-join: sides ``a`` and ``b`` of ``banded`` on a
+    shared (band, ``val_col``) with ``a.id < b.id`` (``!=`` when
+    ``directed``, so both directions survive). A pair matching on
+    several bands appears once per band; callers project and
+    ``distinct``."""
+    a, b = banded.alias("a"), banded.alias("b")
+    ida, idb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col(f"a.{val_col}") == F.col(f"b.{val_col}"))
+        & ((ida != idb) if directed else (ida < idb)),
+    )
+
+
+def _band_bucket(n_buckets: int, val_col: str = "band_hash") -> Column:
+    """On-disk bucket of a band row, ``pmod(crc32(key), n_buckets)``.
+    The key is part of each index's format and must not change: the
+    MinHash index (``band_hash``) hashes the band hash alone, the
+    embedding index (``band_val``) the string ``band:band_val``."""
+    if val_col == "band_hash":
+        key = F.col("band_hash").cast("string")
+    else:
+        key = F.concat_ws(":", F.col("band"), F.col(val_col))
+    return F.pmod(F.crc32(key.cast("binary")), F.lit(n_buckets)).cast("int")
+
+
+def _bucket_append(
+    rows: DataFrame, index_dir: str, n_buckets: int, sidecar: dict, params: dict
+) -> str:
+    """Append ``rows`` (with a ``bucket`` column) to the on-disk index:
+    check (or, on the first append, record) the params sidecar, then
+    one bucket-clustering exchange of the batch's own rows into
+    parquet partitioned by ``bucket``."""
+    _index_params_check(index_dir, params=params, **sidecar)
+    (
+        rows.repartition(n_buckets, "bucket")
+        .write.partitionBy("bucket")
+        .mode("append")
+        .parquet(index_dir)
+    )
+    return index_dir
+
+
 def minhash_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -221,7 +330,7 @@ def minhash_candidates(
     shingle_n: int = 3,
 ) -> DataFrame:
     """LSH banding: docs sharing any band of the signature are
-    candidate near-duplicates. Output: (band, band_hash, doc_id) —
+    candidate near-duplicates. Output: (doc_id, band, band_hash) —
     grouping by (band, band_hash) yields the candidate buckets;
     self-join within bucket yields candidate pairs.
 
@@ -229,40 +338,20 @@ def minhash_candidates(
     bounded by true near-dup cluster sizes (plus tiny hash-collision
     noise), so no quadratic blowup on the full corpus.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by bands={bands}: trailing "
-            "hashes would be silently dropped, reducing LSH recall"
-        )
+    rolls = _minhash_rolls(num_hashes, bands)
     with_sig = _with_signature(df, text_col, id_col, num_hashes, shingle_n)
+    return _bands(with_sig, [F.col(id_col)], bands, rolls, "band_hash")
+
+
+def _minhash_pairs(cand: DataFrame, id_col: str) -> DataFrame:
+    """Distinct ``(id_a < id_b)`` pairs sharing a band hash."""
     return (
-        with_sig.select(
-            F.col(id_col),
-            F.explode(F.array(*_band_structs(num_hashes, bands))).alias("bh"),
+        _band_pairs(cand, id_col, "band_hash")
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         )
-        .select(id_col, F.col("bh.band").alias("band"), F.col("bh.band_hash").alias("band_hash"))
+        .distinct()
     )
-
-
-def _band_structs(num_hashes: int, bands: int) -> list[Column]:
-    """Band fold over a ``_sig`` column: struct(band, band_hash) per
-    band — integer mod-P polynomial of the band's min-hashes (same
-    64-bit-safe arithmetic as the shingles, no md5). Shared by
-    ``minhash_candidates`` and ``minhash_estimate_audit`` so the two
-    cannot disagree on a bucket."""
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        piece = F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band)
-        band_hash = F.aggregate(
-            piece,
-            F.lit(0).cast("bigint"),
-            lambda a, x: (a * MINHASH_ROLL + x) % MINHASH_P,
-        )
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), band_hash.alias("band_hash"))
-        )
-    return band_cols
 
 
 def minhash_duplicate_pairs(
@@ -281,20 +370,7 @@ def minhash_duplicate_pairs(
     cand = minhash_candidates(
         df, text_col, id_col, num_hashes, bands, shingle_n
     ).localCheckpoint(eager=False)
-    a = cand.alias("a")
-    b = cand.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    return _minhash_pairs(cand, id_col)
 
 
 # -- SimHash ------------------------------------------------------------------
@@ -495,22 +571,26 @@ def simhash_bands(
     distance < ``bands`` share ≥1 exact band (pigeonhole), so the
     shuffle key for candidate generation is a (band, 16-bit value)
     pair, never the document."""
-    if bits % bands != 0:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    width = bits // bands
-    mask = (1 << width) - 1
+    slices = _bit_slices("simhash", bits, bands)
     sh = simhash_staged(df, text_col, id_col, bits)
-    bandstructs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            # arithmetic shift + mask: identical low bits regardless of sign
-            F.shiftright(F.col("simhash"), b * width).bitwiseAND(F.lit(mask)).alias("band_val"),
-        )
-        for b in range(bands)
-    ])
+    return _bands(sh, [F.col(id_col), F.col("simhash")], bands, slices)
+
+
+def _hamming_pairs(
+    banded: DataFrame, id_col: str, hash_col: str, max_hamming: int
+) -> DataFrame:
+    """Distinct ``(id_a < id_b, hamming)`` pairs of a banded bit
+    fingerprint, verified by exact ``bit_count(a XOR b) <= max_hamming``
+    — the SimHash and pHash near-pair join."""
     return (
-        sh.select(F.col(id_col), F.col("simhash"), F.explode(bandstructs).alias("bv"))
-        .select(id_col, "simhash", F.col("bv.band").alias("band"), F.col("bv.band_val").alias("band_val"))
+        _band_pairs(banded, id_col)
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.expr(f"bit_count(a.{hash_col} ^ b.{hash_col})").alias("hamming"),
+        )
+        .distinct()
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -545,22 +625,7 @@ def simhash_near_pairs(
     banded = simhash_bands(df, text_col, id_col, bits, bands).localCheckpoint(
         eager=False
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _hamming_pairs(banded, id_col, "simhash", max_hamming)
 
 
 # -- n-gram Jaccard -----------------------------------------------------------
@@ -976,42 +1041,38 @@ def embedding_near_duplicates(
     banded = _emb_band_rows(
         df, dim, id_col, vec_col, n_planes, bands, seed
     ).localCheckpoint(eager=False)
-    return _emb_band_pairs(banded, dim, id_col, vec_col, threshold)
+    return _emb_band_pairs(banded, dim, id_col, vec_col).filter(
+        F.col("cosine") >= threshold
+    )
 
 
 def _emb_band_pairs(
-    banded: DataFrame, dim: int, id_col: str, vec_col: str, threshold: float
+    banded: DataFrame, dim: int, id_col: str, vec_col: str, directed: bool = False
 ) -> DataFrame:
-    """Verified near-dup pairs ``(id_a < id_b, cosine)`` over
+    """Distinct candidate pairs ``(id_a, id_b, cosine)`` over
     ``_emb_band_rows`` output: a shared (band, band_val) makes a
-    candidate, exact cosine (rounded to 6) ≥ ``threshold`` keeps it.
-    The one pair join behind ``embedding_near_duplicates`` and the
-    within-batch step of embedding dedup-on-ingest."""
+    candidate, scored by exact cosine rounded to 6 (callers apply
+    their threshold or rank). The one pair join behind
+    ``embedding_near_duplicates``, ``vector.knn_join`` (directed) and
+    the within-batch step of embedding dedup-on-ingest."""
     from embeddinghub_spark.functions.vector import dot
 
-    x, y = banded.alias("x"), banded.alias("y")
     return (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_val") == F.col("y.band_val"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
+        _band_pairs(banded, id_col, directed=directed)
         .select(
-            F.col(f"x.{id_col}").alias("id_a"),
-            F.col(f"y.{id_col}").alias("id_b"),
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
             F.round(
                 # qualified names unroll too (dim-known codegen path);
                 # the norms come precomputed per row (_norm), which
                 # keeps the join's generated method under janino's
                 # 64 KB limit
-                dot(f"x.{vec_col}", f"y.{vec_col}", dim)
-                / (F.col("x._norm") * F.col("y._norm")),
+                dot(f"a.{vec_col}", f"b.{vec_col}", dim)
+                / (F.col("a._norm") * F.col("b._norm")),
                 6,
             ).alias("cosine"),
         )
         .distinct()
-        .filter(F.col("cosine") >= threshold)
     )
 
 
@@ -1033,18 +1094,25 @@ def _index_params_check(
     so mismatch is an error, not a wrong answer; ``what`` names the
     family's values that would not line up. A probe
     (``record=False``) of a legacy sidecar-less index skips both
-    record and validation. The sidecar is written to a temp file in
-    the same directory and renamed into place, so an interrupted
-    append never leaves a truncated sidecar behind."""
+    record and validation. The sidecar is read and written through
+    ``ann_index._index_fs`` — the filesystem Spark writes the index
+    to, so a ``file://`` URI lands it next to the index, not under a
+    ``file:`` directory in the working directory. It is written to a
+    temp file in the same directory and moved into place, so an
+    interrupted append never leaves a truncated sidecar behind."""
     import json
-    import os
     import uuid
 
+    import pyarrow.fs as pafs
+
+    from embeddinghub_spark.functions.ann_index import _index_fs
+
     params = {k: int(v) for k, v in params.items()}
-    path = os.path.join(index_dir, filename)
-    if os.path.isfile(path):
-        with open(path) as f:
-            stored = json.load(f)
+    fs, root = _index_fs(index_dir)
+    path = f"{root}/{filename}"
+    if fs.get_file_info(path).type == pafs.FileType.File:
+        with fs.open_input_stream(path) as f:
+            stored = json.loads(f.read())
         if stored != params:
             raise ValueError(
                 f"{what} would not line up: the index at {index_dir!r} "
@@ -1052,15 +1120,15 @@ def _index_params_check(
                 "index or pass the original parameters."
             )
     elif record:
-        os.makedirs(index_dir, exist_ok=True)
+        fs.create_dir(root, recursive=True)
         tmp = f"{path}.{uuid.uuid4().hex}.tmp"
         try:
-            with open(tmp, "w") as f:
-                json.dump(params, f)
-            os.replace(tmp, path)
+            with fs.open_output_stream(tmp) as f:
+                f.write(json.dumps(params).encode())
+            fs.move(tmp, path)
         finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+            if fs.get_file_info(tmp).type != pafs.FileType.NotFound:
+                fs.delete_file(tmp)
 
 
 # -- incremental embedding near-dup index (banded sign-LSH on disk) -----------
@@ -1080,46 +1148,33 @@ def _emb_band_rows(
     bands: int,
     seed: int,
 ) -> DataFrame:
-    """``(id, band, band_val, vec, _norm)`` band rows — the one
-    banding recipe (planes, seed, band split) behind
-    ``embedding_near_duplicates`` and the on-disk index, so the
-    index and the one-shot batch op can never disagree on a bucket.
-    The norm is computed once per row, not per candidate pair."""
+    """``(id, vec, band, band_val, _norm)`` band rows — the one
+    sign-LSH banding recipe (planes, seed, band split) behind
+    ``embedding_near_duplicates``, ``semantic_contamination``,
+    ``vector.knn_join`` and the on-disk index, so none of them can
+    disagree on a bucket. The norm is computed here, not per
+    candidate pair."""
     from embeddinghub_spark.functions.vector import ensure_parallelism, norm
 
-    if n_planes % bands != 0:
-        raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
-    bits = n_planes // bands
-    mask = (1 << bits) - 1
+    slices = _bit_slices("lsh_bucket", n_planes, bands, "n_planes")
     b = with_lsh_bucket(ensure_parallelism(df), vec_col, dim, n_planes, seed)
-    bandstructs = F.array(*[
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftright(F.col("lsh_bucket"), i * bits)
-            .bitwiseAND(F.lit(mask))
-            .alias("band_val"),
-        )
-        for i in range(bands)
-    ])
-    return (
-        b.withColumn("bv", F.explode(bandstructs))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("bv.band").alias("band"),
-            F.col("bv.band_val").alias("band_val"),
-            norm(vec_col, dim).alias("_norm"),
-        )
+    return _bands(b, [F.col(id_col), F.col(vec_col)], bands, slices).withColumn(
+        "_norm", norm(vec_col, dim)
     )
 
 
-def _emb_band_bucket(n_buckets: int):
-    return F.pmod(
-        F.crc32(
-            F.concat_ws(":", F.col("band"), F.col("band_val")).cast("binary")
-        ),
-        F.lit(n_buckets),
-    ).cast("int")
+def _emb_index_rows(df, dim, id_col, vec_col, n_planes, bands, seed, n_buckets):
+    """``_emb_band_rows`` plus the on-disk ``bucket``: the embedding
+    index's row layout, as appended and as probed."""
+    return _emb_band_rows(
+        df, dim, id_col, vec_col, n_planes, bands, seed
+    ).withColumn("bucket", _band_bucket(n_buckets, "band_val"))
+
+
+def _emb_index_params(dim, n_planes, bands, seed, n_buckets) -> dict:
+    return dict(
+        dim=dim, n_planes=n_planes, bands=bands, seed=seed, n_buckets=n_buckets
+    )
 
 
 def emb_index_append(
@@ -1133,7 +1188,6 @@ def emb_index_append(
     bands: int = 2,
     seed: int = 7,
     n_buckets: int = 16,
-    _band_rows: DataFrame | None = None,
 ) -> str:
     """Append a batch's banded sign-LSH rows (WITH vectors and
     precomputed norms — the probe's exact-cosine verify needs them)
@@ -1142,41 +1196,16 @@ def emb_index_append(
     rows (bytes ∝ |batch| × bands × dim, never the corpus). First
     append records a params sidecar; mismatched later calls raise.
 
-    ``_band_rows`` (internal, the ingest-batch fast path): a
-    precomputed ``_emb_band_rows(df, ...)`` frame — with or without
-    the ``bucket`` column — built with the SAME parameters, so one
-    shared (ideally checkpointed) band frame serves probe + in-batch
-    pairs + this append without rebuilding the plane projection three
-    times per micro-batch.
-
     The embedding twin of ``minhash_index_append`` — the ingest-side
     half of the near-dup stack for a crawl that dedups on VECTOR
     similarity rather than text shingles."""
-    _index_params_check(
+    return _bucket_append(
+        _emb_index_rows(df, dim, id_col, vec_col, n_planes, bands, seed, n_buckets),
         index_dir,
-        params=dict(
-            dim=dim, n_planes=n_planes, bands=bands, seed=seed,
-            n_buckets=n_buckets,
-        ),
-        **_EMB_INDEX_SIDECAR,
+        n_buckets,
+        _EMB_INDEX_SIDECAR,
+        _emb_index_params(dim, n_planes, bands, seed, n_buckets),
     )
-    rows = (
-        _band_rows
-        if _band_rows is not None
-        else _emb_band_rows(df, dim, id_col, vec_col, n_planes, bands, seed)
-    )
-    if "bucket" not in rows.columns:
-        rows = rows.withColumn("bucket", _emb_band_bucket(n_buckets))
-    (
-        rows.select(
-            id_col, vec_col, "band", "band_val", "_norm", "bucket"
-        )
-        .repartition(n_buckets, "bucket")
-        .write.partitionBy("bucket")
-        .mode("append")
-        .parquet(index_dir)
-    )
-    return index_dir
 
 
 def emb_index_probe(
@@ -1191,7 +1220,6 @@ def emb_index_probe(
     bands: int = 2,
     seed: int = 7,
     n_buckets: int = 16,
-    _band_rows: DataFrame | None = None,
 ) -> DataFrame:
     """Probe new vectors against the on-disk LSH index: candidates
     come ONLY from shared (band, band_val) buckets, verified with
@@ -1215,17 +1243,25 @@ def emb_index_probe(
     |batch| × bands × dim floats through the driver.)
 
     Output: ``(probe_id, index_id, cosine)`` distinct pairs."""
-    from embeddinghub_spark.functions.vector import dot, norm
-
-    _index_params_check(
-        index_dir,
-        params=dict(
-            dim=dim, n_planes=n_planes, bands=bands, seed=seed,
-            n_buckets=n_buckets,
-        ),
-        record=False,
-        **_EMB_INDEX_SIDECAR,
+    rows = _emb_index_rows(
+        new_vecs, dim, id_col, vec_col, n_planes, bands, seed, n_buckets
     )
+    return _emb_index_probe_rows(
+        spark, index_dir, rows, dim, threshold, id_col, vec_col,
+        _emb_index_params(dim, n_planes, bands, seed, n_buckets),
+    )
+
+
+def _emb_index_probe_rows(
+    spark, index_dir, rows, dim, threshold, id_col, vec_col, params
+) -> DataFrame:
+    """``emb_index_probe`` over prebuilt ``_emb_index_rows`` — one
+    (ideally checkpointed) frame serves the probe keys AND the verify
+    side's vectors: the band-0 row exists for every vector and carries
+    its norm."""
+    from embeddinghub_spark.functions.vector import dot
+
+    _index_params_check(index_dir, params=params, record=False, **_EMB_INDEX_SIDECAR)
     # The index layout is fixed by emb_index_append, and the id/vector
     # types must match the probe's own (the params sidecar pins the
     # band space; a type-mismatched probe failed at the join before
@@ -1235,8 +1271,8 @@ def emb_index_probe(
     # (measured r16); the scan itself is unchanged.
     idx_schema = T.StructType(
         [
-            T.StructField(id_col, new_vecs.schema[id_col].dataType),
-            T.StructField(vec_col, new_vecs.schema[vec_col].dataType),
+            T.StructField(id_col, rows.schema[id_col].dataType),
+            T.StructField(vec_col, rows.schema[vec_col].dataType),
             T.StructField("band", T.IntegerType()),
             T.StructField("band_val", T.IntegerType()),
             T.StructField("_norm", T.DoubleType()),
@@ -1251,42 +1287,14 @@ def emb_index_probe(
         "band_val",
         "bucket",
     )
-    if _band_rows is not None:
-        # ingest-batch fast path: one shared (checkpointed) band frame
-        # serves probe keys AND the verify-side vectors — the band=0
-        # row exists for every vector and carries the identical
-        # norm(vec_col, dim) value the direct path recomputes
-        band_rows = _band_rows
-        if "bucket" not in band_rows.columns:
-            band_rows = band_rows.withColumn(
-                "bucket", _emb_band_bucket(n_buckets)
-            )
-        probe_keys = band_rows.select(
-            F.col(id_col).alias("probe_id"), "band", "band_val", "bucket"
-        )
-        probe_vecs = band_rows.filter(F.col("band") == 0).select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("_pvec"),
-            F.col("_norm").alias("_pnorm"),
-        )
-    else:
-        probe_keys = (
-            _emb_band_rows(
-                new_vecs, dim, id_col, vec_col, n_planes, bands, seed
-            )
-            .withColumn("bucket", _emb_band_bucket(n_buckets))
-            .select(
-                F.col(id_col).alias("probe_id"),
-                "band",
-                "band_val",
-                "bucket",
-            )
-        )
-        probe_vecs = new_vecs.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).alias("_pvec"),
-            norm(vec_col, dim).alias("_pnorm"),
-        )
+    probe_keys = rows.select(
+        F.col(id_col).alias("probe_id"), "band", "band_val", "bucket"
+    )
+    probe_vecs = rows.filter(F.col("band") == 0).select(
+        F.col(id_col).alias("probe_id"),
+        F.col(vec_col).alias("_pvec"),
+        F.col("_norm").alias("_pnorm"),
+    )
     candidates = (
         idx.join(probe_keys, ["bucket", "band", "band_val"])
         .filter(F.col("index_id") != F.col("probe_id"))
@@ -1426,17 +1434,24 @@ def dedup_passages(
 # pruned index scan. The corpus text is never touched again.
 
 
-def _band_bucket(n_buckets: int):
-    return F.pmod(
-        F.crc32(F.col("band_hash").cast("string").cast("binary")),
-        F.lit(n_buckets),
-    ).cast("int")
-
-
 _MINHASH_SIDECAR = {
     "filename": "_minhash_params.json",
     "what": "minhash index's band hashes/buckets",
 }
+
+
+def _minhash_index_rows(df, text_col, id_col, num_hashes, bands, shingle_n, n_buckets):
+    """``minhash_candidates`` plus the on-disk ``bucket``: the MinHash
+    index's row layout, as appended and as probed."""
+    return minhash_candidates(
+        df, text_col, id_col, num_hashes, bands, shingle_n
+    ).withColumn("bucket", _band_bucket(n_buckets))
+
+
+def _minhash_index_params(num_hashes, bands, shingle_n, n_buckets) -> dict:
+    return dict(
+        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n, n_buckets=n_buckets
+    )
 
 
 def minhash_index_append(
@@ -1456,23 +1471,15 @@ def minhash_index_append(
     (bytes ∝ |batch| × bands, never the corpus). First append writes
     a params sidecar; later appends/probes with different parameters
     raise instead of silently mis-bucketing."""
-    _index_params_check(
-        index_dir,
-        params=dict(
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            n_buckets=n_buckets,
+    return _bucket_append(
+        _minhash_index_rows(
+            df, text_col, id_col, num_hashes, bands, shingle_n, n_buckets
         ),
-        **_MINHASH_SIDECAR,
+        index_dir,
+        n_buckets,
+        _MINHASH_SIDECAR,
+        _minhash_index_params(num_hashes, bands, shingle_n, n_buckets),
     )
-    rows = minhash_candidates(df, text_col, id_col, num_hashes, bands, shingle_n)
-    (
-        rows.withColumn("bucket", _band_bucket(n_buckets))
-        .repartition(n_buckets, "bucket")
-        .write.partitionBy("bucket")
-        .mode("append")
-        .parquet(index_dir)
-    )
-    return index_dir
 
 
 def minhash_index_probe(
@@ -1501,26 +1508,25 @@ def minhash_index_probe(
     Self-matches (re-probing an already-indexed id) are dropped.
     Raises if the parameters differ from the ones recorded at append
     time."""
-    _index_params_check(
-        index_dir,
-        params=dict(
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            n_buckets=n_buckets,
-        ),
-        record=False,
-        **_MINHASH_SIDECAR,
+    rows = _minhash_index_rows(
+        new_docs, text_col, id_col, num_hashes, bands, shingle_n, n_buckets
     )
+    return _minhash_index_probe_rows(
+        spark, index_dir, rows, id_col,
+        _minhash_index_params(num_hashes, bands, shingle_n, n_buckets),
+    )
+
+
+def _minhash_index_probe_rows(spark, index_dir, rows, id_col, params) -> DataFrame:
+    """``minhash_index_probe`` over prebuilt ``_minhash_index_rows``."""
+    _index_params_check(index_dir, params=params, record=False, **_MINHASH_SIDECAR)
     idx = spark.read.parquet(index_dir).select(
         F.col(id_col).alias("index_id"),
         "band",
         "band_hash",
         "bucket",
     )
-    probe = (
-        minhash_candidates(new_docs, text_col, id_col, num_hashes, bands, shingle_n)
-        .withColumn("bucket", _band_bucket(n_buckets))
-        .select(F.col(id_col).alias("probe_id"), "band", "band_hash", "bucket")
-    )
+    probe = rows.select(F.col(id_col).alias("probe_id"), "band", "band_hash", "bucket")
     return (
         idx.join(probe, ["bucket", "band", "band_hash"])
         .filter(F.col("index_id") != F.col("probe_id"))
@@ -1942,21 +1948,13 @@ def gram_index_append(
     copied SPANS against the whole standing corpus without re-reading
     its text. Map-only up to the single bucket-clustering exchange of
     the batch's own gram rows."""
-    _index_params_check(
-        index_dir,
-        params=dict(gram_n=gram_n, n_buckets=n_buckets),
-        **_GRAM_SIDECAR,
-    )
     rows = _gram_fingerprints(
         _tokenized_base(df, text_col, id_col, gram_n), id_col, gram_n
     ).withColumn("bucket", _md5_long(F.col("fp")) % n_buckets)
-    (
-        rows.repartition(n_buckets, "bucket")
-        .write.partitionBy("bucket")
-        .mode("append")
-        .parquet(index_dir)
+    return _bucket_append(
+        rows, index_dir, n_buckets, _GRAM_SIDECAR,
+        dict(gram_n=gram_n, n_buckets=n_buckets),
     )
-    return index_dir
 
 
 def gram_index_probe_spans(
@@ -2209,41 +2207,17 @@ def semantic_contamination(
     agreeing band); the pytest pins LSH-vs-brute-force on a seeded
     corpus.
     """
-    if n_planes % bands != 0:
-        raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
-    bits = n_planes // bands
-    mask = (1 << bits) - 1
-    from embeddinghub_spark.functions.vector import (
-        dot,
-        ensure_parallelism,
-        norm,
-        with_lsh_bucket,
-    )
-
-    bandstructs = F.array(*[
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftright(F.col("lsh_bucket"), i * bits)
-            .bitwiseAND(F.lit(mask))
-            .alias("band_val"),
-        )
-        for i in range(bands)
-    ])
+    from embeddinghub_spark.functions.vector import dot
 
     def prep(df: DataFrame, side: str) -> DataFrame:
-        b = with_lsh_bucket(
-            ensure_parallelism(df), vec_col, dim, n_planes, seed
-        )
-        return (
-            b.withColumn("_norm", norm(vec_col, dim))
-            .withColumn("bv", F.explode(bandstructs))
-            .select(
-                F.col(id_col).alias(f"{side}_id"),
-                F.col(vec_col).alias(f"{side}_vec"),
-                F.col("_norm").alias(f"{side}_norm"),
-                F.col("bv.band").alias("band"),
-                F.col("bv.band_val").alias("band_val"),
-            )
+        return _emb_band_rows(
+            df, dim, id_col, vec_col, n_planes, bands, seed
+        ).select(
+            F.col(id_col).alias(f"{side}_id"),
+            F.col(vec_col).alias(f"{side}_vec"),
+            F.col("_norm").alias(f"{side}_norm"),
+            "band",
+            "band_val",
         )
 
     t = prep(train, "t")
@@ -2374,34 +2348,12 @@ def minhash_estimate_audit(
     measure runs ONLY on candidates; the final aggregate is
     (num_hashes+1)-row bounded.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes={num_hashes} not divisible by bands={bands}"
-        )
+    rolls = _minhash_rolls(num_hashes, bands)
     base = _with_signature(
         df, text_col, id_col, num_hashes, shingle_n, keep_shingles=True
     ).localCheckpoint(eager=False)
-    cand = base.select(
-        F.col(id_col),
-        F.explode(F.array(*_band_structs(num_hashes, bands))).alias("bh"),
-    ).select(
-        id_col,
-        F.col("bh.band").alias("band"),
-        F.col("bh.band_hash").alias("band_hash"),
-    )
-    a, b = cand.alias("a"), cand.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
+    pairs = _minhash_pairs(
+        _bands(base, [F.col(id_col)], bands, rolls, "band_hash"), id_col
     )
     sa = base.select(
         F.col(id_col).alias("id_a"),

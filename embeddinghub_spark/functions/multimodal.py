@@ -267,8 +267,9 @@ def media_near_dup_pairs(
     (id_a, id_b, hamming). The shuffle key is a (band, 15-bit value)
     pair — media bytes are dropped after the map-only hash and never
     enter an exchange."""
-    if PHASH_BITS % bands != 0:
-        raise ValueError(f"bands={bands} must divide {PHASH_BITS}")
+    from embeddinghub_spark.functions.dedup import _bands, _bit_slices, _hamming_pairs
+
+    slices = _bit_slices("phash", PHASH_BITS, bands, "PHASH_BITS")
     if max_hamming >= bands:
         # pigeonhole only guarantees a shared band for hamming < bands;
         # a larger radius would silently return incomplete pairs
@@ -277,41 +278,6 @@ def media_near_dup_pairs(
             "banding pigeonhole to guarantee candidate recall; raise "
             "bands (it must divide PHASH_BITS) to widen the radius"
         )
-    width = PHASH_BITS // bands
-    mask = (1 << width) - 1
     ph = media_phash(df, binary_col, id_col)
-    bandstructs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("phash"), b * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("band_val"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = ph.select(
-        id_col, "phash", F.explode(bandstructs).alias("bv")
-    ).select(
-        id_col,
-        "phash",
-        F.col("bv.band").alias("band"),
-        F.col("bv.band_val").alias("band_val"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.expr("bit_count(a.phash ^ b.phash)").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    banded = _bands(ph, [F.col(id_col), F.col("phash")], bands, slices)
+    return _hamming_pairs(banded, id_col, "phash", max_hamming)

@@ -678,26 +678,15 @@ def knn_lsh(
     more bands → higher recall. The join is band-equi + broadcast →
     no N×Q explosion.
     """
-    if n_planes % bands != 0:
-        raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
+    from embeddinghub_spark.functions.dedup import _bands, _bit_slices
+
+    slices = _bit_slices("lsh_bucket", n_planes, bands, "n_planes")
     v = with_lsh_bucket(vectors, vec_col, dim, n_planes, seed)
     q = with_lsh_bucket(queries, query_vec_col, dim, n_planes, seed)
-    bits = n_planes // bands
-    mask = (1 << bits) - 1
 
     def banded(df: DataFrame) -> DataFrame:
-        bandstructs = F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("lsh_bucket"), b * bits).bitwiseAND(F.lit(mask)).alias("band_val"),
-            )
-            for b in range(bands)
-        ])
-        return (
-            df.withColumn("_b", F.explode(bandstructs))
-            .select(*df.columns, F.col("_b.band").alias("band"), F.col("_b.band_val").alias("band_val"))
-            .drop("lsh_bucket")
-        )
+        keep = [c for c in df.columns if c != "lsh_bucket"]
+        return _bands(df, keep, bands, slices)
 
     # norms once per row before the pairing (see knn_bruteforce note)
     vb = banded(v.withColumn("_vn", norm(vec_col, dim)))
@@ -1359,49 +1348,13 @@ def knn_join(
 
     Output: ``(vec_id, neighbor_id, cosine, rank)``, rank 1..<=k.
     """
-    if n_planes % bands != 0:
-        raise ValueError(f"n_planes={n_planes} not divisible by bands={bands}")
-    bits = n_planes // bands
-    mask = (1 << bits) - 1
-    b = with_lsh_bucket(ensure_parallelism(vectors), vec_col, dim, n_planes, seed)
-    bandstructs = F.array(*[
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftright(F.col("lsh_bucket"), i * bits)
-            .bitwiseAND(F.lit(mask))
-            .alias("band_val"),
-        )
-        for i in range(bands)
-    ])
-    banded = (
-        b.withColumn("bv", F.explode(bandstructs))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("bv.band").alias("band"),
-            F.col("bv.band_val").alias("band_val"),
-            norm(vec_col, dim).alias("_norm"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    x, y = banded.alias("x"), banded.alias("y")
-    scored = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_val") == F.col("y.band_val"))
-            & (F.col(f"x.{id_col}") != F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias(id_col),
-            F.col(f"y.{id_col}").alias("neighbor_id"),
-            F.round(
-                dot(f"x.{vec_col}", f"y.{vec_col}", dim)
-                / (F.col("x._norm") * F.col("y._norm")),
-                6,
-            ).alias("cosine"),
-        )
-        .distinct()
+    from embeddinghub_spark.functions.dedup import _emb_band_pairs, _emb_band_rows
+
+    banded = _emb_band_rows(
+        vectors, dim, id_col, vec_col, n_planes, bands, seed
+    ).localCheckpoint(eager=False)
+    scored = _emb_band_pairs(banded, dim, id_col, vec_col, directed=True).select(
+        F.col("id_a").alias(id_col), F.col("id_b").alias("neighbor_id"), "cosine"
     )
     w = Window.partitionBy(id_col).orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()

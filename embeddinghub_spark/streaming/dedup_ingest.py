@@ -50,8 +50,6 @@ the dedup coverage brief; dedup rule matches
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -80,10 +78,17 @@ def _ingest_batch(batch, index_dir, out_dir, id_col, probe, pairs, append):
     ``out_dir`` after replay (same rows) — readers needing exactly-once
     dedupe on id; the streaming checkpoint keeps this window one
     batch wide."""
+    import pyarrow.fs as pafs
+
+    from embeddinghub_spark.functions.ann_index import _index_fs
+
     rejected = None
-    # 1. probe vs the already-ingested corpus (index may not exist yet)
-    if os.path.isdir(index_dir) and any(
-        name.startswith("bucket=") for name in os.listdir(index_dir)
+    # 1. probe vs the already-ingested corpus (index may not exist yet),
+    # listed through the filesystem Spark writes it to (a file:// URI too)
+    fs, root = _index_fs(index_dir)
+    if any(
+        f.base_name.startswith("bucket=")
+        for f in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True))
     ):
         hits = probe().join(
             batch.select(F.col(id_col).alias("index_id")),
@@ -136,11 +141,17 @@ def dedup_ingest_batch(
 ) -> None:
     """Process ONE batch: probe, within-batch pairs, accept/reject,
     index append. Usable directly for incremental batch ingest; the
-    streaming entry point below wires it into foreachBatch."""
+    streaming entry point below wires it into foreachBatch. One
+    lazily-checkpointed band frame (with bucket) feeds the probe, the
+    within-batch pairs and the index append, so the MinHash signature
+    is computed once per batch."""
     from embeddinghub_spark.functions.dedup import (
-        minhash_duplicate_pairs,
-        minhash_index_append,
-        minhash_index_probe,
+        _MINHASH_SIDECAR,
+        _bucket_append,
+        _minhash_index_params,
+        _minhash_index_probe_rows,
+        _minhash_index_rows,
+        _minhash_pairs,
     )
 
     spark = batch_df.sparkSession
@@ -148,17 +159,18 @@ def dedup_ingest_batch(
     # index append reuses the cached partitions — eager paid a whole
     # extra job per micro-batch just to populate the cache (r16)
     batch = batch_df.localCheckpoint(eager=False)
-    params = (num_hashes, bands, shingle_n, n_buckets)
+    banded = _minhash_index_rows(
+        batch, text_col, id_col, num_hashes, bands, shingle_n, n_buckets
+    ).localCheckpoint(eager=False)
+    params = _minhash_index_params(num_hashes, bands, shingle_n, n_buckets)
     _ingest_batch(
         batch, index_dir, out_dir, id_col,
-        probe=lambda: minhash_index_probe(
-            spark, index_dir, batch, text_col, id_col, *params
+        probe=lambda: _minhash_index_probe_rows(
+            spark, index_dir, banded, id_col, params
         ),
-        pairs=lambda: minhash_duplicate_pairs(
-            batch, text_col, id_col, num_hashes, bands, shingle_n
-        ),
-        append=lambda: minhash_index_append(
-            spark, index_dir, batch, text_col, id_col, *params
+        pairs=lambda: _minhash_pairs(banded, id_col),
+        append=lambda: _bucket_append(
+            banded, index_dir, n_buckets, _MINHASH_SIDECAR, params
         ),
     )
 
@@ -222,32 +234,31 @@ def emb_dedup_ingest_batch(
     in the index sidecar) and the index append, so the plane
     projection is evaluated once per batch."""
     from embeddinghub_spark.functions.dedup import (
-        _emb_band_bucket,
+        _EMB_INDEX_SIDECAR,
+        _bucket_append,
         _emb_band_pairs,
-        _emb_band_rows,
-        emb_index_append,
-        emb_index_probe,
+        _emb_index_params,
+        _emb_index_probe_rows,
+        _emb_index_rows,
     )
 
     spark = batch_df.sparkSession
     # lazy for the same reason as the text twin above (r16)
     batch = batch_df.localCheckpoint(eager=False)
-    banded = (
-        _emb_band_rows(batch, dim, id_col, vec_col, n_planes, bands, seed)
-        .withColumn("bucket", _emb_band_bucket(n_buckets))
-        .localCheckpoint(eager=False)
-    )
-    params = (n_planes, bands, seed, n_buckets)
+    banded = _emb_index_rows(
+        batch, dim, id_col, vec_col, n_planes, bands, seed, n_buckets
+    ).localCheckpoint(eager=False)
+    params = _emb_index_params(dim, n_planes, bands, seed, n_buckets)
     _ingest_batch(
         batch, index_dir, out_dir, id_col,
-        probe=lambda: emb_index_probe(
-            spark, index_dir, batch, dim, threshold, id_col, vec_col,
-            *params, _band_rows=banded,
+        probe=lambda: _emb_index_probe_rows(
+            spark, index_dir, banded, dim, threshold, id_col, vec_col, params
         ),
-        pairs=lambda: _emb_band_pairs(banded, dim, id_col, vec_col, threshold),
-        append=lambda: emb_index_append(
-            spark, index_dir, batch, dim, id_col, vec_col,
-            *params, _band_rows=banded,
+        pairs=lambda: _emb_band_pairs(banded, dim, id_col, vec_col).filter(
+            F.col("cosine") >= threshold
+        ),
+        append=lambda: _bucket_append(
+            banded, index_dir, n_buckets, _EMB_INDEX_SIDECAR, params
         ),
     )
 

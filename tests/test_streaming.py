@@ -1924,6 +1924,58 @@ def test_dedup_ingest_torn_replay_recomputes_same_accepts(spark, tmp_path):
     assert got2 == accepted_truth, "replayed batch self-rejected rows"
 
 
+def test_dedup_ingest_batch_jobs_and_verdicts(spark, tmp_path):
+    """Text dedup-on-ingest over two batches (the second probes the
+    index the first wrote): the accepted set is the batch-replay rule's
+    and each batch fires no more Spark jobs than it did before the band
+    frame was shared by probe, pairs and append (8, then 14)."""
+    from embeddinghub_spark.functions.dedup import minhash_duplicate_pairs
+    from embeddinghub_spark.streaming.dedup_ingest import dedup_ingest_batch
+
+    base = [
+        "the quick brown fox jumps over the lazy dog again and again",
+        "completely unrelated text about spark structured streaming",
+        "numbers one two three four five six seven eight nine ten",
+        "a third distinct document mentioning feature stores and joins",
+    ]
+    rows = [
+        (i, base[0] + f" tail {i % 2}") if i % 3 == 0
+        else (i, base[i % 4] + f" unique {i} marker {i * i}")
+        for i in range(24)
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    rejected = {r["id_b"] for r in minhash_duplicate_pairs(df).collect()}
+    assert rejected, "corpus must contain near-dups"
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():  # the tracker keeps only the newest jobs' ids
+        return max(tracker.getJobIdsForGroup(), default=-1)
+
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    jobs = []
+    for lo in (0, 12):
+        before = last_job()
+        dedup_ingest_batch(df.filter(f"doc_id >= {lo} and doc_id < {lo + 12}"), idx, out)
+        jobs.append(last_job() - before)
+    got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+    assert got == {i for i, _ in rows} - rejected
+    assert jobs[0] <= 8 and jobs[1] <= 14, jobs
+
+
+def test_dedup_ingest_probes_a_file_uri_index(spark, tmp_path):
+    """A ``file://`` index dir is probed like a plain path: a later
+    batch's exact duplicate of an ingested document is rejected, not
+    accepted against an index the probe failed to see."""
+    from embeddinghub_spark.streaming.dedup_ingest import dedup_ingest_batch
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    idx, out = f"file://{tmp_path / 'idx'}", str(tmp_path / "out")
+    for i in (1, 2):
+        dedup_ingest_batch(spark.createDataFrame([(i, text)], ["doc_id", "text"]), idx, out)
+    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1}
+
+
 def test_emb_dedup_ingest_torn_replay_recomputes_same_accepts(spark, tmp_path):
     """Embedding twin of the torn-replay pin above."""
     from embeddinghub_spark.streaming.dedup_ingest import (

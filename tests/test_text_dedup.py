@@ -705,6 +705,38 @@ def test_index_sidecar_first_append_leaves_only_the_json(spark, tmp_path):
         assert json.load(f) == {"gram_n": 3, "n_buckets": 16}
 
 
+def test_index_sidecar_of_a_file_uri_lands_next_to_the_index(
+    spark, tmp_path, monkeypatch
+):
+    """A ``file://`` index dir keeps its params sidecar inside the
+    index Spark writes, not under a ``file:`` directory of the working
+    directory: a probe with other parameters, run from another working
+    directory, still raises."""
+    import os
+
+    import pytest
+
+    from embeddinghub_spark.functions.dedup import (
+        minhash_index_append,
+        minhash_index_probe,
+    )
+
+    idx = tmp_path / "idx"
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")], ["doc_id", "text"]
+    )
+    for d in ("append_cwd", "probe_cwd"):
+        (tmp_path / d).mkdir()
+    monkeypatch.chdir(tmp_path / "append_cwd")
+    minhash_index_append(spark, f"file://{idx}", docs)
+    assert os.path.isfile(idx / "_minhash_params.json")
+    monkeypatch.chdir(tmp_path / "probe_cwd")
+    with pytest.raises(ValueError, match="band hashes"):
+        minhash_index_probe(spark, f"file://{idx}", docs, num_hashes=16)
+    for d in ("append_cwd", "probe_cwd"):
+        assert os.listdir(tmp_path / d) == []
+
+
 def test_source_divergence_detects_outlier(spark):
     """A group whose vocabulary diverges from the corpus scores
     strictly higher KL than corpus-typical groups; KL >= 0 up to the
@@ -1083,7 +1115,7 @@ def test_emb_index_probe_vectors_never_broadcast_result_parity(spark, tmp_path):
         probe = (
             D._emb_band_rows(probe_df, dim, "vec_id", "embedding",
                              n_planes, bands, seed)
-            .withColumn("bucket", D._emb_band_bucket(n_buckets))
+            .withColumn("bucket", D._band_bucket(n_buckets, "band_val"))
             .select(
                 F.col("vec_id").alias("probe_id"),
                 F.col("embedding").alias("_pvec"),

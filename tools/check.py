@@ -6,9 +6,10 @@ column names, and an order-insensitive canonical value hash
 (timestamps → UTC millis, floats → round(9), NULL marker), per
 FIXTURES.md's hash-match protocol.
 
-Usage: python tools/check.py [--staged] [sf_dir] [query ...]
+Usage: python tools/check.py [-h|--help] [--staged] [sf_dir] [query ...]
 (--staged drives the staged_queries()/staged_oracle_sql() r7
-candidates instead of the frozen registry.)
+candidates instead of the frozen registry.) A sf_dir missing any
+table parquet exits with code 2, naming the file, before Spark starts.
 """
 
 from __future__ import annotations
@@ -58,11 +59,19 @@ def canonicalize(df: pd.DataFrame) -> str:
 
 def main():
     args = [a for a in sys.argv[1:]]
+    if "-h" in args or "--help" in args:
+        print(__doc__)
+        sys.exit(0)
     staged = "--staged" in args
     if staged:
         args.remove("--staged")
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if not os.path.exists(path):
+            print(f"check.py: missing table parquet: {path}", file=sys.stderr)
+            sys.exit(2)
 
     import __spark_entry__ as entrymod
     from embeddinghub_spark.session import get_spark
