@@ -77,6 +77,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from embeddinghub_spark.sources._table_core import _change_feed
 from embeddinghub_spark.sources.avro_io import read_avro_file
 
 _V_META_RE = re.compile(r"^v(\d+)\.metadata\.json$")
@@ -1023,23 +1024,17 @@ def read_iceberg_changes(
     ``_snapshot_id`` — the changelog shape. Updates emit BOTH images,
     keyed per snapshot.
 
-    Semantics and contract (the ``read_delta_changes`` discipline):
-    Iceberg data files are immutable, so the rows changed by a
-    snapshot live entirely in the files it stopped or started
-    referencing — each per-snapshot diff scans ONLY the churned files
-    and full-outer-joins them on ``key_cols`` (churn-proportional,
-    never table-sized). Row-accurate iff ``key_cols`` uniquely
-    identifies a row within each snapshot. A row rewritten with
-    identical values (compaction) correctly emits nothing. Raises on
-    a schema change inside the range, on merge-on-read delete files
-    at either end of any pair (row-level deletes change row sets
-    without file identity — the connector's changelog owns those),
-    and when ``from_snapshot_id`` is not an ancestor of the target
-    (diffing across divergent lineages has no single changelog).
-
-    Cost: each snapshot resolves its OWN manifest list (no cumulative
-    log replay), so an R-snapshot range is O(R × manifests) — linear
-    by construction."""
+    Semantics (``_table_core._change_feed``, shared with
+    ``read_delta_changes``): each snapshot's diff scans only the files
+    it stopped or started referencing and full-outer-joins them on
+    ``key_cols``, row-accurate iff ``key_cols`` uniquely identifies a
+    row within each snapshot; a compaction emits nothing. Raises on a
+    schema change inside the range, on merge-on-read delete files at
+    either end of any pair (row-level deletes change row sets without
+    file identity — the connector's changelog owns those), and when
+    ``from_snapshot_id`` is not an ancestor of the target. Each
+    snapshot resolves its OWN manifest list, so an R-snapshot range is
+    O(R × manifests)."""
     mfile = _latest_metadata_file(path)
     with open(mfile, encoding="utf-8") as fh:
         meta = json.load(fh)
@@ -1079,39 +1074,13 @@ def read_iceberg_changes(
                 "row-level deletes change row sets without file "
                 "identity; use the connector's changelog"
             )
-    for k in key_cols:
-        if k not in base_schema.fieldNames():
-            raise ValueError(f"key column {k!r} not in table schema")
-    cdf_schema = T.StructType(
-        list(base_schema.fields)
-        + [T.StructField("_change_type", T.StringType(), False),
-           T.StructField("_snapshot_id", T.LongType(), False)]
+    return _change_feed(
+        spark, base_schema, key_cols, "_snapshot_id",
+        [(st["snapshot_id"], st, sorted(st["files"]), True)
+         for st in states],
+        lambda f: f,
+        lambda st, files: _scan_parquet(spark, st, files),
     )
-    from embeddinghub_spark.sources.row_dml import change_rows
-
-    out: DataFrame | None = None
-    for prev, cur in zip(states, states[1:]):
-        prev_files, cur_files = set(prev["files"]), set(cur["files"])
-        removed = sorted(prev_files - cur_files)
-        added = sorted(cur_files - prev_files)
-        if not removed and not added:
-            continue
-        old_rows = (
-            _scan_parquet(spark, prev, removed)
-            if removed else spark.createDataFrame([], base_schema)
-        )
-        new_rows = (
-            _scan_parquet(spark, cur, added)
-            if added else spark.createDataFrame([], base_schema)
-        )
-        step = change_rows(
-            old_rows, new_rows, base_schema.fieldNames(), key_cols,
-            "_snapshot_id", cur["snapshot_id"],
-        )
-        out = step if out is None else out.unionByName(step)
-    if out is None:
-        return spark.createDataFrame([], cdf_schema)
-    return out
 
 
 def _prunable_pair(a, b) -> bool:

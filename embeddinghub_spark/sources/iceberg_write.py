@@ -59,11 +59,9 @@ list, snapshot summary, metadata publish).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
-import shutil
 import time
 import uuid
 from typing import Any
@@ -71,8 +69,14 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from embeddinghub_spark.sources._table_core import (
+    _bin_pack,
+    _merge_schema_error,
+    _put_if_absent,
+    _stage,
+    _sweep_orphans,
+)
 from embeddinghub_spark.sources.avro_io import read_avro_file, write_avro_file
-from embeddinghub_spark.sources.parquet_stats import column_bounds
 from embeddinghub_spark.sources.iceberg_meta import (
     _OBJ_META_RE,
     _V_META_RE,
@@ -329,29 +333,13 @@ def _manifest_list_schema() -> dict:
 
 # ------------------------------------------------------------ atomic commit
 
-def _atomic_put(final_path: str, payload: str) -> bool:
-    """Put-if-absent via staged write + ``os.link`` (the Delta
-    writer's local-FS atomicity discipline): True on claim, False if
-    another writer owns the path."""
-    tmp = f"{final_path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(payload)
-    try:
-        os.link(tmp, final_path)
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        os.unlink(tmp)
-
-
 def _publish_metadata(meta_dir: str, version: int, meta: dict) -> bool:
     """Claim ``v<version>.metadata.json`` put-if-absent, then advance
     ``version-hint.text`` (temp file + rename; best-effort — readers
     fall back to the max metadata version). False if another writer
     owns the version."""
     final = os.path.join(meta_dir, f"v{version}.metadata.json")
-    if not _atomic_put(final, json.dumps(meta)):
+    if not _put_if_absent(final, json.dumps(meta)):
         return False
     hint_tmp = os.path.join(meta_dir, f"version-hint.{uuid.uuid4().hex}.tmp")
     with open(hint_tmp, "w", encoding="utf-8") as fh:
@@ -381,6 +369,65 @@ def _current_spec(meta: dict) -> dict:
     )
 
 
+def _identity_columns(meta: dict) -> list:
+    """The source column of each field of the table's current partition
+    spec, in order. Identity transforms only: any other raises toward
+    the connector."""
+    name_by_id = {
+        int(f["id"]): f["name"] for f in _current_schema(meta)["fields"]
+    }
+    out = []
+    for pf in _current_spec(meta).get("fields") or []:
+        if pf.get("transform") != "identity":
+            raise IcebergProtocolError(
+                f"partition transform {pf.get('transform')!r} not "
+                "supported by the native writer — use the connector"
+            )
+        out.append(name_by_id.get(int(pf.get("source-id", -1))))
+    return out
+
+
+def _current_schema(meta: dict) -> dict:
+    """The table's current schema record (the first one when
+    ``current-schema-id`` names none; empty fields without schemas)."""
+    schemas = meta.get("schemas") or [{"schema-id": 0, "fields": []}]
+    return next(
+        (s for s in schemas
+         if s.get("schema-id") == meta.get("current-schema-id")),
+        schemas[0],
+    )
+
+
+def _fresh_ids(meta: dict, fields: list[dict]) -> tuple[list[dict], int]:
+    """``fields`` renumbered, in order, with field ids (and a list's
+    element id) above every id the table ever issued — Iceberg ids are
+    permanent, never reused. Returns the fields and the new last column
+    id."""
+    issued = [int(meta.get("last-column-id", 0))]
+    for s in meta.get("schemas") or []:
+        for f in s.get("fields") or []:
+            issued.append(int(f["id"]))
+            # historical schemas may carry types this writer gates
+            # (struct/map, from a connector): collect whatever nested
+            # ids they expose, never assume the list shape
+            if isinstance(f["type"], dict):
+                issued.extend(
+                    int(f["type"][k])
+                    for k in ("element-id", "key-id", "value-id")
+                    if k in f["type"]
+                )
+    next_free = max(issued) + 1
+    out = []
+    for f in fields:
+        fid, t = next_free, f["type"]
+        next_free += 1
+        if isinstance(t, dict):
+            t = dict(t, **{"element-id": next_free})
+            next_free += 1
+        out.append(dict(f, id=fid, type=t))
+    return out, next_free - 1
+
+
 def _manifest_header(ice_schema: dict, spec: dict, content: str) -> dict:
     """The Avro header metadata the spec requires of a manifest."""
     return {
@@ -391,6 +438,41 @@ def _manifest_header(ice_schema: dict, spec: dict, content: str) -> dict:
         "partition-spec-id": str(spec.get("spec-id", 0)),
         "format-version": "2",
         "content": content,
+    }
+
+
+def _manifest_entry(
+    status: int,
+    snapshot_id: int | None,
+    seq: int | None,
+    content: int,
+    fp: str,
+    partition: dict,
+    rows: int,
+    size: int,
+    lower: list | None = None,
+    upper: list | None = None,
+    eq_ids: list | None = None,
+) -> dict:
+    """One v2 ``manifest_entry`` record for the file at ``fp``; ``seq``
+    None lets an ADDED entry inherit its manifest-list row's sequence
+    number."""
+    return {
+        "status": status,
+        "snapshot_id": snapshot_id,
+        "sequence_number": seq,
+        "file_sequence_number": seq,
+        "data_file": {
+            "content": content,
+            "file_path": f"file://{fp}",
+            "file_format": "PARQUET",
+            "partition": partition,
+            "record_count": int(rows),
+            "file_size_in_bytes": int(size),
+            "lower_bounds": lower,
+            "upper_bounds": upper,
+            "equality_ids": eq_ids,
+        },
     }
 
 
@@ -421,23 +503,8 @@ def _write_delete_manifest(
         man_path,
         _manifest_entry_schema(spec_field_defs),
         [
-            {
-                "status": 1,  # ADDED
-                "snapshot_id": snapshot_id,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": content,
-                    "file_path": f"file://{dfp}",
-                    "file_format": "PARQUET",
-                    "partition": dict(dpart or {}),
-                    "record_count": int(drows),
-                    "file_size_in_bytes": int(dsize),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                    "equality_ids": eq_ids,
-                },
-            }
+            _manifest_entry(1, snapshot_id, None, content, dfp,  # ADDED
+                            dict(dpart or {}), drows, dsize, eq_ids=eq_ids)
             for content, (dfp, drows, dsize, dpart), eq_ids in entries
         ],
         metadata=_manifest_header(ice_schema, spec, "deletes"),
@@ -715,12 +782,11 @@ def write_iceberg(
     meta_dir = os.path.join(path, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
 
-    ice_schema = _ice_schema(df.schema)
-    last_column_id = ice_schema.pop("_last_column_id")
-    fid_by_name = {f["name"]: f["id"] for f in ice_schema["fields"]}
-    type_by_name = {f["name"]: f["type"] for f in ice_schema["fields"]}
+    df_schema = _ice_schema(df.schema)
+    df_last_id = df_schema.pop("_last_column_id")
+    type_by_name = {f["name"]: f["type"] for f in df_schema["fields"]}
     for c in partition_by:
-        if c not in fid_by_name:
+        if c not in type_by_name:
             raise ValueError(f"partition_by column {c!r} not in DataFrame")
         t = type_by_name[c]
         if not (
@@ -729,96 +795,26 @@ def write_iceberg(
             and t not in ("double", "float")
         ):
             raise IcebergProtocolError(
-                f"partition column {c!r} of type {type_by_name[c]!r} "
+                f"partition column {c!r} of type {t!r} "
                 "not supported by the native writer (long/int/string/"
                 "boolean round-trip hive dir values losslessly) — use "
                 "the connector"
             )
-    # the hive staging layout collapses '' and NULL into the same dir
-    # (the write_delta hazard): raise before staging
-    str_pcols = [c for c in partition_by if type_by_name[c] == "string"]
-    if str_pcols:
-        from functools import reduce
 
-        from pyspark.sql import functions as F
+    def _latest() -> tuple[dict | None, int]:
+        if not is_iceberg_table(path):
+            return None, 0
+        _, version, meta = _latest_metadata(path)
+        return meta, version
 
-        probe = reduce(
-            lambda a, b: a | b, [F.col(c) == "" for c in str_pcols]
-        )
-        if df.filter(probe).take(1):
-            raise ValueError(
-                "empty-string value in string partition column(s) "
-                f"{str_pcols}: hive staging collapses '' to NULL and "
-                "the value is unrecoverable — normalize before "
-                "write_iceberg"
-            )
-
-    def _typed_pval(col: str, raw: str | None):
-        if raw is None:
-            return None
-        t = type_by_name[col]
-        if t == "long" or t == "int":
-            return int(raw)
-        if t == "boolean":
-            return raw.lower() == "true"
-        return raw  # string (unquoted by the caller)
-
-    # ---- stage data files with Spark's parquet writer, move to data/
-    stage = os.path.join(path, f"_staging_{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(stage)
-    import pyarrow.parquet as pq
-
-    data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    # (abs, rows, bytes, {partition col: typed value})
-    data_files: list[tuple[str, int, int, dict]] = []
-    from urllib.parse import unquote
-
-    for root, _dirs, fnames in sorted(os.walk(stage)):
-        for f in sorted(fnames):
-            if not f.endswith(".parquet"):
-                continue
-            src = os.path.join(root, f)
-            rel_dir = os.path.relpath(root, stage)
-            pvals: dict = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split(os.sep):
-                    k, _, v = seg.partition("=")
-                    pvals[k] = _typed_pval(
-                        k,
-                        None if v == "__HIVE_DEFAULT_PARTITION__"
-                        else unquote(v),
-                    )
-            sub = os.path.join(data_dir, rel_dir) if rel_dir != "." \
-                else data_dir
-            os.makedirs(sub, exist_ok=True)
-            dst = os.path.join(sub, f"{uuid.uuid4().hex}.parquet")
-            os.rename(src, dst)
-            meta = pq.read_metadata(dst)
-            data_files.append(
-                (dst, meta.num_rows, os.path.getsize(dst), pvals,
-                 column_bounds(meta))
-            )
-    shutil.rmtree(stage, ignore_errors=True)
-
-    for _attempt in range(max_commit_retries):
-        # ---- current table state (re-read per attempt: commit races;
-        # the base version comes from the max metadata file present,
-        # never the hint — see _max_metadata_version)
-        latest = (
-            _max_metadata_version(meta_dir)
-            if is_iceberg_table(path) else None
-        )
-        if latest is not None:
-            prev_version, mfile = latest
-            with open(mfile, encoding="utf-8") as fh:
-                prev_meta = json.load(fh)
-        else:
-            prev_meta, prev_version = None, 0
-
+    def _against(prev_meta: dict | None) -> tuple[dict, int, dict, dict]:
+        """(schema, last column id, partition spec, field id -> name)
+        this write commits with, after the snapshot pin and the schema
+        and partition contracts against ``prev_meta`` (None: a new
+        table). Runs
+        before staging, so a rejected write leaves no file, and again
+        on every retry snapshot: a racer may have created the table or
+        changed its schema since."""
         if expected_snapshot_id is not None:
             cur_sid = (prev_meta or {}).get("current-snapshot-id")
             if cur_sid in (None, -1):
@@ -828,272 +824,155 @@ def write_iceberg(
                     f"table advanced to snapshot {cur_sid} (expected "
                     f"{expected_snapshot_id}): {path}"
                 )
-        if prev_meta is not None:
-            if int(prev_meta.get("format-version", 1)) != 2:
-                raise IcebergProtocolError(
-                    "native writer only commits to format-version 2 "
-                    "tables"
-                )
-            cur_spec = _current_spec(prev_meta)
-            # the table's spec must be identity-only and match
-            # partition_by by SOURCE COLUMN NAME, in order
-            cur_schemas0 = prev_meta.get("schemas") or []
-            tbl_cur = next(
-                (s for s in cur_schemas0
-                 if s.get("schema-id")
-                 == prev_meta.get("current-schema-id")),
-                None,
-            )
-            tbl_ids = {
-                int(f["id"]): f["name"]
-                for f in (tbl_cur or {}).get("fields") or []
-            }
-            spec_src_names = []
-            for pf in cur_spec.get("fields") or []:
-                if pf.get("transform") != "identity":
-                    raise IcebergProtocolError(
-                        f"partition transform {pf.get('transform')!r} "
-                        "not supported by the native writer — use the "
-                        "connector"
-                    )
-                spec_src_names.append(
-                    tbl_ids.get(int(pf.get("source-id", -1)))
-                )
-            if spec_src_names != partition_by:
-                raise IcebergWriteError(
-                    f"partition_by {partition_by} does not match the "
-                    f"table's partition spec columns {spec_src_names}"
-                )
-            if mode == "append" and merge_schema:
-                cur_schemas = prev_meta.get("schemas") or []
-                cur = next(
-                    (s for s in cur_schemas
-                     if s.get("schema-id")
-                     == prev_meta.get("current-schema-id")),
-                    None,
-                ) or {"fields": []}
-                theirs_by_name = {f["name"]: f for f in cur["fields"]}
-                ours_by_name = {f["name"]: f for f in ice_schema["fields"]}
-                clash = [
-                    n for n in set(ours_by_name) & set(theirs_by_name)
-                    if _type_sans_ids(ours_by_name[n]["type"])
-                    != _type_sans_ids(theirs_by_name[n]["type"])
-                ]
-                if clash:
-                    raise IcebergWriteError(
-                        f"merge_schema type mismatch on {sorted(clash)}"
-                    )
-                missing_required = sorted(
-                    n for n, f in theirs_by_name.items()
-                    if n not in ours_by_name and f.get("required")
-                )
-                if missing_required:
-                    raise IcebergWriteError(
-                        "merge_schema append omits REQUIRED table "
-                        f"columns {missing_required}"
-                    )
-                weakened = sorted(
-                    n for n in set(ours_by_name) & set(theirs_by_name)
-                    if theirs_by_name[n].get("required")
-                    and not ours_by_name[n]["required"]
-                )
-                if weakened:
-                    raise IcebergWriteError(
-                        f"append schema mismatch: columns {weakened} "
-                        "are REQUIRED in the table but nullable in "
-                        "the DataFrame"
-                    )
-                new_required = sorted(
-                    f["name"] for f in ice_schema["fields"]
-                    if f["name"] not in theirs_by_name and f["required"]
-                )
-                if new_required:
-                    raise IcebergWriteError(
-                        "merge_schema cannot add non-nullable columns "
-                        f"{new_required}: existing files carry no "
-                        "values for them"
-                    )
-                adds_new = [
-                    f for f in ice_schema["fields"]
-                    if f["name"] not in theirs_by_name
-                ]
-                if not adds_new:
-                    ice_schema = cur
-                    last_column_id = int(
-                        prev_meta.get("last-column-id", last_column_id)
-                    )
-                else:
-                    issued = [int(prev_meta.get("last-column-id", 0))]
-                    for s in cur_schemas:
-                        for f in s.get("fields") or []:
-                            issued.append(int(f["id"]))
-                            t = f["type"]
-                            if isinstance(t, dict):
-                                for k in ("element-id", "key-id",
-                                          "value-id"):
-                                    if k in t:
-                                        issued.append(int(t[k]))
-                    next_free = max(issued) + 1
-                    evolved = []
-                    for f in adds_new:
-                        fid = next_free
-                        next_free += 1
-                        t = f["type"]
-                        if isinstance(t, dict):
-                            t = dict(t, **{"element-id": next_free})
-                            next_free += 1
-                        evolved.append(dict(f, id=fid, type=t))
-                    new_sid = max(
-                        [int(s.get("schema-id", 0))
-                         for s in cur_schemas],
-                        default=-1,
-                    ) + 1
-                    ice_schema = {
-                        "type": "struct",
-                        "schema-id": new_sid,
-                        "fields": list(cur["fields"]) + evolved,
-                    }
-                    last_column_id = next_free - 1
-            elif mode == "append":
-                cur_schemas = prev_meta.get("schemas") or []
-                cur = next(
-                    (s for s in cur_schemas
-                     if s.get("schema-id")
-                     == prev_meta.get("current-schema-id")),
-                    None,
-                )
-                ours = [
-                    (f["name"], json.dumps(f["type"], sort_keys=True),
-                     f["required"])
-                    for f in ice_schema["fields"]
-                ]
-                theirs = [
-                    (f["name"], json.dumps(f["type"], sort_keys=True),
-                     bool(f.get("required", False)))
-                    for f in (cur or {}).get("fields") or []
-                ]
-                # ids may differ between our fresh assignment and the
-                # table's; names+types must match exactly, and a
-                # NULLABLE DataFrame column must not append into a
-                # REQUIRED table column (its NULLs would violate the
-                # snapshot schema; required->nullable stays legal)
-                if [o[0] for o in ours] != [t[0] for t in theirs] or [
-                    o[1] for o in ours
-                ] != [t[1] for t in theirs]:
-                    raise IcebergWriteError(
-                        f"append schema mismatch: table has {theirs}, "
-                        f"DataFrame has {ours}"
-                    )
-                weakened = [
-                    o[0] for o, t in zip(ours, theirs)
-                    if t[2] and not o[2]
-                ]
-                if weakened and not trust_required:
-                    # trust_required=True is the internal MoR DML
-                    # escape hatch: Spark marks every file-scan /
-                    # createDataFrame column nullable even when the
-                    # rows provably carry no NULLs, and the row-delta
-                    # writers verify that explicitly before asking
-                    raise IcebergWriteError(
-                        f"append schema mismatch: columns {weakened} "
-                        "are REQUIRED in the table but nullable in "
-                        "the DataFrame"
-                    )
-                # reuse the TABLE's schema + name mapping so field-ids
-                # stay stable across appends
-                ice_schema = cur
-                last_column_id = int(
-                    prev_meta.get("last-column-id", last_column_id)
-                )
-            else:
-                # overwrite may change the schema, but field-ids are
-                # FOREVER (spec: ids are never reassigned — and the
-                # partition spec's source-ids resolve against the
-                # CURRENT schema, so a fresh 1..N assignment on a
-                # reordered overwrite would silently repoint the spec
-                # at the wrong columns; ADVICE r14). Remap our fresh
-                # assignment through the union of the table's
-                # historical name→field definitions: a known name
-                # keeps its id (and its list element-id, verbatim), a
-                # new name takes fresh ids above every id the table
-                # has ever issued. A known name with a structurally
-                # different type would corrupt old snapshots'
-                # projections — raise; type evolution needs the
-                # connector.
-                seen_fields: dict[str, dict] = {}
-                issued: list[int] = [
-                    int(prev_meta.get("last-column-id", 0))
-                ]
-                for s in prev_meta.get("schemas") or []:
-                    for f in s.get("fields") or []:
-                        seen_fields.setdefault(f["name"], f)
-                        issued.append(int(f["id"]))
-                        t = f["type"]
-                        if isinstance(t, dict):
-                            # historical schemas may carry types this
-                            # writer gates (struct/map, from a
-                            # connector) — collect whatever nested ids
-                            # they expose, never assume list shape
-                            for k in ("element-id", "key-id",
-                                      "value-id"):
-                                if k in t:
-                                    issued.append(int(t[k]))
-                next_free = max(issued) + 1
-                remapped = []
-                for f in ice_schema["fields"]:
-                    old = seen_fields.get(f["name"])
-                    if old is not None:
-                        if _type_sans_ids(old["type"]) != _type_sans_ids(
-                            f["type"]
-                        ):
-                            raise IcebergWriteError(
-                                "overwrite changes the type of column "
-                                f"{f['name']!r} ({old['type']!r} -> "
-                                f"{f['type']!r}): field-ids are "
-                                "permanent, type evolution needs the "
-                                "connector"
-                            )
-                        remapped.append(
-                            dict(f, id=int(old["id"]), type=old["type"])
-                        )
-                    else:
-                        fid = next_free
-                        next_free += 1
-                        t = f["type"]
-                        if isinstance(t, dict):
-                            t = dict(t, **{"element-id": next_free})
-                            next_free += 1
-                        remapped.append(dict(f, id=fid, type=t))
-                ice_schema = dict(ice_schema, fields=remapped)
-                last_column_id = next_free - 1
-
-        prev_snaps = (prev_meta or {}).get("snapshots") or []
-        if carry_files is not None:
-            if prev_meta is None:
+        if prev_meta is None:
+            if carry_files is not None:
                 raise ValueError(
                     "carry_files on a table that does not exist"
                 )
+            ids = {int(f["id"]): f["name"] for f in df_schema["fields"]}
+            fid = {n: i for i, n in ids.items()}
+            return df_schema, df_last_id, {"spec-id": 0, "fields": [
+                {"name": c, "transform": "identity", "source-id": fid[c],
+                 "field-id": 1000 + i}
+                for i, c in enumerate(partition_by)
+            ]}, ids
+        if int(prev_meta.get("format-version", 1)) != 2:
+            raise IcebergProtocolError(
+                "native writer only commits to format-version 2 tables"
+            )
+        cur_spec = _current_spec(prev_meta)
+        cur = _current_schema(prev_meta)
+        tbl_ids = {int(f["id"]): f["name"] for f in cur["fields"]}
+        table_last_id = int(prev_meta.get("last-column-id", df_last_id))
+        # the table's spec must match partition_by by SOURCE COLUMN
+        # NAME, in order
+        spec_src_names = _identity_columns(prev_meta)
+        if spec_src_names != partition_by:
+            raise IcebergWriteError(
+                f"partition_by {partition_by} does not match the "
+                f"table's partition spec columns {spec_src_names}"
+            )
+        theirs_by_name = {f["name"]: f for f in cur["fields"]}
+        if mode == "append" and merge_schema:
+            ours_by_name = {f["name"]: f for f in df_schema["fields"]}
+            err = _merge_schema_error(*(
+                {n: (json.dumps(_type_sans_ids(f["type"]), sort_keys=True),
+                     bool(f.get("required")))
+                 for n, f in by_name.items()}
+                for by_name in (ours_by_name, theirs_by_name)
+            ))
+            if err:
+                raise IcebergWriteError(err)
+            weakened = sorted(
+                n for n in set(ours_by_name) & set(theirs_by_name)
+                if theirs_by_name[n].get("required")
+                and not ours_by_name[n]["required"]
+            )
+            if weakened:
+                raise IcebergWriteError(
+                    f"append schema mismatch: columns {weakened} "
+                    "are REQUIRED in the table but nullable in "
+                    "the DataFrame"
+                )
+            adds_new = [
+                f for f in df_schema["fields"]
+                if f["name"] not in theirs_by_name
+            ]
+            if not adds_new:
+                return cur, table_last_id, cur_spec, tbl_ids
+            evolved, last_id = _fresh_ids(prev_meta, adds_new)
+            new_sid = max(
+                [int(s.get("schema-id", 0))
+                 for s in prev_meta.get("schemas") or []],
+                default=-1,
+            ) + 1
+            return {
+                "type": "struct",
+                "schema-id": new_sid,
+                "fields": list(cur["fields"]) + evolved,
+            }, last_id, cur_spec, tbl_ids
+        if mode == "append":
+            ours = [
+                (f["name"], json.dumps(f["type"], sort_keys=True),
+                 f["required"])
+                for f in df_schema["fields"]
+            ]
+            theirs = [
+                (f["name"], json.dumps(f["type"], sort_keys=True),
+                 bool(f.get("required", False)))
+                for f in cur["fields"]
+            ]
+            # ids may differ between our fresh assignment and the
+            # table's; names+types must match exactly, and a
+            # NULLABLE DataFrame column must not append into a
+            # REQUIRED table column (its NULLs would violate the
+            # snapshot schema; required->nullable stays legal)
+            if [o[:2] for o in ours] != [t[:2] for t in theirs]:
+                raise IcebergWriteError(
+                    f"append schema mismatch: table has {theirs}, "
+                    f"DataFrame has {ours}"
+                )
+            weakened = [
+                o[0] for o, t in zip(ours, theirs) if t[2] and not o[2]
+            ]
+            if weakened and not trust_required:
+                # trust_required=True is the internal MoR DML escape
+                # hatch: Spark marks every file-scan / createDataFrame
+                # column nullable even when the rows provably carry no
+                # NULLs, and the row-delta writers verify that
+                # explicitly before asking
+                raise IcebergWriteError(
+                    f"append schema mismatch: columns {weakened} "
+                    "are REQUIRED in the table but nullable in "
+                    "the DataFrame"
+                )
+            # reuse the TABLE's schema + name mapping so field-ids
+            # stay stable across appends
+            return cur, table_last_id, cur_spec, tbl_ids
+        # overwrite may change the schema, but field-ids are FOREVER
+        # (spec: ids are never reassigned — and the partition spec's
+        # source-ids resolve against the CURRENT schema, so a fresh
+        # 1..N assignment on a reordered overwrite would silently
+        # repoint the spec at the wrong columns). A known name keeps
+        # its id (and its list element-id, verbatim), a new name takes
+        # fresh ids; a known name with a structurally different type
+        # would corrupt old snapshots' projections — raise, type
+        # evolution needs the connector.
+        seen: dict[str, dict] = {}
+        for s in prev_meta.get("schemas") or []:
+            for f in s.get("fields") or []:
+                seen.setdefault(f["name"], f)
+        fresh, last_id = _fresh_ids(
+            prev_meta,
+            [f for f in df_schema["fields"] if f["name"] not in seen],
+        )
+        fresh_it = iter(fresh)
+        remapped = []
+        for f in df_schema["fields"]:
+            old = seen.get(f["name"])
+            if old is None:
+                remapped.append(next(fresh_it))
+                continue
+            if _type_sans_ids(old["type"]) != _type_sans_ids(f["type"]):
+                raise IcebergWriteError(
+                    "overwrite changes the type of column "
+                    f"{f['name']!r} ({old['type']!r} -> {f['type']!r}): "
+                    "field-ids are permanent, type evolution needs the "
+                    "connector"
+                )
+            remapped.append(dict(f, id=int(old["id"]), type=old["type"]))
+        ice_schema = dict(df_schema, fields=remapped)
+        if carry_files is not None:
             # carried files keep serving under the NEW snapshot's
             # schema by-name: a changed schema would silently read
             # them as NULLs for renamed/retyped columns — require
             # name+type equality with the current schema (the append
             # contract; merge_iceberg always satisfies it)
-            cur0 = next(
-                (s for s in cur_schemas0
-                 if s.get("schema-id")
-                 == prev_meta.get("current-schema-id")),
-                None,
-            )
-            ours0 = [
+            ours0, theirs0 = ([
                 (f["name"],
                  json.dumps(_type_sans_ids(f["type"]), sort_keys=True))
-                for f in ice_schema["fields"]
-            ]
-            theirs0 = [
-                (f["name"],
-                 json.dumps(_type_sans_ids(f["type"]), sort_keys=True))
-                for f in (cur0 or {}).get("fields") or []
-            ]
+                for f in s["fields"]
+            ] for s in (ice_schema, cur))
             if ours0 != theirs0:
                 raise IcebergWriteError(
                     "carry_files requires the DataFrame schema to "
@@ -1114,42 +993,44 @@ def write_iceberg(
                     "apply the deletes first (full-rebuild "
                     "overwrite) or use the connector"
                 )
-        snapshot_id = max(
-            [int(s["snapshot-id"]) for s in prev_snaps], default=0
-        ) + 1
+        return ice_schema, last_id, cur_spec, tbl_ids
+
+    def _typed_pval(col: str, raw: str | None):
+        t = type_by_name[col]
+        if raw is None or t not in ("long", "int", "boolean"):
+            return raw  # NULL, or a string (already unquoted)
+        return raw.lower() == "true" if t == "boolean" else int(raw)
+
+    _against(_latest()[0])
+    # (abs, rows, bytes, {partition col: typed value}, bounds)
+    data_files = [
+        (fp, rows, size, {c: _typed_pval(c, v) for c, v in pvals.items()},
+         bounds)
+        for _rel, fp, rows, size, pvals, bounds in _stage(
+            df, path, os.path.join(path, "data"), partition_by
+        )
+    ]
+
+    for _attempt in range(max_commit_retries):
+        prev_meta, prev_version = _latest()
+        ice_schema, last_column_id, spec, tbl_ids = _against(prev_meta)
+        snapshot_id = max([
+            int(s["snapshot-id"])
+            for s in (prev_meta or {}).get("snapshots") or []
+        ], default=0) + 1
         seq = int((prev_meta or {}).get("last-sequence-number", 0)) + 1
         now_ms = int(time.time() * 1000)
 
-        # ---- the partition spec (existing verbatim, or fresh)
-        cur_fid_by_name = {
-            f["name"]: int(f["id"]) for f in ice_schema["fields"]
+        # ---- the partition spec (existing verbatim, or fresh):
+        # source column -> spec field name, which manifests key
+        # partition values by
+        pname_by_col = {
+            tbl_ids.get(int(pf["source-id"])): pf["name"]
+            for pf in spec.get("fields") or []
         }
-        if prev_meta is not None:
-            spec = cur_spec
-            # spec field name -> source column name (manifests key
-            # partition values by spec FIELD name)
-            pname_by_col = {
-                tbl_ids.get(int(pf["source-id"])): pf["name"]
-                for pf in spec.get("fields") or []
-            }
-        else:
-            spec = {
-                "spec-id": 0,
-                "fields": [
-                    {
-                        "name": c,
-                        "transform": "identity",
-                        "source-id": cur_fid_by_name[c],
-                        "field-id": 1000 + i,
-                    }
-                    for i, c in enumerate(partition_by)
-                ],
-            }
-            pname_by_col = {c: c for c in partition_by}
         spec_field_defs = [
-            (pf["name"], type_by_name.get(
-                next((col for col, pn in pname_by_col.items()
-                      if pn == pf["name"]), ""), "string"),
+            (pf["name"],
+             type_by_name.get(tbl_ids.get(int(pf["source-id"])), "string"),
              int(pf["field-id"]))
             for pf in spec.get("fields") or []
         ]
@@ -1200,52 +1081,25 @@ def write_iceberg(
             man_path,
             _manifest_entry_schema(spec_field_defs),
             [
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": snapshot_id,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": f"file://{fp}",
-                        "file_format": "PARQUET",
-                        "partition": {
-                            pname_by_col[c]: v for c, v in pvals.items()
-                        },
-                        "record_count": rows,
-                        "file_size_in_bytes": size,
-                        "lower_bounds": _bound_rows(bounds, 0),
-                        "upper_bounds": _bound_rows(bounds, 1),
-                        "equality_ids": None,
-                    },
-                }
+                _manifest_entry(
+                    1, snapshot_id, None, 0, fp,  # ADDED
+                    {pname_by_col[c]: v for c, v in pvals.items()},
+                    rows, size, _bound_rows(bounds, 0),
+                    _bound_rows(bounds, 1),
+                )
                 for fp, rows, size, pvals, bounds in data_files
             ]
             + [
-                {
-                    # EXISTING: same data file carried forward at file
-                    # grain; the spec requires its ORIGINAL sequence
-                    # number explicitly (inheritance is for ADDED)
-                    "status": 0,
-                    "snapshot_id": cf.get("snapshot_id"),
-                    "sequence_number": int(cf["seq"]),
-                    "file_sequence_number": int(cf["seq"]),
-                    "data_file": {
-                        "content": 0,
-                        "file_path": f"file://{cf['path']}",
-                        "file_format": "PARQUET",
-                        "partition": dict(cf.get("partition") or {}),
-                        "record_count": int(cf["rows"]),
-                        "file_size_in_bytes": int(cf["size"]),
-                        "lower_bounds": _bound_rows(
-                            cf.get("bounds") or {}, 0
-                        ),
-                        "upper_bounds": _bound_rows(
-                            cf.get("bounds") or {}, 1
-                        ),
-                        "equality_ids": None,
-                    },
-                }
+                # EXISTING: same data file carried forward at file
+                # grain; the spec requires its ORIGINAL sequence
+                # number explicitly (inheritance is for ADDED)
+                _manifest_entry(
+                    0, cf.get("snapshot_id"), int(cf["seq"]), 0,
+                    cf["path"], dict(cf.get("partition") or {}),
+                    cf["rows"], cf["size"],
+                    _bound_rows(cf.get("bounds") or {}, 0),
+                    _bound_rows(cf.get("bounds") or {}, 1),
+                )
                 for cf in carried
             ],
             metadata=_manifest_header(ice_schema, spec, "data"),
@@ -1475,11 +1329,7 @@ def expire_iceberg_snapshots(
 
     Returns ``{"expired": [snapshot ids], "deleted": [paths]}``;
     ``dry_run`` reports without committing or deleting."""
-    from embeddinghub_spark.sources.iceberg_meta import (
-        _latest_metadata_file,
-        _resolve,
-        iceberg_snapshot,
-    )
+    from embeddinghub_spark.sources.iceberg_meta import _resolve
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
@@ -1520,10 +1370,7 @@ def expire_iceberg_snapshots(
         refs: set[str] = set()
         location = meta.get("location")
         for sid in snapshot_ids:
-            snap = iceberg_snapshot(path, sid)
-            refs.update(snap["files"])
-            refs.update(snap["position_deletes"])
-            refs.update(d["path"] for d in snap["equality_deletes"])
+            refs.update(_snapshot_files(path, sid))
             s = next(x for x in snaps if x["snapshot-id"] == sid)
             ml = _resolve(s["manifest-list"], path, location)
             refs.add(ml)
@@ -1566,6 +1413,16 @@ def expire_iceberg_snapshots(
     return {"expired": expired, "deleted": victims}
 
 
+def _snapshot_files(path: str, snapshot_id: int) -> set[str]:
+    """Every data and delete file snapshot ``snapshot_id`` reads."""
+    from embeddinghub_spark.sources.iceberg_meta import iceberg_snapshot
+
+    snap = iceberg_snapshot(path, snapshot_id)
+    return set(snap["files"]) | set(snap["position_deletes"]) | {
+        d["path"] for d in snap["equality_deletes"]
+    }
+
+
 def remove_orphan_iceberg_files(
     path: str,
     *,
@@ -1573,85 +1430,29 @@ def remove_orphan_iceberg_files(
     now_ms: int | None = None,
     dry_run: bool = False,
 ) -> list[str]:
-    """Delete data files under ``data/`` that NO snapshot in the
-    table metadata references and whose modification time is older
-    than the retention window — the connector's
+    """Delete parquet files under the table root (``metadata/`` is
+    never entered) that NO snapshot in the table metadata references
+    and whose modification time is older than the retention window,
+    plus crashed writers' whole ``_staging_*`` dirs — the connector's
     ``removeOrphanFiles`` (crashed writers and lost commit races
     leave staged-and-moved files behind; the retention default, 3
     days like the connector's, protects an in-flight writer whose
     files exist but whose commit hasn't landed yet). Returns the
     deleted (or with ``dry_run`` the would-be-deleted) paths.
     Metadata files are never touched."""
-    import time as _time
-
-    from embeddinghub_spark.sources.iceberg_meta import (
-        _latest_metadata_file,
-        iceberg_snapshot,
-    )
+    from embeddinghub_spark.sources.iceberg_meta import _latest_metadata_file
 
     path = os.path.realpath(os.path.abspath(path))
-    mfile = _latest_metadata_file(path)
-    with open(mfile, encoding="utf-8") as fh:
+    with open(_latest_metadata_file(path), encoding="utf-8") as fh:
         meta = json.load(fh)
-    refs: set[str] = set()
-    for s in meta.get("snapshots") or []:
-        snap = iceberg_snapshot(path, s["snapshot-id"])
-        refs.update(snap["files"])
-        refs.update(snap["position_deletes"])
-        refs.update(d["path"] for d in snap["equality_deletes"])
-    now = _time.time() * 1000 if now_ms is None else now_ms
-    cutoff = now - retain_ms
-    victims: list[str] = []
-    data_dir = os.path.join(path, "data")
-    for root, _dirs, files in os.walk(data_dir):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            fp = os.path.realpath(os.path.join(root, fn))
-            if fp in refs:
-                continue
-            try:
-                if os.stat(fp).st_mtime * 1000 >= cutoff:
-                    continue
-            except OSError:
-                continue
-            victims.append(fp)
-    # crashed writers' staging dirs: a writer that died before its
-    # move loop leaves _staging_<hex>/ with full parquet output that
-    # no snapshot can ever reference — the exact leak this function's
-    # contract names (review find r14); same retention guard
-    stale_stages: list[str] = []
-    for entry in os.listdir(path):
-        if not entry.startswith("_staging_"):
-            continue
-        sdir = os.path.join(path, entry)
-        if not os.path.isdir(sdir):
-            continue
-        try:
-            newest = max(
-                (os.stat(os.path.join(r, f)).st_mtime
-                 for r, _d, fs in os.walk(sdir) for f in fs),
-                default=os.stat(sdir).st_mtime,
-            )
-        except OSError:
-            continue
-        if newest * 1000 < cutoff:
-            stale_stages.append(sdir)
-            for r, _d, fs in os.walk(sdir):
-                for f in fs:
-                    victims.append(
-                        os.path.realpath(os.path.join(r, f))
-                    )
-    victims.sort()
-    if not dry_run:
-        for fp in victims:
-            try:
-                os.unlink(fp)
-            except OSError:
-                pass
-        for sdir in stale_stages:
-            shutil.rmtree(sdir, ignore_errors=True)
-    return victims
+    keep = set().union(*(
+        _snapshot_files(path, s["snapshot-id"])
+        for s in meta.get("snapshots") or []
+    ))
+    return _sweep_orphans(
+        path, keep, (".parquet",), ("metadata",), retain_ms, now_ms,
+        dry_run,
+    )
 
 
 def merge_iceberg(
@@ -1809,13 +1610,8 @@ def upsert_iceberg_cdc(
 
     # ---- the equality-delete parquet: DISTINCT source keys with the
     # table's field-ids on the key columns (how real engines map them)
-    cur_schema = next(
-        (s for s in meta.get("schemas") or []
-         if s.get("schema-id") == meta.get("current-schema-id")),
-        (meta.get("schemas") or [{}])[0],
-    )
     fid_by_name = {
-        f["name"]: int(f["id"]) for f in cur_schema.get("fields") or []
+        f["name"]: int(f["id"]) for f in _current_schema(meta)["fields"]
     }
     eq_ids = [fid_by_name[c] for c in key_cols]
     tbl = pa.Table.from_pandas(keys_pdf, preserve_index=False)
@@ -1958,22 +1754,7 @@ def _iceberg_table_context(path: str, snap: dict) -> dict:
     rewrite instead of the file-pruned path."""
     meta = snap["metadata"]
     cur_spec = _current_spec(meta)
-    cur_schema = next(
-        (s for s in meta.get("schemas") or []
-         if s.get("schema-id") == meta.get("current-schema-id")),
-        {"fields": []},
-    )
-    name_by_id = {
-        int(f["id"]): f["name"] for f in cur_schema.get("fields") or []
-    }
-    partition_by = []
-    for pf in cur_spec.get("fields") or []:
-        if pf.get("transform") != "identity":
-            raise IcebergProtocolError(
-                f"partition transform {pf.get('transform')!r} not "
-                "supported by the native writer — use the connector"
-            )
-        partition_by.append(name_by_id[int(pf["source-id"])])
+    partition_by = _identity_columns(meta)
     fparts = snap.get("file_partitions") or {}
     cur_spec_id = int(cur_spec.get("spec-id", 0))
     multi_spec = any(
@@ -2154,13 +1935,9 @@ def _commit_position_deletes(path: str, snap: dict, deletes: list) -> int:
             f" (expected {snap['snapshot_id']}): {path}"
         )
     spec = _current_spec(meta)
-    schema = next(
-        (s for s in meta.get("schemas") or []
-         if s.get("schema-id") == meta.get("current-schema-id")),
-        {"fields": [], "schema-id": 0},
-    )
+    schema = _current_schema(meta)
     type_by_id = {
-        int(f["id"]): f["type"] for f in schema.get("fields") or []
+        int(f["id"]): f["type"] for f in schema["fields"]
         if isinstance(f.get("type"), str)
     }
     snapshot_id = max(
@@ -2265,10 +2042,6 @@ def compact_iceberg(
     Returns the committed snapshot id, or None when there is nothing
     to do. Concurrency: pins ``expected_snapshot_id``; a concurrent
     commit raises ``IcebergWriteError`` (re-invoke)."""
-    import math
-
-    from pyspark.sql import functions as F
-
     from embeddinghub_spark.sources.iceberg_meta import (
         _scan_parquet,
         iceberg_snapshot,
@@ -2277,48 +2050,29 @@ def compact_iceberg(
 
     snap = iceberg_snapshot(path)
     ctx = _iceberg_table_context(path, snap)
-    partition_by = ctx["partition_by"]
+    full = ctx["full_rewrite"]
     sizes = snap.get("file_sizes") or {}
-
-    def _shape(rows_df, n_out: int):
-        if sort_by:
-            return rows_df.repartitionByRange(
-                n_out, *[F.col(c) for c in sort_by]
-            ).sortWithinPartitions(*sort_by)
-        return rows_df.repartition(n_out)
-
-    if ctx["full_rewrite"]:
-        # full purge rewrite: deletes materialize into the new files,
-        # evolved-spec files re-express under the current spec
-        rows = read_iceberg(spark, path,
-                            snapshot_id=snap["snapshot_id"])
-        total = sum(int(sizes.get(f) or 0) for f in snap["files"])
-        n_out = max(1, math.ceil(total / int(target_file_bytes)))
-        return write_iceberg(
-            _shape(rows, n_out),
-            path,
-            mode="overwrite",
-            partition_by=partition_by,
-            expected_snapshot_id=snap["snapshot_id"],
-            operation="replace",
-        )
-
-    small = [
-        f for f in snap["files"]
-        if int(sizes.get(f) or 0) < int(target_file_bytes)
-    ]
-    if len(small) < max(2, int(min_files)):
+    packed = _bin_pack(
+        snap["files"], lambda f: int(sizes.get(f) or 0), target_file_bytes,
+        min_files, sort_by,
+        # the full rewrite reads through the MoR-applying reader:
+        # deletes materialize into the new files, evolved-spec files
+        # re-express under the current spec
+        lambda files: (
+            read_iceberg(spark, path, snapshot_id=snap["snapshot_id"])
+            if full else _scan_parquet(spark, snap, files)
+        ),
+        must=lambda f: full,
+    )
+    if packed is None:
         return None
-    rows = _scan_parquet(spark, snap, small)
-    total = sum(int(sizes.get(f) or 0) for f in small)
-    n_out = max(1, math.ceil(total / int(target_file_bytes)))
-    carry = _iceberg_carry(snap, set(small))
+    small, rows = packed
     return write_iceberg(
-        _shape(rows, n_out),
+        rows,
         path,
         mode="overwrite",
-        partition_by=partition_by,
+        partition_by=ctx["partition_by"],
         expected_snapshot_id=snap["snapshot_id"],
-        carry_files=carry,
+        carry_files=None if full else _iceberg_carry(snap, set(small)),
         operation="replace",
     )

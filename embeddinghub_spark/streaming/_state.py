@@ -88,19 +88,42 @@ def _start_upsert_stream(
     return _start_stream(stream_df, process_batch, checkpoint_dir, available_now)
 
 
+def _stamp_file(stamp_dir: str, name: str):
+    """(pyarrow filesystem, path) of the stamp ``name`` in
+    ``stamp_dir``, through ``ann_index._index_fs``: a ``file://`` URI
+    keeps its stamp next to the state, not under ``./file:/`` in the
+    working directory. A local dir has its symlinks resolved."""
+    from embeddinghub_spark.functions.ann_index import _index_fs
+
+    fs, root = _index_fs(stamp_dir)
+    if "://" not in stamp_dir:
+        root = os.path.realpath(root)
+    return fs, f"{root}/{name}"
+
+
+def _owner(checkpoint_dir: str) -> str:
+    """The stamp's record of a checkpoint: a URI as given, a local path
+    made absolute."""
+    return checkpoint_dir if "://" in checkpoint_dir else os.path.abspath(
+        checkpoint_dir
+    )
+
+
 def _last_committed_batch(
     stamp_dir: str, checkpoint_dir: str | None, name: str = _STAMP
 ) -> int:
-    """The batch id stamped in ``stamp_dir`` (symlinks resolved), or -1
-    when there is none or it belongs to another stream's checkpoint.
+    """The batch id stamped in ``stamp_dir``, or -1 when there is none
+    or it belongs to another stream's checkpoint.
     ``checkpoint_dir=None`` is a direct call: ids only."""
-    path = os.path.join(os.path.realpath(stamp_dir), name)
-    if not os.path.isfile(path):
+    import pyarrow.fs as pafs
+
+    fs, path = _stamp_file(stamp_dir, name)
+    if fs.get_file_info(path).type != pafs.FileType.File:
         return -1
-    with open(path) as fh:
-        meta = json.load(fh)
+    with fs.open_input_stream(path) as fh:
+        meta = json.loads(fh.read())
     owner = meta.get("checkpoint")
-    if owner and checkpoint_dir and owner != os.path.abspath(checkpoint_dir):
+    if owner and checkpoint_dir and owner != _owner(checkpoint_dir):
         return -1
     return int(meta["committed_batch"])
 
@@ -113,14 +136,14 @@ def _record_committed_batch(
 ) -> None:
     """Atomically stamp ``batch_id`` as fully applied (tmp + rename),
     under ``checkpoint_dir`` when there is one."""
-    os.makedirs(stamp_dir, exist_ok=True)
     meta: dict = {"committed_batch": int(batch_id)}
     if checkpoint_dir:
-        meta["checkpoint"] = os.path.abspath(checkpoint_dir)
-    path = os.path.join(stamp_dir, name)
-    with open(path + ".tmp", "w") as fh:
-        json.dump(meta, fh)
-    os.replace(path + ".tmp", path)
+        meta["checkpoint"] = _owner(checkpoint_dir)
+    fs, path = _stamp_file(stamp_dir, name)
+    fs.create_dir(path.rsplit("/", 1)[0], recursive=True)
+    with fs.open_output_stream(path + ".tmp") as fh:
+        fh.write(json.dumps(meta).encode())
+    fs.move(path + ".tmp", path)
 
 
 def _stream_batch_id(batch_id: int, checkpoint_dir: str | None) -> int | None:

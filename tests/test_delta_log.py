@@ -1241,6 +1241,24 @@ def test_vacuum_delta_removes_only_old_unreferenced_files(spark,
     with pytest.raises(Exception):
         read_delta(spark, t, version=0).collect()
 
+    # a crashed writer's _staging_ dir goes whole (its _SUCCESS and
+    # .crc files too) once it is older than the retention window; a
+    # fresh one — an in-flight writer's — stays
+    stale, fresh = (os.path.join(t, f"_staging_{h}") for h in ("0dead", "1live"))
+    for d, age_ms in ((stale, 30 * 24 * 3600 * 1000), (fresh, 0)):
+        os.makedirs(os.path.join(d, "id=1"))
+        for f in ("_SUCCESS", "._SUCCESS.crc", "id=1/part-0.parquet"):
+            open(os.path.join(d, f), "w").close()
+            ts = (now - age_ms) / 1000
+            os.utime(os.path.join(d, f), (ts, ts))
+    want = sorted(
+        os.path.realpath(os.path.join(r, f))
+        for r, _d, fs in os.walk(stale) for f in fs
+    )
+    assert vacuum_delta(t, now_ms=now) == want
+    assert not os.path.exists(stale)
+    assert os.path.isfile(os.path.join(fresh, "id=1", "part-0.parquet"))
+
 
 def test_merge_delta_is_file_pruned(spark, tmp_path):
     """VERDICT r14 #3: a ~1%-churn MERGE rewrites only the files that

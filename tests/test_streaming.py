@@ -2032,6 +2032,33 @@ def test_ingest_commit_stamp_is_checkpoint_scoped(tmp_path):
     assert all(n.startswith(("_", ".")) for n in names)
 
 
+def test_ingest_commit_stamp_of_a_file_uri_survives_a_cwd_change(
+    tmp_path, monkeypatch
+):
+    """A ``file://`` index dir keeps its committed-batch stamp next to
+    the index, so a stream restarted from another working directory
+    still skips its applied batches; nothing lands under ``./file:``."""
+    import os
+
+    from embeddinghub_spark.streaming._state import (
+        _last_committed_batch,
+        _record_committed_batch,
+    )
+
+    idx = tmp_path / "stampidx"
+    ckpt = str(tmp_path / "ckpt")
+    first, second = tmp_path / "cwd1", tmp_path / "cwd2"
+    first.mkdir()
+    second.mkdir()
+    monkeypatch.chdir(first)
+    _record_committed_batch(idx.as_uri(), 3, ckpt)
+    assert os.listdir(first) == []
+    assert (idx / "_ingest_commit.json").is_file()
+    monkeypatch.chdir(second)
+    assert _last_committed_batch(idx.as_uri(), ckpt) == 3
+    assert _last_committed_batch(str(idx), ckpt) == 3
+
+
 def test_streaming_ingest_skips_replayed_batch(spark, tmp_path):
     """End-to-end replay no-op: with the stamp at the stream's last
     batch, re-delivering an already-applied batch through the

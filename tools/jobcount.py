@@ -27,17 +27,27 @@ def main() -> None:
         sf_dir = args.pop(0)
     names = args
 
-    import bench as benchmod
     import __spark_entry__ as entrymod
+
+    qs = dict(entrymod.queries())
+    if hasattr(entrymod, "staged_queries"):
+        qs.update(entrymod.staged_queries())
+    # a mistyped sf_dir is not a directory, so it lands here as a name
+    unknown = [n for n in names if n not in qs]
+    if unknown or not names:
+        print(__doc__.strip().splitlines()[-1], file=sys.stderr)
+        if unknown:
+            print(f"jobcount.py: unknown entry name(s): {' '.join(unknown)}",
+                  file=sys.stderr)
+        sys.exit(2)
+
+    import bench as benchmod
     from embeddinghub_spark.session import get_spark
 
     spark = get_spark(app_name="jobcount")
     spark.sparkContext.setLogLevel("ERROR")
     benchmod._warmup(spark, sf_dir)
 
-    qs = dict(entrymod.queries())
-    if hasattr(entrymod, "staged_queries"):
-        qs.update(entrymod.staged_queries())
     tracker = spark.sparkContext.statusTracker()
     for n in names:
         gid = f"jobcount:{n}"
